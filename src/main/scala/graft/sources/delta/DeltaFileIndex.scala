@@ -263,7 +263,10 @@ object DeltaStatsSkipping {
   // litToComparable receives Spark's internal Int-days representation.
 
   private def cmp(a: Any, b: Any): Option[Int] = (a, b) match {
-    case (x: Double, y: Double) => Some(java.lang.Double.compare(x, y))
+    // SQL equality first: -0.0 and 0.0 are the same value (a file whose
+    // bound is one zero holds rows equal to the other); Double.compare
+    // still orders NaN above everything, as Spark's ordering does
+    case (x: Double, y: Double) => Some(if (x == y) 0 else java.lang.Double.compare(x, y))
     // UTF8String binary (code-point) order — the order Spark's min/max
     // aggregates computed the stats in. Java String.compareTo is UTF-16
     // code-unit order, which DISAGREES above the BMP (U+FFFF sorts after

@@ -59,12 +59,17 @@ object MergeClause {
   * by the files holding unmatched rows that satisfy a by-source clause
   * condition — an unconditional by-source clause touches every file, which
   * is what its semantics demand. The not-matched inserts come from one
-  * anti join of the (typically small, broadcastable) source against the
-  * FULL target — correctness requires anti-joining the whole table, not
-  * just touched files. Touched-file rows are persisted with a synthetic
-  * row id so the cardinality check, the rewrite, and the metrics all read
-  * ONE materialization (re-planning a scan between jobs could renumber
-  * rows). Commit is the same validated remove+add loop as OPTIMIZE/DELETE.
+  * anti join of the (typically small) source. With a `WHEN MATCHED`
+  * clause it runs against the persisted touched-file rows, not the table:
+  * the find phase inner-joined the FULL target under the same condition,
+  * so every target row that matches any source row lies in a touched file
+  * and the touched rows stand in exactly for the whole table (no touched
+  * file: every source row is unmatched). An insert-only merge has no find
+  * phase, so its anti join reads the full target. Touched-file rows are
+  * persisted with a synthetic row id so the cardinality check, the
+  * rewrite, the metrics and the insert anti join all read ONE
+  * materialization (re-planning a scan between jobs could renumber rows).
+  * Commit is the same validated remove+add loop as OPTIMIZE/DELETE.
   */
 object DeltaMerge {
 
@@ -298,219 +303,226 @@ object DeltaMerge {
     val cdfOn = DeltaCdf.enabled(snap.metadata)
     var rowsUpdated = 0L
     var rowsDeleted = 0L
-    val rewrittenOpt: Option[((Seq[Add], Long), Seq[(String, Long)])] =
-      if (touched.isEmpty) None else Some {
-      // provider-scan read ([[DeltaMaintenance.partitionInjected]]):
-      // partition injection, column mapping AND deletion-vector filtering
-      // — a raw parquet read would resurrect DV'd rows into the rewrite
-      // row tracking: materialized id/version columns ride along — carried
-      // and updated rows preserve their id; updated rows null the version
-      // (the new add's defaultRowCommitVersion dates them); deleted rows
-      // drop out; inserted rows (separate staging below) carry no
-      // materialization and get fresh ids from their add's baseRowId
-      val rtCols = DeltaMaintenance.rewriteCarryCols(snap)
-      val perGroup = DeltaMaintenance.partitionInjected(spark, tablePath, snap, touched,
+    // provider-scan read ([[DeltaMaintenance.partitionInjected]]):
+    // partition injection, column mapping AND deletion-vector filtering
+    // — a raw parquet read would resurrect DV'd rows into the rewrite
+    // row tracking: materialized id/version columns ride along — carried
+    // and updated rows preserve their id; updated rows null the version
+    // (the new add's defaultRowCommitVersion dates them); deleted rows
+    // drop out; inserted rows (separate staging below) carry no
+    // materialization and get fresh ids from their add's baseRowId.
+    // One materialization: the cardinality check, the metrics and the
+    // rewrite must all see the same row ids, and the insert anti-join
+    // (step 3) reads the same rows — it stays persisted until then.
+    val rtCols = DeltaMaintenance.rewriteCarryCols(snap)
+    val ttOpt: Option[DataFrame] =
+      if (touched.isEmpty) None
+      else Some(DeltaMaintenance.partitionInjected(spark, tablePath, snap, touched,
           withRowIds = true)
         .reduce(_ unionByName _)
-      // one materialization: the cardinality check, the metrics and the
-      // rewrite must all see the same row ids
-      val tt = perGroup.withColumn("_tid", monotonically_increasing_id())
-        .persist()
-      try {
-        val joined = tt.alias("t").join(src, expr(condition), "left")
-        // rewrite frame: exactly ONE row per target row.
-        //  - with matched clauses: the cardinality gate below guarantees it
-        //    on the left join itself (and >1 source match is an error);
-        //  - by-source-only merges tolerate multi-match rows (they are all
-        //    carried), so the flag is aggregated per row id instead — the
-        //    left join would duplicate carried rows.
-        val rw: DataFrame =
-          if (matched.nonEmpty) {
-            // cardinality gate rides the metrics aggregation below (one
-            // action instead of two, and one fewer execution of the join
-            // subplan — r22, guide §1.2): see gateAndCounts
-            joined
-          } else {
-            val flags = joined.groupBy(col("_tid"))
-              .agg(max(col("_smark")).as("_smark"))
-            tt.alias("t").join(flags, Seq("_tid"))
-          }
-        // first-match-wins action resolution: -1 = carry
-        val actChain = {
-          val cases: Seq[(Column, Int)] =
-            matchedIds.zip(matched).map { case (id, m) =>
-              (srcMatched && m.condition.map(expr).getOrElse(lit(true)), id)
-            } ++ bySourceIds.zip(bySource).map { case (id, b) =>
-              (!srcMatched && b.condition.map(expr).getOrElse(lit(true)), id)
+        .withColumn("_tid", monotonically_increasing_id())
+        .persist())
+    var identityNewHwm: Map[String, Long] = Map.empty
+    val (rewrittenOpt, insertedOpt) = try {
+      val rewrittenOpt: Option[((Seq[Add], Long), Seq[(String, Long)])] =
+        ttOpt.map { tt =>
+          val joined = tt.alias("t").join(src, expr(condition), "left")
+          // rewrite frame: exactly ONE row per target row.
+          //  - with matched clauses: the cardinality gate below guarantees it
+          //    on the left join itself (and >1 source match is an error);
+          //  - by-source-only merges tolerate multi-match rows (they are all
+          //    carried), so the flag is aggregated per row id instead — the
+          //    left join would duplicate carried rows.
+          val rw: DataFrame =
+            if (matched.nonEmpty) {
+              // cardinality gate rides the metrics aggregation below (one
+              // action instead of two, and one fewer execution of the join
+              // subplan — r22, guide §1.2): see gateAndCounts
+              joined
+            } else {
+              val flags = joined.groupBy(col("_tid"))
+                .agg(max(col("_smark")).as("_smark"))
+              tt.alias("t").join(flags, Seq("_tid"))
             }
+          // first-match-wins action resolution: -1 = carry
+          val actChain = {
+            val cases: Seq[(Column, Int)] =
+              matchedIds.zip(matched).map { case (id, m) =>
+                (srcMatched && m.condition.map(expr).getOrElse(lit(true)), id)
+              } ++ bySourceIds.zip(bySource).map { case (id, b) =>
+                (!srcMatched && b.condition.map(expr).getOrElse(lit(true)), id)
+              }
+            cases.tail.foldLeft(when(cases.head._1, cases.head._2)) {
+              case (acc, (c, id)) => acc.when(c, id)
+            }.otherwise(lit(-1))
+          }
+          val withAct = rw.withColumn("_act", actChain)
+
+          // ONE pass for the cardinality gate AND the per-action metrics
+          // (r22; the old shape ran gate-count and metrics-count as two
+          // actions, each re-executing the tt-join subplan). Two-level
+          // aggregation: per target row id, the source-match count and the
+          // resolved action; then rows per action with the max match count
+          // riding along. When no row multi-matches, every _tid contributes
+          // exactly one joined row, so per-_tid counts ARE per-act row
+          // counts; when one does, the gate throws and the metrics are
+          // never read. By-source-only merges keep their flags path (rw is
+          // already one row per target row there; no gate by semantics).
+          val actCounts: Map[Int, Long] =
+            if (matched.nonEmpty) {
+              val summary = withAct.groupBy(col("_tid"))
+                .agg(count(when(srcMatched, 1)).as("_m"),
+                  max(col("_act")).as("_a"),
+                  count(lit(1)).as("_rows"))
+                .groupBy(col("_a"))
+                .agg(sum(col("_rows")).as("_n"), max(col("_m")).as("_mm"))
+                .collect()
+              if (summary.exists(_.getLong(2) > 1))
+                throw new UnsupportedOperationException(
+                  "MERGE cardinality violation: a target row matched more than one " +
+                    "source row; the result would be nondeterministic (production " +
+                    "Delta raises the same error)")
+              summary.map(r => r.getInt(0) -> r.getLong(1)).toMap
+            } else withAct.groupBy(col("_act"))
+              .agg(count(lit(1)).as("_n")).collect()
+              .map(r => r.getInt(0) -> r.getLong(1)).toMap
+          val updIdSet = updateActs.map(_._1).toSet
+          rowsUpdated = actCounts.collect { case (id, n) if updIdSet.contains(id) => n }.sum
+          rowsDeleted = actCounts.collect { case (id, n) if deleteActs.contains(id) => n }.sum
+
+          def carry(c: String): Column =
+            if (have.contains(c)) col(s"t.$c") else lit(null).cast(colType(c))
+          // resolved value of column c: the applied clause's SET expression
+          // (clauses that do not assign c carry it), else the target value
+          def resolved(c: String): Column = {
+            val cases = updateActs.flatMap { case (id, set) =>
+              set.get(c).map(e => (id, expr(e).cast(colType(c))))
+            }
+            if (cases.isEmpty) carry(c)
+            else cases.foldLeft(null: Column) { case (acc, (id, v)) =>
+              val cond = col("_act") === id
+              if (acc == null) when(cond, v) else acc.when(cond, v)
+            }.otherwise(carry(c))
+          }
+          val rtKeep: Seq[Column] = rtCols match {
+            case Seq(matId, matVer) =>
+              val updIds = updateActs.map(_._1)
+              val verCol =
+                if (updIds.isEmpty) col(s"t.`$matVer`").as(matVer)
+                else when(col("_act").isInCollection(updIds),
+                  lit(null).cast(org.apache.spark.sql.types.LongType))
+                  .otherwise(col(s"t.`$matVer`")).as(matVer)
+              Seq(col(s"t.`$matId`").as(matId), verCol)
+            case _ => Nil
+          }
+          val result0 = withAct
+            .filter(if (deleteActs.isEmpty) lit(true)
+                    else !col("_act").isInCollection(deleteActs))
+            .select(outCols.map(c => resolved(c).as(c)) ++ rtKeep: _*)
+          // updated rows must satisfy the table's CHECK constraints AND the
+          // NOT NULL invariants (a SET expression evaluating NULL into a
+          // non-nullable column would read back as 0 through the schema)
+          DeltaConstraints.validate(result0, snap, "MERGE")
+          val result = DeltaConstraints.notNullGuarded(result0, snap.schema, "MERGE")
+          // change data feed: per-action rows, computed from the same
+          // persisted materialization as the rewrite
+          val cdcMatched: Seq[(String, Long)] =
+            if (!cdfOn) Nil
+            else {
+              val preCols = outCols.map(c => carry(c).as(c))
+              val deletes =
+                if (deleteActs.isEmpty) None
+                else Some(withAct.filter(col("_act").isInCollection(deleteActs))
+                  .select(preCols :+ lit("delete").as(DeltaCdf.TypeCol): _*))
+              val updates =
+                if (updateActs.isEmpty) None
+                else {
+                  val touchedUpd = withAct
+                    .filter(col("_act").isInCollection(updateActs.map(_._1)))
+                  val pre = touchedUpd
+                    .select(preCols :+ lit("update_preimage").as(DeltaCdf.TypeCol): _*)
+                  val post = touchedUpd.select(outCols.map(c => resolved(c).as(c)) :+
+                    lit("update_postimage").as(DeltaCdf.TypeCol): _*)
+                  Some(pre.unionByName(post))
+                }
+              (deletes.toSeq ++ updates.toSeq).reduceOption(_ unionByName _)
+                .map(DeltaCdf.stageChanges(spark, tablePath, snap, _))
+                .getOrElse(Nil)
+            }
+          // stage NOW (inside persist scope): the write is the terminal action
+          (stageAndReturn(spark, tablePath, snap, result, outSchema), cdcMatched)
+      }
+
+      // ---- 3. inserts: source rows matching NO target row, routed through
+      // the first insert clause whose condition they satisfy (rows
+      // satisfying none are dropped — production semantics). With a MATCHED
+      // clause the touched rows stand in exactly for the full target (see
+      // the object doc); insert-only merges anti-join the full target.
+      val insertedOpt: Option[((Seq[Add], Long), Seq[(String, Long)])] =
+        if (notMatched.isEmpty) None else Some {
+        val matchable: Option[DataFrame] =
+          if (matched.isEmpty) Some(DeltaTable.readVersion(spark, tablePath, snap.version))
+          else ttOpt
+        val anti = matchable.fold(src)(t => src.join(t.alias("t"), expr(condition), "left_anti"))
+        val iactChain = {
+          val cases = notMatched.zipWithIndex.map { case (nm, j) =>
+            (nm.condition.map(expr).getOrElse(lit(true)), j)
+          }
           cases.tail.foldLeft(when(cases.head._1, cases.head._2)) {
-            case (acc, (c, id)) => acc.when(c, id)
+            case (acc, (c, j)) => acc.when(c, j)
           }.otherwise(lit(-1))
         }
-        val withAct = rw.withColumn("_act", actChain)
-
-        // ONE pass for the cardinality gate AND the per-action metrics
-        // (r22; the old shape ran gate-count and metrics-count as two
-        // actions, each re-executing the tt-join subplan). Two-level
-        // aggregation: per target row id, the source-match count and the
-        // resolved action; then rows per action with the max match count
-        // riding along. When no row multi-matches, every _tid contributes
-        // exactly one joined row, so per-_tid counts ARE per-act row
-        // counts; when one does, the gate throws and the metrics are
-        // never read. By-source-only merges keep their flags path (rw is
-        // already one row per target row there; no gate by semantics).
-        val actCounts: Map[Int, Long] =
-          if (matched.nonEmpty) {
-            val summary = withAct.groupBy(col("_tid"))
-              .agg(count(when(srcMatched, 1)).as("_m"),
-                max(col("_act")).as("_a"),
-                count(lit(1)).as("_rows"))
-              .groupBy(col("_a"))
-              .agg(sum(col("_rows")).as("_n"), max(col("_m")).as("_mm"))
-              .collect()
-            if (summary.exists(_.getLong(2) > 1))
-              throw new UnsupportedOperationException(
-                "MERGE cardinality violation: a target row matched more than one " +
-                  "source row; the result would be nondeterministic (production " +
-                  "Delta raises the same error)")
-            summary.map(r => r.getInt(0) -> r.getLong(1)).toMap
-          } else withAct.groupBy(col("_act"))
-            .agg(count(lit(1)).as("_n")).collect()
-            .map(r => r.getInt(0) -> r.getLong(1)).toMap
-        val updIdSet = updateActs.map(_._1).toSet
-        rowsUpdated = actCounts.collect { case (id, n) if updIdSet.contains(id) => n }.sum
-        rowsDeleted = actCounts.collect { case (id, n) if deleteActs.contains(id) => n }.sum
-
-        def carry(c: String): Column =
-          if (have.contains(c)) col(s"t.$c") else lit(null).cast(colType(c))
-        // resolved value of column c: the applied clause's SET expression
-        // (clauses that do not assign c carry it), else the target value
-        def resolved(c: String): Column = {
-          val cases = updateActs.flatMap { case (id, set) =>
-            set.get(c).map(e => (id, expr(e).cast(colType(c))))
+        val withIact = anti.withColumn("_iact", iactChain).filter(col("_iact") >= 0)
+        def inserted(c: String): Column = {
+          val cases = notMatched.zipWithIndex.flatMap { case (nm, j) =>
+            nm.insert.get(c).map(e => (j, expr(e).cast(colType(c))))
           }
-          if (cases.isEmpty) carry(c)
-          else cases.foldLeft(null: Column) { case (acc, (id, v)) =>
-            val cond = col("_act") === id
+          if (cases.isEmpty) lit(null).cast(colType(c))
+          else cases.foldLeft(null: Column) { case (acc, (j, v)) =>
+            val cond = col("_iact") === j
             if (acc == null) when(cond, v) else acc.when(cond, v)
-          }.otherwise(carry(c))
+          }.otherwise(lit(null).cast(colType(c)))
         }
-        val rtKeep: Seq[Column] = rtCols match {
-          case Seq(matId, matVer) =>
-            val updIds = updateActs.map(_._1)
-            val verCol =
-              if (updIds.isEmpty) col(s"t.`$matVer`").as(matVer)
-              else when(col("_act").isInCollection(updIds),
-                lit(null).cast(org.apache.spark.sql.types.LongType))
-                .otherwise(col(s"t.`$matVer`")).as(matVer)
-            Seq(col(s"t.`$matId`").as(matId), verCol)
-          case _ => Nil
-        }
-        val result0 = withAct
-          .filter(if (deleteActs.isEmpty) lit(true)
-                  else !col("_act").isInCollection(deleteActs))
-          .select(outCols.map(c => resolved(c).as(c)) ++ rtKeep: _*)
-        // updated rows must satisfy the table's CHECK constraints AND the
-        // NOT NULL invariants (a SET expression evaluating NULL into a
-        // non-nullable column would read back as 0 through the schema)
-        DeltaConstraints.validate(result0, snap, "MERGE")
-        val result = DeltaConstraints.notNullGuarded(result0, snap.schema, "MERGE")
-        // change data feed: per-action rows, computed from the same
-        // persisted materialization as the rewrite
-        val cdcMatched: Seq[(String, Long)] =
-          if (!cdfOn) Nil
-          else {
-            val preCols = outCols.map(c => carry(c).as(c))
-            val deletes =
-              if (deleteActs.isEmpty) None
-              else Some(withAct.filter(col("_act").isInCollection(deleteActs))
-                .select(preCols :+ lit("delete").as(DeltaCdf.TypeCol): _*))
-            val updates =
-              if (updateActs.isEmpty) None
-              else {
-                val touchedUpd = withAct
-                  .filter(col("_act").isInCollection(updateActs.map(_._1)))
-                val pre = touchedUpd
-                  .select(preCols :+ lit("update_preimage").as(DeltaCdf.TypeCol): _*)
-                val post = touchedUpd.select(outCols.map(c => resolved(c).as(c)) :+
-                  lit("update_postimage").as(DeltaCdf.TypeCol): _*)
-                Some(pre.unionByName(post))
-              }
-            (deletes.toSeq ++ updates.toSeq).reduceOption(_ unionByName _)
-              .map(DeltaCdf.stageChanges(spark, tablePath, snap, _))
-              .getOrElse(Nil)
-          }
-        // stage NOW (inside persist scope): the write is the terminal action
-        (stageAndReturn(spark, tablePath, snap, result, outSchema), cdcMatched)
-      } finally tt.unpersist()
-    }
-
-    // ---- 3. inserts: source rows matching NO row of the FULL target,
-    // routed through the first insert clause whose condition they satisfy
-    // (rows satisfying none are dropped — production semantics)
-    var identityNewHwm: Map[String, Long] = Map.empty
-    val insertedOpt: Option[((Seq[Add], Long), Seq[(String, Long)])] =
-      if (notMatched.isEmpty) None else Some {
-      val anti = src.join(
-        DeltaTable.readVersion(spark, tablePath, snap.version).alias("t"),
-        expr(condition), "left_anti")
-      val iactChain = {
-        val cases = notMatched.zipWithIndex.map { case (nm, j) =>
-          (nm.condition.map(expr).getOrElse(lit(true)), j)
-        }
-        cases.tail.foldLeft(when(cases.head._1, cases.head._2)) {
-          case (acc, (c, j)) => acc.when(c, j)
-        }.otherwise(lit(-1))
-      }
-      val withIact = anti.withColumn("_iact", iactChain).filter(col("_iact") >= 0)
-      def inserted(c: String): Column = {
-        val cases = notMatched.zipWithIndex.flatMap { case (nm, j) =>
-          nm.insert.get(c).map(e => (j, expr(e).cast(colType(c))))
-        }
-        if (cases.isEmpty) lit(null).cast(colType(c))
-        else cases.foldLeft(null: Column) { case (acc, (j, v)) =>
-          val cond = col("_iact") === j
-          if (acc == null) when(cond, v) else acc.when(cond, v)
-        }.otherwise(lit(null).cast(colType(c)))
-      }
-      // identity columns are omitted from the clause frame (enforced
-      // above) and assigned here, continuing from the table's high water
-      // mark — the SAME range-allocation machinery as the append path.
-      // checkTableState in the commit loop covers the concurrency story:
-      // a concurrent identity advance re-emits metaData, which aborts
-      // this merge before it could hand out duplicate ids.
-      val nonIdCols = outCols.filterNot(identityNames.contains)
-      val insertRows0 = withIact.select(nonIdCols.map(c => inserted(c).as(c)): _*)
-      val fromHwm = identityFields.map(f => f.name -> DeltaWriter.identityHwm(f)).toMap
-      val (withIds, newHwm, nAssigned, idPinned) =
-        DeltaWriter.assignIdentityValues(insertRows0, identityFields, fromHwm)
-      if (nAssigned > 0) identityNewHwm = newHwm
-      // the identity-pinned frame must not outlive a validation failure
-      // (CHECK/NOT NULL throwing below is a routine path) — outer finally
-      try {
-        // NOT NULL holds structurally for UNASSIGNED columns (checked at
-        // clause validation) and via the inline guard for assigned
-        // expressions that evaluate NULL at runtime; CHECK constraints see
-        // the assigned identity values (they may reference them)
-        val insertRows = DeltaConstraints.notNullGuarded(
-          withIds.select(outCols.map(col): _*), snap.schema, "MERGE INSERT")
-        DeltaConstraints.validate(insertRows, snap, "MERGE INSERT")
-        // persisted: the table write and the cdc 'insert' rows must come
-        // from ONE evaluation of the anti-join (re-planning could diverge
-        // on nondeterministic sources, and re-runs the scan regardless)
-        val pinned = insertRows.persist()
+        // identity columns are omitted from the clause frame (enforced
+        // above) and assigned here, continuing from the table's high water
+        // mark — the SAME range-allocation machinery as the append path.
+        // checkTableState in the commit loop covers the concurrency story:
+        // a concurrent identity advance re-emits metaData, which aborts
+        // this merge before it could hand out duplicate ids.
+        val nonIdCols = outCols.filterNot(identityNames.contains)
+        val insertRows0 = withIact.select(nonIdCols.map(c => inserted(c).as(c)): _*)
+        val fromHwm = identityFields.map(f => f.name -> DeltaWriter.identityHwm(f)).toMap
+        val (withIds, newHwm, nAssigned, idPinned) =
+          DeltaWriter.assignIdentityValues(insertRows0, identityFields, fromHwm)
+        if (nAssigned > 0) identityNewHwm = newHwm
+        // the identity-pinned frame must not outlive a validation failure
+        // (CHECK/NOT NULL throwing below is a routine path) — outer finally
         try {
-          val addsAndRows = stageAndReturn(spark, tablePath, snap, pinned, outSchema)
-          // a commit with ANY cdc action is read from cdc only — the inserts
-          // must ride along when the matched clause produced change rows
-          val cdcIns: Seq[(String, Long)] =
-            if (!cdfOn || addsAndRows._2 == 0) Nil
-            else DeltaCdf.stageChanges(spark, tablePath, snap,
-              pinned.withColumn(DeltaCdf.TypeCol, lit("insert")))
-          (addsAndRows, cdcIns)
-        } finally pinned.unpersist()
-      } finally idPinned.foreach(_.unpersist())
-    }
+          // NOT NULL holds structurally for UNASSIGNED columns (checked at
+          // clause validation) and via the inline guard for assigned
+          // expressions that evaluate NULL at runtime; CHECK constraints see
+          // the assigned identity values (they may reference them)
+          val insertRows = DeltaConstraints.notNullGuarded(
+            withIds.select(outCols.map(col): _*), snap.schema, "MERGE INSERT")
+          DeltaConstraints.validate(insertRows, snap, "MERGE INSERT")
+          // persisted: the table write and the cdc 'insert' rows must come
+          // from ONE evaluation of the anti-join (re-planning could diverge
+          // on nondeterministic sources, and re-runs the scan regardless)
+          val pinned = insertRows.persist()
+          try {
+            val addsAndRows = stageAndReturn(spark, tablePath, snap, pinned, outSchema)
+            // a commit with ANY cdc action is read from cdc only — the inserts
+            // must ride along when the matched clause produced change rows
+            val cdcIns: Seq[(String, Long)] =
+              if (!cdfOn || addsAndRows._2 == 0) Nil
+              else DeltaCdf.stageChanges(spark, tablePath, snap,
+                pinned.withColumn(DeltaCdf.TypeCol, lit("insert")))
+            (addsAndRows, cdcIns)
+          } finally pinned.unpersist()
+        } finally idPinned.foreach(_.unpersist())
+      }
+      (rewrittenOpt, insertedOpt)
+    } finally ttOpt.foreach(_.unpersist())
 
     val rowsInserted = insertedOpt.map(_._1._2).getOrElse(0L)
     val adds = rewrittenOpt.map(_._1._1).getOrElse(Nil) ++ insertedOpt.map(_._1._1).getOrElse(Nil)

@@ -932,8 +932,11 @@ object DeltaWriter {
     case x: Short => node.put(f.name, x.toInt)
     case x: Int => node.put(f.name, x)
     case x: Long => node.put(f.name, x)
-    case x: Float => node.put(f.name, x)
-    case x: Double => node.put(f.name, x)
+    // ±0.0 render as the one canonical 0.0: Spark's min/max keeps
+    // whichever zero it met first and the footer path may hold the other
+    // (FooterStats scaladoc) — one rendering keeps the two byte-identical
+    case x: Float => node.put(f.name, if (x == 0.0f) 0.0f else x)
+    case x: Double => node.put(f.name, if (x == 0.0d) 0.0d else x)
     case x: java.math.BigDecimal => node.put(f.name, x)
     case x: String => node.put(f.name, x)
     case x: Boolean => node.put(f.name, x)

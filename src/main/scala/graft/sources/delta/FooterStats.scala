@@ -31,9 +31,13 @@ import org.apache.spark.sql.types._
   *    (INT96 timestamps have no trustworthy stats — deprecated by the
   *    format — so default-config TIMESTAMP columns fall back wholesale;
   *    TIMESTAMP_NTZ writes INT64 micros and is served);
-  *  - float/double bounds of NaN or ±0.0 fall back: parquet's
-  *    Math.min/max propagation and Spark's ordering disagree on NaN,
-  *    and -0.0 vs 0.0 render differently in JSON while comparing equal;
+  *  - float/double bounds of NaN fall back: parquet-mr drops min/max
+  *    for a chunk holding NaN, and Spark orders NaN above every value;
+  *  - float/double bounds of ±0.0 are served as the canonical 0.0: SQL
+  *    compares the two zeros equal, parquet-mr widens a zero min to -0.0
+  *    and a zero max to +0.0 on read, and Spark's min/max keeps whichever
+  *    zero it saw first — so both paths render any zero bound as `0.0`
+  *    (DeltaWriter.putStatValue) and stay byte-identical;
   *  - string stats ≥ 64 bytes fall back: long values are where parquet
   *    writers may truncate or drop statistics (a truncated-incremented
   *    max is a valid BOUND but not the exact value the scan computes);
@@ -215,10 +219,10 @@ private[graft] object FooterStats {
       case BooleanType => Some(Some(v.asInstanceOf[Boolean]))
       case FloatType =>
         val x = v.asInstanceOf[Float]
-        if (x.isNaN || x == 0.0f) None else Some(Some(x))
+        if (x.isNaN) None else Some(Some(x))
       case DoubleType =>
         val x = v.asInstanceOf[Double]
-        if (x.isNaN || x == 0.0d) None else Some(Some(x))
+        if (x.isNaN) None else Some(Some(x))
       case StringType =>
         val b = v.asInstanceOf[Binary].getBytesUnsafe
         if (b.length >= 64) None

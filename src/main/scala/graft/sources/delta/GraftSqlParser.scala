@@ -42,9 +42,12 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * materialized as a temp view over the version-parameterized log replay
   * (`DeltaLog.snapshot(versionAsOf/timestampAsOf)`) and the reference text
   * is substituted with the view name, so arbitrary surrounding SQL (joins,
-  * subqueries, CTEs) works unchanged. Plain `delta.`/path`` SELECTs need no
-  * help — Spark's ResolveSQLOnFile resolves them through the registered
-  * source.
+  * subqueries, CTEs) works unchanged. Plain `delta.`/path`` SELECTs get
+  * no such rewrite and do NOT resolve: Spark 4.1's ResolveSQLOnFile
+  * accepts only `FileFormat` sources for direct queries and rejects the
+  * Delta provider with UNSUPPORTED_DATASOURCE_FOR_DIRECT_QUERY — read the
+  * table with `spark.read.format("delta").load(path)` (and a temp view
+  * for SQL) instead.
   *
   * cf. the reference's negative write path (`tests/local.rs:92-103`):
   * there, even INSERT fails by design; here the full maintenance surface

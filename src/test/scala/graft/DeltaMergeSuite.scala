@@ -75,12 +75,14 @@ class DeltaMergeSuite extends AnyFunSuite {
     import spark.implicits._
     val dir = freshTable()
     val before = DeltaLog.snapshot(spark, dir)
-    val source = Seq((2, "a", 9), (7, "a", 700)).toDF("id", "k", "v")
+    // ids 2 and 4 exist in the two partition files, which an insert-only
+    // merge never touches: its anti join must still read them
+    val source = Seq((2, "a", 9), (4, "b", 44), (7, "a", 700)).toDF("id", "k", "v")
     val m = DeltaMerge.merge(
       spark, dir, source,
       condition = "t.id = s.id",
       notMatchedInsert = Some(Map("id" -> "s.id", "k" -> "s.k", "v" -> "s.v")))
-    assert(m.rowsInserted === 1) // id=2 matches → not inserted
+    assert(m.rowsInserted === 1) // ids 2 and 4 match → not inserted
     assert(m.filesRewritten === 0)
     val after = DeltaLog.snapshot(spark, dir)
     assert(before.files.map(_.path).toSet.subsetOf(after.files.map(_.path).toSet))
@@ -351,5 +353,65 @@ class DeltaMergeSuite extends AnyFunSuite {
         .select("w").collect()(0).getDouble(0)
       assert(got === 7.5)
     } finally spark.conf.unset("spark.graft.delta.schema.autoMerge.enabled")
+  }
+
+  // --- insert anti-join: touched-file rows stand in for the full target
+
+  test("merge: a source row whose only match fails the MATCHED condition is not inserted") {
+    import spark.implicits._
+    val dir = freshTable()
+    // id 2 (v=200) matches but fails `t.v > 250`: carried, not updated, and
+    // — matched under the ON condition — never inserted; id 3 updates, 6 inserts
+    val source = Seq((2, "a", 222), (3, "b", 333), (6, "b", 666)).toDF("id", "k", "v")
+    val m = DeltaMerge.merge(
+      spark, dir, source, "t.id = s.id",
+      matched = Seq(Matched(Some(Map("v" -> "s.v")), condition = Some("t.v > 250"))),
+      notMatched = Seq(NotMatched(Map("id" -> "s.id", "k" -> "s.k", "v" -> "s.v"))),
+      bySource = Nil, schemaEvolution = false)
+    assert((m.rowsUpdated, m.rowsInserted) === (1L, 1L))
+    val rows = DeltaTable.read(spark, dir).orderBy("id")
+      .collect().map(r => (r.getAs[Int]("id"), r.getAs[Int]("v"))).toSeq
+    assert(rows === Seq((1, 100), (2, 200), (3, 333), (4, 400), (6, 666)))
+  }
+
+  test("merge: with no target row matched, every source row is inserted") {
+    import spark.implicits._
+    val dir = freshTable()
+    val before = DeltaLog.snapshot(spark, dir).files.map(_.path).toSet
+    val source = Seq((7, "a", 700), (8, "b", 800), (9, "c", 900)).toDF("id", "k", "v")
+    val m = DeltaMerge.merge(
+      spark, dir, source, "t.id = s.id",
+      matchedUpdate = Some(Map("v" -> "s.v")),
+      notMatchedInsert = Some(Map("id" -> "s.id", "k" -> "s.k", "v" -> "s.v")))
+    assert((m.rowsUpdated, m.rowsInserted, m.filesRewritten) === (0L, 3L, 0L))
+    assert(before.subsetOf(DeltaLog.snapshot(spark, dir).files.map(_.path).toSet))
+    assert(DeltaTable.read(spark, dir).orderBy("id").collect().map(_.getAs[Int]("id")).toSeq
+      === Seq(1, 2, 3, 4, 7, 8, 9))
+  }
+
+  test("merge: CDF insert change rows are exactly the unmatched source rows") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-merge-cdf-ins").toString
+    DeltaWriter.write(
+      Seq((1, "a", 100), (2, "a", 200), (3, "b", 300)).toDF("id", "k", "v").coalesce(1),
+      dir, SaveMode.Append, Seq("k"))
+    spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES ('delta.enableChangeDataFeed' = 'true')") // v1
+    // id 2 matches a row in partition a's file; id 3 matches but fails the
+    // clause condition; 5 and 6 match nothing
+    val source = Seq((2, "a", 222), (3, "b", 333), (5, "a", 500), (6, "b", 600))
+      .toDF("id", "k", "v")
+    DeltaMerge.merge(
+      spark, dir, source, "t.id = s.id",
+      matched = Seq(Matched(Some(Map("v" -> "s.v")), condition = Some("s.v < 300"))),
+      notMatched = Seq(NotMatched(Map("id" -> "s.id", "k" -> "s.k", "v" -> "s.v"))),
+      bySource = Nil, schemaEvolution = false)
+    // the merge commit is v2: (1, 2] reads exactly its change rows
+    val changes = graft.sources.delta.DeltaCdf.read(spark, dir, 1, 2)
+      .select("id", "v", "_change_type").collect()
+      .map(r => (r.getAs[Int]("id"), r.getAs[Int]("v"), r.getAs[String]("_change_type")))
+      .toSet
+    assert(changes === Set(
+      (2, 200, "update_preimage"), (2, 222, "update_postimage"),
+      (5, 500, "insert"), (6, 600, "insert")))
   }
 }

@@ -149,6 +149,48 @@ class DeltaSuite extends AnyFunSuite {
     assert(kept.flatMap(_.files).nonEmpty)
   }
 
+  test("stats skipping treats -0.0 and 0.0 as equal: a -0.0 max keeps `d = 0` and `d >= 0`") {
+    val dir = tmpDir()
+    import spark.implicits._
+    val df = Seq((1L, -5.0d), (2L, -0.0d)).toDF("id", "d").coalesce(1)
+    DeltaTable.write(df, dir, SaveMode.Overwrite)
+    val pq = tmpDir()
+    df.write.mode("overwrite").parquet(pq)
+    val delta = DeltaTable.read(spark, dir)
+    val raw = spark.read.parquet(pq)
+    for (p <- Seq(col("d") === 0, col("d") >= 0)) {
+      assert(raw.filter(p).count() === 1L, s"parquet reference for $p")
+      assert(delta.filter(p).count() === 1L, s"the -0.0 row must survive $p")
+    }
+    // stats that still say -0.0 (older commits, other writers) keep the file too
+    val snap = DeltaTable.snapshot(spark, dir)
+    assert(snap.files.flatMap(_.stats).exists(_.contains("\"d\":0.0")))
+    val legacy = snap.copy(files = snap.files.map(f =>
+      f.copy(stats = f.stats.map(_.replace("\"d\":0.0", "\"d\":-0.0")))))
+    val attr = org.apache.spark.sql.catalyst.expressions.AttributeReference(
+      "d", org.apache.spark.sql.types.DoubleType)()
+    val zero = org.apache.spark.sql.catalyst.expressions.Literal(0.0d)
+    for (p <- Seq(org.apache.spark.sql.catalyst.expressions.EqualTo(attr, zero),
+        org.apache.spark.sql.catalyst.expressions.GreaterThanOrEqual(attr, zero)))
+      assert(new DeltaFileIndex(spark, legacy).listFiles(Nil, Seq(p)).flatMap(_.files).size === 1,
+        s"a -0.0 max bound must keep the file for $p")
+  }
+
+  test("stats skipping treats -0.0 and 0.0 as equal: a 0.0 min keeps `d = -0.0` and `d <= -0.0`") {
+    val dir = tmpDir()
+    import spark.implicits._
+    val df = Seq((1L, 0.0d), (2L, 5.0d)).toDF("id", "d").coalesce(1)
+    DeltaTable.write(df, dir, SaveMode.Overwrite)
+    val pq = tmpDir()
+    df.write.mode("overwrite").parquet(pq)
+    val delta = DeltaTable.read(spark, dir)
+    val raw = spark.read.parquet(pq)
+    for (p <- Seq(col("d") === lit(-0.0d), col("d") <= lit(-0.0d))) {
+      assert(raw.filter(p).count() === 1L, s"parquet reference for $p")
+      assert(delta.filter(p).count() === 1L, s"the 0.0 row must survive $p")
+    }
+  }
+
   test("timestamp stats skipping is micros-exact: equality on a sub-millisecond value survives") {
     val dir = tmpDir()
     import spark.implicits._

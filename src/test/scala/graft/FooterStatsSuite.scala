@@ -5,11 +5,11 @@ import java.sql.Timestamp
 import java.time.LocalDateTime
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.delta.DeltaWriter
+import graft.sources.delta.{DeltaTable, DeltaWriter}
 
 /** Parity specs for the footer-served add-action stats (r21): for every
   * supported type — and every deliberate fallback — the stats JSON must
@@ -71,16 +71,28 @@ class FooterStatsSuite extends AnyFunSuite {
     assert(f.values.exists(_.contains("\"numRecords\":0")), "expected an empty part file")
   }
 
-  test("NaN and ±0.0 double bounds fall back to the scan, byte-identical") {
+  test("±0.0 bounds are footer-served as 0.0; NaN falls back, byte-identical") {
     import spark.implicits._
     val nan = Seq((1L, Double.NaN), (2L, 1.0d)).toDF("id", "d")
     val (f1, s1, _, sServed1) = bothPaths(nan, partitions = 1)
     assert(f1 === s1)
     assert(sServed1 === 1, "NaN bounds must take the scan path")
-    val zero = Seq((1L, 0.0d), (2L, 5.0d)).toDF("id", "d")
-    val (f2, s2, _, sServed2) = bothPaths(zero, partitions = 1)
+    val nanF = Seq((1L, Float.NaN), (2L, 1.0f)).toDF("id", "f")
+    val (f2, s2, _, sServed2) = bothPaths(nanF, partitions = 1)
     assert(f2 === s2)
-    assert(sServed2 === 1, "a ±0.0 bound must take the scan path")
+    assert(sServed2 === 1, "NaN float bounds must take the scan path")
+    // zeros of both signs as min, max and interior values, next to
+    // non-zero ones; the single-row files make a lone zero both bounds
+    val zeros = Seq(
+      (1L, 0.0d, 0.0f), (2L, -0.0d, -0.0f), (3L, 5.0d, 2.5f), (4L, -0.0d, 0.0f),
+      (5L, -3.0d, -0.0f), (6L, 0.0d, -1.5f))
+    for ((rows, parts) <- Seq(zeros -> 1, zeros.take(2) -> 1, zeros.drop(2) -> 1,
+        zeros -> 3, zeros.take(1) -> 1, zeros.slice(1, 2) -> 1)) {
+      val (f, s, fServed, sServed) = bothPaths(rows.toDF("id", "d", "f"), partitions = parts)
+      assert(f === s)
+      assert(fServed === f.size && sServed === 0, s"±0.0 bounds must be footer-served: $rows")
+      assert(f.values.forall(j => !j.contains("-0.0")), s"zero bounds must render as 0.0: $f")
+    }
   }
 
   test("long strings (≥64 bytes) fall back to the scan, byte-identical") {
@@ -140,5 +152,35 @@ class FooterStatsSuite extends AnyFunSuite {
       finally spark.conf.unset("spark.graft.stats.footerDriverMax")
     assert(viaDriver.map { case (k, v) => k -> v.toString }
       === viaJob.map { case (k, v) => k -> v.toString })
+  }
+
+  test("write path: DML over zero doubles never re-scans staged files") {
+    import spark.implicits._
+    import graft.sources.delta.{DeltaDml, DeltaLog, DeltaMerge}
+    val dir = Files.createTempDirectory("graft-footerstats-dml").toString
+    def rows(ids: Range) = ids.map { i =>
+      (i.toLong, i % 3, if (i % 4 == 0) 0.0d else if (i % 4 == 1) -0.0d else i * 0.5d)
+    }.toDF("id", "p", "d")
+    def scansDuring(what: String)(op: => Unit): Unit = {
+      val s0 = DeltaWriter.scanStatsServed.get()
+      val f0 = DeltaWriter.footerStatsServed.get()
+      op
+      assert(DeltaWriter.scanStatsServed.get() === s0, s"$what re-scanned a staged file")
+      assert(DeltaWriter.footerStatsServed.get() > f0, s"$what staged no footer-served file")
+    }
+    scansDuring("create")(DeltaWriter.write(rows(0 until 40), dir, SaveMode.Append, Seq("p")))
+    scansDuring("append")(DeltaWriter.write(rows(40 until 60), dir, SaveMode.Append, Seq("p")))
+    scansDuring("UPDATE")(DeltaDml.update(spark, dir, "p = 1", Map("d" -> "d * 0.0")))
+    scansDuring("DELETE")(DeltaDml.delete(spark, dir, "p = 2 AND id % 5 = 0"))
+    scansDuring("MERGE")(DeltaMerge.merge(spark, dir,
+      Seq((3L, 0, -0.0d), (100L, 1, 0.0d)).toDF("id", "p", "d"), "t.id = s.id",
+      matchedUpdate = Some(Map("d" -> "s.d")),
+      notMatchedInsert = Some(Map("id" -> "s.id", "p" -> "s.p", "d" -> "s.d"))))
+    val stats = DeltaLog.snapshot(spark, dir).files.flatMap(_.stats)
+    assert(stats.nonEmpty && stats.forall(!_.contains("-0.0")), s"zero bounds must render as 0.0: $stats")
+    // the canonical bounds skip soundly: a pushed `d = 0` finds every zero
+    val all = DeltaTable.read(spark, dir)
+    assert(all.filter(col("d") === 0.0d).count() ===
+      all.collect().count(_.getAs[Double]("d") == 0.0d))
   }
 }
