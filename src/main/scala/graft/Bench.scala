@@ -13,6 +13,11 @@ object Bench {
     * every emitted JSON line so each number says what plane it certifies. */
   private[graft] def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
+  /** The shipped session on the harness plane: `local[defaultCpus]` with
+    * as many shuffle partitions. */
+  private[graft] def harnessSession(): SparkSession =
+    GraftSession.getOrCreate(s"local[$defaultCpus]", Some(defaultCpus.toInt))
+
   /** The plane fields every bench JSON line carries (the r16 verdict's
     * fix): a number without its master/shuffle-partitions context cannot
     * be compared across harnesses or rounds. */
@@ -98,6 +103,36 @@ object Bench {
   private[graft] def childNeedsRetry(c: ChildRes, minAnchor: Double): Boolean =
     c.best < 0 || c.anchor <= 0 ||
       (minAnchor > 0 && c.anchor > AnchorSpreadGate * minAnchor)
+
+  /** The window gate over one-fresh-JVM-per-query children (Bench's sf1
+    * pass and ScaleCheck's isolated comparables alike): each child samples
+    * the SAME trivial anchor probe in its own fresh JVM, so the spread
+    * across children measures machine health over the whole window, and
+    * all samples are steady-state-comparable (identical JVM age at sample
+    * time), so none is dropped. While that spread exceeds the gate, up to
+    * [[anchorRetries]] rounds re-run the children [[childNeedsRetry]]
+    * flags and min-merge them ([[combineChild]]). Returns the merged
+    * results and the number of child re-runs. */
+  private[graft] def retryNoisyChildren(first: Seq[ChildRes])(
+      rerun: String => ChildRes): (Seq[ChildRes], Int) = {
+    var results = first
+    var rerunCount = 0
+    def anchors = results.map(_.anchor).filter(_ > 0)
+    def crossSpread =
+      if (anchors.isEmpty) -1.0 else anchors.max / math.max(anchors.min, 1e-9)
+    var tries = 0
+    while (crossSpread > AnchorSpreadGate && tries < anchorRetries) {
+      tries += 1
+      val minA = anchors.min
+      System.err.println(s"[bench] cross-child anchor_spread $crossSpread > " +
+        s"$AnchorSpreadGate: re-running noisy children (round $tries)")
+      results = results.map { r =>
+        if (!childNeedsRetry(r, minA)) r
+        else { rerunCount += 1; combineChild(r, rerun(r.name)) }
+      }
+    }
+    (results, rerunCount)
+  }
 
   /** The sf1 record binds per QUERY, not just per window (r19 verdict #1):
     * r19's window-level anchor gate passed at spread 1.483 while dd12
@@ -365,13 +400,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = defaultCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // same engine surface as Verify (delta SQL parser + native functions)
-      .config("spark.sql.extensions", classOf[graft.functions.GraftSparkExtensions].getName)
-      .getOrCreate()
+    val spark = harnessSession()
     spark.sparkContext.setLogLevel("WARN")
     // optional comma-separated name-prefix filter for targeted local runs
     // (the driver never sets it, so driver benches always cover everything)
@@ -454,39 +483,15 @@ object Bench {
               System.err.println(s"[bench] sf1 child $name failed: $err")
               ChildRes(name, -1.0, 1.0, -1.0)
           }
-        var results: Seq[ChildRes] = Sf1Headline.map { prefix =>
-          val name = all.find(_.startsWith(prefix)).getOrElse(
-            sys.error(s"no registered query with prefix $prefix"))
-          runChild(name)
-        }
-        // cross-child anchor spread: each child samples the SAME trivial
-        // probe in its own fresh JVM, so spread across children measures
-        // machine health over the whole sf1 window (the per-pass
-        // interference signal the single-child design got from
-        // interleaving) — all samples are steady-state-comparable
-        // (identical JVM age at sample time), so none is dropped.
-        // ANCHOR-GATED (r18 verdict #1): children whose window was noisy
-        // relative to the best window (or that crashed) are re-run up to
-        // anchorRetries times; min-merge per child, pollution marker when
-        // the final spread still exceeds the gate.
-        def anchors = results.map(_.anchor).filter(_ > 0)
-        def crossSpread = {
-          val a = anchors
-          if (a.isEmpty) -1.0 else a.max / math.max(a.min, 1e-9)
-        }
-        var sf1Retried = 0
-        var tries = 0
-        while (crossSpread > AnchorSpreadGate && tries < anchorRetries) {
-          tries += 1
-          val minA = anchors.min
-          System.err.println(s"[bench] sf1 cross-child anchor_spread " +
-            s"$crossSpread > $AnchorSpreadGate: re-running noisy children " +
-            s"(round $tries)")
-          results = results.map { r =>
-            if (!childNeedsRetry(r, minA)) r
-            else { sf1Retried += 1; combineChild(r, runChild(r.name)) }
-          }
-        }
+        // ANCHOR-GATED (r18 verdict #1): the cross-child spread is the
+        // per-pass interference signal the single-child design got from
+        // interleaving; a pollution marker is stamped when the final spread
+        // still exceeds the gate.
+        val (gated, sf1Retried) = retryNoisyChildren(Sf1Headline.map { prefix =>
+          runChild(all.find(_.startsWith(prefix)).getOrElse(
+            sys.error(s"no registered query with prefix $prefix")))
+        })(runChild)
+        var results = gated
         // per-QUERY gate against the committed comparables (r19 verdict
         // #1): the window gate above bounds the WINDOW's health via a
         // trivial anchor — it cannot see a 20s shuffle-heavy query
@@ -523,7 +528,7 @@ object Bench {
           offending = results.filter(queryExceedsComparable(_, comparables))
         }
         val qPolluted = offending.map(r => shortKey(r.name)).sorted
-        val a = anchors
+        val a = results.map(_.anchor).filter(_ > 0)
         val (aMin, aMax) = if (a.isEmpty) (-1.0, -1.0) else (a.min, a.max)
         val p = Pass(results.map(r => (r.name, r.best, r.spread)), reps, workDir,
           aMin, aMax, if (aMin <= 0) -1.0 else aMax / math.max(aMin, 1e-9))
@@ -680,40 +685,19 @@ object Bench {
   }
 
   /** Launch [[BenchSf1QueryChild]] for ONE headline query; parses its
-    * `SF1Q <name> <bestSec> <spread> <anchorSec>` line. Mirrors the
-    * parent's build.sbt -D surface (timezone above all: a child under the
-    * machine-default zone would plan the timestamp-heavy headliners
-    * differently than the sf0.1 pass). */
+    * `SF1Q <name> <bestSec> <spread> <anchorSec>` line. */
   private def sf1QueryChild(
       name: String, workDir: String, reps: Int): Either[String, (Double, Double, Double)] =
     try {
-      val javaBin = s"${sys.props("java.home")}/bin/java"
-      val cmd = Seq(javaBin) ++ JvmOpens.asArgv ++ Seq(
-        "-Dspark.ui.enabled=false",
-        "-Dspark.sql.session.timeZone=UTC",
-        s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",
-        "-cp", sys.props("java.class.path"),
-        "graft.BenchSf1QueryChild", name, workDir, reps.toString)
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.redirectErrorStream(true)
-      val proc = pb.start()
-      val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-      val code = proc.waitFor()
-      if (code != 0) Left(s"exit $code: " +
-        out.linesIterator.toSeq.takeRight(5).mkString(" | "))
-      else {
-        // the per-stage locus line rides the round logs: when an attempt
-        // reads hot relative to its comparable, stderr says WHICH stage
-        // absorbed the window (r19 verdict #3)
-        out.linesIterator.filter(_.startsWith("SF1STAGES "))
-          .foreach(l => System.err.println(s"[bench] $l"))
-        out.linesIterator.toSeq.reverse
-          .collectFirst { case l if l.startsWith(s"SF1Q $name ") =>
-            val parts = l.split(' ')
-            (parts(2).toDouble, parts(3).toDouble, parts(4).toDouble)
-          }
-          .toRight(s"no SF1Q line from child $name")
-      }
+      val out = JvmOpens.runChild("BenchSf1QueryChild", Seq(name, workDir, reps.toString))(
+        (code, out) => s"exit $code: " + out.takeRight(5).mkString(" | "))
+      // the per-stage locus line rides the round logs: when an attempt
+      // reads hot relative to its comparable, stderr says WHICH stage
+      // absorbed the window (r19 verdict #3)
+      out.filter(_.startsWith("SF1STAGES "))
+        .foreach(l => System.err.println(s"[bench] $l"))
+      val parts = JvmOpens.lastLine(out, s"SF1Q $name ", s"no SF1Q line from child $name")
+      Right((parts(2).toDouble, parts(3).toDouble, parts(4).toDouble))
     } catch { case e: Throwable =>
       Left(Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
     }
@@ -773,13 +757,7 @@ object BenchSf1QueryChild {
     val name = args(0)
     val dir = args(1)
     val reps = args(2).toInt
-    val cpus = Bench.defaultCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[graft.functions.GraftSparkExtensions].getName)
-      .getOrCreate()
+    val spark = Bench.harnessSession()
     spark.sparkContext.setLogLevel("ERROR")
     val fn = SparkEntry.queries(name)
     def anchorProbe(): Unit = {

@@ -30,24 +30,19 @@ object ClusterCheck {
       "ClusterCheck needs SPARK_HOME (e.g. /opt/spark) in the environment")
     require(sys.env.contains("SPARK_SCALA_VERSION"),
       "ClusterCheck needs SPARK_SCALA_VERSION (e.g. 2.13) in the environment")
-    val addOpens = JvmOpens.asOptionString
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,2,1024]")
-      .appName("graft-cluster-check")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.memory", "1024m")
-      // executors are fresh JVMs: they need our classes and the JDK17 opens
-      .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.sql.extensions", classOf[graft.functions.GraftSparkExtensions].getName)
-      .getOrCreate()
+    val spark = GraftSession.getOrCreate("local-cluster[2,2,1024]", Some(4),
+      "graft-cluster-check", Map("spark.executor.memory" -> "1024m") ++ executorJvm)
     spark.sparkContext.setLogLevel("WARN")
     try {
       run(spark)
       println("CLUSTERCHECK OK")
     } finally spark.stop()
   }
+
+  /** Executors are fresh JVMs: they need our classes and the JDK17 opens. */
+  private[graft] def executorJvm: Map[String, String] = Map(
+    "spark.executor.extraClassPath" -> sys.props("java.class.path"),
+    "spark.executor.extraJavaOptions" -> JvmOpens.asOptionString)
 
   private[graft] def run(spark: SparkSession): Unit = {
     import graft.sources.delta.{DeltaDml, DeltaSchema, DeltaTable, DeltaWriter}

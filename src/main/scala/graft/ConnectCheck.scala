@@ -2,7 +2,6 @@ package graft
 
 import java.net.{URL, URLClassLoader}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Remote-client protocol pin — the Spark-native analog of the
@@ -66,15 +65,9 @@ object ConnectCheck {
     val probe = new java.net.ServerSocket(0)
     val port = probe.getLocalPort
     probe.close()
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-connect-check")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.plugins", "org.apache.spark.sql.connect.SparkConnectPlugin")
-      .config("spark.connect.grpc.binding.port", port.toString)
-      .config("spark.sql.extensions", classOf[graft.functions.GraftSparkExtensions].getName)
-      .getOrCreate()
+    val spark = GraftSession.getOrCreate("local[4]", Some(4), "graft-connect-check", Map(
+      "spark.plugins" -> "org.apache.spark.sql.connect.SparkConnectPlugin",
+      "spark.connect.grpc.binding.port" -> port.toString))
     spark.sparkContext.setLogLevel("WARN")
     try {
       // ---- server-side state: a Delta table the remote client never

@@ -4,12 +4,17 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory — the Spark-native analog of the reference's
   * `custom_session_config` / `custom_session_state` builders
-  * (`src/lib.rs:18-42`): one place that yields a session with the engine's
-  * full surface wired up — the `delta` source resolves via the
-  * META-INF/services DataSourceRegister (no per-role codec/registry
+  * (`src/lib.rs:18-42`), and the ONLY `SparkSession.builder` in the
+  * project: the product, every harness main and the test suite get their
+  * session here, so what is benched and tested is what ships. The session
+  * has the engine's full surface wired up — the `delta` source resolves via
+  * the META-INF/services DataSourceRegister (no per-role codec/registry
   * distribution needed: Spark ships closures with tasks, SURVEY §0),
-  * graft's native functions are registered, timezone is pinned to UTC, and
-  * shuffle parallelism defaults to the machine instead of 200.
+  * [[graft.functions.GraftSparkExtensions]] injects graft's SQL functions,
+  * Delta SQL parser and optimizer rule into every session of the context
+  * (`newSession()` included), timezone is pinned to UTC, the `fs.http`/
+  * `fs.s3` stores are registered, and shuffle parallelism defaults to the
+  * machine instead of 200.
   *
   * The reference's `information_schema` toggle (`src/lib.rs:19`) maps to
   * Spark's always-on catalog surface (SHOW TABLES / DESCRIBE /
@@ -17,11 +22,15 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Build (or reuse) a configured local session. */
+  /** Build (or reuse) a configured session. `conf` carries what really
+    * differs by caller (the Connect plugin and port, a cluster's executor
+    * classpath and memory); it is applied last, so it may also override a
+    * default. */
   def getOrCreate(
       master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
       shufflePartitions: Option[Int] = None,
-      appName: String = "graft"): SparkSession = {
+      appName: String = "graft",
+      conf: Map[String, String] = Map.empty): SparkSession = {
     val parts = shufflePartitions.getOrElse(Runtime.getRuntime.availableProcessors())
     val spark = SparkSession.builder()
       .master(master)
@@ -46,11 +55,12 @@ object GraftSession {
          catch { case _: ClassNotFoundException | _: LinkageError =>
            Map("spark.hadoop.fs.s3a.impl" -> classOf[graft.sources.S3ACompatFileSystem].getName)
          }))
+      .config(conf)
       .getOrCreate()
-    // idempotent re-registration: getOrCreate may have returned a session
-    // built elsewhere (extensions only apply at context build time)
+    // extensions apply only when a context is built: a session that
+    // already existed in this JVM without them gets the functions as
+    // temp functions (a no-op when the extension is in place)
     graft.functions.GraftFunctions.register(spark)
-    graft.functions.GraftAggregates.register(spark)
     spark
   }
 }

@@ -44,12 +44,7 @@ object ScaleCheck {
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     val cpus = Bench.defaultCpus
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[graft.functions.GraftSparkExtensions].getName)
-      .getOrCreate()
+    val spark = Bench.harnessSession()
     spark.sparkContext.setLogLevel("WARN")
 
     // ---- stage 1: derive the scaled dir (idempotent: skipped when present)
@@ -339,24 +334,11 @@ object ScaleCheck {
     // JVM per point (the parent-wear lesson), min over 2 reps.
     // Targeted: SPARK_GRAFT_SCALE_ONLY=cores.
     def childRun(cpusOverride: String, dir: String): Double = {
-      val javaBin = s"${sys.props("java.home")}/bin/java"
-      val cmd = Seq(javaBin) ++ JvmOpens.asArgv ++ Seq(
-        s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",
-        "-Dspark.ui.enabled=false",
-        "-Dspark.sql.session.timeZone=UTC",
-        "-cp", sys.props("java.class.path"),
-        "graft.BoundedHeapProbe", "dd02_ngram_jaccard", dir, "2")
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpusOverride)
-      pb.redirectErrorStream(true)
-      val proc = pb.start()
-      val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-      val code = proc.waitFor()
-      require(code == 0, s"constrained-cores child (cpus=$cpusOverride) failed " +
-        s"(exit $code):\n" + out.linesIterator.toSeq.takeRight(15).mkString("\n"))
-      out.linesIterator.toSeq.reverse
-        .collectFirst { case l if l.startsWith("BOUNDEDHEAP ") => l.split(' ')(2).toDouble }
-        .getOrElse(sys.error("no BOUNDEDHEAP line from constrained-cores child"))
+      val out = JvmOpens.runChild("BoundedHeapProbe", Seq("dd02_ngram_jaccard", dir, "2"),
+        env = Map("SPARK_GRAFT_CPUS" -> cpusOverride))(
+        JvmOpens.exitTail(s"constrained-cores child (cpus=$cpusOverride)", 15))
+      JvmOpens.lastLine(out, "BOUNDEDHEAP ",
+        "no BOUNDEDHEAP line from constrained-cores child")(2).toDouble
     }
     val constrained: Option[Map[String, (Double, Double)]] =
       if (!scaleOnly.forall(_.exists(s => "cores".startsWith(s)))) None
@@ -382,28 +364,13 @@ object ScaleCheck {
       else {
         val all = SparkEntry.queries.keys.toSeq.sorted
         def runChild(name: String): Bench.ChildRes = {
-          val javaBin = s"${sys.props("java.home")}/bin/java"
-          val cmd = Seq(javaBin) ++ JvmOpens.asArgv ++ Seq(
-            "-Dspark.ui.enabled=false",
-            "-Dspark.sql.session.timeZone=UTC",
-            s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",
-            "-cp", sys.props("java.class.path"),
-            "graft.BenchSf1QueryChild", name, workDir, "2")
-          val pb = new ProcessBuilder(cmd: _*)
-          pb.redirectErrorStream(true)
-          val proc = pb.start()
-          val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-          val code = proc.waitFor()
-          require(code == 0, s"sf1-isolated child $name failed (exit $code):\n" +
-            out.linesIterator.toSeq.takeRight(10).mkString("\n"))
-          val res = out.linesIterator.toSeq.reverse
-            .collectFirst { case l if l.startsWith(s"SF1Q $name ") =>
-              val parts = l.split(' ')
-              Bench.ChildRes(name, parts(2).toDouble, parts(3).toDouble,
-                parts(4).toDouble)
-            }
-            .getOrElse(sys.error(s"no SF1Q line from sf1-isolated child $name"))
-          out.linesIterator
+          val out = JvmOpens.runChild("BenchSf1QueryChild", Seq(name, workDir, "2"))(
+            JvmOpens.exitTail(s"sf1-isolated child $name", 10))
+          val parts = JvmOpens.lastLine(out, s"SF1Q $name ",
+            s"no SF1Q line from sf1-isolated child $name")
+          val res = Bench.ChildRes(name, parts(2).toDouble, parts(3).toDouble,
+            parts(4).toDouble)
+          out
             .collectFirst { case l if l.startsWith(s"SF1STAGES $name ") =>
               l.stripPrefix(s"SF1STAGES $name ")
             }
@@ -418,26 +385,12 @@ object ScaleCheck {
         val sf1Only = sys.env.get("SPARK_GRAFT_SF1_ONLY").map(_.split(',').toSeq)
         val headliners = Bench.Sf1Headline.filter(p =>
           sf1Only.forall(_.exists(p.startsWith)))
-        var results = headliners.map { prefix =>
+        // same anchor gate as the bench record, so the ISOLATED
+        // comparables defend themselves too
+        Some(Bench.retryNoisyChildren(headliners.map { prefix =>
           runChild(all.find(_.startsWith(prefix)).getOrElse(
             sys.error(s"no registered query with prefix $prefix")))
-        }
-        // same anchor gate as the bench record: children measured in a
-        // noisy window (anchor > 1.5x the best window) are re-run and
-        // min-merged, so the ISOLATED comparables defend themselves too
-        def anchors = results.map(_.anchor).filter(_ > 0)
-        var tries = 0
-        while (anchors.nonEmpty &&
-          anchors.max / math.max(anchors.min, 1e-9) > Bench.AnchorSpreadGate &&
-          tries < Bench.anchorRetries) {
-          tries += 1
-          val minA = anchors.min
-          results = results.map { r =>
-            if (!Bench.childNeedsRetry(r, minA)) r
-            else Bench.combineChild(r, runChild(r.name))
-          }
-        }
-        Some(results)
+        })(runChild)._1)
       }
 
     // ---- stage 5: bounded-heap completion proof for the worst heap
@@ -451,23 +404,10 @@ object ScaleCheck {
     val boundedResults: Seq[(String, Double)] =
       if (scaleOnly.nonEmpty) Nil
       else Seq("dd12_lsh_quality", "pp01_curation").map { name =>
-        val javaBin = s"${sys.props("java.home")}/bin/java"
-        val cmd = Seq(javaBin) ++ JvmOpens.asArgv ++ Seq(
-          "-Xmx4g", "-Dspark.ui.enabled=false",
-          "-Dspark.sql.session.timeZone=UTC",
-          "-cp", sys.props("java.class.path"),
-          "graft.BoundedHeapProbe", name, workDir)
-        val pb = new ProcessBuilder(cmd: _*)
-        pb.redirectErrorStream(true)
-        val proc = pb.start()
-        val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-        val code = proc.waitFor()
-        require(code == 0, s"bounded-heap probe $name failed (exit $code):\n" +
-          out.linesIterator.toSeq.takeRight(15).mkString("\n"))
-        val sec = out.linesIterator.toSeq.reverse
-          .collectFirst { case l if l.startsWith("BOUNDEDHEAP ") => l.split(' ')(2).toDouble }
-          .getOrElse(sys.error(s"no BOUNDEDHEAP line from $name"))
-        name -> sec
+        val out = JvmOpens.runChild("BoundedHeapProbe", Seq(name, workDir), xmx = "4g")(
+          JvmOpens.exitTail(s"bounded-heap probe $name", 15))
+        name -> JvmOpens.lastLine(out, "BOUNDEDHEAP ",
+          s"no BOUNDEDHEAP line from $name")(2).toDouble
       }
 
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -1388,13 +1328,7 @@ object BoundedHeapProbe {
     // optional reps (default 1): min-over-reps for probes where one timed
     // sample is too noisy (the constrained-cores stage passes 2)
     val reps = args.lift(2).map(_.toInt).getOrElse(1)
-    val cpus = Bench.defaultCpus
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[graft.functions.GraftSparkExtensions].getName)
-      .getOrCreate()
+    val spark = Bench.harnessSession()
     spark.sparkContext.setLogLevel("ERROR")
     def once(): Unit =
       try SparkEntry.queries(name)(spark, dir).write.mode("overwrite").format("noop").save()

@@ -3,8 +3,6 @@ package graft
 import java.io.File
 import java.net.{InetSocketAddress, ServerSocket, Socket}
 
-import org.apache.spark.sql.SparkSession
-
 /** SEPARATE-PROCESS cluster deployment pin — the one reference lifecycle
   * `local-cluster` cannot replay: the reference runs its scheduler and
   * executor as distinct OS processes that a client then connects to
@@ -103,20 +101,11 @@ object StandaloneClusterCheck {
           masterUrl),
         scratch, "worker")
 
-      val addOpensOpt = JvmOpens.asOptionString
-      val spark = SparkSession.builder()
-        .master(masterUrl)
-        .appName("graft-standalone-check")
-        .config("spark.driver.host", "127.0.0.1")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .config("spark.executor.memory", "1g")
-        .config("spark.executor.cores", "2")
-        .config("spark.cores.max", "4")
-        .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-        .config("spark.executor.extraJavaOptions", addOpensOpt)
-        .config("spark.sql.extensions", classOf[graft.functions.GraftSparkExtensions].getName)
-        .getOrCreate()
+      val spark = GraftSession.getOrCreate(masterUrl, Some(4), "graft-standalone-check", Map(
+        "spark.driver.host" -> "127.0.0.1",
+        "spark.executor.memory" -> "1g",
+        "spark.executor.cores" -> "2",
+        "spark.cores.max" -> "4") ++ ClusterCheck.executorJvm)
       spark.sparkContext.setLogLevel("WARN")
       try {
         ClusterCheck.run(spark)

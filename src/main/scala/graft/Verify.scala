@@ -1,22 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // one shared parallelism default across all harnesses (Bench scaladoc)
-    val cpus = Bench.defaultCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // full engine surface: native functions + the Delta SQL statement /
-      // time-travel parser (dl12 runs `… VERSION AS OF …` through SQL)
-      .config("spark.sql.extensions", classOf[graft.functions.GraftSparkExtensions].getName)
-      .getOrCreate()
+    // the shipped session on the shared harness plane (Bench scaladoc)
+    val spark = Bench.harnessSession()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated name-prefix filter (same contract as Bench)

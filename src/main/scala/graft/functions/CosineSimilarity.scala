@@ -107,7 +107,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
 /** Registration surface for graft's native expressions. */
 object GraftFunctions {
 
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  /** Every graft SQL function: name → Catalyst builder. */
+  private[graft] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "cosine_sim" -> { exprs =>
       require(exprs.length == 2, s"cosine_sim expects 2 arguments, got ${exprs.length}")
       CosineSimilarity(exprs.head, exprs(1))
@@ -216,29 +217,40 @@ object GraftFunctions {
       val n = intLit(exprs(1), "width")
       val w = if (exprs.length == 3) intLit(exprs(2), "md5 word") else 0
       ByteNGramHashes(exprs.head, n, w)
+    },
+    "weighted_mean" -> { exprs =>
+      require(exprs.length == 2, s"weighted_mean expects 2 arguments, got ${exprs.length}")
+      WeightedMeanAgg.expression(exprs)
     })
 
-  /** Imperative per-session registration (idempotent) — lets any session
-    * use `expr("cosine_sim(a, b)")` without builder-time configuration. */
-  def register(spark: SparkSession): Unit =
+  /** Fallback registration for a session built WITHOUT
+    * [[GraftSparkExtensions]] (a vanilla session reaching the Delta source
+    * through META-INF, or one that existed before `GraftSession` ran).
+    * Names the session already resolves are skipped, so on an
+    * extension-built session this is a no-op and never replaces a
+    * function. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 }
 
-/** `SparkSessionExtensions` hook — the declarative analog of
-  * [[GraftFunctions.register]] for sessions built with
-  * `spark.sql.extensions=graft.functions.GraftSparkExtensions` (the
-  * Spark-native equivalent of the reference's per-role session builders,
-  * `examples/custom_scheduler.rs:34-35` — closures/registries here ship
-  * with the session, not via codecs). */
+/** `SparkSessionExtensions` hook: the ONE place graft functions are
+  * registered for sessions built with
+  * `spark.sql.extensions=graft.functions.GraftSparkExtensions` — which
+  * [[graft.GraftSession.getOrCreate]] always sets. Injected functions land
+  * in every session the context builds, `newSession()` (what Spark Connect
+  * clients get) included. The Spark-native equivalent of the reference's
+  * per-role session builders (`examples/custom_scheduler.rs:34-35`). */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs.head, exprs(1))))
+    GraftFunctions.builders.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftSparkExtensions].getName, name), builder))
+    }
     // Delta DML/maintenance SQL statements (DELETE/UPDATE/OPTIMIZE/VACUUM/
     // RESTORE/SHALLOW CLONE) — the delta-spark DeltaSqlParser pattern
     ext.injectParser((session, delegate) =>

@@ -2,9 +2,11 @@ package graft.functions
 
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
 
 /** Input row: weight + value. */
 case class WeightedIn(w: Double, x: Double)
@@ -41,10 +43,10 @@ object WeightedMeanAgg extends Aggregator[WeightedIn, WeightedBuf, Double] {
 
   override def bufferEncoder: Encoder[WeightedBuf] = Encoders.product[WeightedBuf]
   override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-}
 
-/** Registration helper (idempotent). */
-object GraftAggregates {
-  def register(spark: SparkSession): Unit =
-    spark.udf.register("weighted_mean", udaf(WeightedMeanAgg))
+  /** The Catalyst node `udaf(this)` registers as `weighted_mean(w, x)`,
+    * built directly so [[GraftFunctions.builders]] can carry it. */
+  private[functions] def expression(children: Seq[Expression]): Expression =
+    ScalaAggregator(children, this, ExpressionEncoder[WeightedIn](),
+      ExpressionEncoder[WeightedBuf](), aggregatorName = Some("weighted_mean"))
 }

@@ -38,7 +38,6 @@ object Dedup {
     * word_ngrams_arr expression — one Scala pass per document instead of
     * interpreted per-element lambda dispatch. */
   private def shingled(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     docs(s, dir)
       .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
       .select(col("doc_id"), expr("word_ngrams_arr(toks, 3)").as("shingles"))
@@ -90,7 +89,6 @@ object Dedup {
     * (ReuseExchange: identical subplan). Capped lists are exactly the old
     * anti-join survivors: df > 20 ⇔ collect_capped = NULL. */
   private def cappedPostings(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     docs(s, dir)
       .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
       .select(col("doc_id"), expr("word_ngrams(toks, 3)").as("g"))
@@ -156,7 +154,6 @@ object Dedup {
     * dd03_stages decomposition can time the band build apart from the
     * pair enumeration and the Jaccard verify. */
   private def dd03Bands(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(s)
     // persisted: read once, reused by the band self-join (both sides) and
     // the two candidate-verification joins.
     val sh = QueryCaches.persist(shingled(s, dir).filter(size(col("shingles")) > 0))
@@ -319,7 +316,6 @@ object Dedup {
   /** SimHash (16-bit, token-frequency weighted) + nibble-band candidates;
     * hamming ≤ 3 pairs (candidates are exhaustive by pigeonhole). */
   private def dd04Simhash(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // persisted (registered): reused by the sig-level join and both doc expansions
     val sigs = QueryCaches.persist(docs(s, dir)
       .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
@@ -368,7 +364,6 @@ object Dedup {
   /** Embedding-cosine near-dup within label blocks (exact left-fold dot
     * product — bit-identical across engines; floor-scaled output). */
   private def dd05EmbedDup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val v = s.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("label"), col("embedding").as("e"))
     v.as("a")
@@ -397,7 +392,6 @@ object Dedup {
     * is persisted: the interpreted 8×64 projection fold must not re-run on
     * both sides of the self-join (repo HOF-reuse rule). */
   private def dd07EmbedLshDup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val v = QueryCaches.persist(s.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").as("e"))
       .withColumn("bucket", Similarity.bucketCol))
@@ -425,7 +419,6 @@ object Dedup {
     * verification of the candidates alone. A small batch broadcasts, so
     * the corpus side never even shuffles. */
   private def dd08IncrementalDedup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val sh = QueryCaches.persist(shingled(s, dir).filter(size(col("shingles")) > 0))
     // same native minhash16 signature + 8×2 banding as dd03 (one index
     // definition serves batch and corpus — the invariant that makes the
@@ -550,7 +543,6 @@ object Dedup {
     * self-join is an equi-join on cid, the blocked-join shape every
     * near-dup operator in this module uses. */
   private def dd10Semdedup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val v = s.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").as("e"))
     val assigned = QueryCaches.persist(dd10Assignments(v))

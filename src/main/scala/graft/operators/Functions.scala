@@ -424,7 +424,6 @@ object Functions {
     * flag via [[graft.functions.WeightedMeanAgg]] — DECIMAL-exact partial
     * aggregation (order-independent merges), floor-scaled finish. */
   private def fn17UdafWeightedMean(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftAggregates.register(s)
     t(s, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
@@ -521,7 +520,6 @@ object Functions {
     * exact ints and the bucket width is a power of two, so the division
     * is float-exact on both engines). */
   private def fn22Math2(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     t(s, dir, "part")
       .filter(col("p_partkey") <= 150)
       .withColumn("x",

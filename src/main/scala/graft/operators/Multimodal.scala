@@ -149,7 +149,6 @@ object Multimodal {
     * production signature (64-bit) would switch pairing to dd03-style
     * multi-band equi-keys, same plan shape. */
   private def mm05PerceptualDedup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // byte_ngram_hashes is the native one-pass shingle hasher (bit-equal
     // to the declarative hex-substr/md5 chain — ByteNGramHashesSuite);
     // simhash16 is codegen'd. The whole signature derives per-row with no
@@ -209,7 +208,6 @@ object Multimodal {
     * popcount(hi⊕hi'). Signature-level pairing (not doc-level), per-kind
     * blocking, and the doc expansion joins are exactly mm05's. */
   private def mm06BandedMediaDedup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val sigs = QueryCaches.persist(media(s, dir)
       .filter(octet_length(col("payload")) > 0)
       .select(col("kind"), col("doc_id"),

@@ -106,7 +106,6 @@ object Pipeline {
     * equi-join; contaminated ids then anti-join the corpus. Linear in
     * corpus shingles, no all-pairs anything. */
   private def pp03Decontam(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = s.read.parquet(s"$dir/documents.parquet")
     def shingles(df: DataFrame): DataFrame = df
       .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
@@ -133,7 +132,6 @@ object Pipeline {
     * against the broadcast (eval-sized) shingle set; only eval-sized
     * frames are ever broadcast, never corpus-sized. */
   private def pp08ContamReport(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = s.read.parquet(s"$dir/documents.parquet")
     def shingles(df: DataFrame): DataFrame = df
       .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
@@ -232,7 +230,6 @@ object Pipeline {
     * (filter-before-sample ordering, hash-bit independence), not just the
     * parts. */
   private def pp07CorpusBuild(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val toks = s.read.parquet(s"$dir/documents.parquet")
       .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
       .withColumn("n_tok", size(col("toks")).cast("long"))

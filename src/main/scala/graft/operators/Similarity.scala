@@ -24,7 +24,6 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   private def vecs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     s.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").as("e"))
   }
@@ -199,7 +198,6 @@ object Similarity {
     * quantizer's √N-per-row cost can be measured against corpus growth
     * without the downstream probe joins. Returns N. */
   private[graft] def assignmentProbeRun(s: SparkSession, dir: String): Long = {
-    graft.functions.GraftFunctions.register(s)
     val v = vecs(s, dir)
     val n = v.count()
     try assignedFrame(v, centroids(v))
@@ -298,7 +296,6 @@ object Similarity {
     * sink, so the two assignment growth curves are measured on identical
     * machinery. Returns N. */
   private[graft] def twoLevelAssignProbeRun(s: SparkSession, dir: String): Long = {
-    graft.functions.GraftFunctions.register(s)
     val v = vecs(s, dir)
     val n = v.count()
     val k = coarseK(n)
@@ -528,7 +525,7 @@ object Similarity {
     * pq_adc_sim expression: the earlier declarative column repeated the
     * 16×8×8 codebook literal in ~72 expression nodes, and every AQE
     * plan-update event stringified all of them (GenericArrayData.toString
-    * under AdaptiveSparkPlanExec.withFinalPlanUpdate — DriverHotspots
+    * under AdaptiveSparkPlanExec.withFinalPlanUpdate — `Profile hotspots`
     * measured 60-70%% of ss07's wall at sf0.1 as pure plan printing). The
     * expression consumes both literals at BUILD time into an opaque
     * flattened holder (plan prints are O(1)) and computes the same

@@ -125,7 +125,6 @@ object TextAnalysis {
     // per (distinct, element) pair — measured 2.2s → 1.1s warm at sf0.1), and
     // word_ngrams_arr yields the DISTINCT n-grams in one Scala pass; the
     // n-gram TOTAL is n_tok - (k-1) by construction, no second array.
-    graft.functions.GraftFunctions.register(s)
     docs(s, dir)
       .withColumn("toks", expr(tokenize))
       .withColumn("n_tok", size(col("toks")).cast("long"))

@@ -443,6 +443,8 @@ object DeltaMaintenance {
     val candidates = candidatesOverride.map(_._2).getOrElse(
       filterByPartitionPredicate(spark, snap, snap.files, predicate))
     if (candidates.isEmpty) return OptimizeMetrics(0, 0, 0, snap.version)
+    // interleave_bits for a session built without GraftSparkExtensions (the
+    // delta source is reachable from any session through META-INF)
     graft.functions.GraftFunctions.register(spark)
 
     // scoped provider read ([[partitionInjected]]): partition values

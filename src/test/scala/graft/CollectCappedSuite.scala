@@ -18,7 +18,6 @@ class CollectCappedSuite extends AnyFunSuite {
 
   test("equivalent to the old hot-set anti-join + collect_list derivation") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // synthetic occurrence stream with a hot key (df 50), a boundary key
     // (df exactly 21 — hot), a full key (df exactly 20 — kept whole), and
     // a tail of small groups; many partitions so MERGE paths execute
@@ -65,7 +64,6 @@ class CollectCappedSuite extends AnyFunSuite {
 
   test("null inputs are skipped, empty groups yield an empty array") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq(("a", Some(3L)), ("a", None), ("a", Some(1L)), ("b", None))
       .toDF("g", "doc_id")
     val got = df.groupBy($"g")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{CosineSimilarity, GraftFunctions, GraftSparkExtensions}
+import graft.functions.{CosineSimilarity, GraftSparkExtensions}
 
 /** Specs for the native cosine_sim Catalyst expression: bit-exact parity
   * with the declarative fold the oracles use, codegen/interpreted
@@ -27,7 +27,6 @@ class CosineSimilaritySuite extends AnyFunSuite {
   }
 
   test("bit-exact parity with the declarative HOF fold (oracle formula)") {
-    GraftFunctions.register(spark)
     val df = pairs(spark)
       .select(col("id"), expr("cosine_sim(a, b)").as("fast"), expr(foldSim).as("fold"))
     val rows = df.collect()
@@ -39,7 +38,6 @@ class CosineSimilaritySuite extends AnyFunSuite {
   }
 
   test("codegen and interpreted paths agree exactly") {
-    GraftFunctions.register(spark)
     val base = pairs(spark)
     val withCodegen = base.select(expr("cosine_sim(a, b)")).collect().map(_.getDouble(0))
     val prev = spark.conf.get("spark.sql.codegen.wholeStage")
@@ -51,7 +49,6 @@ class CosineSimilaritySuite extends AnyFunSuite {
   }
 
   test("null input yields null; type mismatch is an analysis error") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((Some(Array(1.0f, 0.0f)), Option.empty[Array[Float]]))
       .toDF("a", "b")
@@ -62,7 +59,6 @@ class CosineSimilaritySuite extends AnyFunSuite {
   }
 
   test("identical vectors score 1.0; orthogonal score 0.0") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Array(1.0f, 2.0f, 3.0f), Array(1.0f, 2.0f, 3.0f)),

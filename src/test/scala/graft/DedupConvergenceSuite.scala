@@ -41,7 +41,6 @@ class DedupConvergenceSuite extends AnyFunSuite {
     // candidate-pair mass of the FINAL assignment against assigning to
     // the raw hash-sampled seeds (what a quantizer without the update
     // step would use).
-    graft.functions.GraftFunctions.register(spark)
     val v = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
       .select(col("vec_id"), col("embedding").as("e"))
     def pairMass(assign: org.apache.spark.sql.DataFrame): Long =

@@ -30,7 +30,6 @@ class GcdLcmSuite extends AnyFunSuite {
   }
 
   test("SQL surface: codegen path agrees with the kernel, nulls propagate") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((12L, 18L), (0L, 5L), (-12L, 18L), (17L, 13L))
       .toDF("a", "b")

@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.GraftFunctions
-
 /** Specs for the native pq_adc_sim Catalyst expression (the ss07/ss10 ADC
   * scorer): bit-exact parity with the declarative column it replaced (64
   * element_at dot terms + 8 norm terms as explicit left-assoc `+` chains,
@@ -55,7 +53,6 @@ class PqAdcSimSuite extends AnyFunSuite {
   /** Query×corpus scoring frame: every vector as corpus, vec_id < 5 as
     * queries — the ss07 shape without the ranking tail. */
   private def scoringFrame() = {
-    GraftFunctions.register(spark)
     val (cb, _) = fixtureCodebook()
     val v = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").as("e"))
@@ -131,7 +128,6 @@ class PqAdcSimSuite extends AnyFunSuite {
   }
 
   test("null inputs yield null; non-literal codebook is rejected") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val cb: Seq[Seq[Seq[Double]]] = Seq(Seq(Seq(1.0)))
     val norms: Seq[Seq[Double]] = Seq(Seq(1.0))

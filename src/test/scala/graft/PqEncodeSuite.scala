@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.GraftFunctions
-
 /** Specs for the native pq_encode Catalyst expression (the ss07/ss10 PQ
   * encoder): bit-exact parity with the declarative argmin it replaced
   * (array_min over (d2, code) structs with left-assoc d2 chains — the
@@ -43,7 +41,6 @@ class PqEncodeSuite extends AnyFunSuite {
   }
 
   test("bit-exact parity with the declarative argmin on the fixture") {
-    GraftFunctions.register(spark)
     val cb = fixtureCodebook()
     val v = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").as("e"))
@@ -61,7 +58,6 @@ class PqEncodeSuite extends AnyFunSuite {
   }
 
   test("codegen and interpreted paths agree exactly") {
-    GraftFunctions.register(spark)
     val cb = fixtureCodebook()
     val v = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("embedding").as("e"))
@@ -77,7 +73,6 @@ class PqEncodeSuite extends AnyFunSuite {
   }
 
   test("ties break to the lower code (duplicate codebook entries)") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // 3 codes, 2 subs, 2 dims; codes 2 and 3 are identical, both nearer to
     // the vector than code 1 in every subspace → argmin must report 2
@@ -92,7 +87,6 @@ class PqEncodeSuite extends AnyFunSuite {
   }
 
   test("null vector yields null; non-literal codebook is rejected") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val cb: Seq[Seq[Seq[Double]]] = Seq(Seq(Seq(0.0)))
     val df = Seq(Tuple1(Option.empty[Array[Float]])).toDF("e")

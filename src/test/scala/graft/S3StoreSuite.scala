@@ -402,8 +402,7 @@ class S3StoreSuite extends AnyFunSuite {
   }
 
   test("mixed concurrent writers race the conditional-PUT commit plane to a serial result") {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
     import spark.implicits._
     withS3 { (_, table) =>
@@ -434,8 +433,15 @@ class S3StoreSuite extends AnyFunSuite {
         () => DeltaDml.delete(spark, table, "p = 1 AND id <= 20"),
         () => DeltaDml.delete(spark, table, "p = 0 AND id <= 20"),
         () => DeltaDml.delete(spark, table, "p = 1 AND id > 20")) // overlaps p=1
-      Await.result(
+      // one thread per writer: on the global pool (one thread per core) a
+      // 4-core machine starts the 5th op only after another finished, and
+      // an overlapping DELETE that starts after the p=1 append committed
+      // rightly deletes it — a serial order the expected set below is not
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(ops.size)
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      try Await.result(
         Future.sequence(ops.map(op => Future(untilCommitted(op)))), 300.seconds)
+      finally pool.shutdown()
       assert(DeltaLog.snapshot(spark, table).version === 6L,
         "2 seeds + 5 ops must serialize into a linear 7-version history")
       val deleted = (1 to 40).filter(i =>

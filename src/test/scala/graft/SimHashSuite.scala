@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.GraftFunctions
-
 /** simhash16 native expression: parity with the declarative fold, edge
   * cases, codegen/interpreted agreement. */
 class SimHashSuite extends AnyFunSuite {
@@ -21,7 +19,6 @@ class SimHashSuite extends AnyFunSuite {
          0L, (a, x) -> a + x)"""
 
   test("exact parity with the declarative ±1-vote fold on real documents") {
-    GraftFunctions.register(spark)
     val rows = spark.read.parquet(s"$dir/documents.parquet")
       .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
       .filter(size(col("toks")) > 0)
@@ -34,7 +31,6 @@ class SimHashSuite extends AnyFunSuite {
   }
 
   test("edge cases: empty array, single hash, null") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1L, Some(Seq.empty[Long])),
@@ -48,7 +44,6 @@ class SimHashSuite extends AnyFunSuite {
   }
 
   test("codegen and interpreted paths agree") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(Tuple1(Seq(1L, 3L, 3L, 7L))).toDF("ths")
     val on = df.select(expr("simhash16(ths)")).collect()(0).getLong(0)

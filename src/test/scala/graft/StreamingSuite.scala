@@ -69,7 +69,6 @@ class StreamingSuite extends AnyFunSuite {
     // they enter the corpus. Mechanics verified against the batch
     // computation on identical data.
     implicit val ctx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val bandExpr =
       """posexplode(transform(sequence(0, 7), b ->
            concat(CAST(element_at(sig, 2 * b + 1) AS STRING), '_',

@@ -11,7 +11,6 @@ class TopCountSuite extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("top_count equals array_max(transform(array_distinct(...))) on fixture tokens") {
-    graft.functions.GraftFunctions.register(spark)
     val rows = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
       .filter(size(col("toks")) > 0)
@@ -24,7 +23,6 @@ class TopCountSuite extends AnyFunSuite {
   }
 
   test("edge shapes") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1, Seq("a")),

@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.GraftFunctions
-
 /** word_ngrams custom Generator: set/order parity with the declarative
   * shingling composition, plus edge cases. */
 class WordNGramsSuite extends AnyFunSuite {
@@ -25,7 +23,6 @@ class WordNGramsSuite extends AnyFunSuite {
     // sets, not sequences: collect_list order after an aggregation is not a
     // contract (ObjectHashAggregate may fall back to sort-based); the
     // generator's own emission order is pinned by the direct-eval test below
-    GraftFunctions.register(spark)
     val base = spark.read.parquet(s"$dir/documents.parquet")
       .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
     val viaGenerator = base
@@ -43,7 +40,6 @@ class WordNGramsSuite extends AnyFunSuite {
   }
 
   test("word_ngrams_arr matches the declarative array composition exactly") {
-    GraftFunctions.register(spark)
     val rows = spark.read.parquet(s"$dir/documents.parquet")
       .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
       .select(expr("word_ngrams_arr(toks, 3)").as("a"), expr(declarative).as("b"))
@@ -67,7 +63,6 @@ class WordNGramsSuite extends AnyFunSuite {
   }
 
   test("short and null inputs produce no rows") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1L, Some(Seq("a", "b"))),       // < n tokens

@@ -144,7 +144,6 @@ class ZOrderSuite extends AnyFunSuite {
   }
 
   test("interleave_bits: Morton encoding, null-as-zero, codegen = kernel") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     // bit i of arg j lands at i*n + j
     val r = spark.sql(

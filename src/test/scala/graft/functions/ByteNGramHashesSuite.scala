@@ -14,7 +14,6 @@ class ByteNGramHashesSuite extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("native hashes == hex-substr/md5 HOF chain on the documents fixture") {
-    GraftFunctions.register(spark)
     val rows = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), encode(col("text"), "utf-8").as("payload"))
       .withColumn("native", expr("byte_ngram_hashes(payload, 4)"))
@@ -32,7 +31,6 @@ class ByteNGramHashesSuite extends AnyFunSuite {
   }
 
   test("md5 word 1 == hex chars 9-16 of the same digest (mm06's hi half)") {
-    GraftFunctions.register(spark)
     val rows = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), encode(col("text"), "utf-8").as("payload"))
       .filter(octet_length(col("payload")) > 0)
@@ -51,7 +49,6 @@ class ByteNGramHashesSuite extends AnyFunSuite {
   }
 
   test("EMPTY payload returns an empty array (documented divergence from the recipe)") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // the declarative recipe's sequence(0, ceil(0/8.0)-1) = sequence(0,-1)
     // is a DESCENDING [0,-1] that would hash two phantom chunks; the
@@ -64,7 +61,6 @@ class ByteNGramHashesSuite extends AnyFunSuite {
   }
 
   test("tail chunk shorter than the width hashes its remaining hex chars") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // 5 bytes -> one full 8-hex chunk + one 2-hex tail
     val r = Seq(Array[Byte](0x41, 0x42, 0x43, 0x44, 0x45)).toDF("b")

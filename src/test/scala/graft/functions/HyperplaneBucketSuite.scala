@@ -13,7 +13,6 @@ class HyperplaneBucketSuite extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("native bucket == legacy HOF fold for every fixture vector") {
-    GraftFunctions.register(spark)
     val rows = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
       .select(col("vec_id"), col("embedding").as("e"))
       .withColumn("native", expr("hp_bucket8(e)"))
@@ -24,7 +23,6 @@ class HyperplaneBucketSuite extends AnyFunSuite {
   }
 
   test("buckets stay in the 8-bit range and are non-degenerate") {
-    GraftFunctions.register(spark)
     val stats = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
       .select(expr("hp_bucket8(embedding)").as("b"))
       .agg(min(col("b")), max(col("b")), countDistinct(col("b")))
