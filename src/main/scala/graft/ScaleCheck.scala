@@ -857,7 +857,7 @@ object ScaleCheck {
   private def dmlPlaneProbe(
       spark: SparkSession, nFiles: Int, eager: Boolean)
       : com.fasterxml.jackson.databind.node.ObjectNode = {
-    import graft.sources.delta.{DeltaDml, DeferredDeltaFiles}
+    import graft.sources.delta.{DeltaDml, SnapshotCache}
     val targetIdx = nFiles / 2
     val (dir, relOpt) = writeSyntheticLogWithTarget(nFiles, targetIdx)
     val rel = relOpt.getOrElse(sys.error(s"no add generated at index $targetIdx"))
@@ -898,7 +898,7 @@ object ScaleCheck {
         s"expected a 1-file/1-row selective DELETE, got $m")
     } finally {
       DeltaLog.DeferredScanMode = "auto"
-      DeferredDeltaFiles.clearCache()
+      SnapshotCache.clear()
       try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       catch { case _: Exception => () }
       try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
@@ -1054,7 +1054,7 @@ object ScaleCheck {
   private def vacuumPlaneProbe(
       spark: SparkSession, nFiles: Int, eager: Boolean)
       : com.fasterxml.jackson.databind.node.ObjectNode = {
-    import graft.sources.delta.{DeferredDeltaFiles, DeltaMaintenance}
+    import graft.sources.delta.{DeltaMaintenance, SnapshotCache}
     val dir = writeSyntheticLog(nFiles)
     val orphan = new java.io.File(dir, "orphan-stray.snappy.parquet")
     val os = new java.io.FileOutputStream(orphan)
@@ -1084,7 +1084,7 @@ object ScaleCheck {
         s"expected exactly the orphan to be eligible, got $eligible")
     } finally {
       DeltaLog.DeferredScanMode = "auto"
-      DeferredDeltaFiles.clearCache()
+      SnapshotCache.clear()
       try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       catch { case _: Exception => () }
     }
@@ -1104,7 +1104,7 @@ object ScaleCheck {
   private def streamPlaneProbe(
       spark: SparkSession, nFiles: Int, eager: Boolean, cdf: Boolean = false)
       : com.fasterxml.jackson.databind.node.ObjectNode = {
-    import graft.sources.delta.{DeferredDeltaFiles, DeltaStreamingSource}
+    import graft.sources.delta.{DeltaStreamingSource, SnapshotCache}
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
     import org.apache.spark.sql.execution.streaming.runtime.SerializedOffset
     val (dir, relOpt) = writeSyntheticLogWithTarget(nFiles, targetIdx = 0, cdf = cdf)
@@ -1179,7 +1179,7 @@ object ScaleCheck {
       }
     } finally {
       DeltaLog.DeferredScanMode = "auto"
-      DeferredDeltaFiles.clearCache()
+      SnapshotCache.clear()
       try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       catch { case _: Exception => () }
     }
@@ -1243,13 +1243,13 @@ object ScaleCheck {
       checkpointed: Boolean = false): com.fasterxml.jackson.databind.node.ObjectNode = {
     import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Literal}
     import org.apache.spark.sql.types.LongType
-    import graft.sources.delta.{DeferredDeltaFiles, DeltaFileIndex, DeltaLog}
+    import graft.sources.delta.{DeltaFileIndex, DeltaLog, SnapshotCache}
     val dir = writeSyntheticLog(nFiles)
     if (checkpointed) {
       val v = DeltaLog.snapshot(spark, dir).version
       graft.sources.delta.DeltaWriter.writeCheckpoint(spark, dir, v)
     }
-    DeferredDeltaFiles.clearCache() // each point starts cold
+    SnapshotCache.clear() // each point starts cold
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.createObjectNode()
     node.put("files", nFiles)
@@ -1279,9 +1279,9 @@ object ScaleCheck {
     // WARM second plan (r17 verdict #3's done-bar): a NEW scanSnapshot at
     // the same version must hit the frame cache, and its prune must skip
     // the O(N) re-parse — reading the persisted winners only
-    val hitsBefore = DeferredDeltaFiles.cacheHits.get()
+    val hitsBefore = SnapshotCache.frameHits.get()
     val (snap2, deferred2) = DeltaLog.scanSnapshot(spark, dir)
-    require(DeferredDeltaFiles.cacheHits.get() > hitsBefore,
+    require(SnapshotCache.frameHits.get() > hitsBefore,
       "second scanSnapshot at one version missed the frame cache")
     val index2 = new DeltaFileIndex(spark, snap2, deferred2)
     prunedOnce(index2) // warm codegen/disk-read paths
@@ -1309,7 +1309,7 @@ object ScaleCheck {
       // a driver materialization
       node.put("distributed_count", deferred.get.fileCount)
     }
-    DeferredDeltaFiles.clearCache() // drop the deleted dir's persisted frame
+    SnapshotCache.clear() // drop the deleted dir's persisted frame
     try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     catch { case _: Exception => () }
     node

@@ -652,11 +652,11 @@ object DeltaQueries {
         countDistinct(col("n_regionkey")).as("n_regions"))
         .withColumn("stage", lit(stage))
     // this row GATES checkpoint-crossing replay — drop the incremental
-    // snapshot memo the 12 writes warmed so the reads below reconstruct
+    // snapshot state the 12 writes warmed so the reads below reconstruct
     // from checkpoint parquet + JSON tail on disk, exactly the claim the
     // oracle hashes (values are identical either way by the memo's
     // contract; DriverSnapshotMemoSuite pins that separately)
-    graft.sources.delta.DeltaLog.clearDriverSnapCache(path)
+    graft.sources.delta.SnapshotCache.clear(path)
     agg(DeltaTable.read(s, path), "full")
       .unionByName(agg(DeltaTable.readVersion(s, path, 5L), "v5"))
       .select(col("stage"), col("n"), col("key_sum"), col("n_regions"))

@@ -82,9 +82,9 @@ private[delta] object ConflictChecker {
     * with missing commit JSONs aborts (unvalidatable). An attempt that
     * also runs [[checkReadSet]] shares ONE parse of the (immutable) range
     * with it STRUCTURALLY: both rules read the attempt's
-    * [[DeltaLog.sharedConflictRange]] memo, so even a range too big for
-    * the cross-attempt cache (which deliberately refuses to pin oversized
-    * ranges) is parsed once per attempt — the r18-documented residual. */
+    * [[DeltaLog.sharedConflictRange]] memo, so any range is parsed once
+    * per attempt (the r18-documented residual was a parse per rule) and
+    * nothing is kept across attempts. */
   def checkRewriteIncremental(
       op: String,
       spark: org.apache.spark.sql.SparkSession,

@@ -300,7 +300,7 @@ final case class DeltaSnapshot(
   * mid-query; r17 ADVICE) and PERSISTED: one scan plans through the frame
   * up to three times (sizeInBytes for CBO, dvAdds, the pruned listFiles),
   * and back-to-back queries at one version share the instance through
-  * [[DeferredDeltaFiles.cached]] — without the persist each consumer
+  * [[SnapshotCache]] — without the persist each consumer
   * re-parses the whole log from scratch (r17 verdict #3). */
 final class DeferredDeltaFiles private[delta] (
     spark: SparkSession,
@@ -606,99 +606,9 @@ final class DeferredDeltaFiles private[delta] (
     }
   }
 
-  // the cache compares sessions by identity: a frame planned against a
-  // stopped/replaced session must be rebuilt, never served
+  // SnapshotCache compares sessions by identity: a frame planned against
+  // a stopped/replaced session must be rebuilt, never served
   private[delta] def sessionOf: SparkSession = spark
-}
-
-/** Per-(table, version) cache of reconstructed snapshot frames — the r17
-  * verdict's #3: without it, two back-to-back selective queries over the
-  * same unchanged 10M-file table each pay the full O(N) executor prune.
-  * Version-keyed, so a new commit naturally invalidates (the next
-  * scanSnapshot resolves a higher version → new entry; older versions of
-  * the same table are evicted+unpersisted — writers never re-read them).
-  * A small LRU bounds total persisted frames; the fingerprint guards the
-  * one aliasing hazard version keys have: a table DELETED AND RECREATED
-  * at the same path reuses version numbers, but its replay-input
-  * (path, length, mtime) set cannot match. */
-object DeferredDeltaFiles {
-
-  private val MaxEntries = 4
-  private final case class Key(tablePath: String, version: Long)
-  private final case class Entry(files: DeferredDeltaFiles, fingerprint: String)
-  private val cache =
-    new java.util.LinkedHashMap[Key, Entry](8, 0.75f, /*accessOrder=*/ true)
-
-  private def fingerprintOf(
-      cp: Option[(Long, Seq[FileStatus])],
-      tailCommits: Seq[(Long, FileStatus)]): String =
-    (cp.toSeq.flatMap(_._2) ++ tailCommits.map(_._2))
-      .map(s => s"${s.getPath}:${s.getLen}:${s.getModificationTime}")
-      .mkString("|")
-
-  private[delta] def cached(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long,
-      cp: Option[(Long, Seq[FileStatus])],
-      tailCommits: Seq[(Long, FileStatus)]): DeferredDeltaFiles = {
-    val key = Key(tablePath, version)
-    val fp = fingerprintOf(cp, tailCommits)
-    def lookup(): Option[DeferredDeltaFiles] = synchronized {
-      Option(cache.get(key))
-        .filter(e => e.fingerprint == fp && (e.files.sessionOf eq spark))
-        .map { e => cacheHits.incrementAndGet(); e.files }
-    }
-    lookup().getOrElse {
-      // build OUTSIDE the lock: eager construction runs Spark collects
-      // (v2 integrity gates) and parquet-footer / object-store I/O —
-      // holding the one companion lock across that would serialize every
-      // deferred scan and every commit's checksum across ALL tables. Two
-      // racing builders of one key both succeed; the loser's frame is
-      // unpersisted and dropped.
-      val built = new DeferredDeltaFiles(spark, tablePath, version, cp, tailCommits)
-      synchronized {
-        lookup() match {
-          case Some(winner) =>
-            built.unpersist()
-            winner
-          case None =>
-            Option(cache.remove(key)).foreach(_.files.unpersist())
-            // newer version of the same table supersedes older cached
-            // frames. NB an evicted frame still held by an in-flight
-            // reader stays CORRECT (an unpersisted DataFrame recomputes);
-            // it just re-pays the parse on its next materialization —
-            // acceptable for the rare reader that spans a concurrent
-            // writer's commit.
-            val stale = cache.keySet().iterator()
-            val toDrop = Seq.newBuilder[Key]
-            while (stale.hasNext) {
-              val k = stale.next()
-              if (k.tablePath == tablePath && k.version < version) toDrop += k
-            }
-            toDrop.result().foreach(k =>
-              Option(cache.remove(k)).foreach(_.files.unpersist()))
-            cache.put(key, Entry(built, fp))
-            while (cache.size() > MaxEntries) {
-              val eldest = cache.keySet().iterator().next()
-              Option(cache.remove(eldest)).foreach(_.files.unpersist())
-            }
-            built
-        }
-      }
-    }
-  }
-
-  /** Test seam: frames served from the cache (vs built) — pins the reuse
-    * and invalidation decisions result-equality cannot observe. */
-  private[graft] val cacheHits = new java.util.concurrent.atomic.AtomicLong
-
-  /** Evict + unpersist everything (test hygiene between suites). */
-  private[graft] def clearCache(): Unit = synchronized {
-    val it = cache.values().iterator()
-    while (it.hasNext) { it.next().files.unpersist() }
-    cache.clear()
-  }
 }
 
 object DeltaLog {
@@ -914,80 +824,21 @@ object DeltaLog {
     val domains = mutable.LinkedHashMap.empty[String, String]
   }
 
-  /** Memoized driver-plane state (r21 optimization; the shape production
-    * delta clients use for SnapshotManagement's incremental update): the
-    * last state built per table plus a fingerprint — (len, mtime), the
-    * DeferredDeltaFiles standard — of every replay input it consumed.
-    * A later replay of the same log verifies the overlapping inputs still
-    * match and applies ONLY the new commits, so a lifecycle of V
-    * statements pays O(V) total commit reads instead of O(V²), and the
-    * checkpoint parquet is read by a Spark job ONCE when it first appears
-    * instead of on every post-checkpoint replay. Extend-only: time travel
-    * below the memo version rebuilds from scratch and never replaces the
-    * memo. Any fingerprint mismatch (recreated table, cleaned log, foreign
-    * checkpoint) falls back to the full rebuild — the memo can skip work,
-    * never change the result (DriverSnapshotMemoSuite pins
-    * scratch-vs-extended equality and every rejection path). */
-  private final case class DriverSnapEntry(
-      version: Long,
-      /** version -> (len, mtime) of every tail-commit JSON consumed —
-        * covers (checkpoint version, version] of the build. */
-      commitFp: Map[Long, (Long, Long)],
-      /** The checkpoint built through, as (version, per-part
-        * (path, len, mtime)) — None for a JSON-only build. */
-      cpFp: Option[(Long, Seq[(String, Long, Long)])],
-      adds: Vector[DeltaAddFile],
-      txns: Map[String, Long],
-      domains: Vector[(String, String)],
-      protocol: Option[DeltaProtocol],
-      metadata: Option[DeltaMetadata])
-
-  /** ≤ 8 tables, LRU, AND byte-bounded (r22, ADVICE item): entry count
-    * alone pinned up to 8 × 100k DeltaAddFile entries — path + stats-JSON
-    * strings — on the driver heap indefinitely, heap that was transient
-    * per replay before the memo existed. Estimated retained bytes across
-    * all entries are capped; the eldest entries are evicted past the cap
-    * (an evicted table just pays one full rebuild on next touch — the
-    * memo may skip work, never change results). */
-  private val DriverSnapCacheMaxBytes: Long = 64L << 20
-  private def entryBytes(e: DriverSnapEntry): Long =
-    e.adds.iterator.map { a =>
-      // 2 bytes/char for the two dominant strings + a fixed estimate for
-      // the boxed fields, maps and object headers
-      2L * (a.path.length + a.stats.map(_.length).getOrElse(0)) + 160L
-    }.sum + 4096L
-  private val driverSnapCache =
-    new java.util.LinkedHashMap[String, DriverSnapEntry](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, DriverSnapEntry]): Boolean = size > 8
-    }
-  /** Evict eldest entries until the estimated retained bytes fit the cap;
-    * call with the monitor held, after a put. The just-inserted entry is
-    * never evicted (a single over-budget table still memoizes — its own
-    * replay plane already tolerates that heap transiently). */
-  private def enforceSnapCacheBytes(): Unit = {
-    var total = 0L
-    val it0 = driverSnapCache.values().iterator()
-    while (it0.hasNext) total += entryBytes(it0.next())
-    val it = driverSnapCache.entrySet().iterator()
-    while (total > DriverSnapCacheMaxBytes && driverSnapCache.size() > 1 && it.hasNext) {
-      val eldest = it.next()
-      total -= entryBytes(eldest.getValue)
-      it.remove()
-    }
-  }
-  /** Test seams: replays served by EXTENDING the memo vs full rebuilds. */
+  /** Test seams: driver replays served by EXTENDING a cached state vs
+    * full rebuilds. */
   private[graft] val driverSnapExtends = new java.util.concurrent.atomic.AtomicLong
   private[graft] val driverSnapBuilds = new java.util.concurrent.atomic.AtomicLong
-  private[graft] def clearDriverSnapCache(): Unit =
-    driverSnapCache.synchronized { driverSnapCache.clear() }
-  /** Per-table clear (r22, ADVICE item): dl25's checkpoint-replay gate
-    * needs ITS table's memo dropped so the read reconstructs from disk;
-    * wiping every table's memo at query-build time would invalidate
-    * unrelated tables under concurrent or multi-table use. */
-  private[graft] def clearDriverSnapCache(tablePath: String): Unit =
-    driverSnapCache.synchronized { driverSnapCache.remove(tablePath); () }
 
+  /** Driver-plane replay that extends cached state (the shape production
+    * delta clients use for SnapshotManagement's incremental update): the
+    * newest [[SnapshotCache]] state of the table at or below the target is
+    * reused when the overlapping replay inputs still fingerprint-match, and
+    * ONLY the newer commits are applied. A lifecycle of V statements pays
+    * O(V) total commit reads instead of O(V²), and a checkpoint parquet is
+    * read by a Spark job once, when it first appears. Any mismatch
+    * (recreated table, cleaned log, foreign checkpoint) falls back to the
+    * full rebuild (DriverSnapshotMemoSuite pins scratch-vs-extended
+    * equality and every rejection path). */
   private def driverReplay(
       spark: SparkSession,
       tablePath: String,
@@ -995,43 +846,32 @@ object DeltaLog {
       cp: Option[(Long, Seq[FileStatus])],
       tailCommits: Seq[(Long, FileStatus)]): DeltaSnapshot = {
     val firstTail: Long = cp.map(_._1 + 1).getOrElse(0L)
-    def cpMatches(c: DriverSnapEntry): Boolean = (c.cpFp, cp) match {
-      case (Some((v, partsFp)), Some((cv, parts))) =>
-        v == cv && partsFp == parts.map(p =>
-          (p.getPath.toString, p.getLen, p.getModificationTime))
-      case _ => false
-    }
-    val cached = driverSnapCache.synchronized {
-      Option(driverSnapCache.get(tablePath))
-    }
-    val reusable = cached.filter { c =>
-      val prefix = tailCommits.filter(_._1 <= c.version)
-      c.version <= target &&
-        // the memo already folded in everything up to and including any
+    val reusable = SnapshotCache.driverAtOrBelow(tablePath, target).filter {
+      case (version, fp, _) =>
+        val prefix = tailCommits.filter(_._1 <= version)
+        // the state already folded in everything up to and including any
         // checkpoint at or below its version
-        cp.forall(_._1 <= c.version) &&
-        // the current log must list exactly the versions the memo consumed
-        // in the overlap (no gaps, no extras — a cleaned or recreated log
-        // rebuilds) and each must fingerprint-match
-        prefix.map(_._1) == (firstTail to c.version) &&
-        prefix.forall { case (v, st) =>
-          c.commitFp.get(v).contains((st.getLen, st.getModificationTime))
-        } &&
-        // zero verified overlap (memo exactly at the checkpoint version):
-        // accept only the checkpoint the memo was built THROUGH — a
-        // foreign/recreated checkpoint must rebuild
-        (prefix.nonEmpty || cp.isEmpty || cpMatches(c))
+        cp.forall(_._1 <= version) &&
+          // the current log must list exactly the versions the state
+          // consumed in the overlap (no gaps, no extras — a cleaned or
+          // recreated log rebuilds) and each must fingerprint-match
+          prefix.map(_._1) == (firstTail to version) &&
+          prefix.forall { case (_, st) => fp.contains(SnapshotCache.input(st)) } &&
+          // zero verified overlap (state exactly at the checkpoint
+          // version): accept only a checkpoint among the state's own
+          // replay inputs — a foreign/recreated checkpoint must rebuild
+          (prefix.nonEmpty || cp.forall(_._2.forall(p => fp.contains(SnapshotCache.input(p)))))
     }
     val acc = new ReplayAcc
     val toApply: Seq[(Long, FileStatus)] = reusable match {
-      case Some(c) =>
+      case Some((version, _, c)) =>
         driverSnapExtends.incrementAndGet()
         acc.protocol = c.protocol
         acc.metadata = c.metadata
         c.adds.foreach(a => acc.live(a.path) = a)
         acc.txns ++= c.txns
         c.domains.foreach { case (d, v) => acc.domains(d) = v }
-        tailCommits.filter(_._1 > c.version)
+        tailCommits.filter(_._1 > version)
       case None =>
         driverSnapBuilds.incrementAndGet()
         cp.foreach { case (v, parts) =>
@@ -1043,31 +883,12 @@ object DeltaLog {
       val fs = logDir(tablePath).getFileSystem(spark.sessionState.newHadoopConf())
       toApply.foreach { case (_, status) => applyCommit(fs, status, acc) }
     }
-    // memoize the new state (a pure re-serve stores nothing — identical)
+    // cache the new state (a pure re-serve stores nothing — identical)
     if ((reusable.isEmpty || toApply.nonEmpty) &&
-        acc.live.size <= SnapshotFileCountWarnThreshold) {
-      val entry = DriverSnapEntry(
-        version = target,
-        commitFp =
-          reusable.map(_.commitFp.filter(_._1 >= firstTail)).getOrElse(Map.empty) ++
-            toApply.map { case (v, st) => v -> ((st.getLen, st.getModificationTime)) },
-        cpFp = reusable.map(_.cpFp).getOrElse(
-          cp.map { case (v, parts) =>
-            (v, parts.map(p => (p.getPath.toString, p.getLen, p.getModificationTime)))
-          }),
-        adds = acc.live.values.toVector,
-        txns = acc.txns.toMap,
-        domains = acc.domains.toVector,
-        protocol = acc.protocol,
-        metadata = acc.metadata)
-      driverSnapCache.synchronized {
-        // extend-only: a time-travel rebuild below the memo never demotes it
-        if (Option(driverSnapCache.get(tablePath)).forall(_.version <= entry.version)) {
-          driverSnapCache.put(tablePath, entry)
-          enforceSnapCacheBytes()
-        }
-      }
-    }
+        acc.live.size <= SnapshotFileCountWarnThreshold)
+      SnapshotCache.putDriver(tablePath, target, SnapshotCache.fingerprint(cp, tailCommits),
+        DriverState(acc.live.values.toVector, acc.txns.toMap, acc.domains.toVector,
+          acc.protocol, acc.metadata))
     finishSnapshot(tablePath, target, acc.protocol, acc.metadata,
       acc.live.values.toSeq, acc.txns.toMap, acc.domains.toMap, driverPlane = true)
   }
@@ -1382,7 +1203,9 @@ object DeltaLog {
       driverPlane = false)
     // per-(table, version) frame reuse: the second selective query over an
     // unchanged big table skips the O(N) re-parse (r17 verdict #3)
-    val deferredFiles = DeferredDeltaFiles.cached(spark, tablePath, target, cp, tailCommits)
+    val deferredFiles = SnapshotCache.frame(
+        spark, tablePath, target, SnapshotCache.fingerprint(cp, tailCommits))(
+      new DeferredDeltaFiles(spark, tablePath, target, cp, tailCommits))
     // Column mapping costs the deferred plane NOTHING extra: physical
     // names / field ids are schema metadata ([[GraftParquetFileFormat
     // .forSnapshot]] reads them off the snapshot, not the files). Deletion
@@ -1566,56 +1389,17 @@ object DeltaLog {
     *  - `nonBlindAdds`: dataChange adds from NON-blind-append commits —
     *    [[ConflictChecker.checkReadSet]]'s overlap surface.
     * A commit attempt runs BOTH rules, so parsing per-rule paid the range
-    * twice (the r17-documented residual); the parse is shared and memoized
-    * instead. */
+    * twice (the r17-documented residual); the attempt shares one parse
+    * instead ([[sharedConflictRange]]). */
   private[graft] final case class ConflictRange(
       pathActions: Seq[String], nonBlindAdds: Seq[DeltaAddFile])
 
-  // Memoized per (table, range, statuses-fingerprint): commit JSONs are
-  // immutable, but a table DELETED AND RECREATED at the same path reuses
-  // version numbers — the (path, length, mtime) fingerprint (same guard as
-  // the DeferredDeltaFiles cache) makes a stale hit structurally
-  // impossible. Oversized ranges are not cached — re-parsing costs what it
-  // always did, while pinning them would not: the add-descriptor bound is
-  // deliberately tight (adds carry multi-KB stats strings, so a "100k
-  // actions" bound would quietly pin hundreds of MB of a concurrent bulk
-  // load for process lifetime — the O(files) driver-heap class this plane
-  // exists to remove); bare path strings are two orders cheaper.
-  private val conflictRangeCache =
-    new java.util.LinkedHashMap[(String, Long, Long, String), ConflictRange](
-      8, 0.75f, /*accessOrder=*/ true)
-  private val ConflictRangeMaxEntries = 4
-  // Production bounds are fixed; the ONLY mutation path is the scoped
-  // test override below (DeltaConcurrencySuite shrinks them to force the
-  // oversized-range, cache-refusing path and pin that one ATTEMPT still
-  // costs one parse — the sharedConflictRange memo, not the cache).
-  @volatile private var conflictRangeCacheablePaths = 100000
-  @volatile private var conflictRangeCacheableAdds = 4096
-  private val conflictRangeBoundsLock = new Object
-
-  /** Test-scoped override of the conflict-range cacheability bounds:
-    * holds a lock for the body's duration (parallel suites serialize
-    * instead of racing a bare var) and restores the defaults in a
-    * finally, so no failure path leaks shrunken bounds into production
-    * code running in the same JVM. */
-  private[graft] def withConflictRangeBounds[T](paths: Int, adds: Int)(f: => T): T =
-    conflictRangeBoundsLock.synchronized {
-      val (p0, a0) = (conflictRangeCacheablePaths, conflictRangeCacheableAdds)
-      conflictRangeCacheablePaths = paths
-      conflictRangeCacheableAdds = adds
-      try f finally {
-        conflictRangeCacheablePaths = p0
-        conflictRangeCacheableAdds = a0
-      }
-    }
-
   /** One commit ATTEMPT's shared handle on its intervening range: both
     * incremental rules read through the same lazy parse, so an attempt
-    * costs exactly ONE parse even when the range is too big for the
-    * cross-attempt cache above (which deliberately refuses to pin
-    * oversized ranges — r18's documented residual was each rule
-    * re-parsing those). The memo lives only as long as the attempt's
-    * stack frame: nothing oversized gets pinned past the commit. */
+    * costs exactly ONE parse. Nothing is kept across attempts: a retry's
+    * range (base, latest] moves forward every attempt, and the memo lives
+    * only as long as the attempt's stack frame, so no range — however big
+    * — is pinned past the commit. */
   private[delta] def sharedConflictRange(
       spark: SparkSession,
       tablePath: String,
@@ -1626,7 +1410,7 @@ object DeltaLog {
     () => r
   }
 
-  /** Test seam: actual range parses (cache misses) — pins that one commit
+  /** Test seam: actual range parses — pins that one commit
     * attempt's two rules share a parse, which result equality alone
     * cannot observe. */
   private[graft] val conflictRangeParses = new java.util.concurrent.atomic.AtomicLong
@@ -1647,67 +1431,51 @@ object DeltaLog {
       throw new java.io.IOException(
         s"cannot validate $purpose on $tablePath: commit JSONs for versions " +
           s"${expected.mkString(",")} are not all present (log cleaned up mid-transaction?)")
-    val fp = inRange.map { case (_, s) =>
-      s"${s.getPath}:${s.getLen}:${s.getModificationTime}"
-    }.mkString("|")
-    val key = (tablePath, fromExclusive, toInclusive, fp)
-    conflictRangeCache.synchronized(Option(conflictRangeCache.get(key))) match {
-      case Some(hit) => hit
-      case None =>
-        conflictRangeParses.incrementAndGet()
-        val fs = logDir(tablePath).getFileSystem(spark.sessionState.newHadoopConf())
-        val paths = Seq.newBuilder[String]
-        val nonBlind = Seq.newBuilder[DeltaAddFile]
-        inRange.foreach { case (_, status) =>
-          val in = fs.open(status.getPath)
-          val content =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-          val adds = Seq.newBuilder[DeltaAddFile]
-          var hasRemove = false
-          var blindFlag: Option[Boolean] = None
-          var operation: String = null
-          var writeMode: String = null
-          content.linesIterator.filter(_.trim.nonEmpty).foreach { line =>
-            val node = mapper.readTree(line)
-            if (node.has("add")) {
-              val a = node.get("add")
-              paths += a.get("path").asText()
-              if (!a.has("dataChange") || a.get("dataChange").asBoolean(true))
-                adds += parseJsonAdd(a)
-            } else if (node.has("remove")) {
-              hasRemove = true
-              paths += node.get("remove").get("path").asText()
-            } else if (node.has("commitInfo")) {
-              val ci = node.get("commitInfo")
-              if (ci.has("operation")) operation = ci.get("operation").asText()
-              if (ci.has("isBlindAppend")) blindFlag = Some(ci.get("isBlindAppend").asBoolean())
-              if (ci.has("operationParameters") && ci.get("operationParameters").has("mode"))
-                writeMode = ci.get("operationParameters").get("mode").asText()
-            }
-          }
-          // blind = the commit READ nothing. Keyed on the writer's explicit
-          // commitInfo.isBlindAppend (production's signal — our own appends
-          // stamp it), with an Append-mode WRITE fallback for older logs; a
-          // structural no-remove guard on top. Everything else — MERGE
-          // inserts, RESTORE re-adds, Overwrite of an empty table (no removes
-          // to emit!), foreign commits without commitInfo — is NON-blind: its
-          // adds came from decisions or histories a concurrent reader's
-          // snapshot never saw, and misclassifying it blind is silent
-          // duplicate/lost-row territory, while the converse is only a retry.
-          val blindAppend = !hasRemove &&
-            blindFlag.getOrElse(operation == "WRITE" && writeMode == "Append")
-          if (!blindAppend) nonBlind ++= adds.result()
+    conflictRangeParses.incrementAndGet()
+    val fs = logDir(tablePath).getFileSystem(spark.sessionState.newHadoopConf())
+    val paths = Seq.newBuilder[String]
+    val nonBlind = Seq.newBuilder[DeltaAddFile]
+    inRange.foreach { case (_, status) =>
+      val in = fs.open(status.getPath)
+      val content =
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      val adds = Seq.newBuilder[DeltaAddFile]
+      var hasRemove = false
+      var blindFlag: Option[Boolean] = None
+      var operation: String = null
+      var writeMode: String = null
+      content.linesIterator.filter(_.trim.nonEmpty).foreach { line =>
+        val node = mapper.readTree(line)
+        if (node.has("add")) {
+          val a = node.get("add")
+          paths += a.get("path").asText()
+          if (!a.has("dataChange") || a.get("dataChange").asBoolean(true))
+            adds += parseJsonAdd(a)
+        } else if (node.has("remove")) {
+          hasRemove = true
+          paths += node.get("remove").get("path").asText()
+        } else if (node.has("commitInfo")) {
+          val ci = node.get("commitInfo")
+          if (ci.has("operation")) operation = ci.get("operation").asText()
+          if (ci.has("isBlindAppend")) blindFlag = Some(ci.get("isBlindAppend").asBoolean())
+          if (ci.has("operationParameters") && ci.get("operationParameters").has("mode"))
+            writeMode = ci.get("operationParameters").get("mode").asText()
         }
-        val built = ConflictRange(paths.result(), nonBlind.result())
-        if (built.pathActions.size <= conflictRangeCacheablePaths &&
-          built.nonBlindAdds.size <= conflictRangeCacheableAdds)
-          conflictRangeCache.synchronized {
-            conflictRangeCache.put(key, built)
-            while (conflictRangeCache.size() > ConflictRangeMaxEntries)
-              conflictRangeCache.remove(conflictRangeCache.keySet().iterator().next())
-          }
-        built
+      }
+      // blind = the commit READ nothing. Keyed on the writer's explicit
+      // commitInfo.isBlindAppend (production's signal — our own appends
+      // stamp it), with an Append-mode WRITE fallback for older logs; a
+      // structural no-remove guard on top. Everything else — MERGE
+      // inserts, RESTORE re-adds, Overwrite of an empty table (no removes
+      // to emit!), foreign commits without commitInfo — is NON-blind: its
+      // adds came from decisions or histories a concurrent reader's
+      // snapshot never saw, and misclassifying it blind is silent
+      // duplicate/lost-row territory, while the converse is only a retry.
+      val blindAppend = !hasRemove &&
+        blindFlag.getOrElse(operation == "WRITE" && writeMode == "Append")
+      if (!blindAppend) nonBlind ++= adds.result()
     }
+    ConflictRange(paths.result(), nonBlind.result())
   }
 
   /** DATA-CHANGE add actions from NON-BLIND-APPEND commits in versions
@@ -1717,27 +1485,14 @@ object DeltaLog {
     * decisions computed FROM a read of the table); only non-blind commits'
     * dataChange adds can invalidate another transaction's reads under
     * WriteSerializable — blind appends serialize before the reader by
-    * definition (production Delta's isBlindAppend exemption). One shared
-    * parse with [[commitPathActions]] (see [[conflictRange]]). */
+    * definition (production Delta's isBlindAppend exemption). Same parse
+    * as the commit path's rules (see [[conflictRange]]). */
   private[graft] def nonBlindDataAdds(
       spark: SparkSession,
       tablePath: String,
       fromExclusive: Long,
       toInclusive: Long): Seq[DeltaAddFile] =
     conflictRange(spark, tablePath, fromExclusive, toInclusive, "read set").nonBlindAdds
-
-  /** Every add/remove path referenced by commits in versions
-    * (fromExclusive, toInclusive] — the deferred-plane conflict surface:
-    * [[ConflictChecker.checkRewriteIncremental]] intersects these with a
-    * transaction's touched set, O(intervening commits) driver work where
-    * the eager rule needed the full live map. One shared parse with
-    * [[nonBlindDataAdds]] (see [[conflictRange]]). */
-  private[graft] def commitPathActions(
-      spark: SparkSession,
-      tablePath: String,
-      fromExclusive: Long,
-      toInclusive: Long): Seq[String] =
-    conflictRange(spark, tablePath, fromExclusive, toInclusive, "rewrite").pathActions
 
   /** Can versions `(fromExclusive, toInclusive]` be replayed as a pure
     * add-feed? True iff every commit JSON is still present AND none

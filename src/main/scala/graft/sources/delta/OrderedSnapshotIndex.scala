@@ -57,8 +57,9 @@ import org.apache.spark.storage.StorageLevel
   * O(files) — each bucket targets [[OrderedSnapshotIndex.TargetRowsPerBucket]]
   * rows. Persisted DISK_ONLY (same reasoning as the winners frame: the win
   * is skipping the parse + sort, and a multi-GB metadata frame must not
-  * compete with the query's working set) and memoized per (table, version)
-  * on the cached [[DeferredDeltaFiles]].
+  * compete with the query's working set) and memoized on its
+  * [[DeferredDeltaFiles]], which [[SnapshotCache]] keeps per (table,
+  * version); evicting the frame unpersists the index with it.
   */
 private[graft] final class OrderedSnapshotIndex private (
     plane: Option[OrderedSnapshotIndex.Plane],

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Row, SaveMode}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.delta.{DeltaDml, DeltaLog, DeltaMaintenance, DeltaSchema, DeltaTable, DeltaWriter}
+import graft.sources.delta.{DeltaDml, DeltaLog, DeltaMaintenance, DeltaSchema, DeltaTable, DeltaWriter, SnapshotCache}
 
 /** Checkpoint protocol coverage beyond the classic single-file form the
   * writer emits:
@@ -236,7 +236,7 @@ class DeltaCheckpointSuite extends AnyFunSuite {
 
     // measured replay: exactly 1 checkpoint file + the tail JSONs —
     // from scratch, so drop the incremental memo the writes above warmed
-    DeltaLog.clearDriverSnapCache()
+    SnapshotCache.clear()
     DeltaLog.replayReads.set(0)
     val snap = DeltaLog.snapshot(spark, dir)
     val reads = DeltaLog.replayReads.get()

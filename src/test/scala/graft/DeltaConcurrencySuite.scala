@@ -311,27 +311,4 @@ class DeltaConcurrencySuite extends AnyFunSuite {
         s"rewrite + read-set rules over one intervening range must cost ONE parse, got $parses")
     } finally DeltaLog.DeferredScanMode = "auto"
   }
-
-  test("an OVERSIZED (cache-refused) range still costs one parse per attempt") {
-    // the cross-attempt conflictRangeCache deliberately refuses ranges
-    // past its size bounds (pinning a concurrent bulk load's adds would
-    // re-grow the O(files) driver heap the plane removed) — the
-    // r18-documented residual was each rule then re-parsing the range.
-    // Both rules now read the ATTEMPT's sharedConflictRange memo, so the
-    // parse count must stay 1 even when nothing is cacheable. Forced by
-    // shrinking the cacheable bounds to zero.
-    val dir = partitionedTable()
-    DeltaLog.DeferredScanMode = "always"
-    try DeltaLog.withConflictRangeBounds(paths = 0, adds = 0) {
-      val before = DeltaLog.conflictRangeParses.get()
-      val m = DeltaDml.delete(spark, dir, "p = 1", beforeCommit = () => {
-        DeltaWriter.write(Seq((101L, "late", 2)).toDF("id", "payload", "p"),
-          dir, SaveMode.Append, Nil)
-      })
-      assert(m.committedVersion === 2L, "disjoint concurrent append: DML commits")
-      val parses = DeltaLog.conflictRangeParses.get() - before
-      assert(parses === 1L,
-        s"an uncacheable range must still parse ONCE per attempt (shared memo), got $parses")
-    } finally DeltaLog.DeferredScanMode = "auto"
-  }
 }

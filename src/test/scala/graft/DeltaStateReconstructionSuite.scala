@@ -516,7 +516,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
   }
 
   test("deferred materialization survives log cleanup via re-resolve at the pinned version") {
-    import graft.sources.delta.DeferredDeltaFiles
+    import graft.sources.delta.SnapshotCache
     val dir = tmpDir()
     (0 until 3).foreach { c =>
       DeltaWriter.write(
@@ -525,7 +525,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
     }
     DeltaLog.DeferredScanMode = "always"
     try {
-      DeferredDeltaFiles.clearCache()
+      SnapshotCache.clear()
       val (snap, deferred) = DeltaLog.scanSnapshot(spark, dir)
       assert(deferred.isDefined)
       // log cleanup races the long-lived relation: a checkpoint covers the
@@ -544,12 +544,12 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
       assert(spark.read.format("delta").load(dir).count() === 30)
     } finally {
       DeltaLog.DeferredScanMode = "auto"
-      DeferredDeltaFiles.clearCache()
+      SnapshotCache.clear()
     }
   }
 
   test("ordered pacing plane survives log cleanup via re-resolve at the pinned version") {
-    import graft.sources.delta.DeferredDeltaFiles
+    import graft.sources.delta.SnapshotCache
     val dir = tmpDir()
     (0 until 3).foreach { c =>
       DeltaWriter.write(
@@ -558,7 +558,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
     }
     DeltaLog.DeferredScanMode = "always"
     try {
-      DeferredDeltaFiles.clearCache()
+      SnapshotCache.clear()
       val (snap, deferred) = DeltaLog.scanSnapshot(spark, dir)
       val d = deferred.getOrElse(fail("expected the deferred plane"))
       val first = d.orderedSlice(0, 1) // builds + persists the index
@@ -580,12 +580,12 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
         "the recovered index ranks the same file first")
     } finally {
       DeltaLog.DeferredScanMode = "auto"
-      DeferredDeltaFiles.clearCache()
+      SnapshotCache.clear()
     }
   }
 
   test("v2 checkpoint integrity gates fire AT scanSnapshot, not mid-query") {
-    import graft.sources.delta.DeferredDeltaFiles
+    import graft.sources.delta.SnapshotCache
     val dir = tmpDir()
     DeltaWriter.write(Seq((1, "a")).toDF("id", "s").coalesce(1),
       dir, SaveMode.Append, Nil)
@@ -605,7 +605,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
     assert(cp.renameTo(renamed))
     DeltaLog.DeferredScanMode = "always"
     try {
-      DeferredDeltaFiles.clearCache()
+      SnapshotCache.clear()
       // the gate must fire HERE — at snapshot construction, like the eager
       // replay — not lazily at the first listFiles (r17 ADVICE: a corrupt
       // v2 checkpoint surfacing mid-query, or never for metadata-only use)
@@ -615,7 +615,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
       assert(e.getMessage.contains("declares version"))
     } finally {
       DeltaLog.DeferredScanMode = "auto"
-      DeferredDeltaFiles.clearCache()
+      SnapshotCache.clear()
     }
   }
 
@@ -661,17 +661,17 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
   }
 
   test("snapshot frame cache: reuse at one version, invalidation on commit AND on table recreation") {
-    import graft.sources.delta.DeferredDeltaFiles
+    import graft.sources.delta.SnapshotCache
     val dir = tmpDir()
     DeltaWriter.write((1 to 30).map(i => (i, s"x$i")).toDF("id", "s"),
       dir, SaveMode.Append, Nil)
     DeltaLog.DeferredScanMode = "always"
     try {
-      DeferredDeltaFiles.clearCache()
+      SnapshotCache.clear()
       assert(spark.read.format("delta").load(dir).count() === 30)
-      val h1 = DeferredDeltaFiles.cacheHits.get()
+      val h1 = SnapshotCache.frameHits.get()
       assert(spark.read.format("delta").load(dir).filter("id <= 5").count() === 5)
-      assert(DeferredDeltaFiles.cacheHits.get() > h1,
+      assert(SnapshotCache.frameHits.get() > h1,
         "second scan at the same version must reuse the cached frame")
       // a commit advances the version: the next scan must NOT be served
       // the stale frame. (It MAY still be a cache hit — the post-commit
@@ -691,7 +691,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
         "recreated table served the DELETED table's cached frame")
     } finally {
       DeltaLog.DeferredScanMode = "auto"
-      DeferredDeltaFiles.clearCache()
+      SnapshotCache.clear()
     }
   }
 }

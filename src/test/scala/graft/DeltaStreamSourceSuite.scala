@@ -173,7 +173,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
     // = the bug; one = the fix; per-trigger = a worse regression).
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
     import org.apache.spark.sql.execution.streaming.runtime.SerializedOffset
-    import graft.sources.delta.{DeferredDeltaFiles, DeltaLog, DeltaStreamingSource, OrderedSnapshotIndex}
+    import graft.sources.delta.{DeltaLog, DeltaStreamingSource, OrderedSnapshotIndex, SnapshotCache}
     val dir = Files.createTempDirectory("graft-stream-evict").toString
     DeltaWriter.write((1 to 6).map(i => (i, s"r$i")).toDF("id", "name").coalesce(1),
       dir, SaveMode.Append, Nil)                    // v0
@@ -193,7 +193,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
       val builds0 = OrderedSnapshotIndex.builds.get()
       // eviction mid-drain: the source still holds the (now-unpersisted)
       // DeferredDeltaFiles through its memoized slice plane
-      DeferredDeltaFiles.clearCache()
+      SnapshotCache.clear()
       val o2 = src.latestOffset(SerializedOffset(o1.json), lim)
       val o3 = src.latestOffset(SerializedOffset(o2.json), lim)
       assert(o2.json === """{"snapshotVersion":3,"index":2}""", o2.json)
@@ -203,7 +203,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
           "(zero = jobs against an unpersisted plan; more = rebuild per trigger)")
     } finally {
       DeltaLog.DeferredScanMode = "auto"
-      DeferredDeltaFiles.clearCache()
+      SnapshotCache.clear()
     }
   }
 
@@ -214,7 +214,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
     // partition-targeted; wall time can't pin that at test scale, so the
     // targetedJobs counter does. Bucket target shrunk to force a
     // multi-bucket layout over 6 files.
-    import graft.sources.delta.{DeferredDeltaFiles, DeltaLog, OrderedSnapshotIndex}
+    import graft.sources.delta.{DeltaLog, OrderedSnapshotIndex, SnapshotCache}
     val dir = Files.createTempDirectory("graft-stream-buckets").toString
     DeltaWriter.write((1 to 12).map(i => (i, s"r$i")).toDF("id", "name")
       .repartition(6), dir, SaveMode.Append, Nil) // 6 live files
@@ -246,7 +246,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
         s"slices must serve the path-ordered live set, got $all")
     } finally {
       DeltaLog.DeferredScanMode = "auto"
-      DeferredDeltaFiles.clearCache()
+      SnapshotCache.clear()
     }
   }
 

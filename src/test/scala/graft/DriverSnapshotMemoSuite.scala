@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.delta.{DeltaDml, DeltaLog, DeltaMaintenance, DeltaTable, DeltaWriter}
+import graft.sources.delta.{DeltaDml, DeltaLog, DeltaMaintenance, DeltaTable, DeltaWriter, SnapshotCache}
 
 /** The incremental driver-plane snapshot memo (r21 optimization) may only
   * SKIP work, never change a snapshot: every replay that extends the memo
@@ -33,7 +33,7 @@ class DriverSnapshotMemoSuite extends AnyFunSuite {
   test("extended replay equals from-scratch replay across a mixed lifecycle") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-snapmemo").toString
-    DeltaLog.clearDriverSnapCache()
+    SnapshotCache.clear()
 
     // a lifecycle that crosses the checkpoint cadence and mixes action
     // kinds: appends, a DML delete (remove+add), a DV delete, OPTIMIZE,
@@ -58,7 +58,7 @@ class DriverSnapshotMemoSuite extends AnyFunSuite {
       "lifecycle replay should ride the memo plane")
 
     // the same replay from scratch must be identical, field for field
-    DeltaLog.clearDriverSnapCache()
+    SnapshotCache.clear()
     val buildsBefore = DeltaLog.driverSnapBuilds.get()
     val fromScratch = snapshotFingerprint(dir)
     assert(DeltaLog.driverSnapBuilds.get() === buildsBefore + 1)
@@ -77,12 +77,12 @@ class DriverSnapshotMemoSuite extends AnyFunSuite {
     import spark.implicits._
     val d1 = Files.createTempDirectory("graft-snapmemo-pt1").toString
     val d2 = Files.createTempDirectory("graft-snapmemo-pt2").toString
-    DeltaLog.clearDriverSnapCache()
+    SnapshotCache.clear()
     Seq(d1, d2).foreach { d =>
       DeltaWriter.write(Seq((1, "a")).toDF("id", "s"), d, SaveMode.Append, Nil)
       snapshotFingerprint(d) // warm the memo
     }
-    DeltaLog.clearDriverSnapCache(d1)
+    SnapshotCache.clear(d1)
     val builds0 = DeltaLog.driverSnapBuilds.get()
     val extends0 = DeltaLog.driverSnapExtends.get()
     snapshotFingerprint(d1)
@@ -97,7 +97,7 @@ class DriverSnapshotMemoSuite extends AnyFunSuite {
   test("time travel below the memo rebuilds and never demotes it") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-snapmemo-tt").toString
-    DeltaLog.clearDriverSnapCache()
+    SnapshotCache.clear()
     (0 until 5).foreach { i =>
       DeltaWriter.write(Seq((i, s"v$i")).toDF("id", "s"), dir, SaveMode.Append, Nil)
     }
@@ -121,7 +121,7 @@ class DriverSnapshotMemoSuite extends AnyFunSuite {
   test("a recreated table at the same path rebuilds (fingerprint mismatch)") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-snapmemo-re").toString
-    DeltaLog.clearDriverSnapCache()
+    SnapshotCache.clear()
     (0 until 3).foreach { i =>
       DeltaWriter.write(Seq((i, "old")).toDF("id", "s"), dir, SaveMode.Append, Nil)
     }
@@ -132,7 +132,7 @@ class DriverSnapshotMemoSuite extends AnyFunSuite {
     (0 until 3).foreach { i =>
       DeltaWriter.write(Seq((i + 100, "new")).toDF("id", "s"), dir, SaveMode.Append, Nil)
     }
-    DeltaLog.clearDriverSnapCache() // writes warmed the memo with NEW state; reset to stage the stale scenario
+    SnapshotCache.clear() // writes warmed the memo with NEW state; reset to stage the stale scenario
     // hand the memo the OLD-table state by replaying the old dir... not
     // possible after deletion — instead stage staleness directly: warm the
     // memo from a COPY of the new table, then mutate the log out from
@@ -153,7 +153,7 @@ class DriverSnapshotMemoSuite extends AnyFunSuite {
   test("a checkpoint appearing at the memo's version forces one rebuild through it") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-snapmemo-cp").toString
-    DeltaLog.clearDriverSnapCache()
+    SnapshotCache.clear()
     // stay below the 10-commit auto-cadence so the only checkpoint in
     // play is the one this test writes
     (0 until 8).foreach { i =>
@@ -179,5 +179,90 @@ class DriverSnapshotMemoSuite extends AnyFunSuite {
     assert(s.version === 8L)
     assert(DeltaLog.replayReads.get() <= 1,
       "post-checkpoint extension must read only the new commit JSON")
+  }
+
+  // ---- the one snapshot cache's budget: 8 (table, version) entries for
+  // driver states and deferred frames together, one clear per table ----
+
+  private def tables(n: Int, prefix: String): Seq[String] = {
+    import spark.implicits._
+    (1 to n).map { i =>
+      val d = Files.createTempDirectory(s"graft-snapcache-$prefix$i").toString
+      DeltaWriter.write(Seq((i, "a")).toDF("id", "s"), d, SaveMode.Append, Nil)
+      d
+    }
+  }
+
+  /** Scan `dir` on the deferred plane and return its persisted frame. */
+  private def deferredFrame(dir: String): org.apache.spark.sql.DataFrame = {
+    DeltaLog.DeferredScanMode = "always"
+    try {
+      val (_, d) = DeltaLog.scanSnapshot(spark, dir)
+      d.getOrElse(fail("expected the deferred plane")).addsFrame()
+        .getOrElse(fail("expected a non-empty frame"))
+    } finally DeltaLog.DeferredScanMode = "auto"
+  }
+
+  private def persisted(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+
+  test("touching a 9th table evicts the eldest entry, which then rebuilds") {
+    val ds = tables(9, "lru")
+    SnapshotCache.clear()
+    ds.take(8).foreach(snapshotFingerprint) // 8 builds fill the cache
+    snapshotFingerprint(ds(8)) // the 9th table evicts the eldest, ds(0)
+    val builds0 = DeltaLog.driverSnapBuilds.get()
+    snapshotFingerprint(ds(7))
+    assert(DeltaLog.driverSnapBuilds.get() === builds0,
+      "a table still inside the 8-entry budget must be served from the cache")
+    snapshotFingerprint(ds(0))
+    assert(DeltaLog.driverSnapBuilds.get() === builds0 + 1,
+      "the eldest table must have been evicted by the 9th")
+  }
+
+  test("an evicted frame is unpersisted") {
+    val Seq(big) = tables(1, "frame")
+    val others = tables(8, "evict")
+    SnapshotCache.clear()
+    val frame = deferredFrame(big)
+    assert(persisted(frame), "a cached frame is persisted")
+    others.foreach(snapshotFingerprint) // 8 newer entries push the frame out
+    assert(!persisted(frame), "eviction must unpersist the frame")
+  }
+
+  test("per-table clear drops that table's driver state AND frame, nothing of another") {
+    val Seq(d1, d2) = tables(2, "clr")
+    SnapshotCache.clear()
+    val frames = Seq(d1, d2).map { d =>
+      snapshotFingerprint(d) // driver state at the latest version
+      deferredFrame(d) // the frame at the same version
+    }
+    SnapshotCache.clear(d1)
+    assert(!persisted(frames(0)), "the cleared table's frame must be unpersisted")
+    assert(persisted(frames(1)), "the other table's frame must survive")
+    val builds0 = DeltaLog.driverSnapBuilds.get()
+    snapshotFingerprint(d1)
+    assert(DeltaLog.driverSnapBuilds.get() === builds0 + 1,
+      "the cleared table's driver state must be gone")
+    snapshotFingerprint(d2)
+    assert(DeltaLog.driverSnapBuilds.get() === builds0 + 1,
+      "the other table's driver state must survive")
+    val hits0 = SnapshotCache.frameHits.get()
+    deferredFrame(d2)
+    assert(SnapshotCache.frameHits.get() === hits0 + 1,
+      "the other table's frame must still be served from the cache")
+  }
+
+  test("no other LinkedHashMap cache remains under sources/delta") {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/sources/delta")
+    val walk = Files.walk(dir)
+    val hits =
+      try walk.iterator().asScala
+        .filter(p => Files.isRegularFile(p) &&
+          Files.readString(p).contains("java.util.LinkedHashMap"))
+        .map(_.getFileName.toString).toList.sorted
+      finally walk.close()
+    assert(hits === List("SnapshotCache.scala"))
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.delta.{DeferredDeltaFiles, DeltaLog}
+import graft.sources.delta.{DeltaLog, SnapshotCache}
 
 /** Slice-content pin at a scale where the path-range exchange really has
   * 32 populated partitions: the idx derivation must equal the GLOBAL path
@@ -49,7 +49,7 @@ class OrderedIndexContentSuite extends AnyFunSuite {
       assert(admitB > 100L && admitB < 200L)
     } finally {
       DeltaLog.DeferredScanMode = "auto"
-      DeferredDeltaFiles.clearCache()
+      SnapshotCache.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
