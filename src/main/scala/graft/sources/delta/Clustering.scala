@@ -213,9 +213,8 @@ object Clustering {
     * NO data moves — the next OPTIMIZE clusters on the declaration.
     * Empty `cols` = `CLUSTER BY NONE` (domain cleared to `[]`; the
     * features stay — protocol upgrades are one-way). */
-  def clusterBy(spark: SparkSession, tablePath: String, cols: Seq[String]): Long = {
-    var attempt = 0
-    while (attempt < 10) {
+  def clusterBy(spark: SparkSession, tablePath: String, cols: Seq[String]): Long =
+    DeltaCommit.run(spark, tablePath, "CLUSTER BY") {
       // metadata planes only: a CLUSTER BY declaration commits domain
       // metadata — it never consults the live set
       val snap = DeltaLog.metadataSnapshot(spark, tablePath)
@@ -237,33 +236,11 @@ object Clustering {
       require(unsupported.isEmpty,
         "CLUSTER BY supports numeric/date/timestamp/string columns; got " +
           unsupported.mkString(","))
-      val version = snap.version + 1
-
-      val lines = Seq.newBuilder[String]
-      val ciLine = mapper.createObjectNode()
-      val ci = ciLine.putObject("commitInfo")
-      ci.put("timestamp", System.currentTimeMillis())
-      InCommitTimestamps.stamp(
-        spark, tablePath, snap.metadata.configuration, snap.version, ci)
-      ci.put("operation", if (cols.isEmpty) "CLUSTER BY NONE" else "CLUSTER BY")
-      ci.putObject("operationParameters")
-        .put("clusterBy", cols.mkString(","))
-      ci.put("engineInfo", "graft-spark/0.1.0")
-      lines += mapper.writeValueAsString(ciLine)
-
-      val proto = snap.protocol.withWriterFeatures(
-        Set(Feature, RowTracking.DomainFeature))
-      if (proto != snap.protocol) lines += DeltaWriter.protocolLine(proto)
-      lines += domainLine(snap, cols)
-
-      if (DeltaLog.tryCommit(spark, tablePath, version, lines.result().mkString("\n"))) {
-        DeltaWriter.maybeCheckpoint(spark, tablePath, version,
-          snap.metadata.configuration)
-        return version
-      }
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"CLUSTER BY could not commit to $tablePath after $attempt attempts")
-  }
+      val proto = snap.protocol.withWriterFeatures(Set(Feature, RowTracking.DomainFeature))
+      Right(DeltaCommit.Txn(Some(snap),
+        if (cols.isEmpty) "CLUSTER BY NONE" else "CLUSTER BY",
+        parameters = Seq("clusterBy" -> cols.mkString(",")),
+        protocol = Some(proto).filter(_ != snap.protocol),
+        actions = Seq(domainLine(snap, cols))))
+    }.merge
 }

@@ -1,6 +1,5 @@
 package graft.sources.delta
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,7 +22,6 @@ final class DeltaConstraintViolationException(msg: String)
   */
 object DeltaConstraints {
 
-  private val mapper = new ObjectMapper()
   val ConfPrefix = "delta.constraints."
 
   /** `ALTER TABLE … ADD CONSTRAINT name CHECK (expr)`: validates EXISTING
@@ -111,10 +109,8 @@ object DeltaConstraints {
       spark: SparkSession, tablePath: String, newConfig: Map[String, String],
       newSchemaString: Option[String], op: String, params: Map[String, String],
       newProtocol: Option[DeltaProtocol] = None,
-      baseMetadata: Option[DeltaMetadata] = None): Long = {
-    var attempt = 0
-    var committed = -1L
-    while (committed < 0 && attempt < 20) {
+      baseMetadata: Option[DeltaMetadata] = None): Long =
+    DeltaCommit.run(spark, tablePath, op) {
       val current = DeltaLog.metadataSnapshot(spark, tablePath)
       // a metadata/DDL commit is a write too; `newProtocol` upgrades the
       // table's own demands, which this engine satisfies by construction
@@ -131,54 +127,12 @@ object DeltaConstraints {
             s"(the ALTER was computed against a stale schema/configuration); " +
             "rerun against the new table state")
       }
-      val lines = Seq.newBuilder[String]
-      val ciLine = mapper.createObjectNode()
-      val ci = ciLine.putObject("commitInfo")
-      ci.put("timestamp", System.currentTimeMillis())
-      // stamped from the NEW configuration, so the commit that ENABLES
-      // in-commit timestamps already carries one (the spec's contract)
-      val ict = InCommitTimestamps.stamp(
-        spark, tablePath, newConfig, current.version, ci)
-      ci.put("operation", op)
-      val pn = ci.putObject("operationParameters")
-      params.foreach { case (k, v) => pn.put(k, v) }
-      ci.put("engineInfo", "graft-spark/0.1.0")
-      lines += mapper.writeValueAsString(ciLine)
-      // newly enabling: record WHEN (version + ict) the series started —
-      // readers must fall back to file mtimes for earlier versions
-      val ictProvenance: Map[String, String] =
-        if (InCommitTimestamps.enabled(newConfig) &&
-            !InCommitTimestamps.enabled(current.metadata.configuration))
-          Map(
-            InCommitTimestamps.EnablementVersionKey -> (current.version + 1).toString,
-            InCommitTimestamps.EnablementTimestampKey -> ict.get.toString)
-        else Map.empty
-      // protocol upgrade (e.g. enabling column mapping bumps reader v1→v2)
-      // rides in the same commit, before the metaData that relies on it
-      newProtocol.filter(_ != current.protocol).foreach { p =>
-        lines += DeltaWriter.protocolLine(p)
-      }
-      val mdLine = mapper.createObjectNode()
-      val m = mdLine.putObject("metaData")
-      m.put("id", current.metadata.id)
-      val fmt = m.putObject("format")
-      fmt.put("provider", "parquet")
-      fmt.putObject("options")
-      m.put("schemaString", newSchemaString.getOrElse(current.metadata.schemaString))
-      current.partitionColumns.foldLeft(m.putArray("partitionColumns"))((a, c) => a.add(c))
-      val cfg = m.putObject("configuration")
-      (newConfig ++ ictProvenance).foreach { case (k, v) => cfg.put(k, v) }
-      lines += mapper.writeValueAsString(mdLine)
-      if (DeltaLog.tryCommit(spark, tablePath, current.version + 1,
-          lines.result().mkString("\n")))
-        committed = current.version + 1
-      attempt += 1
-    }
-    if (committed < 0) throw new java.io.IOException(
-      s"$op could not commit to $tablePath after $attempt attempts")
-    // metadata commits count toward the checkpoint cadence like any other
-    // commit path — a long ALTER chain must not unbound replay cost
-    DeltaWriter.maybeCheckpoint(spark, tablePath, committed, newConfig)
-    committed
-  }
+      // a protocol upgrade (e.g. enabling column mapping bumps reader
+      // v1→v2) rides in the same commit, before the metaData relying on it
+      Right(DeltaCommit.Txn(Some(current), op, params.toSeq,
+        protocol = newProtocol.filter(_ != current.protocol),
+        metadata = Some(current.metadata.copy(
+          schemaString = newSchemaString.getOrElse(current.metadata.schemaString),
+          configuration = newConfig))))
+    }.merge
 }

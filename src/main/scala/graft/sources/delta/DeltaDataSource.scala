@@ -237,27 +237,36 @@ object DeltaTable {
     // per-batch call must not pay a live-set materialization here
     val snap = DeltaLog.metadataSnapshot(spark, path)
     val outSchema = snap.schema.add("_commit_version", "bigint")
+    // a DV attach's re-add serves only the rows its vector leaves visible
     val perVersion = for {
       (version, adds) <- DeltaLog.changes(spark, path, fromExclusive, toInclusive,
         ignoreDataChangeRemoves)
       if adds.nonEmpty
-      (pv, files) <- adds.groupBy(_.partitionValues)
     } yield {
-      val paths = files.map(f =>
-        new org.apache.hadoop.fs.Path(path, DeltaMaintenance.decodeRel(f.path)).toString)
-      // physical column names on disk for mapped tables; logical out
-      val base = spark.read.schema(snap.physicalDataSchema).parquet(paths: _*)
-        .toDF(snap.dataSchema.fieldNames.toIndexedSeq: _*)
-      val withParts = snap.partitionColumns.foldLeft(base) { (df, c) =>
-        df.withColumn(c, lit(pv.getOrElse(snap.metadata.physicalOf(c), null))
-          .cast(snap.partitionSchema(c).dataType))
-      }
-      withParts
+      readFiles(spark, path, snap, adds)
         .withColumn("_commit_version", lit(version))
         .select(outSchema.fieldNames.map(col).toIndexedSeq: _*)
     }
     perVersion.reduceOption(_ unionByName _).getOrElse(
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), outSchema))
+  }
+
+  /** `files` (add descriptors of `snap`'s table) through the provider's
+    * own relation over a file-subset copy of the snapshot: deletion
+    * vectors, column mapping and partition values apply exactly as in a
+    * full scan. */
+  private[delta] def readFiles(
+      spark: SparkSession, path: String, snap: DeltaSnapshot,
+      files: Seq[DeltaAddFile]): DataFrame = {
+    val slice = snap.copy(files = files)
+    spark.baseRelationToDataFrame(
+      new org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+        location = new DeltaFileIndex(spark, slice),
+        partitionSchema = snap.partitionSchema,
+        dataSchema = snap.dataSchema,
+        bucketSpec = None,
+        fileFormat = GraftParquetFileFormat.forSnapshot(path, slice),
+        options = Map.empty)(spark))
   }
 
   /** Change Data Feed read (row-level CDC — requires

@@ -286,21 +286,19 @@ object DeltaDml {
     // other partitions' rewrites) proceed; a changed touched file or a
     // concurrent metadata/protocol change aborts
     beforeCommit()
-    var attempt = 0
-    var committedVersion = -1L
-    while (committedVersion < 0 && attempt < 20) {
+    val onAbort = () => {
+      adds.foreach { case (rel, _, _, _, _) =>
+        fs.delete(new Path(tablePath, rel), false)
+      }
+      DeltaCdf.cleanup(spark, tablePath, cdcFiles)
+    }
+    val committedVersion = DeltaCommit.run(spark, tablePath, op, onAbort) {
       // deferred plane: metadata-only re-read + the INCREMENTAL conflict
       // rule (intervening commits vs touched paths) — a retry never pays
       // the O(files) live-set materialization the eager re-read did
       val latest =
         if (deferred.isDefined) DeltaLog.metadataSnapshot(spark, tablePath)
         else DeltaLog.snapshot(spark, tablePath)
-      val onAbort = () => {
-        adds.foreach { case (rel, _, _, _, _) =>
-          fs.delete(new Path(tablePath, rel), false)
-        }
-        DeltaCdf.cleanup(spark, tablePath, cdcFiles)
-      }
       // ONE shared range parse per attempt, both rules (see ConflictChecker)
       val range = DeltaLog.sharedConflictRange(
         spark, tablePath, snap.version, latest.version)
@@ -312,60 +310,20 @@ object DeltaDml {
       // concurrent non-blind-append add in that scope invalidates it
       ConflictChecker.checkReadSet(op, spark, snap, latest, Some(condition),
         onAbort, range)
-      val version = latest.version + 1
-      val lines = Seq.newBuilder[String]
-      val ciLine = mapper.createObjectNode()
-      val ci = ciLine.putObject("commitInfo")
-      ci.put("timestamp", System.currentTimeMillis())
-      InCommitTimestamps.stamp(
-        spark, tablePath, latest.metadata.configuration, latest.version, ci)
-      ci.put("operation", op)
-      val params = ci.putObject("operationParameters")
-      params.put("predicate", condition)
-      if (set.nonEmpty) params.put("set", set.map { case (k, v) => s"$k = $v" }.mkString(", "))
-      ci.put("engineInfo", "graft-spark/0.1.0")
-      DeltaWriter.putMetrics(ci, Map(
-        "numAffectedRows" -> rowsAffected,
-        "numRemovedFiles" -> touched.size.toLong,
-        "numAddedFiles" -> adds.size.toLong))
-      lines += mapper.writeValueAsString(ciLine)
-      touched.foreach { f =>
-        val rmLine = mapper.createObjectNode()
-        val r = rmLine.putObject("remove")
-        r.put("path", f.path)
-        r.put("deletionTimestamp", System.currentTimeMillis())
-        r.put("dataChange", true)
-        lines += mapper.writeValueAsString(rmLine)
-      }
-      val addNodes = adds.map { case (rel, pv, size, modTime, st) =>
-        val addLine = mapper.createObjectNode()
-        val a = addLine.putObject("add")
-        a.put("path", DeltaWriter.encodePath(rel))
-        val pvNode = a.putObject("partitionValues")
-        pv.foreach { case (k, v) => if (v == null) pvNode.putNull(k) else pvNode.put(k, v) }
-        a.put("size", size)
-        a.put("modificationTime", modTime)
-        a.put("dataChange", true)
-        st.foreach(s => a.put("stats", mapper.writeValueAsString(s)))
-        (addLine, a, st.flatMap(n => Option(n.get("numRecords")).map(_.asLong())))
-      }
       // row tracking: fresh baseRowId ranges per attempt (re-based on the
       // latest hwm); preserved ids override via the materialized columns
-      val rowDomain = RowTracking.stampAdds(
-        Some(latest), addNodes.map(_._2), addNodes.map(_._3), version)
-      addNodes.foreach { case (line, _, _) => lines += mapper.writeValueAsString(line) }
-      rowDomain.foreach(lines += _)
-      cdcFiles.foreach { case (rel, size) =>
-        lines += DeltaCdf.cdcLine(rel, size, physPartCols)
-      }
-      if (DeltaLog.tryCommit(spark, tablePath, version, lines.result().mkString("\n")))
-        committedVersion = version
-      attempt += 1
-    }
-    if (committedVersion < 0) throw new java.io.IOException(
-      s"$op could not commit to $tablePath after $attempt attempts")
-    DeltaWriter.maybeCheckpoint(spark, tablePath, committedVersion,
-      snap.metadata.configuration)
+      Right(DeltaCommit.Txn(Some(latest), op,
+        parameters = Seq("predicate" -> condition) ++
+          (if (set.isEmpty) Nil
+           else Seq("set" -> set.map { case (k, v) => s"$k = $v" }.mkString(", "))),
+        metrics = Map(
+          "numAffectedRows" -> rowsAffected,
+          "numRemovedFiles" -> touched.size.toLong,
+          "numAddedFiles" -> adds.size.toLong),
+        actions = touched.map(f => DeltaCommit.removeLine(f.path)) ++
+          DeltaCommit.stagedAddLines(Some(latest), adds, latest.version + 1) ++
+          cdcFiles.map { case (rel, size) => DeltaCdf.cdcLine(rel, size, physPartCols) }))
+    }.merge
     DmlMetrics(touched.size, adds.size, rowsAffected, committedVersion)
   }
 
@@ -559,99 +517,53 @@ object DeltaDml {
     // byte-identical to the find snapshot's (path AND current DV) —
     // disjoint concurrent commits proceed (ConflictChecker)
     beforeCommit()
-    var attempt = 0
-    var committedVersion = -1L
-    while (committedVersion < 0 && attempt < 20) {
+    val onAbort = () => {
+      val fs = new Path(tablePath).getFileSystem(conf)
+      dvFilePaths.foreach(p => fs.delete(p, false))
+      DeltaCdf.cleanup(spark, tablePath, cdcFiles)
+    }
+    val op = "DELETE (merge-on-read)"
+    val committedVersion = DeltaCommit.run(spark, tablePath, op, onAbort) {
       val latest =
         if (deferred.isDefined) DeltaLog.metadataSnapshot(spark, tablePath)
         else DeltaLog.snapshot(spark, tablePath)
-      val onAbort = () => {
-        val fs = new Path(tablePath).getFileSystem(conf)
-        dvFilePaths.foreach(p => fs.delete(p, false))
-        DeltaCdf.cleanup(spark, tablePath, cdcFiles)
-      }
       val range = DeltaLog.sharedConflictRange(
         spark, tablePath, snap.version, latest.version)
       if (deferred.isDefined)
-        ConflictChecker.checkRewriteIncremental("DELETE (merge-on-read)", spark,
-          snap, latest, touched, onAbort, range)
-      else
-        ConflictChecker.checkRewrite("DELETE (merge-on-read)", snap, latest, touched, onAbort)
-      ConflictChecker.checkReadSet("DELETE (merge-on-read)", spark, snap, latest,
-        Some(condition), onAbort, range)
-      val version = latest.version + 1
-      val lines = Seq.newBuilder[String]
-      val ciLine = mapper.createObjectNode()
-      val ci = ciLine.putObject("commitInfo")
-      ci.put("timestamp", System.currentTimeMillis())
-      InCommitTimestamps.stamp(
-        spark, tablePath, latest.metadata.configuration, latest.version, ci)
-      ci.put("operation", "DELETE")
-      val params = ci.putObject("operationParameters")
-      params.put("predicate", condition)
-      params.put("mode", "merge-on-read")
-      ci.put("engineInfo", "graft-spark/0.1.0")
-      DeltaWriter.putMetrics(ci, Map(
-        "numDeletedRows" -> rowsAffected,
-        // emptied files are removed outright with NO DV attached — only
-        // the kept files actually gain one
-        "numDeletionVectorsAdded" -> kept.size.toLong,
-        "numRemovedFiles" -> emptied.size.toLong))
-      lines += mapper.writeValueAsString(ciLine)
+        ConflictChecker.checkRewriteIncremental(op, spark, snap, latest, touched,
+          onAbort, range)
+      else ConflictChecker.checkRewrite(op, snap, latest, touched, onAbort)
+      ConflictChecker.checkReadSet(op, spark, snap, latest, Some(condition),
+        onAbort, range)
       // first DV on the table upgrades the protocol to table features,
       // carrying the legacy writer capabilities forward explicitly
       val p0 = latest.protocol
-      if (p0.minReaderVersion < 3 || !p0.readerFeatures.contains("deletionVectors")) {
+      val upgrade =
+        if (p0.minReaderVersion >= 3 && p0.readerFeatures.contains("deletionVectors")) None
         // legacy capabilities become explicit features at (3, 7) — the
         // upgrade carries every implied one (column mapping,
         // changeDataFeed, constraints, …); dropping any would let
         // spec-conforming foreign writers corrupt the table
-        val up = p0.withReaderWriterFeature("deletionVectors",
-          mappingActive = latest.metadata.columnMappingMode != "none")
-        lines += DeltaWriter.protocolLine(up)
-      }
-      (emptied ++ kept).foreach { f =>
-        val rmLine = mapper.createObjectNode()
-        val r = rmLine.putObject("remove")
-        r.put("path", f.path)
-        r.put("deletionTimestamp", System.currentTimeMillis())
-        r.put("dataChange", true)
-        lines += mapper.writeValueAsString(rmLine)
-      }
-      kept.foreach { f =>
-        val desc = descOf(f)
-        val addLine = mapper.createObjectNode()
-        val a = addLine.putObject("add")
-        a.put("path", f.path)
-        val pvNode = a.putObject("partitionValues")
-        f.partitionValues.foreach { case (k, v) =>
-          if (v == null) pvNode.putNull(k) else pvNode.put(k, v)
-        }
-        a.put("size", f.size)
-        a.put("modificationTime", f.modificationTime)
-        a.put("dataChange", true)
-        f.stats.foreach(s => a.put("stats", s))
-        DeletionVectors.putDvNode(a, desc)
-        // row tracking: a DV attach re-adds the SAME physical file — row
-        // positions are untouched (deleted rows just turn invisible), so
-        // the original baseRowId keeps every surviving id stable
-        f.baseRowId.foreach(a.put("baseRowId", _))
-        f.defaultRowCommitVersion.foreach(a.put("defaultRowCommitVersion", _))
-        DeltaWriter.putTags(a, f)
-        lines += mapper.writeValueAsString(addLine)
-      }
-      cdcFiles.foreach { case (rel, size) =>
-        lines += DeltaCdf.cdcLine(rel, size,
-          snap.partitionColumns.map(snap.metadata.physicalOf))
-      }
-      if (DeltaLog.tryCommit(spark, tablePath, version, lines.result().mkString("\n")))
-        committedVersion = version
-      attempt += 1
-    }
-    if (committedVersion < 0) throw new java.io.IOException(
-      s"DELETE (merge-on-read) could not commit to $tablePath after $attempt attempts")
-    DeltaWriter.maybeCheckpoint(spark, tablePath, committedVersion,
-      snap.metadata.configuration)
+        else Some(p0.withReaderWriterFeature("deletionVectors",
+          mappingActive = latest.metadata.columnMappingMode != "none"))
+      Right(DeltaCommit.Txn(Some(latest), "DELETE",
+        parameters = Seq("predicate" -> condition, "mode" -> "merge-on-read"),
+        metrics = Map(
+          "numDeletedRows" -> rowsAffected,
+          // emptied files are removed outright with NO DV attached — only
+          // the kept files actually gain one
+          "numDeletionVectorsAdded" -> kept.size.toLong,
+          "numRemovedFiles" -> emptied.size.toLong),
+        protocol = upgrade,
+        // a DV attach re-adds the SAME physical file — row positions are
+        // untouched (deleted rows just turn invisible), so the original
+        // baseRowId keeps every surviving id stable
+        actions = (emptied ++ kept).map(f => DeltaCommit.removeLine(f.path)) ++
+          kept.map(f => DeltaCommit.addLine(f.copy(deletionVector = Some(descOf(f))))) ++
+          cdcFiles.map { case (rel, size) =>
+            DeltaCdf.cdcLine(rel, size, snap.partitionColumns.map(snap.metadata.physicalOf))
+          }))
+    }.merge
     DmlMetrics(touched.size, 0, rowsAffected, committedVersion)
   }
 

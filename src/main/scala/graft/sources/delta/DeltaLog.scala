@@ -733,19 +733,7 @@ object DeltaLog {
       case None => timestampAsOf match {
         case Some(ts) =>
           val cutoff = parseTimestampMillis(ts)
-          // in-commit timestamps: when the newest commit carries an ict
-          // (the feature stamps EVERY post-enablement commit), versions
-          // resolve against the in-commit values — file mtimes lie after
-          // storage migrations/copies. Pre-enablement commits have no ict
-          // and keep the mtime fallback. Non-ict tables skip the probe
-          // cost entirely (one JSON read decides).
-          val ictTable = commits.lastOption.exists { case (v, _) =>
-            InCommitTimestamps.readIct(spark, tablePath, v).isDefined
-          }
-          def commitTime(v: Long, st: FileStatus): Long =
-            if (!ictTable) st.getModificationTime
-            else InCommitTimestamps.readIct(spark, tablePath, v)
-              .getOrElse(st.getModificationTime)
+          val commitTime = commitTimeOf(spark, tablePath, commits)
           // checkpoint-only / partially-cleaned logs: the checkpoint file's
           // own mtime stands in for the retired commits' timestamps, so a
           // cutoff after the cleanup boundary still resolves
@@ -1027,22 +1015,7 @@ object DeltaLog {
                 .map(e => e.getKey -> e.getValue.asText()).toMap
             else Map.empty))
         }
-        if (node.has("add")) {
-          val a = node.get("add")
-          commitAdds += DeltaAddFile(
-            a.get("path").asText(),
-            jsonStringMap(a.get("partitionValues")),
-            a.get("size").asLong(),
-            if (a.has("modificationTime")) a.get("modificationTime").asLong() else 0L,
-            if (a.has("stats") && !a.get("stats").isNull) Some(a.get("stats").asText()) else None,
-            parseDv(a),
-            if (a.has("baseRowId") && !a.get("baseRowId").isNull)
-              Some(a.get("baseRowId").asLong()) else None,
-            if (a.has("defaultRowCommitVersion") && !a.get("defaultRowCommitVersion").isNull)
-              Some(a.get("defaultRowCommitVersion").asLong()) else None,
-            if (a.has("tags") && !a.get("tags").isNull) jsonStringMap(a.get("tags"))
-            else Map.empty)
-        }
+        if (node.has("add")) commitAdds += parseJsonAdd(node.get("add"))
         if (node.has("remove")) {
           commitRemoves += node.get("remove").get("path").asText()
         }
@@ -1300,6 +1273,24 @@ object DeltaLog {
     fromLast.getOrElse(parts.map(_.getLen).sum / 256)
   }
 
+  /** Commit time of each listed commit, for timestamp resolution. With
+    * in-commit timestamps — detected from the newest commit, since the
+    * feature stamps EVERY post-enablement commit — versions resolve
+    * against the in-commit values: file mtimes lie after storage
+    * migrations/copies. Pre-enablement commits have no ict and keep the
+    * mtime fallback; non-ict tables skip the probes entirely (one JSON
+    * read decides). */
+  private def commitTimeOf(
+      spark: SparkSession, tablePath: String,
+      commits: Seq[(Long, FileStatus)]): (Long, FileStatus) => Long = {
+    val ictTable = commits.lastOption.exists { case (v, _) =>
+      InCommitTimestamps.readIct(spark, tablePath, v).isDefined
+    }
+    (v, st) =>
+      if (!ictTable) st.getModificationTime
+      else InCommitTimestamps.readIct(spark, tablePath, v).getOrElse(st.getModificationTime)
+  }
+
   /** Earliest version whose commit time is at or after `ts` — the
     * streaming source's `startingTimestamp` resolution (spec: "all table
     * changes committed at or after the timestamp will be read"). A
@@ -1310,12 +1301,7 @@ object DeltaLog {
     val (commits, _) = listLog(spark, tablePath)
     require(commits.nonEmpty, s"$tablePath: empty _delta_log")
     val cutoff = parseTimestampMillis(ts)
-    val ictTable = commits.lastOption.exists { case (v, _) =>
-      InCommitTimestamps.readIct(spark, tablePath, v).isDefined
-    }
-    def commitTime(v: Long, st: FileStatus): Long =
-      if (!ictTable) st.getModificationTime
-      else InCommitTimestamps.readIct(spark, tablePath, v).getOrElse(st.getModificationTime)
+    val commitTime = commitTimeOf(spark, tablePath, commits)
     commits.collectFirst { case (v, st) if commitTime(v, st) >= cutoff => v }
       .getOrElse(commits.map(_._1).max + 1)
   }
@@ -1535,18 +1521,25 @@ object DeltaLog {
     }
   }
 
-  /** One JSON `add` node → [[DeltaAddFile]] — shared by [[changes]] and
-    * [[nonBlindDataAdds]] so field handling cannot drift between them. */
-  private def parseJsonAdd(a: com.fasterxml.jackson.databind.JsonNode): DeltaAddFile =
+  /** One JSON `add` node → [[DeltaAddFile]], every field (deletion
+    * vector and row ids included) — the ONE parser for replay,
+    * [[changes]] and the conflict range, so a field one of them needs
+    * cannot be silently dropped by another. */
+  private def parseJsonAdd(a: JsonNode): DeltaAddFile = {
+    def longOpt(k: String): Option[Long] =
+      if (a.has(k) && !a.get(k).isNull) Some(a.get(k).asLong()) else None
     DeltaAddFile(
       a.get("path").asText(),
       jsonStringMap(a.get("partitionValues")),
       a.get("size").asLong(),
-      if (a.has("modificationTime")) a.get("modificationTime").asLong() else 0L,
+      longOpt("modificationTime").getOrElse(0L),
       if (a.has("stats") && !a.get("stats").isNull) Some(a.get("stats").asText()) else None,
-      tags =
-        if (a.has("tags") && !a.get("tags").isNull) jsonStringMap(a.get("tags"))
-        else Map.empty)
+      parseDv(a),
+      longOpt("baseRowId"),
+      longOpt("defaultRowCommitVersion"),
+      if (a.has("tags") && !a.get("tags").isNull) jsonStringMap(a.get("tags"))
+      else Map.empty)
+  }
 
   /** Reader-version-3 table features this engine can actually honor:
     * deletion vectors and column mapping (first-class above), v2

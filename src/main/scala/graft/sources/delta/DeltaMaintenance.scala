@@ -568,8 +568,7 @@ object DeltaMaintenance {
       base: DeltaSnapshot,
       fs: org.apache.hadoop.fs.FileSystem,
       removed: Seq[DeltaAddFile],
-      adds: Seq[(String, Map[String, String], Long, Long,
-        Option[com.fasterxml.jackson.databind.node.ObjectNode])],
+      adds: Seq[DeltaCommit.Staged],
       dataChange: Boolean,
       op: String,
       params: Map[String, String],
@@ -580,93 +579,37 @@ object DeltaMaintenance {
         * the live set): re-read metadata-only and run the INCREMENTAL
         * conflict rule — no O(files) materialization per retry. */
       deferredBase: Boolean = false): Long = {
-    var attempt = 0
-    var committedVersion = -1L
-    var lastConfig: Map[String, String] = Map.empty
-    while (committedVersion < 0 && attempt < 20) {
+    val onAbort = () => {
+      adds.foreach { case (rel, _, _, _, _) =>
+        fs.delete(new Path(tablePath, rel), false)
+      }
+      DeltaCdf.cleanup(spark, tablePath, cdcFiles)
+    }
+    DeltaCommit.run(spark, tablePath, abortOp, onAbort) {
       val latest =
         if (deferredBase) DeltaLog.metadataSnapshot(spark, tablePath)
         else DeltaLog.snapshot(spark, tablePath)
-      lastConfig = latest.metadata.configuration
-      val onAbort = () => {
-        adds.foreach { case (rel, _, _, _, _) =>
-          fs.delete(new Path(tablePath, rel), false)
-        }
-        DeltaCdf.cleanup(spark, tablePath, cdcFiles)
-      }
       if (deferredBase)
         ConflictChecker.checkRewriteIncremental(abortOp, spark, base, latest,
           removed, onAbort,
           DeltaLog.sharedConflictRange(spark, tablePath, base.version, latest.version))
       else ConflictChecker.checkRewrite(abortOp, base, latest, removed, onAbort)
-      val version = latest.version + 1
-      val lines = Seq.newBuilder[String]
-      val ciLine = mapper.createObjectNode()
-      val ci = ciLine.putObject("commitInfo")
-      ci.put("timestamp", System.currentTimeMillis())
-      InCommitTimestamps.stamp(
-        spark, tablePath, latest.metadata.configuration, latest.version, ci)
-      ci.put("operation", op)
-      val p = ci.putObject("operationParameters")
-      params.foreach { case (k, v) => p.put(k, v) }
-      ci.put("engineInfo", "graft-spark/0.1.0")
-      DeltaWriter.putMetrics(ci, Map(
-        "numRemovedFiles" -> removed.size.toLong,
-        "numAddedFiles" -> adds.size.toLong,
-        "numRemovedBytes" -> removed.map(_.size).sum))
-      lines += mapper.writeValueAsString(ciLine)
-      removed.foreach { f =>
-        val rmLine = mapper.createObjectNode()
-        val r = rmLine.putObject("remove")
-        r.put("path", f.path)
-        r.put("deletionTimestamp", System.currentTimeMillis())
-        r.put("dataChange", dataChange)
-        lines += mapper.writeValueAsString(rmLine)
-      }
-      val addNodes = adds.map { case (rel, pv, size, modTime, st) =>
-        val addLine = mapper.createObjectNode()
-        val a = addLine.putObject("add")
-        a.put("path", DeltaWriter.encodePath(rel))
-        val pvNode = a.putObject("partitionValues")
-        pv.foreach { case (k, v) => if (v == null) pvNode.putNull(k) else pvNode.put(k, v) }
-        a.put("size", size)
-        a.put("modificationTime", modTime)
-        a.put("dataChange", dataChange)
-        st.foreach(s => a.put("stats", mapper.writeValueAsString(s)))
-        if (addTags.nonEmpty) {
-          val tagNode = a.putObject("tags")
-          addTags.foreach { case (k, v) => tagNode.put(k, v) }
-        }
-        (addLine, a, st.flatMap(n => Option(n.get("numRecords")).map(_.asLong())))
-      }
       // row tracking: every add on a row-tracked table carries a fresh
       // baseRowId range (re-based on THIS attempt's hwm — a lost race
       // re-allocates against the winner); the PRESERVED ids of rewritten
       // rows live in the materialized columns, which override these
-      val rowDomain = RowTracking.stampAdds(
-        Some(latest), addNodes.map(_._2), addNodes.map(_._3), version)
-      addNodes.foreach { case (line, _, _) => lines += mapper.writeValueAsString(line) }
-      rowDomain.foreach(lines += _)
-      cdcFiles.foreach { case (rel, size) =>
-        lines += DeltaCdf.cdcLine(rel, size,
-          base.partitionColumns.map(base.metadata.physicalOf))
-      }
-      if (DeltaLog.tryCommit(spark, tablePath, version, lines.result().mkString("\n")))
-        committedVersion = version
-      attempt += 1
-    }
-    if (committedVersion < 0) {
-      // loop exhaustion orphans the published adds like any other abort —
-      // clean them up (same contract as DeltaWriter's exhaustion path)
-      adds.foreach { case (rel, _, _, _, _) =>
-        try fs.delete(new Path(tablePath, rel), false) catch { case _: Exception => () }
-      }
-      DeltaCdf.cleanup(spark, tablePath, cdcFiles)
-      throw new java.io.IOException(
-        s"$abortOp could not commit to $tablePath after $attempt attempts")
-    }
-    DeltaWriter.maybeCheckpoint(spark, tablePath, committedVersion, lastConfig)
-    committedVersion
+      Right(DeltaCommit.Txn(Some(latest), op, params.toSeq,
+        metrics = Map(
+          "numRemovedFiles" -> removed.size.toLong,
+          "numAddedFiles" -> adds.size.toLong,
+          "numRemovedBytes" -> removed.map(_.size).sum),
+        actions = removed.map(f => DeltaCommit.removeLine(f.path, dataChange)) ++
+          DeltaCommit.stagedAddLines(Some(latest), adds, latest.version + 1,
+            dataChange, addTags) ++
+          cdcFiles.map { case (rel, size) =>
+            DeltaCdf.cdcLine(rel, size, base.partitionColumns.map(base.metadata.physicalOf))
+          }))
+    }.merge
   }
 
   /** Remove-tombstone deletionTimestamps from the retained commit JSONs:
@@ -1202,10 +1145,8 @@ object DeltaMaintenance {
           withDvAdds = false, forceDefer = true)._2)
         .map(td => (target0, td))
     planes match {
-      case Some((target, td)) => restoreDistributed(spark, tablePath, toVersion,
-        target, td, head.metadata.configuration)
-      case None => restoreDriver(spark, tablePath, toVersion, target0,
-        head.metadata.configuration)
+      case Some((target, td)) => restoreDistributed(spark, tablePath, toVersion, target, td)
+      case None => restoreDriver(spark, tablePath, toVersion, target0)
     }
   }
 
@@ -1213,8 +1154,7 @@ object DeltaMaintenance {
       spark: SparkSession, tablePath: String, toVersion: Long,
       /** the already-materialized eager target snapshot from [[restore]] —
         * re-replaying it here would double the O(files) driver replay */
-      target: DeltaSnapshot,
-      headConfig: Map[String, String]): Long = {
+      target: DeltaSnapshot): Long = {
     val fs = new Path(tablePath).getFileSystem(spark.sessionState.newHadoopConf())
     val missing = target.files.filterNot { f =>
       fs.exists(new Path(tablePath, decodeRel(f.path))) &&
@@ -1232,7 +1172,7 @@ object DeltaMaintenance {
     // first), so the DV'd form is replaced by the target's form.
     def fileKey(f: DeltaAddFile): (String, Option[DvDescriptor]) =
       (f.path, f.deletionVector)
-    restoreLoop(spark, tablePath, toVersion, target, headConfig) { () =>
+    restoreLoop(spark, tablePath, toVersion, target) { () =>
       val current = DeltaLog.snapshot(spark, tablePath)
       if (current.version == toVersion) (current, Nil, Nil) // no-op: skip the diff
       else {
@@ -1247,8 +1187,7 @@ object DeltaMaintenance {
 
   private def restoreDistributed(
       spark: SparkSession, tablePath: String, toVersion: Long,
-      target: DeltaSnapshot, td: DeferredDeltaFiles,
-      headConfig: Map[String, String]): Long = {
+      target: DeltaSnapshot, td: DeferredDeltaFiles): Long = {
     import spark.implicits._
     val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
@@ -1280,7 +1219,7 @@ object DeltaMaintenance {
             s"file(s) already vacuumed (e.g. $example)")
       }
     } finally cleanup()
-    restoreLoop(spark, tablePath, toVersion, target, headConfig) { () =>
+    restoreLoop(spark, tablePath, toVersion, target) { () =>
       val (current, cdOpt) = DeltaLog.scanSnapshot(spark, tablePath,
         withDvAdds = false, forceDefer = true)
       // no-op short-circuit BEFORE diffing: when head == target the cached
@@ -1336,103 +1275,51 @@ object DeltaMaintenance {
     * with the identity-hwm exception, removes, full re-add lines — is ONE
     * implementation for both planes. */
   private def restoreLoop(
-      spark: SparkSession, tablePath: String, toVersion: Long,
-      target: DeltaSnapshot, headConfig: Map[String, String])(
-      currentAndDiff: () => (DeltaSnapshot, Seq[String], Seq[DeltaAddFile])): Long = {
-    var attempt = 0
-    var committed = -1L
-    while (committed < 0 && attempt < 20) {
+      spark: SparkSession, tablePath: String, toVersion: Long, target: DeltaSnapshot)(
+      currentAndDiff: () => (DeltaSnapshot, Seq[String], Seq[DeltaAddFile])): Long =
+    DeltaCommit.run(spark, tablePath, "RESTORE") {
       val (current, removePaths, readds) = currentAndDiff()
-      if (current.version == toVersion) return current.version // no-op
-      val lines = Seq.newBuilder[String]
-      val ciLine = mapper.createObjectNode()
-      val ci = ciLine.putObject("commitInfo")
-      ci.put("timestamp", System.currentTimeMillis())
-      InCommitTimestamps.stamp(
-        spark, tablePath, current.metadata.configuration, current.version, ci)
-      ci.put("operation", "RESTORE")
-      ci.putObject("operationParameters").put("version", toVersion)
-      ci.put("engineInfo", "graft-spark/0.1.0")
-      lines += mapper.writeValueAsString(ciLine)
-      // metadata at the target version wins (schema/partitioning rollback);
-      // same table id — replay is last-metaData-wins. EXCEPTION: identity
-      // high water marks never roll back (production RESTORE's contract) —
-      // ids handed out between toVersion and now may live in downstream
-      // systems, and rolling the hwm back would re-issue them to DIFFERENT
-      // rows on the next write. Keep whichever hwm is further along the
-      // step direction.
-      val restoredSchemaString: String = {
-        val curIdent = DeltaWriter.identityFieldsOf(current.schema)
-          .map(f => f.name -> f).toMap
-        val tgtIdent = DeltaWriter.identityFieldsOf(target.schema)
-        if (tgtIdent.isEmpty || !tgtIdent.exists(f => curIdent.contains(f.name)))
-          target.metadata.schemaString
-        else org.apache.spark.sql.types.StructType(target.schema.fields.map { f =>
-          curIdent.get(f.name)
-            .filter(_ => f.metadata.contains(DeltaWriter.IdentityStartKey))
-            .map { cf =>
-              val step = f.metadata.getLong(DeltaWriter.IdentityStepKey)
-              val tHwm = DeltaWriter.identityHwm(f)
-              val cHwm = DeltaWriter.identityHwm(cf)
-              val keep = if (step > 0) math.max(tHwm, cHwm) else math.min(tHwm, cHwm)
-              if (keep == tHwm) f
-              else f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-                .withMetadata(f.metadata)
-                .putLong(DeltaWriter.IdentityHwmKey, keep).build())
-            }.getOrElse(f)
-        }).json
-      }
-      val mdLine = mapper.createObjectNode()
-      val m = mdLine.putObject("metaData")
-      m.put("id", target.metadata.id)
-      val fmt = m.putObject("format")
-      fmt.put("provider", "parquet")
-      fmt.putObject("options")
-      m.put("schemaString", restoredSchemaString)
-      target.partitionColumns.foldLeft(m.putArray("partitionColumns"))((a, c) => a.add(c))
-      val cfg = m.putObject("configuration")
-      target.metadata.configuration.foreach { case (k, v) => cfg.put(k, v) }
-      lines += mapper.writeValueAsString(mdLine)
-      removePaths.foreach { p =>
-        val rm = mapper.createObjectNode()
-        val r = rm.putObject("remove")
-        r.put("path", p)
-        r.put("deletionTimestamp", System.currentTimeMillis())
-        r.put("dataChange", true)
-        lines += mapper.writeValueAsString(rm)
-      }
-      readds.foreach { f =>
-        val ad = mapper.createObjectNode()
-        val a = ad.putObject("add")
-        a.put("path", f.path)
-        val pv = a.putObject("partitionValues")
-        f.partitionValues.foreach { case (k, v) =>
-          if (v == null) pv.putNull(k) else pv.put(k, v)
+      if (current.version == toVersion) Left(current.version) // no-op
+      else {
+        // metadata at the target version wins (schema/partitioning
+        // rollback); same table id — replay is last-metaData-wins.
+        // EXCEPTION: identity high water marks never roll back (production
+        // RESTORE's contract) — ids handed out between toVersion and now
+        // may live in downstream systems, and rolling the hwm back would
+        // re-issue them to DIFFERENT rows on the next write. Keep whichever
+        // hwm is further along the step direction.
+        val restoredSchemaString: String = {
+          val curIdent = DeltaWriter.identityFieldsOf(current.schema)
+            .map(f => f.name -> f).toMap
+          val tgtIdent = DeltaWriter.identityFieldsOf(target.schema)
+          if (tgtIdent.isEmpty || !tgtIdent.exists(f => curIdent.contains(f.name)))
+            target.metadata.schemaString
+          else org.apache.spark.sql.types.StructType(target.schema.fields.map { f =>
+            curIdent.get(f.name)
+              .filter(_ => f.metadata.contains(DeltaWriter.IdentityStartKey))
+              .map { cf =>
+                val step = f.metadata.getLong(DeltaWriter.IdentityStepKey)
+                val tHwm = DeltaWriter.identityHwm(f)
+                val cHwm = DeltaWriter.identityHwm(cf)
+                val keep = if (step > 0) math.max(tHwm, cHwm) else math.min(tHwm, cHwm)
+                if (keep == tHwm) f
+                else f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
+                  .withMetadata(f.metadata)
+                  .putLong(DeltaWriter.IdentityHwmKey, keep).build())
+              }.getOrElse(f)
+          }).json
         }
-        a.put("size", f.size)
-        a.put("modificationTime", f.modificationTime)
-        a.put("dataChange", true)
-        f.stats.foreach(st => a.put("stats", st))
-        f.deletionVector.foreach(d => DeletionVectors.putDvNode(a, d))
-        // row tracking: a restore re-adds the file AS IT WAS — original
-        // baseRowId, so resurrected rows come back under their old ids
-        // (the hwm domain is not rolled back, so no NEW allocation can
-        // collide with them)
-        f.baseRowId.foreach(a.put("baseRowId", _))
-        f.defaultRowCommitVersion.foreach(a.put("defaultRowCommitVersion", _))
-        DeltaWriter.putTags(a, f)
-        lines += mapper.writeValueAsString(ad)
+        // row tracking: a restore re-adds each file AS IT WAS — original
+        // baseRowId, so resurrected rows come back under their old ids (the
+        // hwm domain is not rolled back, so no NEW allocation can collide
+        // with them)
+        Right(DeltaCommit.Txn(Some(current), "RESTORE",
+          parameters = Seq("version" -> toVersion),
+          metadata = Some(target.metadata.copy(schemaString = restoredSchemaString)),
+          actions = removePaths.map(DeltaCommit.removeLine(_)) ++
+            readds.map(DeltaCommit.addLine(_))))
       }
-      if (DeltaLog.tryCommit(spark, tablePath, current.version + 1,
-          lines.result().mkString("\n")))
-        committed = current.version + 1
-      attempt += 1
-    }
-    if (committed < 0) throw new java.io.IOException(
-      s"RESTORE could not commit to $tablePath after $attempt attempts")
-    DeltaWriter.maybeCheckpoint(spark, tablePath, committed, headConfig)
-    committed
-  }
+    }.merge
 
   /** `.option("replaceWhere", cond)` overwrite — production Delta's
     * selective overwrite: atomically replace exactly the rows matching
@@ -1529,73 +1416,40 @@ object DeltaMaintenance {
       if (u != null && u.isAbsolute) addPath // source is itself a clone
       else new Path(srcRoot, decodeRel(addPath)).toUri.toString
     }
-    val lines = Seq.newBuilder[String]
-    val ciLine = mapper.createObjectNode()
-    val ci = ciLine.putObject("commitInfo")
-    ci.put("timestamp", System.currentTimeMillis())
-    // a clone copies the source configuration, ict enablement included —
-    // its v0 commit starts the clone's own monotonic series
-    InCommitTimestamps.stamp(
-      spark, targetPath, src.metadata.configuration, -1L, ci)
-    ci.put("operation", "CLONE")
-    val cp = ci.putObject("operationParameters")
-    cp.put("source", srcRoot.toString)
-    cp.put("sourceVersion", src.version)
-    ci.put("engineInfo", "graft-spark/0.1.0")
-    lines += mapper.writeValueAsString(ciLine)
-    lines += cloneProtocolLine(src)
-    val mdLine = mapper.createObjectNode()
-    val m = mdLine.putObject("metaData")
-    m.put("id", UUID.randomUUID().toString) // a clone is a NEW table
-    val fmt = m.putObject("format")
-    fmt.put("provider", "parquet")
-    fmt.putObject("options")
-    m.put("schemaString", src.metadata.schemaString)
-    src.partitionColumns.foldLeft(m.putArray("partitionColumns"))((a, c) => a.add(c))
-    val cfg = m.putObject("configuration")
-    src.metadata.configuration.foreach { case (k, v) => cfg.put(k, v) }
-    lines += mapper.writeValueAsString(mdLine)
-    src.files.foreach { f =>
-      val adLine = mapper.createObjectNode()
-      val a = adLine.putObject("add")
-      a.put("path", absoluteUri(f.path))
-      val pv = a.putObject("partitionValues")
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v)
-      }
-      a.put("size", f.size)
-      a.put("modificationTime", f.modificationTime)
-      a.put("dataChange", true)
-      f.stats.foreach(st => a.put("stats", st))
-      // a "u"-storage DV resolves against the table root, which for the
-      // clone is the WRONG root — pin it to the source's absolute path
-      f.deletionVector.foreach { d =>
-        val pinned =
+    // a "u"-storage DV resolves against the table root, which for the
+    // clone is the WRONG root — pin it to the source's absolute path.
+    // Row tracking: the clone shares the source's physical files, so row
+    // ids carry over verbatim — together with the domain copy below the
+    // clone keeps the source's id space (and its hwm, so clone-side
+    // writes never collide with cloned ids)
+    val adds = src.files.map { f =>
+      DeltaCommit.addLine(f.copy(path = absoluteUri(f.path),
+        deletionVector = f.deletionVector.map { d =>
           if (d.storageType == "u")
             DvDescriptor("p", d.absolutePath(sourcePath).toUri.toString,
               d.offset, d.sizeInBytes, d.cardinality)
           else d
-        DeletionVectors.putDvNode(a, pinned)
-      }
-      // row tracking: the clone shares the source's physical files, so row
-      // ids carry over verbatim — together with the domain copy below the
-      // clone keeps the source's id space (and its hwm, so clone-side
-      // writes never collide with cloned ids)
-      f.baseRowId.foreach(a.put("baseRowId", _))
-      f.defaultRowCommitVersion.foreach(a.put("defaultRowCommitVersion", _))
-      DeltaWriter.putTags(a, f)
-      lines += mapper.writeValueAsString(adLine)
+        }))
     }
-    // domain metadata carries over whole (rowTracking hwm, foreign engines'
-    // clustering state …) — the preservation contract of the
-    // domainMetadata writer feature the cloned protocol may list
-    src.domainMetadata.toSeq.sortBy(_._1).foreach { case (d, c) =>
-      lines += RowTracking.domainLineOf(d, c)
-    }
-    if (!DeltaLog.tryCommit(spark, targetPath, 0L, lines.result().mkString("\n")))
-      throw new java.io.IOException(s"CLONE lost the race creating $targetPath")
-    0L
+    DeltaCommit.create(spark, targetPath,
+      cloneTxn(src, Seq("source" -> srcRoot.toString, "sourceVersion" -> src.version), adds))
   }
+
+  /** A clone's v0 commit: the source's protocol ([[cloneProtocol]]),
+    * schema and configuration under a fresh table id (a clone is a NEW
+    * table — ict enablement included, so its v0 starts the clone's own
+    * monotonic series), the re-added files, then the source's domain
+    * metadata whole (rowTracking hwm, foreign engines' clustering state …
+    * — the preservation contract of the domainMetadata writer feature the
+    * cloned protocol may list). */
+  private def cloneTxn(
+      src: DeltaSnapshot, params: Seq[(String, Any)], adds: Seq[String]): DeltaCommit.Txn =
+    DeltaCommit.Txn(None, "CLONE", params,
+      protocol = Some(cloneProtocol(src)),
+      metadata = Some(src.metadata.copy(id = UUID.randomUUID().toString)),
+      actions = adds ++ src.domainMetadata.toSeq.sortBy(_._1).map { case (d, c) =>
+        RowTracking.domainLineOf(d, c)
+      })
 
   /** A clone's protocol line: the SOURCE's protocol carried VERBATIM —
     * the copied schemaString/configuration may require column mapping,
@@ -1604,15 +1458,13 @@ object DeltaMaintenance {
     * or resolve logical column names against physical parquet names and
     * read all-NULLs). Widened with deletionVectors when any copied add
     * carries one and the source protocol predates the feature. */
-  private def cloneProtocolLine(src: DeltaSnapshot): String = {
+  private def cloneProtocol(src: DeltaSnapshot): DeltaProtocol = {
     val p0 = src.protocol
-    val p =
-      if (src.files.exists(_.deletionVector.isDefined) &&
-          (p0.minReaderVersion < 3 || !p0.readerFeatures.contains("deletionVectors")))
-        p0.withReaderWriterFeature("deletionVectors",
-          mappingActive = src.metadata.columnMappingMode != "none")
-      else p0
-    DeltaWriter.protocolLine(p)
+    if (src.files.exists(_.deletionVector.isDefined) &&
+        (p0.minReaderVersion < 3 || !p0.readerFeatures.contains("deletionVectors")))
+      p0.withReaderWriterFeature("deletionVectors",
+        mappingActive = src.metadata.columnMappingMode != "none")
+    else p0
   }
 
   /** `CREATE TABLE t DEEP CLONE s`: an independent physical copy — every
@@ -1703,58 +1555,13 @@ object DeltaMaintenance {
           throw new java.io.IOException(s"deep clone copy failed: $fromUri -> $to")
       }
 
-    val lines = Seq.newBuilder[String]
-    val ciLine = mapper.createObjectNode()
-    val ci = ciLine.putObject("commitInfo")
-    ci.put("timestamp", System.currentTimeMillis())
-    InCommitTimestamps.stamp(
-      spark, targetPath, src.metadata.configuration, -1L, ci)
-    ci.put("operation", "CLONE")
-    val cp = ci.putObject("operationParameters")
-    cp.put("source", srcRoot.toString)
-    cp.put("sourceVersion", src.version)
-    cp.put("isShallow", false)
-    ci.put("engineInfo", "graft-spark/0.1.0")
-    lines += mapper.writeValueAsString(ciLine)
-    lines += cloneProtocolLine(src)
-    val mdLine = mapper.createObjectNode()
-    val m = mdLine.putObject("metaData")
-    m.put("id", UUID.randomUUID().toString) // a clone is a NEW table
-    val fmt = m.putObject("format")
-    fmt.put("provider", "parquet")
-    fmt.putObject("options")
-    m.put("schemaString", src.metadata.schemaString)
-    src.partitionColumns.foldLeft(m.putArray("partitionColumns"))((a, c) => a.add(c))
-    val cfg = m.putObject("configuration")
-    src.metadata.configuration.foreach { case (k, v) => cfg.put(k, v) }
-    lines += mapper.writeValueAsString(mdLine)
-    addPlans.foreach { case (f, (_, rel), dv, _) =>
-      val adLine = mapper.createObjectNode()
-      val a = adLine.putObject("add")
-      a.put("path", DeltaWriter.encodePath(rel))
-      val pv = a.putObject("partitionValues")
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v)
-      }
-      a.put("size", f.size)
-      a.put("modificationTime", f.modificationTime)
-      a.put("dataChange", true)
-      f.stats.foreach(st => a.put("stats", st))
-      dv.foreach(DeletionVectors.putDvNode(a, _))
-      // row tracking: copied files are byte-identical (materialized id
-      // columns included), so the original baseRowId keeps every id
-      f.baseRowId.foreach(a.put("baseRowId", _))
-      f.defaultRowCommitVersion.foreach(a.put("defaultRowCommitVersion", _))
-      DeltaWriter.putTags(a, f)
-      lines += mapper.writeValueAsString(adLine)
+    // row tracking: copied files are byte-identical (materialized id
+    // columns included), so the original baseRowId keeps every id
+    val adds = addPlans.map { case (f, (_, rel), dv, _) =>
+      DeltaCommit.addLine(f.copy(path = DeltaWriter.encodePath(rel), deletionVector = dv))
     }
-    src.domainMetadata.toSeq.sortBy(_._1).foreach { case (d, c) =>
-      lines += RowTracking.domainLineOf(d, c)
-    }
-    if (!DeltaLog.tryCommit(spark, targetPath, 0L, lines.result().mkString("\n")))
-      throw new java.io.IOException(s"CLONE lost the race creating $targetPath")
-    DeltaWriter.maybeCheckpoint(spark, targetPath, 0L, src.metadata.configuration)
-    0L
+    DeltaCommit.create(spark, targetPath, cloneTxn(src, Seq(
+      "source" -> srcRoot.toString, "sourceVersion" -> src.version, "isShallow" -> false), adds))
   }
 
   /** `DESCRIBE DETAIL`: one-row table summary — the operational numbers a
@@ -1858,47 +1665,18 @@ object DeltaMaintenance {
     val statsByPath: Map[String, ObjectNode] =
       DeltaWriter.collectFileStats(spark, all.map(_.toString), dataSchema)
 
-    val lines = Seq.newBuilder[String]
-    val ciLine = mapper.createObjectNode()
-    val ci = ciLine.putObject("commitInfo")
-    ci.put("timestamp", System.currentTimeMillis())
-    ci.put("operation", "CONVERT")
-    val params = ci.putObject("operationParameters")
-    params.put("partitionBy", partitionBy.mkString(","))
-    params.put("numFiles", all.size.toLong)
-    ci.put("engineInfo", "graft-spark/0.1.0")
-    lines += mapper.writeValueAsString(ciLine)
-    lines += DeltaWriter.protocolLine(DeltaProtocol(1, 2))
-    val metaLine = mapper.createObjectNode()
-    val m = metaLine.putObject("metaData")
-    m.put("id", UUID.randomUUID().toString)
-    val fmt = m.putObject("format")
-    fmt.put("provider", "parquet")
-    fmt.putObject("options")
-    m.put("schemaString", full.json)
-    partitionBy.foldLeft(m.putArray("partitionColumns"))((a, c) => a.add(c))
-    m.putObject("configuration")
-    m.put("createdTime", System.currentTimeMillis())
-    lines += mapper.writeValueAsString(metaLine)
-    all.foreach { p =>
+    val adds = all.map { p =>
       val rel = DeltaWriter.relativize(root, p)
       val st = fs.getFileStatus(p)
-      val addLine = mapper.createObjectNode()
-      val a = addLine.putObject("add")
-      a.put("path", DeltaWriter.encodePath(rel))
-      val pvNode = a.putObject("partitionValues")
-      DeltaWriter.partitionValuesOf(rel, partitionBy).foreach { case (k, v) =>
-        if (v == null) pvNode.putNull(k) else pvNode.put(k, v)
-      }
-      a.put("size", st.getLen)
-      a.put("modificationTime", st.getModificationTime)
-      a.put("dataChange", true)
-      statsByPath.get(p.toString).foreach(s => a.put("stats", mapper.writeValueAsString(s)))
-      lines += mapper.writeValueAsString(addLine)
+      DeltaCommit.addLine(DeltaAddFile(DeltaWriter.encodePath(rel),
+        DeltaWriter.partitionValuesOf(rel, partitionBy), st.getLen, st.getModificationTime,
+        statsByPath.get(p.toString).map(mapper.writeValueAsString)))
     }
-    require(DeltaLog.tryCommit(spark, tablePath, 0L, lines.result().mkString("\n")),
-      s"CONVERT TO DELTA lost a creation race at $tablePath")
-    0L
+    DeltaCommit.create(spark, tablePath, DeltaCommit.Txn(None, "CONVERT",
+      Seq("partitionBy" -> partitionBy.mkString(","), "numFiles" -> all.size.toLong),
+      protocol = Some(DeltaProtocol(1, 2)),
+      metadata = Some(DeltaMetadata(UUID.randomUUID().toString, full.json, partitionBy, Map.empty)),
+      actions = adds))
   }
 
   /** Expired-log cleanup (`delta.logRetentionDuration`, default 30 days —
@@ -2083,9 +1861,7 @@ object DeltaMaintenance {
     if (dryRun || missing.isEmpty) return missing.distinct.sorted
     snap.assertWritable("FSCK")
     snap.assertRemovable("FSCK")
-    var attempt = 0
-    var done = false
-    while (!done && attempt < 20) {
+    DeltaCommit.run(spark, tablePath, "FSCK") {
       // per attempt: which of the missing adds are STILL live — a pruned
       // path lookup on the deferred plane, never a full re-materialization
       val (current, curDef) = DeltaLog.scanSnapshot(spark, tablePath, withDvAdds = false)
@@ -2094,35 +1870,11 @@ object DeltaMaintenance {
         case Some(d) => d.collectByPath(missingSet.contains).map(_.path).toSet
         case None => current.files.map(_.path).toSet.intersect(missingSet)
       }
-      if (still.isEmpty) done = true
-      else {
-        val lines = Seq.newBuilder[String]
-        val ciLine = mapper.createObjectNode()
-        val ci = ciLine.putObject("commitInfo")
-        ci.put("timestamp", System.currentTimeMillis())
-        InCommitTimestamps.stamp(
-          spark, tablePath, current.metadata.configuration, current.version, ci)
-        ci.put("operation", "FSCK")
-        ci.putObject("operationParameters").put("numRemovedFiles", still.size.toLong)
-        ci.put("engineInfo", "graft-spark/0.1.0")
-        lines += mapper.writeValueAsString(ciLine)
-        still.toSeq.sorted.foreach { p =>
-          val rm = mapper.createObjectNode()
-          val r = rm.putObject("remove")
-          r.put("path", p)
-          r.put("deletionTimestamp", System.currentTimeMillis())
-          r.put("dataChange", true)
-          lines += mapper.writeValueAsString(rm)
-        }
-        done = DeltaLog.tryCommit(
-          spark, tablePath, current.version + 1, lines.result().mkString("\n"))
-        if (done) DeltaWriter.maybeCheckpoint(spark, tablePath, current.version + 1,
-          current.metadata.configuration)
-      }
-      attempt += 1
+      if (still.isEmpty) Left(current.version)
+      else Right(DeltaCommit.Txn(Some(current), "FSCK",
+        parameters = Seq("numRemovedFiles" -> still.size.toLong),
+        actions = still.toSeq.sorted.map(DeltaCommit.removeLine(_))))
     }
-    if (!done) throw new java.io.IOException(
-      s"FSCK could not commit to $tablePath after $attempt attempts")
     missing
   }
 

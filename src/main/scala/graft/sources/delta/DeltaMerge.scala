@@ -2,7 +2,6 @@ package graft.sources.delta
 
 import java.util.UUID
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -73,7 +72,6 @@ object MergeClause {
   */
 object DeltaMerge {
 
-  private val mapper = new ObjectMapper()
 
   import MergeClause._
 
@@ -536,9 +534,13 @@ object DeltaMerge {
     // ---- 4. validated commit loop (same contract as DELETE/OPTIMIZE)
     beforeCommit()
     val fs = new Path(tablePath).getFileSystem(spark.sessionState.newHadoopConf())
-    var attempt = 0
-    var committedVersion = -1L
-    while (committedVersion < 0 && attempt < 20) {
+    val onAbort = () => {
+      adds.foreach { case (rel, _, _, _, _) =>
+        fs.delete(new Path(tablePath, rel), false)
+      }
+      DeltaCdf.cleanup(spark, tablePath, cdcFiles)
+    }
+    val committedVersion = DeltaCommit.run(spark, tablePath, "MERGE", onAbort) {
       // deferred plane: metadata-only re-read (txn watermarks included) +
       // incremental conflict rule — no O(files) materialization per retry
       val latest =
@@ -549,116 +551,54 @@ object DeltaMerge {
       // staged files, succeed as a no-op (same contract as DeltaWriter)
       if (txn.exists { case (appId, v) =>
             latest.transactions.get(appId).exists(_ >= v) }) {
-        adds.foreach { case (rel, _, _, _, _) =>
-          fs.delete(new Path(tablePath, rel), false)
-        }
-        DeltaCdf.cleanup(spark, tablePath, cdcFiles)
-        return MergeMetrics(0, 0, 0, 0, latest.version)
-      }
-      val onAbort = () => {
-        adds.foreach { case (rel, _, _, _, _) =>
-          fs.delete(new Path(tablePath, rel), false)
-        }
-        DeltaCdf.cleanup(spark, tablePath, cdcFiles)
-      }
-      // ONE shared range parse per attempt, both rules (see ConflictChecker)
-      val range = DeltaLog.sharedConflictRange(
-        spark, tablePath, snap.version, latest.version)
-      if (deferred.isDefined)
-        ConflictChecker.checkRewriteIncremental("MERGE", spark, snap, latest,
-          touched, onAbort, range)
-      else ConflictChecker.checkRewrite("MERGE", snap, latest, touched, onAbort)
-      // the merge's decisions READ the whole target (matched-find inner
-      // join, insert anti-join): any concurrent non-blind-append data add
-      // invalidates them — two concurrent upserts of the same absent key
-      // would otherwise BOTH insert it (read predicate None = table-wide)
-      ConflictChecker.checkReadSet("MERGE", spark, snap, latest, None, onAbort, range)
-      val version = latest.version + 1
-      val lines = Seq.newBuilder[String]
-      val ciLine = mapper.createObjectNode()
-      val ci = ciLine.putObject("commitInfo")
-      ci.put("timestamp", System.currentTimeMillis())
-      InCommitTimestamps.stamp(
-        spark, tablePath, latest.metadata.configuration, latest.version, ci)
-      ci.put("operation", "MERGE")
-      ci.putObject("operationParameters").put("predicate", condition)
-      ci.put("engineInfo", "graft-spark/0.1.0")
-      DeltaWriter.putMetrics(ci, Map(
-        "numTargetRowsUpdated" -> rowsUpdated,
-        "numTargetRowsDeleted" -> rowsDeleted,
-        "numTargetRowsInserted" -> rowsInserted,
-        "numTargetFilesRemoved" -> touched.size.toLong,
-        "numTargetFilesAdded" -> adds.size.toLong))
-      lines += mapper.writeValueAsString(ciLine)
-      txn.foreach { case (appId, v) =>
-        val txnLine = mapper.createObjectNode()
-        val t = txnLine.putObject("txn")
-        t.put("appId", appId)
-        t.put("version", v)
-        t.put("lastUpdated", System.currentTimeMillis())
-        lines += mapper.writeValueAsString(txnLine)
-      }
-      if (evolved.nonEmpty || identityNewHwm.nonEmpty) {
+        onAbort()
+        Left(latest.version)
+      } else {
+        // ONE shared range parse per attempt, both rules (see ConflictChecker)
+        val range = DeltaLog.sharedConflictRange(
+          spark, tablePath, snap.version, latest.version)
+        if (deferred.isDefined)
+          ConflictChecker.checkRewriteIncremental("MERGE", spark, snap, latest,
+            touched, onAbort, range)
+        else ConflictChecker.checkRewrite("MERGE", snap, latest, touched, onAbort)
+        // the merge's decisions READ the whole target (matched-find inner
+        // join, insert anti-join): any concurrent non-blind-append data add
+        // invalidates them — two concurrent upserts of the same absent key
+        // would otherwise BOTH insert it (read predicate None = table-wide)
+        ConflictChecker.checkReadSet("MERGE", spark, snap, latest, None, onAbort, range)
         // metaData re-emission (same table id — replay is last-metaData-
         // wins): schema evolution and/or identity hwm advance. Emitted
         // from the TRANSACTION's snapshot: checkTableState above aborts
         // on ANY concurrent metadata change, so latest.metadata ==
         // snap.metadata here by construction — there is no concurrent
         // config to preserve beyond what snap carries.
-        val base = snap.metadata
-        val node = mapper.createObjectNode()
-        val m = node.putObject("metaData")
-        m.put("id", base.id)
-        val fmt = m.putObject("format")
-        fmt.put("provider", "parquet")
-        fmt.putObject("options")
-        m.put("schemaString", DeltaWriter.stampIdentityHwm(
-          outSchema, identityFields, identityNewHwm).json)
-        base.partitionColumns.foldLeft(m.putArray("partitionColumns"))((a, c) => a.add(c))
-        val cfg = m.putObject("configuration")
-        base.configuration.foreach { case (k, v) => cfg.put(k, v) }
-        m.put("createdTime", System.currentTimeMillis())
-        lines += mapper.writeValueAsString(node)
+        val metadata =
+          if (evolved.isEmpty && identityNewHwm.isEmpty) None
+          else Some(snap.metadata.copy(schemaString = DeltaWriter.stampIdentityHwm(
+            outSchema, identityFields, identityNewHwm).json))
+        // row tracking: fresh baseRowId ranges per attempt; rewritten rows'
+        // preserved ids override via the materialized columns, inserted
+        // rows take the fresh ids
+        Right(DeltaCommit.Txn(Some(latest), "MERGE",
+          parameters = Seq("predicate" -> condition),
+          metrics = Map(
+            "numTargetRowsUpdated" -> rowsUpdated,
+            "numTargetRowsDeleted" -> rowsDeleted,
+            "numTargetRowsInserted" -> rowsInserted,
+            "numTargetFilesRemoved" -> touched.size.toLong,
+            "numTargetFilesAdded" -> adds.size.toLong),
+          setTransaction = txn,
+          metadata = metadata,
+          actions = touched.map(f => DeltaCommit.removeLine(f.path)) ++
+            DeltaCommit.stagedAddLines(Some(latest), adds, latest.version + 1) ++
+            cdcFiles.map { case (rel, size) =>
+              DeltaCdf.cdcLine(rel, size, snap.partitionColumns.map(snap.metadata.physicalOf))
+            }))
       }
-      touched.foreach { f =>
-        val rmLine = mapper.createObjectNode()
-        val r = rmLine.putObject("remove")
-        r.put("path", f.path)
-        r.put("deletionTimestamp", System.currentTimeMillis())
-        r.put("dataChange", true)
-        lines += mapper.writeValueAsString(rmLine)
-      }
-      val addNodes = adds.map { case (rel, pv, size, modTime, st) =>
-        val addLine = mapper.createObjectNode()
-        val a = addLine.putObject("add")
-        a.put("path", DeltaWriter.encodePath(rel))
-        val pvNode = a.putObject("partitionValues")
-        pv.foreach { case (k, v) => if (v == null) pvNode.putNull(k) else pvNode.put(k, v) }
-        a.put("size", size)
-        a.put("modificationTime", modTime)
-        a.put("dataChange", true)
-        st.foreach(s => a.put("stats", mapper.writeValueAsString(s)))
-        (addLine, a, st.flatMap(n => Option(n.get("numRecords")).map(_.asLong())))
-      }
-      // row tracking: fresh baseRowId ranges per attempt; rewritten rows'
-      // preserved ids override via the materialized columns, inserted rows
-      // take the fresh ids
-      val rowDomain = RowTracking.stampAdds(
-        Some(latest), addNodes.map(_._2), addNodes.map(_._3), version)
-      addNodes.foreach { case (line, _, _) => lines += mapper.writeValueAsString(line) }
-      rowDomain.foreach(lines += _)
-      cdcFiles.foreach { case (rel, size) =>
-        lines += DeltaCdf.cdcLine(rel, size,
-          snap.partitionColumns.map(snap.metadata.physicalOf))
-      }
-      if (DeltaLog.tryCommit(spark, tablePath, version, lines.result().mkString("\n")))
-        committedVersion = version
-      attempt += 1
+    } match {
+      case Left(v) => return MergeMetrics(0, 0, 0, 0, v)
+      case Right(v) => v
     }
-    if (committedVersion < 0) throw new java.io.IOException(
-      s"MERGE could not commit to $tablePath after $attempt attempts")
-    DeltaWriter.maybeCheckpoint(spark, tablePath, committedVersion,
-      snap.metadata.configuration)
     MergeMetrics(rowsUpdated, rowsDeleted, rowsInserted, touched.size, committedVersion)
   }
 
@@ -667,8 +607,7 @@ object DeltaMerge {
     * which could be legitimately NULL). */
   private val srcMatched = col("_smark").isNotNull
 
-  private type Add = (String, Map[String, String], Long, Long,
-    Option[com.fasterxml.jackson.databind.node.ObjectNode])
+  private type Add = DeltaCommit.Staged
 
   /** Write `df` into a staging dir, publish the files into the table dir,
     * and return the pending add actions + the row count written.

@@ -336,26 +336,15 @@ class DeltaStreamingSource(
       stamped
   }
 
-  /** Read files [i, j) of the pinned snapshot `ver` — the provider's own
-    * relation over a file-subset copy of the snapshot, so deletion
-    * vectors, column mapping and partition-value injection all apply
-    * exactly as in a full scan. CDF streams get the synthetic 'insert'
-    * decoration of the initial-snapshot contract. */
+  /** Read files [i, j) of the pinned snapshot `ver` through the provider's
+    * own relation ([[DeltaTable.readFiles]]). CDF streams get the
+    * synthetic 'insert' decoration of the initial-snapshot contract. */
   private def snapshotSlice(ver: Long, i: Long, j: Long): DataFrame = {
     val plane = slicePlane(ver)
-    val snap = plane.snap
-    val slice = plane.slice(i, j)
-    // NB on the deferred plane `snap.files` is the DV-carrying adds only —
-    // exactly what forSnapshot's dvByPath needs; the slice's own index is
-    // built below from the materialized descriptors on both planes.
-    val rel = new org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      location = new DeltaFileIndex(spark, snap.copy(files = slice)),
-      partitionSchema = snap.partitionSchema,
-      dataSchema = snap.dataSchema,
-      bucketSpec = None,
-      fileFormat = GraftParquetFileFormat.forSnapshot(path, snap),
-      options = Map.empty)(spark)
-    val base = spark.baseRelationToDataFrame(rel)
+    // the slice's descriptors carry their own deletion vectors on both
+    // planes (on the deferred one `plane.snap.files` is only the
+    // DV-carrying adds, never the live set)
+    val base = DeltaTable.readFiles(spark, path, plane.snap, plane.slice(i, j))
     if (!changeFeed) base
     else base
       .withColumn(DeltaCdf.TypeCol, lit("insert"))

@@ -31,35 +31,6 @@ object DeltaWriter {
   val CheckpointInterval = 10
   private val mapper = new ObjectMapper()
 
-  /** `commitInfo.operationMetrics` (string-valued map, the production
-    * serialization) — DESCRIBE HISTORY's per-operation numbers. */
-  private[delta] def putMetrics(ci: ObjectNode, metrics: Map[String, Long]): Unit =
-    if (metrics.nonEmpty) {
-      val m = ci.putObject("operationMetrics")
-      metrics.toSeq.sortBy(_._1).foreach { case (k, v) => m.put(k, v.toString) }
-    }
-
-  /** One `protocol` action line (spec serialization: `readerFeatures`
-    * present iff minReaderVersion ≥ 3, `writerFeatures` iff
-    * minWriterVersion ≥ 7, both sorted). EVERY protocol-emitting commit
-    * path serializes through here — eight hand-rolled copies had already
-    * started to drift in their feature-array gating. */
-  private[delta] def protocolLine(proto: DeltaProtocol): String = {
-    val node = mapper.createObjectNode()
-    val p = node.putObject("protocol")
-    p.put("minReaderVersion", proto.minReaderVersion)
-    p.put("minWriterVersion", proto.minWriterVersion)
-    if (proto.minReaderVersion >= 3) {
-      val rf = p.putArray("readerFeatures")
-      proto.readerFeatures.toSeq.sorted.foreach(rf.add)
-    }
-    if (proto.minWriterVersion >= 7) {
-      val wf = p.putArray("writerFeatures")
-      proto.writerFeatures.toSeq.sorted.foreach(wf.add)
-    }
-    mapper.writeValueAsString(node)
-  }
-
   /** Upgrade `proto` with the reader-writer table features the schema's
     * column TYPES demand (spec): TIMESTAMP_NTZ → `timestampNtz` (a reader
     * without it decodes the column with a UTC adjustment — silently wrong
@@ -85,17 +56,6 @@ object DeltaWriter {
       out = out.withReaderWriterFeature("variantType", mappingActive)
     out
   }
-
-  /** Carry an add's provenance tags onto a RE-ADD node: operations that
-    * re-register a file AS IT IS (RESTORE, SHALLOW/DEEP CLONE, DV attach)
-    * must preserve `add.tags` — the file's bytes, and therefore its ZCube
-    * clustering provenance, are unchanged, and dropping the tags would
-    * silently demote a clustered table back to full-rewrite OPTIMIZE. */
-  private[delta] def putTags(a: ObjectNode, f: DeltaAddFile): Unit =
-    if (f.tags.nonEmpty) {
-      val t = a.putObject("tags")
-      f.tags.toSeq.sortBy(_._1).foreach { case (k, v) => t.put(k, v) }
-    }
 
   /** On a column-mapped table EVERYTHING below the log speaks physical
     * names: parquet column names, stats keys, hive partition directories
@@ -485,12 +445,13 @@ object DeltaWriter {
       adds.flatMap { case (rel, _, _, _, st) => st.map(rel -> _) }.toMap
 
     // ---- 4. commit (retry on concurrent-writer version conflict)
-    var attempt = 0
-    var committed = false
+    val dropStaged = () => adds.foreach { case (rel, _, _, _, _) =>
+      fs.delete(new Path(tablePath, rel), false)
+    }
     // the last table config this loop replayed — reused by the
     // auto-compact flag check so a disabled flag costs no extra replay
     var lastKnownConfig: Option[Map[String, String]] = None
-    while (!committed && attempt < 20) {
+    val outcome = DeltaCommit.run(spark, tablePath, "WRITE", dropStaged) {
       // Overwrite is the ONE mode that needs the live set here (its
       // remove lines, emitted below — O(files) commit content by
       // definition); every other mode re-reads metadata planes only
@@ -499,7 +460,6 @@ object DeltaWriter {
         else if (mode == SaveMode.Overwrite) Some(DeltaLog.snapshot(spark, tablePath))
         else Some(DeltaLog.metadataSnapshot(spark, tablePath))
       lastKnownConfig = current.map(_.metadata.configuration)
-      val version = current.map(_.version + 1).getOrElse(0L)
       // identity safety: the ids were assigned from `assignedFromHwm`; a
       // concurrent identity write that advanced the hwm since would make
       // this commit hand out DUPLICATE ids — abort instead of retrying
@@ -508,9 +468,7 @@ object DeltaWriter {
           if (assignedFromHwm.get(f.name).exists(_ != identityHwm(f))) {
             // same cleanup as every other abort path: the staged files
             // were already published into the table dir and would orphan
-            adds.foreach { case (rel, _, _, _, _) =>
-              fs.delete(new Path(tablePath, rel), false)
-            }
+            dropStaged()
             throw new java.util.ConcurrentModificationException(
               s"identity column ${f.name} advanced concurrently " +
                 s"(${assignedFromHwm(f.name)} -> ${identityHwm(f)}); rerun the write")
@@ -522,160 +480,83 @@ object DeltaWriter {
       // drop the published-but-never-referenced files, succeed as a no-op
       if (txn.exists { case (appId, v) =>
             current.exists(_.transactions.get(appId).exists(_ >= v)) }) {
-        adds.foreach { case (rel, _, _, _, _) =>
-          fs.delete(new Path(tablePath, rel), false)
-        }
-        return
-      }
-      // logical conflict check (WriteSerializable): a blind append
-      // tolerates ANY concurrent file activity — appends, DML, OPTIMIZE on
-      // other files all interleave — but not a metadata or protocol change
-      // (schema/constraints/CDF this write validated against no longer
-      // hold), nor a concurrent CREATION of the table it was about to
-      // create (committing v1 blind on a stranger's v0 schema).
-      val dropStaged = () => adds.foreach { case (rel, _, _, _, _) =>
-        fs.delete(new Path(tablePath, rel), false)
-      }
-      (existing, current) match {
-        case (Some(base), Some(cur)) =>
-          ConflictChecker.checkTableState("WRITE", base, cur, dropStaged)
-        case (None, Some(_)) =>
-          dropStaged()
-          throw new java.util.ConcurrentModificationException(
-            s"WRITE aborted on $tablePath: the table was created by a " +
-              "concurrent writer; rerun the write against the existing table")
-        case _ => ()
-      }
-      val lines = Seq.newBuilder[String]
-
-      val commitInfo = mapper.createObjectNode()
-      val ci = commitInfo.putObject("commitInfo")
-      ci.put("timestamp", System.currentTimeMillis())
-      current.foreach(cur => InCommitTimestamps.stamp(
-        spark, tablePath, cur.metadata.configuration, cur.version, ci))
-      ci.put("operation", "WRITE")
-      // production Delta's read-set exemption signal: an append reads
-      // nothing, so concurrent readers need not conflict with it
-      // (ConflictChecker.checkReadSet / DeltaLog.nonBlindDataAdds key on
-      // this the way delta-spark keys on its own isBlindAppend)
-      ci.put("isBlindAppend", mode == SaveMode.Append)
-      val params = ci.putObject("operationParameters")
-      params.put("mode", mode.toString)
-      params.put("partitionBy", mapper.writeValueAsString(
-        partitionCols.foldLeft(mapper.createArrayNode())((a, c) => a.add(c))))
-      ci.put("engineInfo", "graft-spark/0.1.0")
-      putMetrics(ci, Map(
-        "numFiles" -> adds.size.toLong,
-        "numOutputRows" -> statsByStagedPath.values
-          .flatMap(n => Option(n.get("numRecords")).map(_.asLong())).sum))
-      lines += mapper.writeValueAsString(commitInfo)
-
-      // SetTransaction action: records (appId, version) in THIS commit so
-      // replay exposes it via snapshot.transactions for redelivery checks
-      txn.foreach { case (appId, v) =>
-        val txnLine = mapper.createObjectNode()
-        val t = txnLine.putObject("txn")
-        t.put("appId", appId)
-        t.put("version", v)
-        t.put("lastUpdated", System.currentTimeMillis())
-        lines += mapper.writeValueAsString(txnLine)
-      }
-
-      // a metaData RE-emission must carry the table's configuration —
-      // replay is last-metaData-wins, so an empty map here would silently
-      // wipe CHECK constraints, CDF enablement and column-mapping keys
-      def metaLine(id: String, schemaJson: String,
-          configuration: Map[String, String]): String = {
-        val node = mapper.createObjectNode()
-        val m = node.putObject("metaData")
-        m.put("id", id)
-        val fmt = m.putObject("format")
-        fmt.put("provider", "parquet")
-        fmt.putObject("options")
-        m.put("schemaString", schemaJson)
-        partitionCols.foldLeft(m.putArray("partitionColumns"))((a, c) => a.add(c))
-        val cfg = m.putObject("configuration")
-        configuration.foreach { case (k, v) => cfg.put(k, v) }
-        m.put("createdTime", System.currentTimeMillis())
-        mapper.writeValueAsString(node)
-      }
-
-      // identity hwm stamped into the schema a metaData emission carries
-      def withIdentityHwm(schema: StructType): StructType =
-        stampIdentityHwm(schema, identityFields, identityNewHwm)
-
-      if (version == 0L) {
-        val schema0 = withIdentityHwm(withGenMetadata(data1i.schema, genExprs))
-        // identity columns are legacy writer v6 — older writers would
-        // append without maintaining the high water mark
-        val legacy = DeltaProtocol(1, if (identityFields.nonEmpty) 6 else 2)
-        val proto = withTypedColumnFeatures(legacy, StructType(schema0.fields))
-        lines += protocolLine(proto)
-        lines += metaLine(UUID.randomUUID().toString, schema0.json, Map.empty)
+        dropStaged()
+        Left(current.get.version)
       } else {
-        // metaData re-emission (same table id — replay is
-        // last-metaData-wins): schema evolution and/or identity hwm advance
-        val base = evolvedSchema.getOrElse(current.get.metadata.schema)
-        // schema evolution can INTRODUCE typed columns the table's current
-        // protocol cannot describe (mergeSchema adding a TIMESTAMP_NTZ or
-        // VARIANT column to a legacy (1,2) table): the same commit must
-        // upgrade the protocol, or a spec-conforming foreign reader would
-        // decode ntz with a UTC shift / refuse the table entirely
-        val curProto = current.get.protocol
-        val wanted = withTypedColumnFeatures(curProto, base,
-          mappingActive = current.get.metadata.hasColumnMapping)
-        if (wanted != curProto) lines += protocolLine(wanted)
-        if (evolvedSchema.isDefined || identityNewHwm.nonEmpty)
-          lines += metaLine(current.get.metadata.id, withIdentityHwm(base).json,
-            current.get.metadata.configuration)
-      }
-
-      if (mode == SaveMode.Overwrite) {
-        current.foreach(_.files.foreach { f =>
-          val rm = mapper.createObjectNode()
-          val r = rm.putObject("remove")
-          r.put("path", f.path)
-          r.put("deletionTimestamp", System.currentTimeMillis())
-          r.put("dataChange", true)
-          lines += mapper.writeValueAsString(rm)
-        })
-      }
-
-      val addNodes = adds.map { case (rel, pv, size, modTime, stats) =>
-        val addLine = mapper.createObjectNode()
-        val a = addLine.putObject("add")
-        a.put("path", encodePath(rel))
-        val pvNode = a.putObject("partitionValues")
-        pv.foreach { case (k, v) =>
-          if (v == null) pvNode.putNull(k) else pvNode.put(k, v)
+        // logical conflict check (WriteSerializable): a blind append
+        // tolerates ANY concurrent file activity — appends, DML, OPTIMIZE
+        // on other files all interleave — but not a metadata or protocol
+        // change (schema/constraints/CDF this write validated against no
+        // longer hold), nor a concurrent CREATION of the table it was
+        // about to create (committing v1 blind on a stranger's v0 schema).
+        (existing, current) match {
+          case (Some(base), Some(cur)) =>
+            ConflictChecker.checkTableState("WRITE", base, cur, dropStaged)
+          case (None, Some(_)) =>
+            dropStaged()
+            throw new java.util.ConcurrentModificationException(
+              s"WRITE aborted on $tablePath: the table was created by a " +
+                "concurrent writer; rerun the write against the existing table")
+          case _ => ()
         }
-        a.put("size", size)
-        a.put("modificationTime", modTime)
-        a.put("dataChange", true)
-        stats.foreach(s => a.put("stats", mapper.writeValueAsString(s)))
-        (addLine, a, stats.flatMap(n => Option(n.get("numRecords")).map(_.asLong())))
+        // identity hwm stamped into the schema a metaData emission carries
+        def withIdentityHwm(schema: StructType): StructType =
+          stampIdentityHwm(schema, identityFields, identityNewHwm)
+        val (protocol, metadata) = current match {
+          case None =>
+            val schema0 = withIdentityHwm(withGenMetadata(data1i.schema, genExprs))
+            // identity columns are legacy writer v6 — older writers would
+            // append without maintaining the high water mark
+            val legacy = DeltaProtocol(1, if (identityFields.nonEmpty) 6 else 2)
+            (Some(withTypedColumnFeatures(legacy, StructType(schema0.fields))),
+              Some(DeltaMetadata(UUID.randomUUID().toString, schema0.json,
+                partitionCols, Map.empty)))
+          case Some(cur) =>
+            // metaData re-emission (same table id — replay is
+            // last-metaData-wins): schema evolution and/or identity hwm
+            // advance
+            val base = evolvedSchema.getOrElse(cur.metadata.schema)
+            // schema evolution can INTRODUCE typed columns the table's
+            // current protocol cannot describe (mergeSchema adding a
+            // TIMESTAMP_NTZ or VARIANT column to a legacy (1,2) table): the
+            // same commit must upgrade the protocol, or a spec-conforming
+            // foreign reader would decode ntz with a UTC shift / refuse the
+            // table entirely
+            val wanted = withTypedColumnFeatures(cur.protocol, base,
+              mappingActive = cur.metadata.hasColumnMapping)
+            (Some(wanted).filter(_ != cur.protocol),
+              if (evolvedSchema.isEmpty && identityNewHwm.isEmpty) None
+              else Some(cur.metadata.copy(schemaString = withIdentityHwm(base).json)))
+        }
+        val version = current.map(_.version + 1).getOrElse(0L)
+        val removes =
+          if (mode != SaveMode.Overwrite) Nil
+          else current.toSeq.flatMap(_.files.map(f => DeltaCommit.removeLine(f.path)))
+        // row tracking: allocate baseRowIds from THIS attempt's snapshot
+        // hwm (a retry re-bases on the concurrent winner's hwm)
+        Right(DeltaCommit.Txn(current, "WRITE",
+          parameters = Seq(
+            "mode" -> mode.toString,
+            "partitionBy" -> mapper.writeValueAsString(
+              partitionCols.foldLeft(mapper.createArrayNode())((a, c) => a.add(c)))),
+          metrics = Map(
+            "numFiles" -> adds.size.toLong,
+            "numOutputRows" -> statsByStagedPath.values
+              .flatMap(n => Option(n.get("numRecords")).map(_.asLong())).sum),
+          // production Delta's read-set exemption signal: an append reads
+          // nothing, so concurrent readers need not conflict with it
+          // (ConflictChecker.checkReadSet / DeltaLog.nonBlindDataAdds key on
+          // this the way delta-spark keys on its own isBlindAppend)
+          isBlindAppend = Some(mode == SaveMode.Append),
+          // SetTransaction: records (appId, version) in THIS commit so
+          // replay exposes it via snapshot.transactions for redelivery
+          setTransaction = txn,
+          protocol = protocol,
+          metadata = metadata,
+          actions = removes ++ DeltaCommit.stagedAddLines(current, adds, version)))
       }
-      // row tracking: allocate baseRowIds from THIS attempt's snapshot hwm
-      // (a retry re-bases on the concurrent winner's hwm — see RowTracking)
-      val rowDomain = RowTracking.stampAdds(
-        current, addNodes.map(_._2), addNodes.map(_._3), version)
-      addNodes.foreach { case (line, _, _) => lines += mapper.writeValueAsString(line) }
-      rowDomain.foreach(lines += _)
-
-      committed = DeltaLog.tryCommit(spark, tablePath, version, lines.result().mkString("\n"))
-      if (committed) maybeCheckpoint(spark, tablePath, version,
-        current.map(_.metadata.configuration).getOrElse(Map.empty))
-      attempt += 1
     }
-    if (!committed) {
-      // loop exhaustion is an abort like any other: the published-but-
-      // never-referenced files must not orphan in the table dir
-      adds.foreach { case (rel, _, _, _, _) =>
-        try fs.delete(new Path(tablePath, rel), false) catch { case _: Exception => () }
-      }
-      throw new java.io.IOException(
-        s"could not commit to $tablePath after $attempt attempts (concurrent writers)")
-    }
+    if (outcome.isLeft) return
     maybeAutoCompact(spark, tablePath, lastKnownConfig)
   }
 
@@ -967,22 +848,6 @@ object DeltaWriter {
         case None => f
       }
     })
-
-  /** Checkpoint on the cadence — called by EVERY commit path (append,
-    * DML, MERGE, OPTIMIZE, RESTORE, constraint DDL), so long maintenance
-    * chains bound replay cost the same way append chains do. The cadence
-    * honors the table's `delta.checkpointInterval` property (production
-    * default 10 here); callers pass the configuration they already hold so
-    * the decision costs no extra log replay. */
-  private[delta] def maybeCheckpoint(
-      spark: SparkSession, tablePath: String, version: Long,
-      configuration: Map[String, String] = Map.empty): Unit = {
-    val interval = configuration.get("delta.checkpointInterval")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).filter(_ > 0)
-      .getOrElse(CheckpointInterval)
-    if (version > 0 && version % interval == 0)
-      writeCheckpoint(spark, tablePath, version)
-  }
 
   /** Aggregate the full live state into a checkpoint + `_last_checkpoint`,
     * bounding future replay to commits-after-checkpoint. Classic

@@ -67,22 +67,13 @@ object InCommitTimestamps {
 
   // Timestamp-resolution note (why the recorded EnablementVersion/
   // Timestamp keys are written but not consulted when resolving): the
-  // resolver takes max{v : effectiveTime(v) <= cutoff}. The ENABLING
+  // resolver takes max{v : commitTime(v) <= cutoff}. The ENABLING
   // commit's ict equals the enablement timestamp by construction, so any
   // cutoff at/after enablement finds an eligible ict-era version and the
   // max lands correctly regardless of what migrated pre-enablement mtimes
   // claim; a cutoff BEFORE enablement has only mtimes as evidence — for
   // this engine and production alike (the spec's keys bound the ict
   // search domain, they cannot recover pre-enablement true times).
-
-  /** The ict inside one commit JSON's content, if any. */
-  def ictOfCommitContent(content: String): Option[Long] =
-    content.linesIterator.filter(_.trim.nonEmpty)
-      .map(mapper.readTree)
-      .collectFirst { case n if n.has("commitInfo") => n.get("commitInfo") }
-      .flatMap(ci =>
-        if (ci.has("inCommitTimestamp")) Some(ci.get("inCommitTimestamp").asLong())
-        else None)
 
   /** The monotonic ict for the commit FOLLOWING `prevVersion` under
     * `configuration` (the configuration the commit runs under — pass the
@@ -109,10 +100,4 @@ object InCommitTimestamps {
     ict.foreach(t => ci.put("inCommitTimestamp", t))
     ict
   }
-
-  /** Effective commit time for timestamp resolution: the ict when present,
-    * else the commit file's modification time. `content` spares a re-read
-    * when the caller already has the JSON. */
-  def effectiveTime(content: String, mtime: Long): Long =
-    ictOfCommitContent(content).getOrElse(mtime)
 }

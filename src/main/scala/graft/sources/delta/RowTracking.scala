@@ -1,7 +1,6 @@
 package graft.sources.delta
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -161,28 +160,25 @@ object RowTracking {
       .drop("_graft_fp", "_graft_base", "_graft_ver", "_graft_idx")
   }
 
-  /** Stamp freshly-allocated `baseRowId`/`defaultRowCommitVersion` into a
-    * commit's add nodes (mutating them) and return the hwm domain line to
-    * append — or None when the table does not maintain row tracking.
-    * MUST be called inside the commit loop, per attempt: `current` is the
+  /** Stamp freshly-allocated `baseRowId`/`defaultRowCommitVersion` onto
+    * a commit's adds and return them with the hwm domain line to append —
+    * the adds unchanged and None when the table does not maintain row
+    * tracking. MUST be called per commit attempt: `current` is the
     * snapshot this attempt commits on top of, so a retry re-bases the
     * allocation on the concurrent winner's hwm (see the class doc). */
   def stampAdds(
       current: Option[DeltaSnapshot],
-      addNodes: Seq[ObjectNode],
-      counts: Seq[Option[Long]],
-      commitVersion: Long): Option[String] = {
-    val snap = current.getOrElse(return None)
-    if (!supported(snap)) return None
-    if (addNodes.isEmpty) return None
+      adds: Seq[DeltaAddFile],
+      commitVersion: Long): (Seq[DeltaAddFile], Option[String]) = {
+    val snap = current.filter(supported).getOrElse(return (adds, None))
+    if (adds.isEmpty) return (adds, None)
+    val counts = adds.map(f => numRecordsOf(f.stats))
     require(counts.forall(_.isDefined),
       "row tracking requires numRecords stats on every written file")
     val (bases, hwm) = allocate(highWaterMark(snap), counts.map(_.get))
-    addNodes.zip(bases).foreach { case (a, base) =>
-      a.put("baseRowId", base)
-      a.put("defaultRowCommitVersion", commitVersion)
-    }
-    Some(domainLine(hwm))
+    (adds.zip(bases).map { case (f, base) =>
+      f.copy(baseRowId = Some(base), defaultRowCommitVersion = Some(commitVersion))
+    }, Some(domainLine(hwm)))
   }
 
   /** Enable row tracking on an existing table (also the creation path —
@@ -194,102 +190,58 @@ object RowTracking {
     * distributed job), (3) parks the materialized-column names and the
     * enablement flag in the table config, and (4) records the hwm domain.
     * Idempotent; retries past concurrent commits. */
-  def enable(spark: SparkSession, tablePath: String): Unit = {
-    var attempt = 0
-    while (attempt < 10) {
+  def enable(spark: SparkSession, tablePath: String): Unit =
+    DeltaCommit.run(spark, tablePath, "ALTER TABLE (row tracking)") {
       val snap = DeltaLog.snapshot(spark, tablePath)
-      if (enabled(snap) && snap.files.forall(_.baseRowId.isDefined)) return
-      snap.assertWritable("ALTER TABLE (row tracking)")
-      val version = snap.version + 1
+      if (enabled(snap) && snap.files.forall(_.baseRowId.isDefined)) Left(snap.version)
+      else {
+        snap.assertWritable("ALTER TABLE (row tracking)")
+        val version = snap.version + 1
 
-      // physical row counts: stats numRecords, else ONE distributed count
-      // over the uncounted files (foreign/converted tables may lack stats)
-      val known: Seq[Option[Long]] = snap.files.map(f => numRecordsOf(f.stats))
-      val missing = snap.files.zip(known).collect { case (f, None) => f.path }
-      val counted: Map[String, Long] =
-        if (missing.isEmpty) Map.empty
-        else {
-          val abs = missing.map(rel =>
-            new Path(tablePath, DeltaMaintenance.decodeRel(rel)).toString)
-          val byAbs = spark.read.parquet(abs: _*)
-            .groupBy(input_file_name().as("f")).count()
-            .collect().map(r => DeltaDml.normalize(r.getString(0)) -> r.getLong(1)).toMap
-          missing.zip(abs).map { case (rel, a) =>
-            rel -> byAbs.getOrElse(DeltaDml.normalize(a), 0L)
-          }.toMap
+        // physical row counts: stats numRecords, else ONE distributed count
+        // over the uncounted files (foreign/converted tables may lack stats)
+        val known: Seq[Option[Long]] = snap.files.map(f => numRecordsOf(f.stats))
+        val missing = snap.files.zip(known).collect { case (f, None) => f.path }
+        val counted: Map[String, Long] =
+          if (missing.isEmpty) Map.empty
+          else {
+            val abs = missing.map(rel =>
+              new Path(tablePath, DeltaMaintenance.decodeRel(rel)).toString)
+            val byAbs = spark.read.parquet(abs: _*)
+              .groupBy(input_file_name().as("f")).count()
+              .collect().map(r => DeltaDml.normalize(r.getString(0)) -> r.getLong(1)).toMap
+            missing.zip(abs).map { case (rel, a) =>
+              rel -> byAbs.getOrElse(DeltaDml.normalize(a), 0L)
+            }.toMap
+          }
+        val counts: Seq[Long] = snap.files.zip(known).map {
+          case (f, Some(n)) => n
+          case (f, None) => counted(f.path)
         }
-      val counts: Seq[Long] = snap.files.zip(known).map {
-        case (f, Some(n)) => n
-        case (f, None) => counted(f.path)
-      }
-      val (bases, hwm) = allocate(highWaterMark(snap), counts)
+        val (bases, hwm) = allocate(highWaterMark(snap), counts)
 
-      val lines = Seq.newBuilder[String]
-      val commitInfo = mapper.createObjectNode()
-      val ci = commitInfo.putObject("commitInfo")
-      ci.put("timestamp", System.currentTimeMillis())
-      InCommitTimestamps.stamp(
-        spark, tablePath, snap.metadata.configuration, snap.version, ci)
-      ci.put("operation", "SET TBLPROPERTIES")
-      val params = ci.putObject("operationParameters")
-      params.put("properties", s"""{"$EnableKey":"true"}""")
-      ci.put("isBlindAppend", false)
-      ci.put("engineInfo", "graft-spark/0.1.0")
-      lines += mapper.writeValueAsString(commitInfo)
-
-      val proto = snap.protocol.withWriterFeatures(Set(Feature, DomainFeature))
-      lines += DeltaWriter.protocolLine(proto)
-
-      // config: enablement + materialized column names (generated ONCE —
-      // rewrites key their physical columns on these forever after)
-      val cfg = snap.metadata.configuration ++
-        Map(EnableKey -> "true") ++
-        (if (snap.metadata.configuration.contains(MatRowIdKey)) Map.empty
-         else Map(
-           MatRowIdKey -> s"_row-id-col-${java.util.UUID.randomUUID()}",
-           MatRowVersionKey -> s"_row-commit-version-col-${java.util.UUID.randomUUID()}"))
-      val mdLine = mapper.createObjectNode()
-      val m = mdLine.putObject("metaData")
-      m.put("id", snap.metadata.id)
-      val fmt = m.putObject("format")
-      fmt.put("provider", "parquet")
-      fmt.putObject("options")
-      m.put("schemaString", snap.metadata.schemaString)
-      snap.partitionColumns.foldLeft(m.putArray("partitionColumns"))((a, c) => a.add(c))
-      val cfgNode = m.putObject("configuration")
-      cfg.foreach { case (k, v) => cfgNode.put(k, v) }
-      lines += mapper.writeValueAsString(mdLine)
-
-      // backfill: re-emit every live add with its allocated baseRowId —
-      // a log-only pass (dataChange=false), no data file moves
-      snap.files.zip(bases).foreach { case (f, base) =>
-        val addLine = mapper.createObjectNode()
-        val a = addLine.putObject("add")
-        a.put("path", f.path)
-        val pv = a.putObject("partitionValues")
-        f.partitionValues.foreach { case (k, v) =>
-          if (v == null) pv.putNull(k) else pv.put(k, v)
+        // config: enablement + materialized column names (generated ONCE —
+        // rewrites key their physical columns on these forever after)
+        val cfg = snap.metadata.configuration ++
+          Map(EnableKey -> "true") ++
+          (if (snap.metadata.configuration.contains(MatRowIdKey)) Map.empty
+           else Map(
+             MatRowIdKey -> s"_row-id-col-${java.util.UUID.randomUUID()}",
+             MatRowVersionKey -> s"_row-commit-version-col-${java.util.UUID.randomUUID()}"))
+        // backfill: re-emit every live add with its allocated baseRowId —
+        // a log-only pass (dataChange=false), no data file moves
+        val backfill = snap.files.zip(bases).map { case (f, base) =>
+          DeltaCommit.addLine(f.copy(baseRowId = Some(base),
+            defaultRowCommitVersion = Some(version)), dataChange = false)
         }
-        a.put("size", f.size)
-        a.put("modificationTime", f.modificationTime)
-        a.put("dataChange", false)
-        f.stats.foreach(st => a.put("stats", st))
-        f.deletionVector.foreach(d => DeletionVectors.putDvNode(a, d))
-        a.put("baseRowId", base)
-        a.put("defaultRowCommitVersion", version)
-        lines += mapper.writeValueAsString(addLine)
+        Right(DeltaCommit.Txn(Some(snap), "SET TBLPROPERTIES",
+          parameters = Seq("properties" -> s"""{"$EnableKey":"true"}"""),
+          isBlindAppend = Some(false),
+          protocol = Some(snap.protocol.withWriterFeatures(Set(Feature, DomainFeature))),
+          metadata = Some(snap.metadata.copy(configuration = cfg)),
+          actions = backfill :+ domainLine(hwm)))
       }
-      lines += domainLine(hwm)
-
-      if (DeltaLog.tryCommit(spark, tablePath, version, lines.result().mkString("\n"))) {
-        DeltaWriter.maybeCheckpoint(spark, tablePath, version, cfg)
-        return
-      }
-      attempt += 1
     }
-    throw new java.io.IOException(
-      s"could not enable row tracking on $tablePath after $attempt attempts")
-  }
 
   /** Read the table WITH its row ids: the logical columns plus
     * [[RowIdCol]] / [[RowVersionCol]], each

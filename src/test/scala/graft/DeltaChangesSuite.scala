@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.delta.{DeltaLog, DeltaMaintenance, DeltaTable, DeltaWriter}
+import graft.sources.delta.{DeltaDml, DeltaLog, DeltaMaintenance, DeltaTable, DeltaWriter}
 
 /** Incremental change reads (append-level CDC): exactly-once row
   * consumption across appends, with OPTIMIZE rewrites invisible. */
@@ -65,5 +65,19 @@ class DeltaChangesSuite extends AnyFunSuite {
     // opt-in ignoreChanges semantics: consume the overwrite's adds
     assert(DeltaTable.readChanges(spark, dir, 1L, 2L, ignoreDataChangeRemoves = true)
       .select("id").as[Long].collect().toSeq === Seq(9L))
+  }
+
+  test("a deletion-vector DELETE's re-add serves only the rows its vector leaves") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-cdc-dv").toString
+    DeltaWriter.write(Seq(1L, 2L, 3L, 4L).toDF("id").coalesce(1), dir, SaveMode.Append, Nil)
+    DeltaDml.deleteWithDv(spark, dir, "id = 2")
+    assert(DeltaTable.read(spark, dir).select("id").as[Long].collect().sorted.toSeq ===
+      Seq(1L, 3L, 4L))
+    // v1 removes and re-adds the one file with a DV attached: consuming
+    // its add must apply the vector, never resurrect the deleted row
+    assert(DeltaTable.readChanges(spark, dir, 0L, 1L, ignoreDataChangeRemoves = true)
+      .select("id", "_commit_version").as[(Long, Long)].collect().sorted.toSeq ===
+      Seq((1L, 1L), (3L, 1L), (4L, 1L)))
   }
 }
