@@ -74,8 +74,7 @@ object GraftSession {
   */
 object LocalStandaloneExample {
   def main(args: Array[String]): Unit = {
-    val fixture = if (args.nonEmpty) args(0)
-      else "/root/reference/data/people_countries_delta_dask"
+    val fixture = if (args.nonEmpty) args(0) else ReferenceFixture.Path
     val spark = GraftSession.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

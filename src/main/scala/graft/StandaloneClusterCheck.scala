@@ -15,11 +15,13 @@ import java.net.{InetSocketAddress, ServerSocket, Socket}
   * as child OS PROCESSES — their own JVMs, own stdout, own lifecycle —
   * then connects a driver over `spark://127.0.0.1:<port>` and replays the
   * ENTIRE [[ClusterCheck.run]] surface through them: golden-fixture
-  * provider scan, distributed DV delete, column-mapped append/read,
-  * job-plane log replay, and the fake-S3 object-store phase in which every
-  * worker-spawned executor JVM must resolve its own SigV4
-  * [[graft.sources.S3FileSystem]] from the propagated Hadoop conf (the
-  * reference's hardest-won lesson, `src/object_store.rs:48-94`).
+  * provider scan (where the reference fixture is present; elsewhere the
+  * step prints a [[ClusterCheck.SkipMarker]] line instead), distributed DV
+  * delete, column-mapped append/read, job-plane log replay, and the
+  * fake-S3 object-store phase in which every worker-spawned executor JVM
+  * must resolve its own SigV4 [[graft.sources.S3FileSystem]] from the
+  * propagated Hadoop conf (the reference's hardest-won lesson,
+  * `src/object_store.rs:48-94`).
   *
   * What this adds over [[ClusterCheck]]'s `local-cluster[2,2,1024]`: there
   * the master/worker are threads inside the driver JVM (only executors
