@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *
   * [[run]] has five steps: (1) the golden read of the reference fixture,
   * (2) the distributed DV delete, (3) the column-mapped append/read, (4)
-  * job-plane log replay and (5) fake-S3 across executor JVMs. Step 1 runs
+  * frame-plane log replay and (5) fake-S3 across executor JVMs. Step 1 runs
   * only where [[ReferenceFixture.present]] holds (the repo does not hold
   * the fixture, FIXTURES.md §1); elsewhere it prints one line starting
   * with [[SkipMarker]] that says why, and steps 2–5 run regardless.
@@ -55,23 +55,30 @@ object ClusterCheck {
     "spark.executor.extraJavaOptions" -> JvmOpens.asOptionString)
 
   private[graft] def run(spark: SparkSession): Unit = {
-    import graft.sources.delta.{DeltaDml, DeltaSchema, DeltaTable, DeltaWriter}
-    import org.apache.spark.sql.SaveMode
-    import spark.implicits._
-
     // 1. golden fixture — the reference's own 5-row table through the
     // provider scan, decoded on remote executors. Only this step reads the
     // fixture, so only this step is skipped where it is absent.
     if (ReferenceFixture.present) {
-      val n = DeltaTable.read(spark, ReferenceFixture.Path).count()
+      val n = graft.sources.delta.DeltaTable.read(spark, ReferenceFixture.Path).count()
       require(n == 5L, s"golden fixture: expected 5 rows, got $n")
     } else println(s"${SkipMarker}step 1 (golden fixture read): ${ReferenceFixture.absentReason}")
+
+    // steps 2-5 write two local tables; they are deleted however the steps end
+    val dirs = Seq("graft-cluster-dv", "graft-cluster-cm")
+      .map(p => java.nio.file.Files.createTempDirectory(p).toString)
+    try tableSteps(spark, dirs(0), dirs(1))
+    finally dirs.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+  }
+
+  private def tableSteps(spark: SparkSession, dvDir: String, cmDir: String): Unit = {
+    import graft.sources.delta.{DeltaDml, DeltaSchema, DeltaTable, DeltaWriter}
+    import org.apache.spark.sql.SaveMode
+    import spark.implicits._
 
     // 2. deletion vectors — the distributed DV build (groupByKey +
     // mapGroups + per-task DV file write) runs ON executors; the read-side
     // anti-filter closure (SerializableHadoopConf + descriptor map) ships
     // back out to them
-    val dvDir = java.nio.file.Files.createTempDirectory("graft-cluster-dv").toString
     spark.range(0, 10000).select(col("id"), (col("id") % 7).as("k"))
       .repartition(4).write.format("delta").save(dvDir)
     val m = DeltaDml.deleteWithDv(spark, dvDir, "id % 2 = 0")
@@ -83,7 +90,6 @@ object ClusterCheck {
 
     // 3. column mapping — physical-name translation inside the custom
     // FileFormat, serialized to executors; append after rename included
-    val cmDir = java.nio.file.Files.createTempDirectory("graft-cluster-cm").toString
     (0 until 100).map(i => (i.toLong, i * 2.0)).toDF("id", "v")
       .write.format("delta").save(cmDir)
     DeltaSchema.renameColumn(spark, cmDir, "v", "value")
@@ -97,17 +103,16 @@ object ClusterCheck {
     require(cm.getDouble(1) == (50 until 200).map(_ * 2.0).sum,
       s"mapped read sum ${cm.getDouble(1)}")
 
-    // 4. distributed snapshot replay — the Spark-job reconstruction's
-    // executor-side JSON parse / last-wins dedup must serialize to remote
-    // executor JVMs (its scale case IS the multi-executor cluster)
+    // 4. distributed snapshot replay — the frame plane's executor-side
+    // JSON parse / last-wins dedup must serialize to remote executor JVMs
+    // (its scale case IS the multi-executor cluster)
     import graft.sources.delta.DeltaLog
-    DeltaLog.DistributedReplayMode = "always"
-    try {
+    GraftSession.withConf(spark, DeltaLog.SnapshotPlaneKey, "frame") {
       val snap = DeltaLog.snapshot(spark, dvDir)
-      require(snap.files.nonEmpty, "job-plane snapshot returned no files")
+      require(snap.files.nonEmpty, "frame-plane snapshot returned no files")
       val viaJob = DeltaTable.read(spark, dvDir).count()
-      require(viaJob == 5000L, s"job-plane replay read $viaJob rows, expected 5000")
-    } finally DeltaLog.DistributedReplayMode = "auto"
+      require(viaJob == 5000L, s"frame-plane replay read $viaJob rows, expected 5000")
+    }
 
     // 5. object-store resolution ACROSS JVM boundaries — the reference's
     // hardest-won lesson (`src/object_store.rs:48-94`,

@@ -63,6 +63,17 @@ object GraftSession {
     graft.functions.GraftFunctions.register(spark)
     spark
   }
+
+  /** Run `f` with session conf `key` set to `value` on `spark` only, then
+    * restore the key's previous setting — how harnesses and suites pin a
+    * snapshot plane (`spark.graft.delta.snapshotPlane`) without touching
+    * any other session. */
+  def withConf[T](spark: SparkSession, key: String, value: String)(f: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try f
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 /** Example mirroring the reference's `examples/local_standalone.rs` flow:

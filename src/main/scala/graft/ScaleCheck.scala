@@ -877,7 +877,7 @@ object ScaleCheck {
     val node = mapper.createObjectNode()
     node.put("files", nFiles)
     node.put("plane", if (eager) "eager" else "deferred")
-    if (eager) DeltaLog.DeferredScanMode = "never"
+    if (eager) spark.conf.set(DeltaLog.SnapshotPlaneKey, "driver")
     try {
       System.gc(); Thread.sleep(200)
       val baseline = usedHeapMb()
@@ -897,7 +897,7 @@ object ScaleCheck {
       require(m.filesRewritten == 1 && m.rowsAffected == 1,
         s"expected a 1-file/1-row selective DELETE, got $m")
     } finally {
-      DeltaLog.DeferredScanMode = "auto"
+      spark.conf.unset(DeltaLog.SnapshotPlaneKey)
       SnapshotCache.clear()
       try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       catch { case _: Exception => () }
@@ -1063,7 +1063,7 @@ object ScaleCheck {
     val node = mapper.createObjectNode()
     node.put("files", nFiles)
     node.put("plane", if (eager) "eager" else "deferred")
-    if (eager) DeltaLog.DeferredScanMode = "never"
+    if (eager) spark.conf.set(DeltaLog.SnapshotPlaneKey, "driver")
     try {
       System.gc(); Thread.sleep(200)
       val baseline = usedHeapMb()
@@ -1083,7 +1083,7 @@ object ScaleCheck {
       require(eligible.size == 1 && eligible.head.endsWith("orphan-stray.snappy.parquet"),
         s"expected exactly the orphan to be eligible, got $eligible")
     } finally {
-      DeltaLog.DeferredScanMode = "auto"
+      spark.conf.unset(DeltaLog.SnapshotPlaneKey)
       SnapshotCache.clear()
       try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       catch { case _: Exception => () }
@@ -1119,7 +1119,7 @@ object ScaleCheck {
     node.put("files", nFiles)
     node.put("plane",
       (if (eager) "eager" else "deferred") + (if (cdf) "_cdf" else ""))
-    if (eager) DeltaLog.DeferredScanMode = "never"
+    if (eager) spark.conf.set(DeltaLog.SnapshotPlaneKey, "driver")
     try {
       val schema = DeltaLog.metadataSnapshot(spark, dir).schema
       // a fresh readChangeFeed stream serves its initial snapshot through
@@ -1178,7 +1178,7 @@ object ScaleCheck {
         require(sliced.size == 1000, s"expected a 1000-file slice, got ${sliced.size}")
       }
     } finally {
-      DeltaLog.DeferredScanMode = "auto"
+      spark.conf.unset(DeltaLog.SnapshotPlaneKey)
       SnapshotCache.clear()
       try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       catch { case _: Exception => () }
@@ -1186,15 +1186,17 @@ object ScaleCheck {
     node
   }
 
-  /** Driver plane vs Spark-job plane wall time, the retained snapshot
-    * footprint, and which plane auto mode picks from the O(1) tail-bytes
-    * signal. */
+  /** Driver plane vs frame plane wall time of a cold eager snapshot, the
+    * retained snapshot footprint, and which plane auto mode picks from the
+    * O(1) tail-bytes signal. */
   private def replayProbe(spark: SparkSession, nFiles: Int)
       : com.fasterxml.jackson.databind.node.ObjectNode = {
+    import graft.sources.delta.SnapshotCache
     val dir = writeSyntheticLog(nFiles)
-    def timeSnapshot(mode: String): (Double, Long) = {
-      DeltaLog.DistributedReplayMode = mode
-      try {
+    def timeSnapshot(plane: String): (Double, Long) =
+      GraftSession.withConf(spark, DeltaLog.SnapshotPlaneKey, plane) {
+        // cold every time: a cached state or frame would time a cache hit
+        SnapshotCache.clear()
         val before = usedHeapMb()
         val t0 = System.nanoTime()
         val snap = DeltaLog.snapshot(spark, dir)
@@ -1202,14 +1204,14 @@ object ScaleCheck {
         require(snap.files.size == nFiles, s"expected $nFiles files, got ${snap.files.size}")
         val retained = usedHeapMb() - before // snap still referenced here
         (sec, math.max(retained, 0L))
-      } finally DeltaLog.DistributedReplayMode = "auto"
-    }
-    val (jobWarm, _) = timeSnapshot("always") // warm the json read path
-    val (driverSec, driverRetained) = timeSnapshot("never")
-    val (jobSec, jobRetained) = timeSnapshot("always")
+      }
+    val (jobWarm, _) = timeSnapshot("frame") // warm the json read path
+    val (driverSec, driverRetained) = timeSnapshot("driver")
+    val (jobSec, jobRetained) = timeSnapshot("frame")
     val before = DeltaLog.jobReplays.get()
     DeltaLog.snapshot(spark, dir) // auto: which plane does the signal pick?
     val autoPlane = if (DeltaLog.jobReplays.get() > before) "job" else "driver"
+    SnapshotCache.clear()
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.createObjectNode()
     node.put("files", nFiles)

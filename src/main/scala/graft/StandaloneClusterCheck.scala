@@ -17,7 +17,7 @@ import java.net.{InetSocketAddress, ServerSocket, Socket}
   * ENTIRE [[ClusterCheck.run]] surface through them: golden-fixture
   * provider scan (where the reference fixture is present; elsewhere the
   * step prints a [[ClusterCheck.SkipMarker]] line instead), distributed DV
-  * delete, column-mapped append/read, job-plane log replay, and the
+  * delete, column-mapped append/read, frame-plane log replay, and the
   * fake-S3 object-store phase in which every worker-spawned executor JVM
   * must resolve its own SigV4 [[graft.sources.S3FileSystem]] from the
   * propagated Hadoop conf (the reference's hardest-won lesson,

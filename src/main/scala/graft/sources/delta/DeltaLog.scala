@@ -284,7 +284,8 @@ final case class DeltaSnapshot(
           "data-changing removes are forbidden")
 }
 
-/** The deferred live-file plane of a [[DeltaLog.scanSnapshot]]: the add
+/** The frame plane's live-file set ([[DeltaLog.scanSnapshot]], and the
+  * eager [[DeltaLog.snapshot]]'s `collect(None)`): the add
   * frame of one resolved (checkpoint, tail-commits) replay, kept
   * DISTRIBUTED until a consumer materializes it. Pruned collects ship the
   * scan's predicates executor-side ([[ScanPruner]] — the same code the
@@ -296,8 +297,7 @@ final case class DeltaSnapshot(
   *
   * The winners frame is built EAGERLY (so the v2 checkpoint integrity
   * gates — declared-version mismatch, sidecars missing the `add` column —
-  * fire at snapshot construction exactly like the eager replay path, not
-  * mid-query; r17 ADVICE) and PERSISTED: one scan plans through the frame
+  * fire at snapshot construction, not mid-query; r17 ADVICE) and PERSISTED: one scan plans through the frame
   * up to three times (sizeInBytes for CBO, dvAdds, the pruned listFiles),
   * and back-to-back queries at one version share the instance through
   * [[SnapshotCache]] — without the persist each consumer
@@ -339,30 +339,20 @@ final class DeferredDeltaFiles private[delta] (
 
   @volatile private var frameRef: Option[DataFrame] = buildFrame()
 
-  private def isFileNotFound(e: Throwable): Boolean = {
-    var c: Throwable = e
-    var depth = 0
-    while (c != null && depth < 20) {
-      if (c.isInstanceOf[java.io.FileNotFoundException]) return true
-      if (c.getMessage != null && c.getMessage.contains("FileNotFoundException"))
-        return true
-      c = if (c.getCause eq c) null else c.getCause
-      depth += 1
-    }
-    false
+  /** Does a link of `e`'s cause chain satisfy `p`? At most 20 links; a
+    * self-cause ends the chain. */
+  private def causeChainHas(e: Throwable)(p: Throwable => Boolean): Boolean =
+    Iterator.iterate(e)(c => if (c.getCause eq c) null else c.getCause)
+      .takeWhile(_ != null).take(20).exists(p)
+
+  private def isFileNotFound(e: Throwable): Boolean = causeChainHas(e) { c =>
+    c.isInstanceOf[java.io.FileNotFoundException] ||
+      (c.getMessage != null && c.getMessage.contains("FileNotFoundException"))
   }
 
-  private def isNotSerializable(e: Throwable): Boolean = {
-    var c: Throwable = e
-    var depth = 0
-    while (c != null && depth < 20) {
-      if (c.isInstanceOf[java.io.NotSerializableException]) return true
-      if (c.getMessage != null && c.getMessage.toLowerCase.contains("not serializable"))
-        return true
-      c = if (c.getCause eq c) null else c.getCause
-      depth += 1
-    }
-    false
+  private def isNotSerializable(e: Throwable): Boolean = causeChainHas(e) { c =>
+    c.isInstanceOf[java.io.NotSerializableException] ||
+      (c.getMessage != null && c.getMessage.toLowerCase.contains("not serializable"))
   }
 
   /** Re-resolve the replay at the pinned version and rebuild the frame —
@@ -629,9 +619,9 @@ object DeltaLog {
     * ≤ (1 checkpoint + tail JSONs) regardless of history length. */
   private[graft] val replayReads = new java.util.concurrent.atomic.AtomicLong
 
-  /** Test seam: snapshots served by the Spark-job replay plane
-    * (DeltaStateReconstruction) — pins the auto-cutover ROUTING decisions,
-    * which result-equality alone cannot observe. */
+  /** Test seam: eager [[snapshot]]s served by the frame plane — pins the
+    * auto-cutover ROUTING decisions, which result-equality alone cannot
+    * observe. */
   private[graft] val jobReplays = new java.util.concurrent.atomic.AtomicLong
 
   def logDir(tablePath: String): Path = new Path(tablePath, LogDirName)
@@ -699,7 +689,10 @@ object DeltaLog {
   /** Replay the log into a snapshot at `versionAsOf`/`timestampAsOf` (or
     * latest). Uses the newest complete checkpoint at or below the target
     * version, then applies JSON deltas — so replay cost is O(commits since
-    * checkpoint), not O(table history). */
+    * checkpoint), not O(table history). On the frame plane the files are
+    * the cached winners frame's full collect: a second snapshot of an
+    * unchanged table at one version re-reads the persisted frame instead of
+    * re-running the replay job. */
   def snapshot(
       spark: SparkSession,
       tablePath: String,
@@ -707,7 +700,11 @@ object DeltaLog {
       timestampAsOf: Option[String] = None): DeltaSnapshot = {
     val (target, cp, tailCommits) =
       resolveReplay(spark, tablePath, versionAsOf, timestampAsOf)
-    snapshotResolved(spark, tablePath, target, cp, tailCommits)
+    if (!framePlane(spark, tablePath, cp, tailCommits))
+      return driverReplay(spark, tablePath, target, cp, tailCommits)
+    jobReplays.incrementAndGet()
+    metadataReplay(spark, tablePath, target, cp, tailCommits)
+      .copy(files = cachedFrame(spark, tablePath, target, cp, tailCommits).collect(None))
   }
 
   /** Target version + the replay inputs (newest complete checkpoint at or
@@ -756,50 +753,72 @@ object DeltaLog {
     (target, cp, tailCommits)
   }
 
-  /** Does the O(1) size estimate call this table big enough for the
-    * job-replay plane? `_last_checkpoint`'s recorded row count (else
-    * checkpoint bytes), plus total tail-commit JSON bytes so a
-    * pre-checkpoint bulk load routes distributed too. An add line with
-    * stats runs well over 512 B, so bytes/512 over-counts, which only
-    * moves the cutover earlier — never silently overloads the driver. */
-  private def estimateBig(
+  /** Session conf choosing the snapshot plane for [[snapshot]],
+    * [[scanSnapshot]] and [[metadataSnapshot]], read per call from the
+    * calling session:
+    *  - `driver`: the driver-map replay ([[driverReplay]]);
+    *  - `frame`: the metadata planes replayed by a Spark job, the live set
+    *    a persisted winners frame ([[DeferredDeltaFiles]]);
+    *  - `auto` (default): `frame` when the O(1) size estimate passes
+    *    [[SnapshotFileCountThresholdKey]], else `driver`. */
+  val SnapshotPlaneKey = "spark.graft.delta.snapshotPlane"
+
+  /** Session conf: the live-file count past which `auto` takes the frame
+    * plane, the driver replay warns, and a driver state is too big to
+    * cache. Default 100000 — production Delta's driver comfort zone is
+    * well past this; the cutover fires early by design. */
+  val SnapshotFileCountThresholdKey = "spark.graft.delta.snapshotFileCountThreshold"
+
+  private val SnapshotPlanes = Seq("auto", "driver", "frame")
+
+  private def fileCountThreshold(spark: SparkSession): Long =
+    spark.conf.get(SnapshotFileCountThresholdKey, "100000").toLong
+
+  /** The one plane decision: true = the frame plane. Under `auto`, `force`
+    * (RESTORE's two-sided diff) or the size estimate picks the frame:
+    * `_last_checkpoint`'s recorded row count (else checkpoint bytes), plus
+    * total tail-commit JSON bytes so a pre-checkpoint bulk load routes
+    * distributed too. An add line with stats runs well over 512 B, so
+    * bytes/512 over-counts, which only moves the cutover earlier — never
+    * silently overloads the driver. */
+  private def framePlane(
       spark: SparkSession, tablePath: String,
       cp: Option[(Long, Seq[FileStatus])],
-      tailCommits: Seq[(Long, FileStatus)]): Boolean =
-    cp.exists { case (v, parts) =>
-      estimatedCheckpointAdds(spark, tablePath, v, parts) > SnapshotFileCountWarnThreshold
-    } ||
-      tailCommits.iterator.map(_._2.getLen).sum / 512 > SnapshotFileCountWarnThreshold
-
-  private def snapshotResolved(
-      spark: SparkSession,
-      tablePath: String,
-      target: Long,
-      cp: Option[(Long, Seq[FileStatus])],
       tailCommits: Seq[(Long, FileStatus)],
-      /** Pre-computed [[estimateBig]] result, when the caller already paid
-        * for it (scanSnapshot) — avoids a second _last_checkpoint read. */
-      bigHint: Option[Boolean] = None): DeltaSnapshot = {
-    // Scale fork: past [[SnapshotFileCountWarnThreshold]] live files the
-    // driver-side map replay becomes the bottleneck (heap + single-thread
-    // JSON parse) — hand the WHOLE replay to a Spark job instead
-    // (DeltaStateReconstruction: checkpoint ∪ parsed JSON actions →
-    // last-wins per path → live set). The file-count estimate is O(1)
-    // driver-side, so small tables never pay a job for their snapshot.
-    val useJob = DistributedReplayMode match {
-      case "always" => true
-      case "never" => false
-      case _ => bigHint.getOrElse(estimateBig(spark, tablePath, cp, tailCommits))
-    }
-    if (useJob) {
-      jobReplays.incrementAndGet()
-      val (p, m, files, txns, doms) =
-        DeltaStateReconstruction.replay(spark, tablePath, cp, tailCommits)
-      return finishSnapshot(tablePath, target, p, m, files, txns, doms, driverPlane = false)
+      force: Boolean = false): Boolean =
+    spark.conf.get(SnapshotPlaneKey, "auto") match {
+      case "driver" => false
+      case "frame" => true
+      case "auto" =>
+        val threshold = fileCountThreshold(spark)
+        force || cp.exists { case (v, parts) =>
+          estimatedCheckpointAdds(spark, tablePath, v, parts) > threshold
+        } || tailCommits.iterator.map(_._2.getLen).sum / 512 > threshold
+      case other => throw new IllegalArgumentException(
+        s"$SnapshotPlaneKey=$other: expected one of ${SnapshotPlanes.mkString(", ")}")
     }
 
-    driverReplay(spark, tablePath, target, cp, tailCommits)
+  /** The frame plane's metadata: protocol, metaData, txn and domains
+    * replayed by a Spark job and gated, `files` empty. The reader gates
+    * run here, before any live-set job: an unreadable table (unknown reader
+    * feature) fails loudly first. */
+  private def metadataReplay(
+      spark: SparkSession, tablePath: String, target: Long,
+      cp: Option[(Long, Seq[FileStatus])],
+      tailCommits: Seq[(Long, FileStatus)]): DeltaSnapshot = {
+    val (p, m, txns, doms) = DeltaStateReconstruction.replay(spark, tablePath, cp, tailCommits)
+    finishSnapshot(tablePath, target, p, m, Nil, txns, doms)
   }
+
+  /** The frame plane's live set at `target`: [[SnapshotCache]]'s frame
+    * when the replay inputs still fingerprint-match, else a new persisted
+    * one. */
+  private def cachedFrame(
+      spark: SparkSession, tablePath: String, target: Long,
+      cp: Option[(Long, Seq[FileStatus])],
+      tailCommits: Seq[(Long, FileStatus)]): DeferredDeltaFiles =
+    SnapshotCache.frame(spark, tablePath, target, SnapshotCache.fingerprint(cp, tailCommits))(
+      new DeferredDeltaFiles(spark, tablePath, target, cp, tailCommits))
 
   /** Mutable accumulator for the driver-plane replay — the same five
     * planes the pre-r21 inline replay kept as locals, factored out so a
@@ -871,14 +890,27 @@ object DeltaLog {
       val fs = logDir(tablePath).getFileSystem(spark.sessionState.newHadoopConf())
       toApply.foreach { case (_, status) => applyCommit(fs, status, acc) }
     }
+    val threshold = fileCountThreshold(spark)
     // cache the new state (a pure re-serve stores nothing — identical)
-    if ((reusable.isEmpty || toApply.nonEmpty) &&
-        acc.live.size <= SnapshotFileCountWarnThreshold)
+    if ((reusable.isEmpty || toApply.nonEmpty) && acc.live.size <= threshold)
       SnapshotCache.putDriver(tablePath, target, SnapshotCache.fingerprint(cp, tailCommits),
         DriverState(acc.live.values.toVector, acc.txns.toMap, acc.domains.toVector,
           acc.protocol, acc.metadata))
-    finishSnapshot(tablePath, target, acc.protocol, acc.metadata,
-      acc.live.values.toSeq, acc.txns.toMap, acc.domains.toMap, driverPlane = true)
+    val snap = finishSnapshot(tablePath, target, acc.protocol, acc.metadata,
+      acc.live.values.toSeq, acc.txns.toMap, acc.domains.toMap)
+    // Scale guard: this replay ran DRIVER-SIDE — the plane classic delta
+    // clients use, comfortable to ~1M live files. The threshold crossing
+    // normally routes to the frame plane before this fires (estimate-based
+    // — a table that grew past the threshold since its last checkpoint can
+    // still land here once, and checkpoints on the cadence re-route it).
+    if (acc.live.size > threshold)
+      System.err.println(
+        s"[graft] WARN: $tablePath snapshot v$target holds ${acc.live.size} live " +
+          s"files (> $threshold); driver-side log replay " +
+          "degrades past ~1M files — the next checkpoint routes replay to the " +
+          "distributed path, and OPTIMIZE shrinks the file count (small files " +
+          "are also slowing every scan)")
+    snap
   }
 
   /** Fold one checkpoint (classic single-file, classic multipart, or v2
@@ -1037,9 +1069,8 @@ object DeltaLog {
     }
   }
 
-  /** Shared snapshot finalization for the driver-map and Spark-job replay
-    * paths: reader-version gate, metaData requirement, the driver-plane
-    * scale warning, construction. */
+  /** Shared snapshot finalization for the driver and frame planes:
+    * reader-version gate, metaData requirement, construction. */
   private def finishSnapshot(
       tablePath: String,
       target: Long,
@@ -1047,8 +1078,7 @@ object DeltaLog {
       metadata: Option[DeltaMetadata],
       files: Seq[DeltaAddFile],
       txns: Map[String, Long],
-      domains: Map[String, String],
-      driverPlane: Boolean): DeltaSnapshot = {
+      domains: Map[String, String]): DeltaSnapshot = {
     val proto = protocol.getOrElse(DeltaProtocol(1, 2))
     // Reader-version gate: v1 unconditionally; v2 (legacy column mapping —
     // the scan path additionally rejects `id` mode and nested mappings,
@@ -1069,36 +1099,8 @@ object DeltaLog {
     }
     val meta = metadata.getOrElse(throw new IllegalStateException(
       s"$tablePath: no metaData action found in log replay up to version $target"))
-    // Scale guard (driver-map path only): replay ran DRIVER-SIDE — the
-    // plane classic delta clients use, comfortable to ~1M live files. The
-    // threshold crossing normally routes to the Spark-job path before this
-    // fires (estimate-based — a table that grew past the threshold since
-    // its last checkpoint can still land here once, and checkpoints on the
-    // cadence re-route it).
-    if (driverPlane && files.size > SnapshotFileCountWarnThreshold)
-      System.err.println(
-        s"[graft] WARN: $tablePath snapshot v$target holds ${files.size} live " +
-          s"files (> $SnapshotFileCountWarnThreshold); driver-side log replay " +
-          "degrades past ~1M files — the next checkpoint routes replay to the " +
-          "distributed path, and OPTIMIZE shrinks the file count (small files " +
-          "are also slowing every scan)")
     DeltaSnapshot(tablePath, target, proto, meta, files, txns, domains)
   }
-
-  /** Live-file count past which [[snapshot]] replays via Spark job instead
-    * of the driver-side map (var for tests; production Delta's practical
-    * driver comfort zone is well past this, the cutover fires early by
-    * design). */
-  private[graft] var SnapshotFileCountWarnThreshold: Int = 100000
-
-  /** Replay-path selector: `auto` (estimate-based, production behavior),
-    * `never` / `always` (test pins for path-equivalence specs). */
-  private[graft] var DistributedReplayMode: String = "auto"
-
-  /** Deferred-scan selector for [[scanSnapshot]]: `auto` (defer when the
-    * size estimate calls the table big), `always` / `never` (test and
-    * probe pins). */
-  private[graft] var DeferredScanMode: String = "auto"
 
   /** Test seam: scans served with a DEFERRED file plane (live set never
     * fully materialized at snapshot time) — pins the routing decision,
@@ -1106,7 +1108,7 @@ object DeltaLog {
   private[graft] val deferredScans = new java.util.concurrent.atomic.AtomicLong
 
   /** Snapshot for the SCAN path ([[DeltaDataSource.createRelation]]): like
-    * [[snapshot]], but on job-plane tables the live file set is NOT
+    * [[snapshot]], but on the frame plane the live file set is NOT
     * collected to the driver here. The returned [[DeferredDeltaFiles]]
     * holds the still-distributed add frame; [[DeltaFileIndex.listFiles]]
     * ships the scan's pushed partition + stats predicates into it and
@@ -1121,9 +1123,8 @@ object DeltaLog {
     * files for them); DV-bearing tables defer with ONLY their DV-carrying
     * adds materialized up front (the format's dvByPath input; warned past
     * the snapshot threshold — a mass-DV'd table re-approaches O(files)
-    * until its next OPTIMIZE purges the DVs). Small tables stay eager
-    * (one driver map beats Spark jobs per listFiles), and
-    * `DistributedReplayMode="never"` outranks any deferral. */
+    * until its next OPTIMIZE purges the DVs). Small tables stay on the
+    * driver plane (one driver map beats Spark jobs per listFiles). */
   def scanSnapshot(
       spark: SparkSession,
       tablePath: String,
@@ -1136,49 +1137,20 @@ object DeltaLog {
         * paid for nothing. The SCAN path must keep the default true (the
         * file format needs its dvByPath input). */
       withDvAdds: Boolean = true,
-      /** true = build the deferred handle even when the size estimate
-        * calls the table small — for consumers (RESTORE's distributed
-        * diff) that need BOTH sides of a two-version join as frames when
-        * EITHER side is big. The test pins still outrank it: an explicit
-        * DeferredScanMode="never" (or the stronger driver-replay pin)
-        * keeps the eager plane. */
+      /** true = take the frame plane under `auto` even when the size
+        * estimate calls the table small — for consumers (RESTORE's
+        * distributed diff) that need BOTH sides of a two-version join as
+        * frames when EITHER side is big. A `driver` pin yields no frame. */
       forceDefer: Boolean = false)
       : (DeltaSnapshot, Option[DeferredDeltaFiles]) = {
     val (target, cp, tailCommits) =
       resolveReplay(spark, tablePath, versionAsOf, timestampAsOf)
-    // respect the replay-plane pin: "never" means DRIVER replay, and the
-    // deferred plane is job-replay by construction — a path-equivalence
-    // spec pinning the driver plane must actually get it on scans too.
-    // The size estimate is computed at most ONCE here and handed to
-    // snapshotResolved (it opens _last_checkpoint — a remote GET on
-    // object stores, not worth paying twice per relation).
-    val bigOpt: Option[Boolean] =
-      if (!forceDefer && DeferredScanMode == "auto" && DistributedReplayMode != "never")
-        Some(estimateBig(spark, tablePath, cp, tailCommits))
-      else None
-    val defer = DeferredScanMode match {
-      case "always" => true
-      case "never" => false
-      case _ => forceDefer || bigOpt.contains(true)
-    }
-    if (!defer)
-      return (snapshotResolved(spark, tablePath, target, cp, tailCommits, bigOpt), None)
-    if (DistributedReplayMode == "never")
-      // a forced deferral (DeferredScanMode="always") still yields to the
-      // stronger driver-plane pin: the deferred plane cannot exist there
-      return (snapshotResolved(spark, tablePath, target, cp, tailCommits, bigOpt), None)
-    val (p, m, _, txns, doms) =
-      DeltaStateReconstruction.replay(spark, tablePath, cp, tailCommits,
-        withLive = false)
-    // reader gates FIRST (files empty): an unreadable table (unknown
-    // reader feature) must fail loudly BEFORE any live-plane job runs
-    val gated = finishSnapshot(tablePath, target, p, m, Nil, txns, doms,
-      driverPlane = false)
+    if (!framePlane(spark, tablePath, cp, tailCommits, forceDefer))
+      return (driverReplay(spark, tablePath, target, cp, tailCommits), None)
+    val gated = metadataReplay(spark, tablePath, target, cp, tailCommits)
     // per-(table, version) frame reuse: the second selective query over an
     // unchanged big table skips the O(N) re-parse (r17 verdict #3)
-    val deferredFiles = SnapshotCache.frame(
-        spark, tablePath, target, SnapshotCache.fingerprint(cp, tailCommits))(
-      new DeferredDeltaFiles(spark, tablePath, target, cp, tailCommits))
+    val deferredFiles = cachedFrame(spark, tablePath, target, cp, tailCommits)
     // Column mapping costs the deferred plane NOTHING extra: physical
     // names / field ids are schema metadata ([[GraftParquetFileFormat
     // .forSnapshot]] reads them off the snapshot, not the files). Deletion
@@ -1193,14 +1165,15 @@ object DeltaLog {
         !gated.protocol.impliedReaderFeatures.contains("deletionVectors")) Nil
       else {
         val dvs = deferredFiles.dvAdds
+        val threshold = fileCountThreshold(spark)
         // visibility: the DV map is the one O(per-table) driver cost left
         // on this plane — a mass-DV'd table re-approaches O(files) until
         // OPTIMIZE purges, and that must never regress silently
-        if (dvs.size > SnapshotFileCountWarnThreshold)
+        if (dvs.size > threshold)
           System.err.println(
             s"[graft] WARN: $tablePath deferred scan materialized ${dvs.size} " +
               "DV-carrying add descriptors for the scan's DV map " +
-              s"(> $SnapshotFileCountWarnThreshold); planning heap is " +
+              s"(> $threshold); planning heap is " +
               "O(DV'd files) until OPTIMIZE physically purges the deleted rows")
         dvs
       }
@@ -1219,32 +1192,22 @@ object DeltaLog {
   }
 
   /** Metadata planes (protocol / metaData / txn / domainMetadata) of the
-    * LATEST version with NO live-set materialization on job-plane tables —
+    * LATEST version with NO live-set materialization on the frame plane —
     * what a deferred-plane DML/OPTIMIZE commit loop re-reads per attempt:
     * the [[ConflictChecker]] incremental rules need only the intervening
     * commits and these planes, never the full live set (r17 verdict #2 —
     * the eager re-read made every retry pay O(files) driver heap). Small
-    * tables keep the eager driver replay (files populated, harmless);
-    * job-plane callers MUST NOT consult `.files` (empty there). */
+    * tables keep the driver replay (files populated, harmless);
+    * frame-plane callers MUST NOT consult `.files` (empty there). */
   private[graft] def metadataSnapshot(
       spark: SparkSession, tablePath: String,
       versionAsOf: Option[Long] = None,
       timestampAsOf: Option[String] = None): DeltaSnapshot = {
     val (target, cp, tailCommits) =
       resolveReplay(spark, tablePath, versionAsOf, timestampAsOf)
-    val useJob = DistributedReplayMode match {
-      case "always" => true
-      case "never" => false
-      case _ => estimateBig(spark, tablePath, cp, tailCommits)
-    }
-    if (!useJob)
-      snapshotResolved(spark, tablePath, target, cp, tailCommits, Some(false))
-    else {
-      val (p, m, _, txns, doms) =
-        DeltaStateReconstruction.replay(spark, tablePath, cp, tailCommits,
-          withLive = false)
-      finishSnapshot(tablePath, target, p, m, Nil, txns, doms, driverPlane = false)
-    }
+    if (framePlane(spark, tablePath, cp, tailCommits))
+      metadataReplay(spark, tablePath, target, cp, tailCommits)
+    else driverReplay(spark, tablePath, target, cp, tailCommits)
   }
 
   /** O(1) estimate of a checkpoint's add count, for the replay-path

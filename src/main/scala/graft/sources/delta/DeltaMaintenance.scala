@@ -1135,9 +1135,9 @@ object DeltaMaintenance {
     val (target0, targetDef0) = DeltaLog.scanSnapshot(spark, tablePath,
       versionAsOf = Some(toVersion), withDvAdds = false)
     // plane choice, made ONCE: if either side is big, force the other
-    // side's handle too so the diff has two frames to join. The replay
-    // pins (DeferredScanMode="never" / driver-replay) outrank the force —
-    // a missing handle there falls back to the driver plane whole.
+    // side's handle too so the diff has two frames to join. A `driver`
+    // plane conf yields no frames (the driver plane whole); `frame` gives
+    // both sides frames.
     val planes: Option[(DeltaSnapshot, DeferredDeltaFiles)] =
       if (headDef.isEmpty && targetDef0.isEmpty) None
       else targetDef0.orElse(
@@ -1232,7 +1232,8 @@ object DeltaMaintenance {
         (current, Nil, Nil)
       else {
         val cd = cdOpt.getOrElse(throw new IllegalStateException(
-          s"RESTORE on $tablePath lost its deferred plane mid-run (replay-mode pin changed?)"))
+          s"RESTORE on $tablePath lost its deferred plane mid-run " +
+            s"(${DeltaLog.SnapshotPlaneKey} changed?)"))
         val (removePaths, readds) = restoreDiffFrames(cd, td)
         (current, removePaths, readds)
       }

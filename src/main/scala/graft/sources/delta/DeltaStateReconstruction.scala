@@ -32,10 +32,12 @@ import org.apache.spark.sql.types._
   * by `isAdd` as the secondary sort key (false < true). Across versions the
   * later action wins unconditionally.
   *
-  * The executors do all O(actions) parsing and deduplication; the driver
-  * materializes only the FINAL live set (what the snapshot hands to the
-  * file index — the same O(live files) it must hold either way), plus the
-  * O(1)/O(appIds) protocol, metaData and txn rows.
+  * The executors do all O(actions) parsing and deduplication. The winners
+  * frame ([[addWinnersFrame]]) is the frame plane's live set:
+  * [[DeferredDeltaFiles]] persists it and materializes only what a
+  * consumer asks for (the eager snapshot collects all of it). [[replay]]
+  * collects only the O(1)/O(appIds) protocol, metaData, txn and domain
+  * rows.
   */
 private[delta] object DeltaStateReconstruction {
 
@@ -86,10 +88,10 @@ private[delta] object DeltaStateReconstruction {
       StructField("removed", BooleanType))))))
 
   /** The checkpoint side of the ADD plane: cp parquet (∪ v2 sidecars)
-    * normalized to the action-frame shape — shared by [[replay]] and the
-    * deferred-scan path ([[addWinnersFrame]]) so v2/sidecar handling can
-    * never drift between them. Removes in a checkpoint are vacuum
-    * tombstones, not live state — skipped exactly like the driver path. */
+    * normalized to the action-frame shape, for [[addWinnersFrame]]. Its v2
+    * gates (declared version, sidecars carrying `add`) run here, when the
+    * frame is built. Removes in a checkpoint are vacuum tombstones, not
+    * live state — skipped exactly like the driver path. */
   private[delta] def checkpointAddsFrame(
       spark: SparkSession, tablePath: String,
       cpVersion: Long, parts: Seq[FileStatus]): DataFrame = {
@@ -129,33 +131,22 @@ private[delta] object DeltaStateReconstruction {
       .reduce(_ unionByName _)
   }
 
-  /** Replay `checkpoint ∪ tail commits` distributed; returns what
-    * [[DeltaLog.snapshot]] needs to finish the snapshot (gates and
-    * construction stay shared with the driver path). */
+  /** The metadata planes of `checkpoint ∪ tail commits`, replayed
+    * distributed: protocol, metaData, txn and domainMetadata. The live set
+    * is the frame plane's ([[addWinnersFrame]], held by
+    * [[DeferredDeltaFiles]]); [[DeltaLog]] finishes the snapshot with the
+    * gates shared with the driver path. */
   def replay(
       spark: SparkSession,
       tablePath: String,
       cp: Option[(Long, Seq[FileStatus])],
-      tailCommits: Seq[(Long, FileStatus)],
-      /** false = metadata planes only (protocol/metaData/txn/domains); the
-        * live set stays un-materialized — the deferred-scan path's
-        * snapshot, whose files come later through [[addWinnersFrame]] +
-        * [[collectLive]] with the scan's own pruner. */
-      withLive: Boolean = true)
-      : (Option[DeltaProtocol], Option[DeltaMetadata], Seq[DeltaAddFile],
-         Map[String, Long], Map[String, String]) = {
+      tailCommits: Seq[(Long, FileStatus)])
+      : (Option[DeltaProtocol], Option[DeltaMetadata], Map[String, Long], Map[String, String]) = {
 
-    // ---- checkpoint side, metadata planes (the ADD plane reads through
-    // [[checkpointAddsFrame]], shared with the deferred-scan path; both
-    // reads are column-pruned plans over the same parquet). With
-    // withLive=false the adds frame (and its v2 validation collects) is
-    // skipped entirely — the deferred-scan path builds its own later —
-    // and the metadata read carries the replayReads accounting instead.
-    val cpFrames: Seq[(Option[DataFrame], DataFrame, DataFrame, DataFrame, DataFrame)] = cp.toSeq.map { case (cpVersion, parts) =>
-      val adds =
-        if (withLive) Some(checkpointAddsFrame(spark, tablePath, cpVersion, parts))
-        else None
-      if (!withLive) DeltaLog.replayReads.addAndGet(parts.size.toLong)
+    // ---- checkpoint side: column-pruned reads of the checkpoint parquet
+    // (the ADD plane reads it separately through [[checkpointAddsFrame]])
+    val cpFrames: Seq[(DataFrame, DataFrame, DataFrame, DataFrame)] = cp.toSeq.map { case (cpVersion, parts) =>
+      DeltaLog.replayReads.addAndGet(parts.size.toLong)
       val cpDf = spark.read.parquet(parts.map(_.getPath.toString): _*)
       val cols = cpDf.schema.fieldNames.toSet
       val metas =
@@ -205,16 +196,10 @@ private[delta] object DeltaStateReconstruction {
             col("domainMetadata.configuration").as("configuration"),
             removed.as("removed"))
         }
-      (adds, metas, protos, txns, doms)
+      (metas, protos, txns, doms)
     }
 
     val jsonRaw: Option[DataFrame] = tailActionsFrame(spark, tailCommits)
-    val live: Seq[DeltaAddFile] =
-      if (!withLive) Nil
-      else collectLive(
-        winnersFrame(cpFrames.flatMap(_._1) ++
-          jsonRaw.map(jsonAddsOf) ++ jsonRaw.map(jsonRemovesOf)),
-        pruner = None)
 
     // ---- protocol / metaData: last emission wins; one row each
     val jsonMetas = jsonRaw.map(_.filter(col("a.metaData").isNotNull).select(
@@ -224,7 +209,7 @@ private[delta] object DeltaStateReconstruction {
       col("a.metaData.partitionColumns").as("partitionColumns"),
       col("a.metaData.configuration").as("configuration")))
     val metadata: Option[DeltaMetadata] =
-      (cpFrames.map(_._2) ++ jsonMetas).reduceOption(_ unionByName _).flatMap {
+      (cpFrames.map(_._1) ++ jsonMetas).reduceOption(_ unionByName _).flatMap {
         _.orderBy(col("version").desc).limit(1).collect().headOption.map { r =>
           DeltaMetadata(
             Option(r.getAs[String]("id")).getOrElse(""),
@@ -242,7 +227,7 @@ private[delta] object DeltaStateReconstruction {
       col("a.protocol.readerFeatures").as("readerFeatures"),
       col("a.protocol.writerFeatures").as("writerFeatures")))
     val protocol: Option[DeltaProtocol] =
-      (cpFrames.map(_._3) ++ jsonProtos).reduceOption(_ unionByName _).flatMap {
+      (cpFrames.map(_._2) ++ jsonProtos).reduceOption(_ unionByName _).flatMap {
         _.orderBy(col("version").desc).limit(1).collect().headOption.map { r =>
           def feat(i: Int): Set[String] =
             Option(r.getAs[scala.collection.Seq[String]](i)).map(_.toSet).getOrElse(Set.empty)
@@ -251,7 +236,7 @@ private[delta] object DeltaStateReconstruction {
       }
 
     // ---- txn: latest SetTransaction per appId (O(appIds) rows collected)
-    val cpTxns = cpFrames.map(_._4)
+    val cpTxns = cpFrames.map(_._3)
     val jsonTxns = jsonRaw.map(_.filter(col("a.txn").isNotNull).select(
       col("version"),
       col("a.txn.appId").as("appId"),
@@ -265,7 +250,7 @@ private[delta] object DeltaStateReconstruction {
 
     // ---- domainMetadata: last action per domain wins; removal tombstones
     // drop the domain (O(domains) rows collected, like txn)
-    val cpDomains = cpFrames.map(_._5)
+    val cpDomains = cpFrames.map(_._4)
     val jsonDomains = jsonRaw.map(_.filter(col("a.domainMetadata").isNotNull).select(
       col("version"),
       col("a.domainMetadata.domain").as("domain"),
@@ -280,7 +265,7 @@ private[delta] object DeltaStateReconstruction {
           .collect().map(r => r.getString(0) -> Option(r.getString(1)).getOrElse("")).toMap
       }.getOrElse(Map.empty)
 
-    (protocol, metadata, live, txns, domains)
+    (protocol, metadata, txns, domains)
   }
 
   /** The JSON tail of the ADD/metadata planes: every action line parsed

@@ -6,6 +6,7 @@ import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.withPlane
 import graft.sources.delta.{Clustering, DeltaLog, DeltaMaintenance, DeltaSchema,
   DeltaTable, DeltaWriter, RowTracking}
 
@@ -174,15 +175,14 @@ class ClusteringSuite extends AnyFunSuite {
     // must reproduce incrementalCandidates' decisions exactly: stable cubes
     // skipped, new files rewritten, steady state a structural no-op,
     // re-declaration invalidating provenance — the whole lifecycle under
-    // DeferredScanMode=always, asserting the same file-level outcomes the
+    // the frame plane, asserting the same file-level outcomes the
     // eager test above pins
     val d = dir("incr-deferred")
     seed(d)
     Clustering.clusterBy(spark, d, Seq("k"))
     spark.sql(s"ALTER TABLE delta.`$d` SET TBLPROPERTIES " +
       "('delta.clustering.minCubeSize'='1')")
-    DeltaLog.DeferredScanMode = "always"
-    try {
+    withPlane("frame") {
       val m1 = DeltaMaintenance.optimize(spark, d)
       assert(m1.filesRemoved === 16, "first OPTIMIZE clusters the whole seed")
       val cube = DeltaLog.snapshot(spark, d).files
@@ -205,7 +205,7 @@ class ClusteringSuite extends AnyFunSuite {
       assert(m4.filesRemoved === after.size,
         "superseded-declaration cubes rejoin the candidate set")
       assert(DeltaTable.read(spark, d).count() === 67)
-    } finally DeltaLog.DeferredScanMode = "auto"
+    }
   }
 
   test("clustering + row tracking compose: ids survive the auto-cluster") {
@@ -313,8 +313,7 @@ class ClusteringSuite extends AnyFunSuite {
         assert(m.filesRemoved === 0 && m.filesAdded === 0, s"[$tag]")
       }
       tagsVisible() // driver-map replay
-      try { DeltaLog.DistributedReplayMode = "always"; tagsVisible() }
-      finally DeltaLog.DistributedReplayMode = "auto"
+      withPlane("frame")(tagsVisible())
     }
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Row, SaveMode}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.withPlane
 import graft.sources.delta.{DeltaDml, DeltaLog, DeltaMaintenance, DeltaSchema, DeltaTable, DeltaWriter, SnapshotCache}
 
 /** Checkpoint protocol coverage beyond the classic single-file form the
@@ -528,8 +529,7 @@ class DeltaCheckpointSuite extends AnyFunSuite {
       spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES $props")
       DeltaWriter.write((10 until 20).map(i => (i, s"r$i")).toDF("id", "name")
         .repartition(9), dir, SaveMode.Append, Nil)
-      DeltaLog.DeferredScanMode = "always"
-      try {
+      withPlane("frame") {
         val before = DeltaLog.deferredScans.get()
         DeltaWriter.writeCheckpoint(spark, dir, 2)
         assert(DeltaLog.deferredScans.get() > before,
@@ -539,7 +539,7 @@ class DeltaCheckpointSuite extends AnyFunSuite {
         assert(snap.files.size >= 10, s"[$props] replay lost adds: ${snap.files.size}")
         assert(DeltaTable.read(spark, dir).select("id").as[Int].collect().sorted.toSeq
           === (0 until 20), s"[$props]")
-      } finally DeltaLog.DeferredScanMode = "auto"
+      }
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sessionState.newHadoopConf())
       val names = fs.listStatus(new org.apache.hadoop.fs.Path(dir, "_delta_log"))

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.withPlane
 import graft.sources.delta.{DeltaDml, DeltaLog, DeltaMaintenance, DeltaTable, DeltaWriter}
 
 /** SHALLOW CLONE: zero-copy metadata fork — every safety property the
@@ -92,14 +93,13 @@ class DeltaCloneSuite extends AnyFunSuite {
     val src = freshSource()
     val dst = Files.createTempDirectory("graft-clone-dstd").toString + "/t"
     DeltaMaintenance.shallowClone(spark, src, dst)
-    DeltaLog.DeferredScanMode = "always"
-    try {
+    withPlane("frame") {
       assert(DeltaMaintenance.fsck(spark, dst, dryRun = true) === Nil,
         "healthy clone: no add may be reported missing")
       assert(DeltaMaintenance.vacuum(spark, dst, retentionMs = 0L) === 0L,
         "clone vacuum must not delete shared source files")
       assert(rows(dst) === rows(src))
-    } finally DeltaLog.DeferredScanMode = "auto"
+    }
   }
 
   test("cloning a clone resolves already-absolute paths") {

@@ -9,6 +9,7 @@ import scala.concurrent.duration._
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.withPlane
 import graft.sources.delta.{DeltaDml, DeltaLog, DeltaMaintenance, DeltaMerge, DeltaTable, DeltaWriter, MergeClause}
 
 /** ACID under contention: concurrent appenders race on the commit version;
@@ -298,8 +299,7 @@ class DeltaConcurrencySuite extends AnyFunSuite {
     // memoized parse (DeltaLog.conflictRange). Result equality cannot see
     // the difference, so pin the parse counter.
     val dir = partitionedTable()
-    DeltaLog.DeferredScanMode = "always"
-    try {
+    withPlane("frame") {
       val before = DeltaLog.conflictRangeParses.get()
       val m = DeltaDml.delete(spark, dir, "p = 1", beforeCommit = () => {
         DeltaWriter.write(Seq((100L, "late", 2)).toDF("id", "payload", "p"),
@@ -309,6 +309,6 @@ class DeltaConcurrencySuite extends AnyFunSuite {
       val parses = DeltaLog.conflictRangeParses.get() - before
       assert(parses === 1L,
         s"rewrite + read-set rules over one intervening range must cost ONE parse, got $parses")
-    } finally DeltaLog.DeferredScanMode = "auto"
+    }
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.withPlane
 import graft.sources.delta.{DeltaDml, DeltaLog, DeltaMaintenance, DeltaTable, DeltaWriter}
 
 /** Spark-job snapshot state reconstruction (DeltaStateReconstruction) —
@@ -22,15 +23,15 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
   private def tmpDir(): String =
     Files.createTempDirectory("graft-recon-").toFile.getAbsolutePath
 
-  private def snapshotIn(mode: String, dir: String, versionAsOf: Option[Long] = None) = {
-    DeltaLog.DistributedReplayMode = mode
-    try DeltaLog.snapshot(spark, dir, versionAsOf = versionAsOf)
-    finally DeltaLog.DistributedReplayMode = "auto"
-  }
+  private def snapshotIn(plane: String, dir: String, versionAsOf: Option[Long] = None) =
+    withPlane(plane)(DeltaLog.snapshot(spark, dir, versionAsOf = versionAsOf))
+
+  private def withThreshold[T](files: Int)(f: => T): T =
+    GraftSession.withConf(spark, DeltaLog.SnapshotFileCountThresholdKey, files.toString)(f)
 
   private def assertSameSnapshot(dir: String, versionAsOf: Option[Long] = None): Unit = {
-    val d = snapshotIn("never", dir, versionAsOf)
-    val j = snapshotIn("always", dir, versionAsOf)
+    val d = snapshotIn("driver", dir, versionAsOf)
+    val j = snapshotIn("frame", dir, versionAsOf)
     assert(j.version === d.version)
     assert(j.protocol === d.protocol)
     assert(j.metadata === d.metadata)
@@ -68,10 +69,8 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
     assertSameSnapshot(dir, versionAsOf = Some(cpV + 1))
 
     // the job-path snapshot actually reads correctly end-to-end
-    val rows = {
-      DeltaLog.DistributedReplayMode = "always"
-      try DeltaTable.read(spark, dir).select("id").as[Int].collect().sorted.toSeq
-      finally DeltaLog.DistributedReplayMode = "auto"
+    val rows = withPlane("frame") {
+      DeltaTable.read(spark, dir).select("id").as[Int].collect().sorted.toSeq
     }
     assert(rows === Seq(1, 3, 5, 6, 7, 8))
   }
@@ -95,14 +94,14 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
     val out = fs.create(commit, true)
     try out.write((content + "\n" + """{"add":{"path":"trunc""").getBytes("UTF-8"))
     finally out.close()
-    val e = intercept[Exception] { snapshotIn("always", dir) }
+    val e = intercept[Exception] { snapshotIn("frame", dir) }
     val chain = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
       .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ").toLowerCase
     assert(chain.contains("malformed") || chain.contains("parse") || chain.contains("json"),
       s"expected a loud parse failure, got: $chain")
     // the driver path fails on the same log too — behavior must not
     // diverge on table size
-    intercept[Exception] { snapshotIn("never", dir) }
+    intercept[Exception] { snapshotIn("driver", dir) }
   }
 
   test("job replay handles a checkpoint-only log (no tail commits)") {
@@ -117,7 +116,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
       fs.delete(new org.apache.hadoop.fs.Path(dir, f"_delta_log/$n%020d.json"), false)
     }
     assertSameSnapshot(dir)
-    assert(snapshotIn("always", dir).files.nonEmpty)
+    assert(snapshotIn("frame", dir).files.nonEmpty)
   }
 
   test("v2 sidecar checkpoints replay identically through the job path") {
@@ -171,7 +170,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
     (0 to 1).foreach { v =>
       fs.delete(new org.apache.hadoop.fs.Path(dir, f"_delta_log/$v%020d.json"), false)
     }
-    val snap = snapshotIn("always", dir)
+    val snap = snapshotIn("frame", dir)
     assert(snap.files.size === 2)
     assert(snap.files.forall(_.stats.nonEmpty),
       "stats_parsed must re-serialize executor-side (to_json)")
@@ -191,15 +190,13 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
       DeltaWriter.write(Seq((i, s"r$i")).toDF("id", "s").coalesce(1),
         dir, SaveMode.Append, Nil)
     }
-    val driver = snapshotIn("never", dir)
-    val prev = DeltaLog.SnapshotFileCountWarnThreshold
-    DeltaLog.SnapshotFileCountWarnThreshold = 5
-    try {
+    val driver = snapshotIn("driver", dir)
+    withThreshold(5) {
       val auto = DeltaLog.snapshot(spark, dir) // auto mode
       assert(auto.version === driver.version)
       assert(auto.files.sortBy(_.path) === driver.files.sortBy(_.path))
       assert(auto.metadata === driver.metadata)
-    } finally DeltaLog.SnapshotFileCountWarnThreshold = prev
+    }
   }
 
   test("pre-checkpoint bulk load routes to the job path on tail-commit bytes") {
@@ -212,10 +209,8 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
         dir, SaveMode.Append, Nil)
     }
     assert(!new java.io.File(s"$dir/_delta_log/_last_checkpoint").exists())
-    val driver = snapshotIn("never", dir)
-    val prev = DeltaLog.SnapshotFileCountWarnThreshold
-    DeltaLog.SnapshotFileCountWarnThreshold = 1 // tail bytes/512 > 1
-    try {
+    val driver = snapshotIn("driver", dir)
+    withThreshold(1) { // tail bytes/512 > 1
       val before = DeltaLog.jobReplays.get()
       val auto = DeltaLog.snapshot(spark, dir) // auto mode
       assert(DeltaLog.jobReplays.get() === before + 1,
@@ -223,7 +218,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
       assert(auto.version === driver.version)
       assert(auto.files.sortBy(_.path) === driver.files.sortBy(_.path))
       assert(auto.metadata === driver.metadata)
-    } finally DeltaLog.SnapshotFileCountWarnThreshold = prev
+    }
 
     // and a small table (threshold restored) still takes the driver plane
     val before = DeltaLog.jobReplays.get()
@@ -234,11 +229,6 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
 
   // ---- deferred-scan plane (DeltaLog.scanSnapshot + DeferredDeltaFiles):
   // the live set stays a distributed frame; listFiles prunes executor-side
-
-  private def deferredScan[A](f: => A): A = {
-    DeltaLog.DeferredScanMode = "always"
-    try f finally DeltaLog.DeferredScanMode = "auto"
-  }
 
   test("deferred scan returns results identical to the eager path (filtered, unfiltered, time travel)") {
     val dir = tmpDir()
@@ -258,7 +248,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
     Seq(None, Some(1L)).foreach { v =>
       val eager = readAll(v).orderBy("id").collect().map(_.toString).toSeq
       val before = DeltaLog.deferredScans.get()
-      val (deferredRows, filteredRows) = deferredScan {
+      val (deferredRows, filteredRows) = withPlane("frame") {
         (readAll(v).orderBy("id").collect().map(_.toString).toSeq,
           // pushed partition + stats filters ride the deferred plane
           readAll(v).filter("p = 'p1' AND id <= 20").orderBy("id")
@@ -290,7 +280,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
     val eagerP1 = spark.read.format("delta").load(dir)
       .filter("p = 'p1'").select("id").as[Int].collect().sorted.toSeq
     assert(eagerNull === Seq(2, 4) && eagerP1 === Seq(1))
-    deferredScan {
+    withPlane("frame") {
       assert(spark.read.format("delta").load(dir)
         .filter("p IS NULL").select("id").as[Int].collect().sorted.toSeq === eagerNull)
       assert(spark.read.format("delta").load(dir)
@@ -312,7 +302,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
           .toDF("id", "p").coalesce(1),
         dir, SaveMode.Append, if (c == 0) Seq("p") else Nil)
     }
-    deferredScan {
+    withPlane("frame") {
       val (snap, deferred) = DeltaLog.scanSnapshot(spark, dir)
       assert(deferred.isDefined, "plain table must defer under 'always'")
       assert(snap.files.isEmpty, "deferred snapshot must not materialize files")
@@ -346,7 +336,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
     DeltaWriter.write((1 to 10).map(i => (i, s"x$i")).toDF("id", "s"),
       mapDir, SaveMode.Append, Nil)
     graft.sources.delta.DeltaSchema.renameColumn(spark, mapDir, "s", "label")
-    deferredScan {
+    withPlane("frame") {
       val (dvSnap, dvDeferred) = DeltaLog.scanSnapshot(spark, dvDir)
       assert(dvDeferred.isDefined, "DV tables defer too since r17")
       // the snapshot materializes ONLY the DV-carrying adds (the scan
@@ -368,17 +358,15 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
       assert(mapped.columns.contains("label"))
       assert(mapped.filter("id = 7").select("label").as[String].head() === "x7")
     }
-    // the driver-plane pin outranks a forced deferral: with
-    // DistributedReplayMode="never" even DeferredScanMode="always" must
-    // route through the driver replay (no job, no deferred handle)
-    DeltaLog.DistributedReplayMode = "never"
-    try deferredScan {
+    // a driver pin routes the scan path through the driver replay too
+    // (no job, no deferred handle)
+    withPlane("driver") {
       val jobsBefore = DeltaLog.jobReplays.get()
       val (snap, deferred) = DeltaLog.scanSnapshot(spark, dvDir)
       assert(deferred.isEmpty && snap.files.nonEmpty)
       assert(DeltaLog.jobReplays.get() === jobsBefore,
         "driver-plane pin must govern the scan path too")
-    } finally DeltaLog.DistributedReplayMode = "auto"
+    }
   }
 
   test("deferred scans replay CHECKPOINTED state (classic and v2 sidecars)") {
@@ -410,7 +398,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
         dir, SaveMode.Append, Nil)
       val eager = spark.read.format("delta").load(dir)
         .orderBy("id").collect().map(_.toString).toSeq
-      deferredScan {
+      withPlane("frame") {
         val got = spark.read.format("delta").load(dir)
           .orderBy("id").collect().map(_.toString).toSeq
         assert(got === eager, s"[$tag]")
@@ -444,8 +432,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
     import graft.sources.delta.DeltaMerge
     def lifecycle(mode: String): (Seq[String], Long) = {
       val dir = tmpDir()
-      DeltaLog.DeferredScanMode = mode
-      try {
+      withPlane(mode) {
         DeltaWriter.write(
           (1 to 100).map(i => (i.toLong, s"s$i", i * 1.0)).toDF("id", "s", "v")
             .repartition(4),
@@ -474,11 +461,11 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
         val rows = spark.read.format("delta").load(dir)
           .orderBy("id").collect().map(_.toString).toSeq
         (rows, DeltaLog.snapshot(spark, dir).version)
-      } finally DeltaLog.DeferredScanMode = "auto"
+      }
     }
-    val (eagerRows, eagerV) = lifecycle("never")
+    val (eagerRows, eagerV) = lifecycle("driver")
     val before = DeltaLog.deferredScans.get()
-    val (deferredRows, deferredV) = lifecycle("always")
+    val (deferredRows, deferredV) = lifecycle("frame")
     assert(DeltaLog.deferredScans.get() > before,
       "the lifecycle never exercised the deferred plane")
     assert(deferredRows === eagerRows)
@@ -493,8 +480,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
       dir, SaveMode.Append, Nil)
     DeltaWriter.write((11 to 20).map(i => (i, s"b$i")).toDF("id", "s").coalesce(1),
       dir, SaveMode.Append, Nil)
-    DeltaLog.DeferredScanMode = "always"
-    try {
+    withPlane("frame") {
       // blind append racing the DELETE: WriteSerializable exempts it —
       // the incremental rule must NOT abort on it (fleet-scale liveness)
       val m = DeltaDml.delete(spark, dir, "id = 1", () => {
@@ -512,7 +498,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
           DeltaDml.delete(spark, dir, "id = 3") // same file as id=2
         })
       }
-    } finally DeltaLog.DeferredScanMode = "auto"
+    }
   }
 
   test("deferred materialization survives log cleanup via re-resolve at the pinned version") {
@@ -523,8 +509,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
         (c * 10 until c * 10 + 10).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1),
         dir, SaveMode.Append, Nil)
     }
-    DeltaLog.DeferredScanMode = "always"
-    try {
+    try withPlane("frame") {
       SnapshotCache.clear()
       val (snap, deferred) = DeltaLog.scanSnapshot(spark, dir)
       assert(deferred.isDefined)
@@ -542,10 +527,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
       assert(all.size === 3)
       // and the recovered frame serves a real pruned read
       assert(spark.read.format("delta").load(dir).count() === 30)
-    } finally {
-      DeltaLog.DeferredScanMode = "auto"
-      SnapshotCache.clear()
-    }
+    } finally SnapshotCache.clear()
   }
 
   test("ordered pacing plane survives log cleanup via re-resolve at the pinned version") {
@@ -556,8 +538,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
         (c * 10 until c * 10 + 10).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1),
         dir, SaveMode.Append, Nil)
     }
-    DeltaLog.DeferredScanMode = "always"
-    try {
+    try withPlane("frame") {
       SnapshotCache.clear()
       val (snap, deferred) = DeltaLog.scanSnapshot(spark, dir)
       val d = deferred.getOrElse(fail("expected the deferred plane"))
@@ -578,10 +559,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
       assert(all.map(_.path) === all.map(_.path).sorted, "path rank preserved")
       assert(all.head.path === first.head.path,
         "the recovered index ranks the same file first")
-    } finally {
-      DeltaLog.DeferredScanMode = "auto"
-      SnapshotCache.clear()
-    }
+    } finally SnapshotCache.clear()
   }
 
   test("v2 checkpoint integrity gates fire AT scanSnapshot, not mid-query") {
@@ -603,8 +581,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
     val renamed = new java.io.File(logDir,
       cp.getName.replace(f"$v%020d", f"${v - 1}%020d"))
     assert(cp.renameTo(renamed))
-    DeltaLog.DeferredScanMode = "always"
-    try {
+    try withPlane("frame") {
       SnapshotCache.clear()
       // the gate must fire HERE — at snapshot construction, like the eager
       // replay — not lazily at the first listFiles (r17 ADVICE: a corrupt
@@ -613,10 +590,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
         DeltaLog.scanSnapshot(spark, dir, versionAsOf = Some(v - 1))
       }
       assert(e.getMessage.contains("declares version"))
-    } finally {
-      DeltaLog.DeferredScanMode = "auto"
-      SnapshotCache.clear()
-    }
+    } finally SnapshotCache.clear()
   }
 
   test("a non-serializable pushed filter falls back to driver-side pruning (never fails the scan)") {
@@ -641,8 +615,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
         (c * 100L until c * 100L + 10).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1),
         dir, SaveMode.Append, Nil)
     }
-    DeltaLog.DeferredScanMode = "always"
-    try {
+    withPlane("frame") {
       val (snap, deferred) = DeltaLog.scanSnapshot(spark, dir)
       assert(deferred.isDefined)
       // a normal stats filter AND the poison predicate together: the
@@ -657,7 +630,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
       val expected = deferred.get.collect(Some(clean)).map(_.path).sorted
       assert(got === expected)
       assert(got.size === 1, "stats skipping must still prune to the one file")
-    } finally DeltaLog.DeferredScanMode = "auto"
+    }
   }
 
   test("snapshot frame cache: reuse at one version, invalidation on commit AND on table recreation") {
@@ -665,8 +638,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
     val dir = tmpDir()
     DeltaWriter.write((1 to 30).map(i => (i, s"x$i")).toDF("id", "s"),
       dir, SaveMode.Append, Nil)
-    DeltaLog.DeferredScanMode = "always"
-    try {
+    try withPlane("frame") {
       SnapshotCache.clear()
       assert(spark.read.format("delta").load(dir).count() === 30)
       val h1 = SnapshotCache.frameHits.get()
@@ -689,9 +661,53 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
       DeltaWriter.write(Seq((13, "tail")).toDF("id", "s"), dir, SaveMode.Append, Nil)
       assert(spark.read.format("delta").load(dir).count() === 13,
         "recreated table served the DELETED table's cached frame")
-    } finally {
-      DeltaLog.DeferredScanMode = "auto"
+    } finally SnapshotCache.clear()
+  }
+
+  // ---- the plane selector: one session conf, read per call
+
+  test("a second eager frame-plane snapshot at one version is served by the cached frame") {
+    import graft.sources.delta.SnapshotCache
+    val dir = tmpDir()
+    DeltaWriter.write((1 to 30).map(i => (i, s"x$i")).toDF("id", "s").repartition(3),
+      dir, SaveMode.Append, Nil)
+    try withPlane("frame") {
       SnapshotCache.clear()
+      val first = DeltaLog.snapshot(spark, dir)
+      val hits = SnapshotCache.frameHits.get()
+      val second = DeltaLog.snapshot(spark, dir)
+      assert(SnapshotCache.frameHits.get() === hits + 1,
+        "the second snapshot must collect the cached frame, not replay again")
+      assert(second.version === first.version)
+      assert(second.files === first.files)
+    } finally SnapshotCache.clear()
+  }
+
+  test("the plane conf is per session: a new session's pin leaves the root session alone") {
+    val dir = tmpDir()
+    DeltaWriter.write((1 to 10).map(i => (i, s"x$i")).toDF("id", "s"),
+      dir, SaveMode.Append, Nil)
+    val other = spark.newSession()
+    withPlane("frame", other) {
+      val jobs = DeltaLog.jobReplays.get()
+      val viaFrame = DeltaLog.snapshot(other, dir)
+      assert(DeltaLog.jobReplays.get() === jobs + 1,
+        "the pinned session must take the frame plane")
+      val viaDriver = DeltaLog.snapshot(spark, dir)
+      assert(DeltaLog.jobReplays.get() === jobs + 1,
+        "the root session must stay on the driver plane for a small table")
+      assert(viaFrame.files.sortBy(_.path) === viaDriver.files.sortBy(_.path))
+    }
+  }
+
+  test("an unknown plane value fails naming the conf key and the legal values") {
+    val dir = tmpDir()
+    DeltaWriter.write(Seq((1, "a")).toDF("id", "s"), dir, SaveMode.Append, Nil)
+    val e = intercept[IllegalArgumentException] {
+      withPlane("eager")(DeltaLog.snapshot(spark, dir))
+    }
+    Seq(DeltaLog.SnapshotPlaneKey, "eager", "auto", "driver", "frame").foreach { w =>
+      assert(e.getMessage.contains(w), e.getMessage)
     }
   }
 }

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.withPlane
 import graft.sources.delta.{DeltaDml, DeltaTable, DeltaWriter}
 
 /** `spark.readStream.format("delta")` — the streaming SOURCE driven
@@ -137,8 +138,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
     DeltaWriter.write(Seq((7, "r7")).toDF("id", "name").coalesce(1), dir, SaveMode.Append, Nil) // v2
     DeltaWriter.write(Seq((8, "r8")).toDF("id", "name").coalesce(1), dir, SaveMode.Append, Nil) // v3
     val schema = DeltaLog.snapshot(spark, dir).schema // 3 live files at v3
-    DeltaLog.DeferredScanMode = "always"
-    try {
+    withPlane("frame") {
       val builds0 = OrderedSnapshotIndex.builds.get()
       val src = new DeltaStreamingSource(spark.sqlContext, dir, schema,
         ignoreDataChangeRemoves = false, maxFilesPerTrigger = Some(1))
@@ -162,7 +162,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
       // whole drain (memoized per version) — never the driver-held list
       assert(OrderedSnapshotIndex.builds.get() - builds0 === 1L,
         "deferred pacing must build exactly one ordered index")
-    } finally DeltaLog.DeferredScanMode = "auto"
+    }
   }
 
   test("a mid-drain stream survives cache eviction with ONE index rebuild") {
@@ -183,8 +183,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
     DeltaWriter.write(Seq((8, "r8")).toDF("id", "name").coalesce(1),
       dir, SaveMode.Append, Nil)                    // v3: 3 live files
     val schema = DeltaLog.snapshot(spark, dir).schema
-    DeltaLog.DeferredScanMode = "always"
-    try {
+    try withPlane("frame") {
       val src = new DeltaStreamingSource(spark.sqlContext, dir, schema,
         ignoreDataChangeRemoves = false, maxFilesPerTrigger = Some(1))
       val lim = ReadLimit.maxFiles(1)
@@ -202,7 +201,6 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
         "an evicted mid-drain stream must rebuild its index exactly ONCE " +
           "(zero = jobs against an unpersisted plan; more = rebuild per trigger)")
     } finally {
-      DeltaLog.DeferredScanMode = "auto"
       SnapshotCache.clear()
     }
   }
@@ -218,8 +216,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-stream-buckets").toString
     DeltaWriter.write((1 to 12).map(i => (i, s"r$i")).toDF("id", "name")
       .repartition(6), dir, SaveMode.Append, Nil) // 6 live files
-    DeltaLog.DeferredScanMode = "always"
-    try OrderedSnapshotIndex.withTargetRowsPerBucket(2L) { // 6 files -> 3 buckets
+    try withPlane("frame")(OrderedSnapshotIndex.withTargetRowsPerBucket(2L) { // 6 files -> 3 buckets
       val (_, dOpt) = DeltaLog.scanSnapshot(spark, dir)
       val d = dOpt.getOrElse(fail("expected the deferred plane"))
       assert(d.orderedCount === 6L) // builds the index; count is summary-side
@@ -244,8 +241,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
       val all = d.orderedSlice(0, 6).map(_.path)
       assert(all.size === 6 && all === all.sorted,
         s"slices must serve the path-ordered live set, got $all")
-    } finally {
-      DeltaLog.DeferredScanMode = "auto"
+    }) finally {
       SnapshotCache.clear()
     }
   }
@@ -262,8 +258,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
     DeltaDml.deleteWithDv(spark, dir, "id <= 2")    // v1: DV, not rewrite
     DeltaWriter.write(Seq((9, "r9")).toDF("id", "name").coalesce(1),
       dir, SaveMode.Append, Nil)                    // v2
-    DeltaLog.DeferredScanMode = "always"
-    try {
+    withPlane("frame") {
       val q = spark.readStream.format("delta")
         .option("maxFilesPerTrigger", "1").load(dir)
         .writeStream.format("memory").queryName("dss_dvsnap")
@@ -275,7 +270,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
         assert(spark.table("dss_dvsnap").orderBy("id").collect().map(_.getInt(0)).toSeq
           === (3 to 9), "DV-masked rows 1-2 must NOT stream")
       } finally q.stop()
-    } finally DeltaLog.DeferredScanMode = "auto"
+    }
   }
 
   test("byte-cap admission walks identically on the eager and deferred pacing planes") {
@@ -296,8 +291,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
     // planes, and the cumBytes walk must agree with the driver walk
     val cap = snap.files.map(_.size).max
     def offsetsUnder(mode: String): Seq[String] = {
-      DeltaLog.DeferredScanMode = mode
-      try {
+      withPlane(mode) {
         val src = new DeltaStreamingSource(spark.sqlContext, dir, schema,
           ignoreDataChangeRemoves = false, maxBytesPerTrigger = Some(cap))
         val lim = ReadLimit.maxBytes(cap)
@@ -311,10 +305,10 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
           guard += 1
         }
         out.result()
-      } finally DeltaLog.DeferredScanMode = "auto"
+      }
     }
-    val eager = offsetsUnder("never")
-    val deferred = offsetsUnder("always")
+    val eager = offsetsUnder("driver")
+    val deferred = offsetsUnder("frame")
     assert(deferred === eager,
       s"admission parity broken: eager=$eager deferred=$deferred")
     assert(eager.length >= 4, s"the cap must actually pace the drain: $eager")
@@ -392,8 +386,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
       }
       i
     }
-    DeltaLog.DeferredScanMode = "always"
-    try {
+    withPlane("frame") {
       val (_, deferred) = DeltaLog.scanSnapshot(spark, dir)
       val d = deferred.getOrElse(fail("expected the deferred plane"))
       assert(d.orderedCount === files.length.toLong)
@@ -412,7 +405,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
       // slices agree with the eager list file-for-file
       assert(d.orderedSlice(3, 7).map(_.path) === files.slice(3, 7).map(_.path))
       assert(d.orderedSlice(0, files.length.toLong).map(_.path) === files.map(_.path))
-    } finally DeltaLog.DeferredScanMode = "auto"
+    }
   }
 
   test("rate-limited CDF initial snapshot: paced synthetic inserts pinned to one version, then row-level changes") {

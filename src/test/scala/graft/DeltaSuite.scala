@@ -46,17 +46,12 @@ class DeltaSuite extends AnyFunSuite {
   test("snapshot warns past the live-file threshold (driver replay scale guard)") {
     val dir = tmpDir()
     spark.range(0, 100).repartition(5).toDF("id").write.format("delta").save(dir)
-    val old = DeltaLog.SnapshotFileCountWarnThreshold
     val buf = new java.io.ByteArrayOutputStream()
     val oldErr = System.err
-    try {
-      DeltaLog.SnapshotFileCountWarnThreshold = 3
+    try GraftSession.withConf(spark, DeltaLog.SnapshotFileCountThresholdKey, "3") {
       System.setErr(new java.io.PrintStream(buf, true))
       assert(DeltaLog.snapshot(spark, dir).files.size === 5)
-    } finally {
-      System.setErr(oldErr)
-      DeltaLog.SnapshotFileCountWarnThreshold = old
-    }
+    } finally System.setErr(oldErr)
     assert(buf.toString.contains("driver-side log replay"),
       s"expected the scale warning, got: ${buf.toString.take(200)}")
     // below the threshold: silent

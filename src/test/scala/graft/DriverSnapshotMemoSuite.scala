@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.withPlane
 import graft.sources.delta.{DeltaDml, DeltaLog, DeltaMaintenance, DeltaTable, DeltaWriter, SnapshotCache}
 
 /** The incremental driver-plane snapshot memo (r21 optimization) may only
@@ -195,12 +196,11 @@ class DriverSnapshotMemoSuite extends AnyFunSuite {
 
   /** Scan `dir` on the deferred plane and return its persisted frame. */
   private def deferredFrame(dir: String): org.apache.spark.sql.DataFrame = {
-    DeltaLog.DeferredScanMode = "always"
-    try {
+    withPlane("frame") {
       val (_, d) = DeltaLog.scanSnapshot(spark, dir)
       d.getOrElse(fail("expected the deferred plane")).addsFrame()
         .getOrElse(fail("expected a non-empty frame"))
-    } finally DeltaLog.DeferredScanMode = "auto"
+    }
   }
 
   private def persisted(df: org.apache.spark.sql.DataFrame): Boolean =

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.withPlane
 import graft.sources.delta.{DeltaLog, SnapshotCache}
 
 /** Slice-content pin at a scale where the path-range exchange really has
@@ -32,8 +33,7 @@ class OrderedIndexContentSuite extends AnyFunSuite {
       }
       w.close()
     }
-    DeltaLog.DeferredScanMode = "always"
-    try {
+    try withPlane("frame") {
       val (_, dOpt) = DeltaLog.scanSnapshot(spark, dir)
       val d = dOpt.get
       assert(d.orderedCount === n.toLong)
@@ -48,7 +48,6 @@ class OrderedIndexContentSuite extends AnyFunSuite {
       val admitB = d.orderedAdmit(100, None, Some(5000L))
       assert(admitB > 100L && admitB < 200L)
     } finally {
-      DeltaLog.DeferredScanMode = "auto"
       SnapshotCache.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.withPlane
 import graft.sources.delta.{DeltaDml, DeltaLog, DeltaMaintenance, DeltaTable, DeltaWriter}
 
 /** RESTORE's two planes — driver (path, dv) Sets vs the distributed
@@ -12,7 +13,7 @@ import graft.sources.delta.{DeltaDml, DeltaLog, DeltaMaintenance, DeltaTable, De
   * same surviving rows, same refusals. The dv-keyed identity rule (a DV
   * attach between the versions surfaces as remove+re-add) and the
   * vacuumed-file refusal are where the planes could silently diverge, so
-  * both are exercised under DeferredScanMode pins. */
+  * both are exercised under snapshot-plane pins. */
 class RestorePlaneSuite extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -31,16 +32,13 @@ class RestorePlaneSuite extends AnyFunSuite {
 
   private def restoredIds(mode: String): (Long, Seq[Long]) = {
     val dir = history()
-    DeltaLog.DeferredScanMode = mode
-    val v =
-      try DeltaMaintenance.restore(spark, dir, 0L)
-      finally DeltaLog.DeferredScanMode = "auto"
+    val v = withPlane(mode)(DeltaMaintenance.restore(spark, dir, 0L))
     (v, DeltaTable.read(spark, dir).select("id").as[Long].collect().sorted.toSeq)
   }
 
   test("distributed restore rolls back rewrites and DV attaches exactly like the driver plane") {
-    val (ve, eager) = restoredIds("never")
-    val (vd, deferred) = restoredIds("always")
+    val (ve, eager) = restoredIds("driver")
+    val (vd, deferred) = restoredIds("frame")
     assert(ve === 3L && vd === 3L, "restore commits as a NEW version on both planes")
     assert(eager === (1L to 30L), "v0 content exact (deleted + DV-masked rows back)")
     assert(deferred === eager, "plane parity on the restored row set")
@@ -50,22 +48,19 @@ class RestorePlaneSuite extends AnyFunSuite {
     val dir = history()
     // age out v0's originals: after the v1 rewrite they are tombstoned
     DeltaMaintenance.vacuum(spark, dir, -60000L)
-    DeltaLog.DeferredScanMode = "always"
-    try {
+    withPlane("frame") {
       val e = intercept[IllegalStateException] {
         DeltaMaintenance.restore(spark, dir, 0L)
       }
       assert(e.getMessage.contains("already vacuumed"), e.getMessage)
       assert(e.getMessage.contains("cannot RESTORE"), e.getMessage)
-    } finally DeltaLog.DeferredScanMode = "auto"
+    }
   }
 
   test("no-op restore to the current version returns without committing, both planes") {
     val dir = history()
-    Seq("never", "always").foreach { mode =>
-      DeltaLog.DeferredScanMode = mode
-      try assert(DeltaMaintenance.restore(spark, dir, 2L) === 2L)
-      finally DeltaLog.DeferredScanMode = "auto"
+    Seq("driver", "frame").foreach { mode =>
+      withPlane(mode)(assert(DeltaMaintenance.restore(spark, dir, 2L) === 2L))
     }
     assert(DeltaLog.snapshot(spark, dir).version === 2L, "no extra commit")
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.withPlane
 import graft.sources.delta.{DeltaDml, DeltaLog, DeltaMaintenance, DeltaMerge,
   DeltaSchema, DeltaTable, DeltaWriter, RowTracking}
 
@@ -227,9 +228,7 @@ class RowTrackingSuite extends AnyFunSuite {
         (0 to 10).map(k => k -> k.toLong).toMap)
     }
     check() // driver-map replay over checkpoint parquet + JSON tail
-    val prev = DeltaLog.DistributedReplayMode
-    try { DeltaLog.DistributedReplayMode = "always"; check() }
-    finally DeltaLog.DistributedReplayMode = prev
+    withPlane("frame")(check())
   }
 
   test("foreign domain change aborts a concurrent rewrite; rowTracking domain is exempt") {

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.withPlane
 import graft.sources.delta.{DeltaDml, DeltaLog, DeltaMaintenance, DeltaTable, DeltaWriter}
 
 /** VACUUM's two walk planes — driver (small tables) and distributed
@@ -34,18 +35,15 @@ class VacuumPlaneSuite extends AnyFunSuite {
     dir
   }
 
-  private def dryRunUnder(mode: String, dir: String, retentionMs: Long): Seq[String] = {
-    DeltaLog.DeferredScanMode = mode
-    try DeltaMaintenance.vacuumDryRun(spark, dir, retentionMs)
-    finally DeltaLog.DeferredScanMode = "auto"
-  }
+  private def dryRunUnder(mode: String, dir: String, retentionMs: Long): Seq[String] =
+    withPlane(mode)(DeltaMaintenance.vacuumDryRun(spark, dir, retentionMs))
 
   test("driver and distributed walks emit identical eligible sets") {
     val dir = richTable()
     // retention -60s: everything unreferenced is past the cutoff,
     // including the just-created orphan (clock skew immaterial)
-    val eager = dryRunUnder("never", dir, -60000L)
-    val deferred = dryRunUnder("always", dir, -60000L)
+    val eager = dryRunUnder("driver", dir, -60000L)
+    val deferred = dryRunUnder("frame", dir, -60000L)
     assert(deferred === eager, "the two planes must agree file-for-file")
     assert(eager.exists(_.endsWith("orphan-stray.snappy.parquet")),
       "the orphan (mtime fallback) must be eligible on both planes")
@@ -53,17 +51,14 @@ class VacuumPlaneSuite extends AnyFunSuite {
       "the superseded DV .bin must be eligible on both planes")
     assert(eager.size >= 3, s"tombstoned rewrite sources expected too: $eager")
     // an infinite retention protects everything, on both planes
-    assert(dryRunUnder("never", dir, Long.MaxValue / 4) === Nil)
-    assert(dryRunUnder("always", dir, Long.MaxValue / 4) === Nil)
+    assert(dryRunUnder("driver", dir, Long.MaxValue / 4) === Nil)
+    assert(dryRunUnder("frame", dir, Long.MaxValue / 4) === Nil)
   }
 
   test("distributed vacuum deletes exactly the eligible set; live reads survive") {
     val dir = richTable()
-    val expected = dryRunUnder("always", dir, -60000L)
-    DeltaLog.DeferredScanMode = "always"
-    val deleted =
-      try DeltaMaintenance.vacuum(spark, dir, -60000L)
-      finally DeltaLog.DeferredScanMode = "auto"
+    val expected = dryRunUnder("frame", dir, -60000L)
+    val deleted = withPlane("frame")(DeltaMaintenance.vacuum(spark, dir, -60000L))
     assert(deleted === expected.size.toLong)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -86,20 +81,15 @@ class VacuumPlaneSuite extends AnyFunSuite {
     fs.delete(new org.apache.hadoop.fs.Path(dir, victim.path), false)
     val dvVictim = snap.files.find(_.deletionVector.exists(_.storageType == "u")).get
     fs.delete(dvVictim.deletionVector.get.absolutePath(dir), false)
-    def dryUnder(mode: String): Seq[String] = {
-      DeltaLog.DeferredScanMode = mode
-      try DeltaMaintenance.fsck(spark, dir, dryRun = true)
-      finally DeltaLog.DeferredScanMode = "auto"
-    }
-    val eager = dryUnder("never")
-    val deferred = dryUnder("always")
+    def dryUnder(mode: String): Seq[String] =
+      withPlane(mode)(DeltaMaintenance.fsck(spark, dir, dryRun = true))
+    val eager = dryUnder("driver")
+    val deferred = dryUnder("frame")
     assert(deferred === eager, "fsck planes must agree file-for-file")
     assert(eager.toSet === Set(victim.path, dvVictim.path),
       s"exactly the broken add entries: $eager")
     // repair on the distributed plane drops exactly those entries
-    DeltaLog.DeferredScanMode = "always"
-    try DeltaMaintenance.fsck(spark, dir, dryRun = false)
-    finally DeltaLog.DeferredScanMode = "auto"
+    withPlane("frame")(DeltaMaintenance.fsck(spark, dir, dryRun = false))
     val after = graft.sources.delta.DeltaLog.snapshot(spark, dir).files.map(_.path).toSet
     assert(!after.contains(victim.path) && !after.contains(dvVictim.path))
     DeltaTable.read(spark, dir).count() // table readable again
@@ -116,20 +106,15 @@ class VacuumPlaneSuite extends AnyFunSuite {
       DeltaWriter.write(Seq((100L, "x", 1)).toDF("id", "name", "p"),
         dir, SaveMode.Append, Seq("p"))
     }
-    def partsUnder(mode: String): Seq[String] = {
-      DeltaLog.DeferredScanMode = mode
-      try DeltaMaintenance.showPartitions(spark, dir)
+    def partsUnder(mode: String): Seq[String] = withPlane(mode) {
+      DeltaMaintenance.showPartitions(spark, dir)
         .collect().map(_.getString(0)).toSeq.sorted
-      finally DeltaLog.DeferredScanMode = "auto"
     }
-    assert(partsUnder("always") === partsUnder("never"))
-    assert(partsUnder("always") === Seq("0", "1", "2"))
+    assert(partsUnder("frame") === partsUnder("driver"))
+    assert(partsUnder("frame") === Seq("0", "1", "2"))
     // OPTIMIZE … WHERE routes its partition scope through the same
     // map-typed rollup on the deferred plane
-    DeltaLog.DeferredScanMode = "always"
-    val m =
-      try DeltaMaintenance.optimize(spark, dir, 128L << 20, Some("p = 1"))
-      finally DeltaLog.DeferredScanMode = "auto"
+    val m = withPlane("frame")(DeltaMaintenance.optimize(spark, dir, 128L << 20, Some("p = 1")))
     assert(m.filesRemoved >= 2, s"partition 1's small files compact: $m")
     assert(DeltaTable.read(spark, dir).count() === 27)
   }
@@ -147,8 +132,7 @@ class VacuumPlaneSuite extends AnyFunSuite {
       DeltaWriter.write((1 to 12).map(i => (i.toLong, s"r$i")).toDF("id", "name")
         .coalesce(2), abs, SaveMode.Append, Nil)
       DeltaDml.delete(spark, abs, "id <= 3")
-      DeltaLog.DeferredScanMode = "always"
-      try {
+      withPlane("frame") {
         assert(DeltaMaintenance.fsck(spark, rel, dryRun = true) === Nil,
           "nothing is actually missing on a healthy relative-path table")
         assert(DeltaMaintenance.vacuumDryRun(spark, rel, Long.MaxValue / 4) === Nil,
@@ -159,7 +143,7 @@ class VacuumPlaneSuite extends AnyFunSuite {
         assert(eligible.nonEmpty, "the tombstoned originals age out")
         assert(!eligible.exists(p => live.exists(lp => p.endsWith("/" + lp))),
           s"live files must NEVER be eligible: $eligible")
-      } finally DeltaLog.DeferredScanMode = "auto"
+      }
     } finally {
       try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(rel))
       catch { case _: Exception => () }
@@ -168,11 +152,9 @@ class VacuumPlaneSuite extends AnyFunSuite {
 
   test("a second dry run after vacuum is empty on both planes") {
     val dir = richTable()
-    DeltaLog.DeferredScanMode = "always"
-    try DeltaMaintenance.vacuum(spark, dir, -60000L)
-    finally DeltaLog.DeferredScanMode = "auto"
-    assert(dryRunUnder("never", dir, -60000L) === Nil)
-    assert(dryRunUnder("always", dir, -60000L) === Nil)
+    withPlane("frame")(DeltaMaintenance.vacuum(spark, dir, -60000L))
+    assert(dryRunUnder("driver", dir, -60000L) === Nil)
+    assert(dryRunUnder("frame", dir, -60000L) === Nil)
   }
 
   test("write-denied staging falls back to the driver walk (WRAPPED IOException)") {
@@ -194,8 +176,7 @@ class VacuumPlaneSuite extends AnyFunSuite {
       .toDF("id", "name", "p"), dir, SaveMode.Append, Seq("p"))
     DeltaDml.delete(spark, dir, "id <= 4") // tombstoned rewrite sources
     Files.write(Paths.get(local, "orphan-stray.snappy.parquet"), Array[Byte](1, 2, 3))
-    DeltaLog.DeferredScanMode = "always"
-    try {
+    try withPlane("frame") {
       val eligible = DeltaMaintenance.vacuumDryRun(spark, dir, -60000L)
       assert(eligible.exists(_.endsWith("orphan-stray.snappy.parquet")),
         s"fallback walk must still find the orphan: $eligible")
@@ -203,7 +184,6 @@ class VacuumPlaneSuite extends AnyFunSuite {
       assert(!eligible.exists(p => live.exists(lp => p.endsWith("/" + lp))),
         s"live files must NEVER be eligible, fallback included: $eligible")
     } finally {
-      DeltaLog.DeferredScanMode = "auto"
       conf.unset("fs.rolist.impl")
     }
   }
