@@ -251,10 +251,13 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftSparkExtensions].getName, name), builder))
     }
-    // Delta DML/maintenance SQL statements (DELETE/UPDATE/OPTIMIZE/VACUUM/
-    // RESTORE/SHALLOW CLONE) — the delta-spark DeltaSqlParser pattern
+    // Delta SQL: path reads, DML, MERGE, ALTER and maintenance statements
+    // — the delta-spark DeltaSqlParser pattern — and the CDF table function
     ext.injectParser((session, delegate) =>
       new graft.sources.delta.GraftSqlParser(session, delegate))
+    ext.injectTableFunction((FunctionIdentifier("table_changes"),
+      new ExpressionInfo(classOf[GraftSparkExtensions].getName, "table_changes"),
+      graft.sources.delta.GraftSqlCommands.tableChanges))
     // partition pruning through generated partition columns (filter on the
     // SOURCE column prunes the derived date/year partition)
     ext.injectOptimizerRule(_ => graft.sources.delta.GeneratedPartitionPruning)

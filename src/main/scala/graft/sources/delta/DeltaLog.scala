@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -601,7 +602,7 @@ final class DeferredDeltaFiles private[delta] (
   private[delta] def sessionOf: SparkSession = spark
 }
 
-object DeltaLog {
+object DeltaLog extends Logging {
 
   private val mapper = new ObjectMapper()
 
@@ -904,8 +905,8 @@ object DeltaLog {
     // — a table that grew past the threshold since its last checkpoint can
     // still land here once, and checkpoints on the cadence re-route it).
     if (acc.live.size > threshold)
-      System.err.println(
-        s"[graft] WARN: $tablePath snapshot v$target holds ${acc.live.size} live " +
+      logWarning(
+        s"$tablePath snapshot v$target holds ${acc.live.size} live " +
           s"files (> $threshold); driver-side log replay " +
           "degrades past ~1M files — the next checkpoint routes replay to the " +
           "distributed path, and OPTIMIZE shrinks the file count (small files " +
@@ -1170,8 +1171,8 @@ object DeltaLog {
         // on this plane — a mass-DV'd table re-approaches O(files) until
         // OPTIMIZE purges, and that must never regress silently
         if (dvs.size > threshold)
-          System.err.println(
-            s"[graft] WARN: $tablePath deferred scan materialized ${dvs.size} " +
+          logWarning(
+            s"$tablePath deferred scan materialized ${dvs.size} " +
               "DV-carrying add descriptors for the scan's DV map " +
               s"(> $threshold); planning heap is " +
               "O(DV'd files) until OPTIMIZE physically purges the deleted rows")

@@ -6,6 +6,7 @@ import java.util.UUID
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -30,7 +31,7 @@ final case class OptimizeMetrics(
   *    exactly like production Delta.
   *  - [[history]]: the commitInfo audit trail as a DataFrame.
   */
-object DeltaMaintenance {
+object DeltaMaintenance extends Logging {
 
   private val mapper = new ObjectMapper()
 
@@ -722,8 +723,8 @@ object DeltaMaintenance {
           emitted = true; onEligible(p)
         } catch { case scala.util.control.NonFatal(e)
             if !emitted && causeChainHasIo(e) =>
-          System.err.println(
-            s"[graft] WARN: distributed vacuum walk on $tablePath fell back " +
+          logWarning(
+            s"distributed vacuum walk on $tablePath fell back " +
               s"to the driver plane (${e.getMessage})")
           vacuumWalkDriver(spark, tablePath, retentionMs,
             DeltaLog.snapshot(spark, tablePath))(onEligible)

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.StructType
 
 /** The one Spark-internal bridge a DSv1 streaming Source needs:
@@ -26,6 +27,12 @@ object GraftStreamingBridge {
       spark: SparkSession, rdd: RDD[InternalRow], schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming = false)
+
+  /** A frame over a parsed plan (`Dataset.ofRows` is `private[sql]`):
+    * the SQL MERGE command analyzes its source plan when it runs. */
+  def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** Spec-side inverse of [[streamingDataFrame]]: re-wrap a v1 Source
     * micro-batch (a streaming-marked LogicalRDD) as a batch frame so

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,7 +19,7 @@ class ClusteringSuite extends AnyFunSuite {
   import spark.implicits._
 
   private def dir(tag: String): String =
-    Files.createTempDirectory(s"graft-cluster-$tag").toString
+    TestSpark.tempDir(s"graft-cluster-$tag")
 
   /** Interleaved multi-file seed: every file spans the whole key range, so
     * pre-clustering stats cannot prune anything. */

@@ -20,7 +20,7 @@ class DeletionVectorSuite extends AnyFunSuite {
   import spark.implicits._
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft-dv-").toFile.getAbsolutePath
+    TestSpark.tempDir("graft-dv-")
 
   // --- serde -------------------------------------------------------------
 

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,7 +17,7 @@ class DeltaCdfSuite extends AnyFunSuite {
   import spark.implicits._
 
   private def fresh(rows: Int = 20): String = {
-    val dir = Files.createTempDirectory("graft-cdf").toString
+    val dir = TestSpark.tempDir("graft-cdf")
     DeltaWriter.write(
       (0 until rows).map(i => (i, s"n$i", i * 1.0)).toDF("id", "name", "score"),
       dir, SaveMode.Append, Nil)
@@ -111,7 +109,7 @@ class DeltaCdfSuite extends AnyFunSuite {
   }
 
   test("a range crossing the enablement boundary fails loudly (pre-enablement DML is unrecorded)") {
-    val dir = Files.createTempDirectory("graft-cdf-boundary").toString
+    val dir = TestSpark.tempDir("graft-cdf-boundary")
     DeltaWriter.write((0 until 10).map(i => (i, s"n$i")).toDF("id", "name"),
       dir, SaveMode.Append, Nil)                     // v0 (CDF off)
     DeltaDml.delete(spark, dir, "id < 3")            // v1: DML with NO cdc
@@ -129,7 +127,7 @@ class DeltaCdfSuite extends AnyFunSuite {
   }
 
   test("replaceWhere records EXACT cdc: surviving rewritten rows emit no churn") {
-    val dir = Files.createTempDirectory("graft-cdf-rw").toString
+    val dir = TestSpark.tempDir("graft-cdf-rw")
     DeltaWriter.write(Seq((1, "a"), (2, "b"), (3, "c"), (4, "d")).toDF("id", "name")
       .coalesce(1), dir, SaveMode.Append, Nil)
     spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES " +
@@ -207,7 +205,7 @@ class DeltaCdfSuite extends AnyFunSuite {
   }
 
   test("derived deletes from an overwrite of a DV-carrying file exclude the DV'd rows") {
-    val dir = Files.createTempDirectory("graft-cdf-dv-ow").toString
+    val dir = TestSpark.tempDir("graft-cdf-dv-ow")
     // ONE file so the DV and the overwrite touch the same file
     spark.range(0, 10).select(col("id"), (col("id") * 1.0).as("score"))
       .repartition(1).write.format("delta").save(dir) // v0
@@ -227,7 +225,7 @@ class DeltaCdfSuite extends AnyFunSuite {
   }
 
   test("derived deletes on a PARTITIONED table label columns correctly") {
-    val dir = Files.createTempDirectory("graft-cdf-part").toString
+    val dir = TestSpark.tempDir("graft-cdf-part")
     // partition column k is NOT last in the declared schema — the provider
     // scan appends partition columns last, so a positional rename would
     // swap values into the wrong columns
@@ -250,7 +248,7 @@ class DeltaCdfSuite extends AnyFunSuite {
   }
 
   test("DML cdc on a partitioned table: hive layout, populated partitionValues, exact read") {
-    val dir = Files.createTempDirectory("graft-cdf-hive").toString
+    val dir = TestSpark.tempDir("graft-cdf-hive")
     Seq(("a", 1, 10.0), ("a", 2, 20.0), ("b", 3, 30.0), ("b", 4, 40.0))
       .toDF("k", "id", "score")
       .write.format("delta").partitionBy("k").save(dir) // v0
@@ -283,7 +281,7 @@ class DeltaCdfSuite extends AnyFunSuite {
   }
 
   test("legacy flat cdc files (embedded partition columns, empty partitionValues) still read") {
-    val dir = Files.createTempDirectory("graft-cdf-flat").toString
+    val dir = TestSpark.tempDir("graft-cdf-flat")
     Seq(("a", 1, 10.0), ("b", 2, 20.0)).toDF("k", "id", "score")
       .write.format("delta").partitionBy("k").save(dir) // v0
     spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES ('delta.enableChangeDataFeed' = 'true')") // v1
@@ -294,7 +292,7 @@ class DeltaCdfSuite extends AnyFunSuite {
     val target = new org.apache.hadoop.fs.Path(dir, rel)
     val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
     fs.mkdirs(target.getParent)
-    val staging = Files.createTempDirectory("graft-cdf-flat-stage").toString
+    val staging = TestSpark.tempDir("graft-cdf-flat-stage")
     Seq(("a", 1, 10.0, "delete")).toDF("k", "id", "score", "_change_type")
       .coalesce(1).write.mode("overwrite").parquet(staging)
     val part = fs.listStatus(new org.apache.hadoop.fs.Path(staging))
@@ -342,7 +340,7 @@ class DeltaCdfSuite extends AnyFunSuite {
   }
 
   test("not-enabled read and pre-CDF DV commits fail loudly") {
-    val dir = Files.createTempDirectory("graft-cdf-off").toString
+    val dir = TestSpark.tempDir("graft-cdf-off")
     DeltaWriter.write((0 until 10).map(i => (i, i * 1.0)).toDF("id", "score"),
       dir, SaveMode.Append, Nil)
     val e = intercept[IllegalArgumentException] { cdf(dir, 0, 0).collect() }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +13,7 @@ class DeltaChangesSuite extends AnyFunSuite {
 
   test("readChanges yields each appended row once, tagged with its commit version") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-cdc").toString
+    val dir = TestSpark.tempDir("graft-cdc")
     DeltaWriter.write(Seq((1L, "a"), (2L, "b")).toDF("id", "k"), dir, SaveMode.Append, Seq("k"))
     DeltaWriter.write(Seq((3L, "a")).toDF("id", "k"), dir, SaveMode.Append, Seq("k"))
     // split partition k=a into small files first? already small; compact:
@@ -47,7 +45,7 @@ class DeltaChangesSuite extends AnyFunSuite {
 
   test("a data-removing commit in the range fails fast unless explicitly ignored") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-cdc-rm").toString
+    val dir = TestSpark.tempDir("graft-cdc-rm")
     DeltaWriter.write(Seq((1L, "a"), (2L, "b")).toDF("id", "k"), dir, SaveMode.Append, Nil)
     DeltaWriter.write(Seq((3L, "c")).toDF("id", "k"), dir, SaveMode.Append, Nil)
     // version 2: Overwrite = dataChange=true removes + adds — the adds
@@ -69,7 +67,7 @@ class DeltaChangesSuite extends AnyFunSuite {
 
   test("a deletion-vector DELETE's re-add serves only the rows its vector leaves") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-cdc-dv").toString
+    val dir = TestSpark.tempDir("graft-cdc-dv")
     DeltaWriter.write(Seq(1L, 2L, 3L, 4L).toDF("id").coalesce(1), dir, SaveMode.Append, Nil)
     DeltaDml.deleteWithDv(spark, dir, "id = 2")
     assert(DeltaTable.read(spark, dir).select("id").as[Long].collect().sorted.toSeq ===

@@ -109,7 +109,7 @@ class DeltaCheckpointSuite extends AnyFunSuite {
 
   private def seed(appends: Int): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-cp").toString
+    val dir = TestSpark.tempDir("graft-cp")
     (0 until appends).foreach { a =>
       DeltaWriter.write(
         (0 until 10).map(i => (a * 10 + i, s"r${a * 10 + i}")).toDF("id", "name"),
@@ -154,7 +154,7 @@ class DeltaCheckpointSuite extends AnyFunSuite {
 
   test("delta.checkpointPolicy=v2 makes the WRITER emit v2 checkpoints on the cadence") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-cp-v2w").toString
+    val dir = TestSpark.tempDir("graft-cp-v2w")
     DeltaWriter.write((0 until 10).map(i => (i, s"r$i")).toDF("id", "name"),
       dir, SaveMode.Append, Nil) // v0
     spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES ('delta.checkpointPolicy' = 'v2')") // v1
@@ -208,7 +208,7 @@ class DeltaCheckpointSuite extends AnyFunSuite {
 
   test("cadence audit: 25+ mixed-path commits replay with ≤ 1 checkpoint + tail JSONs") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-cadence").toString
+    val dir = TestSpark.tempDir("graft-cadence")
     def append(a: Int): Unit = DeltaWriter.write(
       (0 until 10).map(i => (a * 100 + i, s"r$i", i * 1.0)).toDF("id", "name", "score"),
       dir, SaveMode.Append, Nil)
@@ -254,7 +254,7 @@ class DeltaCheckpointSuite extends AnyFunSuite {
 
   test("v2 policy + partSize writes SIDECAR checkpoints that replay whole") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-sidecar-w").toString
+    val dir = TestSpark.tempDir("graft-ckpt-sidecar-w")
     DeltaWriter.write(Seq((0, "x")).toDF("id", "s").coalesce(1), dir,
       org.apache.spark.sql.SaveMode.Append, Nil)
     spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES " +
@@ -293,7 +293,7 @@ class DeltaCheckpointSuite extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-statsparsed").toString
+    val dir = TestSpark.tempDir("graft-ckpt-statsparsed")
     DeltaWriter.write((1 to 10).map(i => (i, s"a$i")).toDF("id", "s").coalesce(1),
       dir, org.apache.spark.sql.SaveMode.Append, Nil)
     DeltaWriter.write((100 to 110).map(i => (i, s"b$i")).toDF("id", "s").coalesce(1),
@@ -347,7 +347,7 @@ class DeltaCheckpointSuite extends AnyFunSuite {
 
   test("an INCOMPLETE multipart checkpoint is treated as absent, never replayed truncated") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-partial").toString
+    val dir = TestSpark.tempDir("graft-ckpt-partial")
     DeltaWriter.write(Seq((0, "x")).toDF("id", "s").coalesce(1), dir,
       org.apache.spark.sql.SaveMode.Append, Nil)
     spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES " +
@@ -375,7 +375,7 @@ class DeltaCheckpointSuite extends AnyFunSuite {
 
   test("delta.checkpoint.partSize writes multipart checkpoints that replay whole") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-parts").toString
+    val dir = TestSpark.tempDir("graft-ckpt-parts")
     DeltaWriter.write(Seq((0, "x")).toDF("id", "s").coalesce(1), dir,
       org.apache.spark.sql.SaveMode.Append, Nil)
     spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES " +
@@ -406,7 +406,7 @@ class DeltaCheckpointSuite extends AnyFunSuite {
 
   test("delta.checkpointInterval shortens the checkpoint cadence") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-interval").toString
+    val dir = TestSpark.tempDir("graft-ckpt-interval")
     DeltaWriter.write(Seq((0, "x")).toDF("id", "s").coalesce(1), dir,
       org.apache.spark.sql.SaveMode.Append, Nil)
     spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES " +
@@ -428,7 +428,7 @@ class DeltaCheckpointSuite extends AnyFunSuite {
   test("writeStatsAsStruct emits typed stats_parsed a writeStatsAsJson=false reader can skip on") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-structstats").toString
+    val dir = TestSpark.tempDir("graft-ckpt-structstats")
     DeltaWriter.write((1 to 10).map(i => (i, s"a$i")).toDF("id", "s").coalesce(1),
       dir, org.apache.spark.sql.SaveMode.Append, Nil)
     spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES " +
@@ -475,7 +475,7 @@ class DeltaCheckpointSuite extends AnyFunSuite {
   test("writeStatsAsStruct on a column-mapped table keys stats_parsed by PHYSICAL names") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-mapstats").toString
+    val dir = TestSpark.tempDir("graft-ckpt-mapstats")
     DeltaWriter.write((1 to 10).map(i => (i, s"a$i")).toDF("id", "s").coalesce(1),
       dir, org.apache.spark.sql.SaveMode.Append, Nil)
     graft.sources.delta.DeltaSchema.renameColumn(spark, dir, "s", "txt") // physical stays "s"
@@ -500,7 +500,7 @@ class DeltaCheckpointSuite extends AnyFunSuite {
 
   test("writeStatsAsJson=false without writeStatsAsStruct is refused") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-nostats").toString
+    val dir = TestSpark.tempDir("graft-ckpt-nostats")
     DeltaWriter.write(Seq((1, "a")).toDF("id", "s").coalesce(1),
       dir, org.apache.spark.sql.SaveMode.Append, Nil)
     spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES " +
@@ -523,7 +523,7 @@ class DeltaCheckpointSuite extends AnyFunSuite {
       ("('delta.checkpointPolicy' = 'v2', 'delta.checkpoint.partSize' = '3')",
         """0*2\.checkpoint\.[^.]+\.parquet""")
     ).foreach { case (props, cpPattern) =>
-      val dir = Files.createTempDirectory("graft-cp-deferred").toString
+      val dir = TestSpark.tempDir("graft-cp-deferred")
       DeltaWriter.write((0 until 10).map(i => (i, s"r$i")).toDF("id", "name"),
         dir, SaveMode.Append, Nil)
       spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES $props")

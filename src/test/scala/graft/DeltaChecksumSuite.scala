@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +13,7 @@ class DeltaChecksumSuite extends AnyFunSuite {
   import spark.implicits._
 
   private def tmpTable(): String =
-    Files.createTempDirectory("graft-crc").toString + "/tbl"
+    TestSpark.tempDir("graft-crc") + "/tbl"
 
   test("every commit publishes a .crc whose totals match the replayed snapshot") {
     val table = tmpTable()

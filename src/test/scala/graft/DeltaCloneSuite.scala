@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,7 +14,7 @@ class DeltaCloneSuite extends AnyFunSuite {
 
   private def freshSource(): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-clone-src").toString
+    val dir = TestSpark.tempDir("graft-clone-src")
     (0 until 3).foreach { i =>
       val df = Seq((i * 2, "a", s"row${i}a"), (i * 2 + 1, "b", s"row${i}b"))
         .toDF("id", "k", "payload")
@@ -30,7 +28,7 @@ class DeltaCloneSuite extends AnyFunSuite {
 
   test("clone reads the source's content without copying any data file") {
     val src = freshSource()
-    val dst = Files.createTempDirectory("graft-clone-dst").toString + "/t"
+    val dst = TestSpark.tempDir("graft-clone-dst") + "/t"
     val v = DeltaMaintenance.shallowClone(spark, src, dst)
     assert(v === 0L)
     assert(rows(dst) === rows(src))
@@ -56,7 +54,7 @@ class DeltaCloneSuite extends AnyFunSuite {
   test("writes and DML on the clone never mutate the source") {
     import spark.implicits._
     val src = freshSource()
-    val dst = Files.createTempDirectory("graft-clone-dst").toString + "/t"
+    val dst = TestSpark.tempDir("graft-clone-dst") + "/t"
     DeltaMaintenance.shallowClone(spark, src, dst)
     val srcBefore = rows(src)
     val srcVersionBefore = DeltaLog.snapshot(spark, src).version
@@ -75,7 +73,7 @@ class DeltaCloneSuite extends AnyFunSuite {
 
   test("vacuum on the clone never deletes shared source files") {
     val src = freshSource()
-    val dst = Files.createTempDirectory("graft-clone-dst").toString + "/t"
+    val dst = TestSpark.tempDir("graft-clone-dst") + "/t"
     DeltaMaintenance.shallowClone(spark, src, dst)
     // age everything out: retention 0 deletes any unreferenced local file
     val deleted = DeltaMaintenance.vacuum(spark, dst, retentionMs = 0L)
@@ -91,7 +89,7 @@ class DeltaCloneSuite extends AnyFunSuite {
     // appear) — a miss there would report the whole live set missing and
     // fsck(dryRun=false) would empty the clone
     val src = freshSource()
-    val dst = Files.createTempDirectory("graft-clone-dstd").toString + "/t"
+    val dst = TestSpark.tempDir("graft-clone-dstd") + "/t"
     DeltaMaintenance.shallowClone(spark, src, dst)
     withPlane("frame") {
       assert(DeltaMaintenance.fsck(spark, dst, dryRun = true) === Nil,
@@ -104,8 +102,8 @@ class DeltaCloneSuite extends AnyFunSuite {
 
   test("cloning a clone resolves already-absolute paths") {
     val src = freshSource()
-    val mid = Files.createTempDirectory("graft-clone-mid").toString + "/t"
-    val dst = Files.createTempDirectory("graft-clone-dst2").toString + "/t"
+    val mid = TestSpark.tempDir("graft-clone-mid") + "/t"
+    val dst = TestSpark.tempDir("graft-clone-dst2") + "/t"
     DeltaMaintenance.shallowClone(spark, src, mid)
     DeltaMaintenance.shallowClone(spark, mid, dst)
     assert(rows(dst) === rows(src))
@@ -113,14 +111,14 @@ class DeltaCloneSuite extends AnyFunSuite {
 
   test("a clone of a column-mapped source carries the source PROTOCOL (not a hardcoded 1,2)") {
     import spark.implicits._
-    val src = java.nio.file.Files.createTempDirectory("graft-clone-cm").toString
+    val src = TestSpark.tempDir("graft-clone-cm")
     DeltaWriter.write(Seq((1L, 1.5), (2L, 2.5)).toDF("id", "score").coalesce(1),
       src, SaveMode.Append, Nil)
     graft.sources.delta.DeltaSchema.renameColumn(spark, src, "score", "points")
     val srcProto = DeltaLog.snapshot(spark, src).protocol
     assert(srcProto.minReaderVersion >= 2 ||
       srcProto.readerFeatures.contains("columnMapping"))
-    val tgt = java.nio.file.Files.createTempDirectory("graft-clone-cm-t").toString + "/t"
+    val tgt = TestSpark.tempDir("graft-clone-cm-t") + "/t"
     DeltaMaintenance.shallowClone(spark, src, tgt)
     // a (1,2) clone protocol with a mapping-mode configuration is
     // spec-invalid: foreign readers would resolve LOGICAL names against
@@ -139,7 +137,7 @@ class DeltaCloneSuite extends AnyFunSuite {
 
   test("deep clone survives the source being deleted outright") {
     val src = freshSource()
-    val dst = Files.createTempDirectory("graft-dclone-dst").toString + "/t"
+    val dst = TestSpark.tempDir("graft-dclone-dst") + "/t"
     val expected = rows(src)
     assert(spark.sql(s"CREATE TABLE delta.`$dst` DEEP CLONE delta.`$src`")
       .collect()(0).getLong(0) === 0L)
@@ -163,11 +161,11 @@ class DeltaCloneSuite extends AnyFunSuite {
 
   test("deep clone of a DV-carrying source keeps deleted rows hidden after source loss") {
     import spark.implicits._
-    val src = Files.createTempDirectory("graft-dclone-dv-src").toString
+    val src = TestSpark.tempDir("graft-dclone-dv-src")
     DeltaWriter.write((1 to 10).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1),
       src, SaveMode.Append, Nil)
     DeltaDml.deleteWithDv(spark, src, "id % 2 = 0")
-    val dst = Files.createTempDirectory("graft-dclone-dv-dst").toString + "/t"
+    val dst = TestSpark.tempDir("graft-dclone-dv-dst") + "/t"
     DeltaMaintenance.deepClone(spark, src, dst)
     val fs = new org.apache.hadoop.fs.Path(src)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -178,8 +176,8 @@ class DeltaCloneSuite extends AnyFunSuite {
 
   test("deep clone of a shallow clone materializes the absolute references") {
     val src = freshSource()
-    val mid = Files.createTempDirectory("graft-dclone-mid").toString + "/t"
-    val dst = Files.createTempDirectory("graft-dclone-dst2").toString + "/t"
+    val mid = TestSpark.tempDir("graft-dclone-mid") + "/t"
+    val dst = TestSpark.tempDir("graft-dclone-dst2") + "/t"
     DeltaMaintenance.shallowClone(spark, src, mid)
     val expected = rows(src)
     DeltaMaintenance.deepClone(spark, mid, dst)

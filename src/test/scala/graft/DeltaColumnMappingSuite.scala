@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,7 +22,7 @@ class DeltaColumnMappingSuite extends AnyFunSuite {
 
   private def fresh(partitioned: Boolean = false): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-colmap").toString
+    val dir = TestSpark.tempDir("graft-colmap")
     val df = (0 until 20).map(i => (i, s"n$i", i * 1.5, i % 4)).toDF("id", "name", "score", "bucket")
     DeltaWriter.write(df, dir, SaveMode.Append, if (partitioned) Seq("bucket") else Nil)
     dir
@@ -91,7 +89,7 @@ class DeltaColumnMappingSuite extends AnyFunSuite {
 
   test("filter pushdown + stats skipping keep working on the renamed column") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-colmap-skip").toString
+    val dir = TestSpark.tempDir("graft-colmap-skip")
     // two appends → two files with disjoint score ranges
     DeltaWriter.write((0 until 10).map(i => (i, i * 1.0)).toDF("id", "score"),
       dir, SaveMode.Append, Nil)
@@ -274,7 +272,7 @@ class DeltaColumnMappingSuite extends AnyFunSuite {
   test("id-mode mapping reads by parquet field id, not by any column name") {
     import org.apache.spark.sql.types._
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-idmode").toString
+    val dir = TestSpark.tempDir("graft-idmode")
     def fidMd(id: Long) = new MetadataBuilder().putLong("parquet.field.id", id).build()
     // data file with "foreign" column names + field ids in the footer
     (0 until 10).map(i => (i.toLong, i * 2.0)).toDF("a", "b")
@@ -320,7 +318,7 @@ class DeltaColumnMappingSuite extends AnyFunSuite {
   test("nested mapped names (name mode) read through the path-keyed rename; writes refuse") {
     import org.apache.spark.sql.types._
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-nestmap").toString
+    val dir = TestSpark.tempDir("graft-nestmap")
     // foreign-written file: physical names at EVERY level
     Seq((1L, (10, "a")), (2L, (20, "b")), (3L, (30, "c")))
       .toDF("kcol", "scol")
@@ -370,7 +368,7 @@ class DeltaColumnMappingSuite extends AnyFunSuite {
   test("nested id-mode: struct fields resolve by parquet field id at every level") {
     import org.apache.spark.sql.types._
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-idnest").toString
+    val dir = TestSpark.tempDir("graft-idnest")
     // foreign data file: names agree with NOTHING (neither logical nor the
     // log's physical names) — only the field ids, at every level, line up
     def fidMd(id: Long) = new MetadataBuilder().putLong("parquet.field.id", id).build()

@@ -34,7 +34,7 @@ class DeltaCommitSuite extends AnyFunSuite {
 
   test("a transaction that loses every race deletes its staged file and reports its attempts") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-commit-exhaust").toString
+    val dir = TestSpark.tempDir("graft-commit-exhaust")
     DeltaWriter.write(Seq(1L, 2L).toDF("id"), dir, SaveMode.Append, Nil)
     val staged = Paths.get(dir, "part-staged.parquet")
     Files.write(staged, Array[Byte](1, 2, 3))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
@@ -21,7 +19,7 @@ class DeltaConcurrencySuite extends AnyFunSuite {
 
   test("concurrent appends serialize into distinct versions with no lost rows") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-concurrent").toString
+    val dir = TestSpark.tempDir("graft-concurrent")
     DeltaWriter.write(Seq((0L, "seed")).toDF("id", "payload"), dir, SaveMode.Append, Nil)
 
     val writers = (1 to 4).map { i =>
@@ -51,7 +49,7 @@ class DeltaConcurrencySuite extends AnyFunSuite {
   import spark.implicits._
 
   private def partitionedTable(): String = {
-    val dir = Files.createTempDirectory("graft-conflict").toString
+    val dir = TestSpark.tempDir("graft-conflict")
     DeltaWriter.write(
       (1 to 40).map(i => (i.toLong, s"r$i", i % 4)).toDF("id", "payload", "p"),
       dir, SaveMode.Append, Seq("p"))
@@ -82,7 +80,7 @@ class DeltaConcurrencySuite extends AnyFunSuite {
   }
 
   test("concurrent MERGEs upserting the same ABSENT key: the loser aborts, no duplicate insert") {
-    val dir = Files.createTempDirectory("graft-merge-race").toString
+    val dir = TestSpark.tempDir("graft-merge-race")
     DeltaWriter.write(Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1),
       dir, SaveMode.Append, Nil)
     def upsert(beforeCommit: () => Unit): Unit =
@@ -104,7 +102,7 @@ class DeltaConcurrencySuite extends AnyFunSuite {
   }
 
   test("MERGE proceeds past a concurrent BLIND append (WriteSerializable exemption)") {
-    val dir = Files.createTempDirectory("graft-merge-append").toString
+    val dir = TestSpark.tempDir("graft-merge-append")
     DeltaWriter.write(Seq((1L, "a")).toDF("id", "v").coalesce(1),
       dir, SaveMode.Append, Nil)
     val m = DeltaMerge.merge(spark, dir,
@@ -121,7 +119,7 @@ class DeltaConcurrencySuite extends AnyFunSuite {
   }
 
   test("read-set surface classification: appends are blind; RESTORE re-adds are not") {
-    val dir = Files.createTempDirectory("graft-readset-cls").toString
+    val dir = TestSpark.tempDir("graft-readset-cls")
     DeltaWriter.write(Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1),
       dir, SaveMode.Append, Nil)                       // v0: blind append
     DeltaDml.delete(spark, dir, "id >= 1")             // v1: delete-all (removes only)
@@ -137,7 +135,7 @@ class DeltaConcurrencySuite extends AnyFunSuite {
   }
 
   test("row-level DML aborts when a concurrent MERGE added data in its read scope") {
-    val dir = Files.createTempDirectory("graft-dml-readset").toString
+    val dir = TestSpark.tempDir("graft-dml-readset")
     DeltaWriter.write((1 to 20).map(i => (i.toLong, s"r$i")).toDF("id", "payload")
       .coalesce(1), dir, SaveMode.Append, Nil)
     // the MERGE inserts a row the DELETE's unpartitioned predicate cannot
@@ -155,7 +153,7 @@ class DeltaConcurrencySuite extends AnyFunSuite {
   }
 
   test("overlapping-file DML still aborts, and the loser's changes do not land") {
-    val dir = Files.createTempDirectory("graft-conflict").toString
+    val dir = TestSpark.tempDir("graft-conflict")
     DeltaWriter.write((1 to 20).map(i => (i.toLong, s"r$i")).toDF("id", "payload")
       .coalesce(1), dir, SaveMode.Append, Nil)
     val e = intercept[java.util.ConcurrentModificationException] {
@@ -182,7 +180,7 @@ class DeltaConcurrencySuite extends AnyFunSuite {
   }
 
   test("a concurrent DV attach aborts a copy-on-write rewrite of the same file") {
-    val dir = Files.createTempDirectory("graft-conflict").toString
+    val dir = TestSpark.tempDir("graft-conflict")
     DeltaWriter.write((1 to 20).map(i => (i.toLong, s"r$i")).toDF("id", "payload")
       .coalesce(1), dir, SaveMode.Append, Nil)
     // the copy-on-write rewrite is staged from the PRE-DV state; letting it
@@ -209,7 +207,7 @@ class DeltaConcurrencySuite extends AnyFunSuite {
     //  - 1 OPTIMIZE WHERE on its own partition
     // Success = every op commits exactly once, the log is linear, and the
     // final snapshot equals the SERIAL result of the 8 operations.
-    val dir = Files.createTempDirectory("graft-stress").toString
+    val dir = TestSpark.tempDir("graft-stress")
     // 3 seed commits so every partition holds 3 files (gives OPTIMIZE real
     // work and DELETEs multiple touched files)
     (0 until 3).foreach { b =>
@@ -270,7 +268,7 @@ class DeltaConcurrencySuite extends AnyFunSuite {
   }
 
   test("OPTIMIZE proceeds past a disjoint concurrent append, aborts when its sources change") {
-    val dir = Files.createTempDirectory("graft-conflict").toString
+    val dir = TestSpark.tempDir("graft-conflict")
     (1 to 3).foreach { i =>
       DeltaWriter.write(Seq((i.toLong, s"r$i", 1), (i + 10L, s"s$i", 2))
         .toDF("id", "payload", "p"), dir, SaveMode.Append, Seq("p"))

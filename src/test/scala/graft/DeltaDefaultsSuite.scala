@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,7 +17,7 @@ class DeltaDefaultsSuite extends AnyFunSuite {
   import spark.implicits._
 
   test("ADD COLUMN DEFAULT: future writes fill it, existing rows read NULL") {
-    val dir = Files.createTempDirectory("graft-defaults").toString
+    val dir = TestSpark.tempDir("graft-defaults")
     DeltaWriter.write(Seq((1, 10.0), (2, 20.0)).toDF("id", "v").coalesce(1),
       dir, SaveMode.Append, Nil)
     spark.sql(s"ALTER TABLE delta.`$dir` ADD COLUMN tier STRING DEFAULT 'std'")
@@ -45,7 +43,7 @@ class DeltaDefaultsSuite extends AnyFunSuite {
   }
 
   test("SET DEFAULT / DROP DEFAULT on an existing column") {
-    val dir = Files.createTempDirectory("graft-defaults-set").toString
+    val dir = TestSpark.tempDir("graft-defaults-set")
     DeltaWriter.write(
       Seq((1, Option("a")), (2, None)).toDF("id", "k").coalesce(1),
       dir, SaveMode.Append, Nil)
@@ -71,7 +69,7 @@ class DeltaDefaultsSuite extends AnyFunSuite {
   }
 
   test("defaults survive DML rewrites and constant-fold at ALTER time") {
-    val dir = Files.createTempDirectory("graft-defaults-dml").toString
+    val dir = TestSpark.tempDir("graft-defaults-dml")
     DeltaWriter.write(Seq((1, 10.0), (2, 20.0)).toDF("id", "v").coalesce(1),
       dir, SaveMode.Append, Nil)
     // a folded arithmetic default is fine — stored re-literalized; it only

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,7 +14,7 @@ class DeltaDmlSuite extends AnyFunSuite {
   /** Partitioned table: partitions a/b, two files each (two appends). */
   private def freshTable(): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-dml").toString
+    val dir = TestSpark.tempDir("graft-dml")
     (0 until 2).foreach { i =>
       val df = Seq(
         (i * 10 + 1, "a", 100 + i), (i * 10 + 2, "a", 200 + i),
@@ -55,7 +53,7 @@ class DeltaDmlSuite extends AnyFunSuite {
 
   test("DELETE keeps rows whose predicate evaluates to NULL (SQL three-valued logic)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-dml-null").toString
+    val dir = TestSpark.tempDir("graft-dml-null")
     DeltaWriter.write(
       Seq((1L, Some(1)), (2L, Some(10)), (3L, None))
         .toDF("id", "x").coalesce(1),
@@ -71,7 +69,7 @@ class DeltaDmlSuite extends AnyFunSuite {
 
   test("UPDATE SET evaluating NULL into a non-nullable column fails loudly") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-dml-nn").toString
+    val dir = TestSpark.tempDir("graft-dml-nn")
     // Long/Int primitives make toDF schema non-nullable — id and v are
     // NOT NULL columns in the table schema
     DeltaWriter.write(Seq((1L, 10L), (2L, 20L)).toDF("id", "v").coalesce(1),
@@ -114,7 +112,7 @@ class DeltaDmlSuite extends AnyFunSuite {
 
   test("update applies SET simultaneously against the pre-update row") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-dml-swap").toString
+    val dir = TestSpark.tempDir("graft-dml-swap")
     DeltaWriter.write(
       Seq((1, 10, 20), (2, 30, 40)).toDF("id", "x", "y"),
       dir, SaveMode.Append, Nil)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,7 +16,7 @@ class DeltaIdempotentWriteSuite extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  private def tmp() = Files.createTempDirectory("graft-idem").toString
+  private def tmp() = TestSpark.tempDir("graft-idem")
 
   test("redelivered batch write with same (appId, version) is a no-op") {
     import spark.implicits._

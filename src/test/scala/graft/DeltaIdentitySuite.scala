@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,7 +15,7 @@ class DeltaIdentitySuite extends AnyFunSuite {
   import spark.implicits._
 
   test("creation assigns contiguous ids, protocol is writer v6, appends continue") {
-    val dir = Files.createTempDirectory("graft-ident").toString
+    val dir = TestSpark.tempDir("graft-ident")
     DeltaWriter.write(
       (0 until 10).map(i => (s"r$i", i * 1.0)).toDF("name", "score"),
       dir, SaveMode.Append, Nil,
@@ -38,7 +36,7 @@ class DeltaIdentitySuite extends AnyFunSuite {
   }
 
   test("custom start/step; providing the column explicitly refuses") {
-    val dir = Files.createTempDirectory("graft-ident2").toString
+    val dir = TestSpark.tempDir("graft-ident2")
     DeltaWriter.write(
       Seq(("a", 1.0), ("b", 2.0), ("c", 3.0)).toDF("name", "score"),
       dir, SaveMode.Append, Nil,
@@ -58,7 +56,7 @@ class DeltaIdentitySuite extends AnyFunSuite {
   }
 
   test("identity appends re-emit metaData WITHOUT wiping the configuration") {
-    val dir = Files.createTempDirectory("graft-ident4").toString
+    val dir = TestSpark.tempDir("graft-ident4")
     DeltaWriter.write(Seq(("a", 1.0)).toDF("name", "score"),
       dir, SaveMode.Append, Nil, identityColumns = Map("rid" -> (1L, 1L)))
     spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES ('team' = 'graft')")
@@ -76,7 +74,7 @@ class DeltaIdentitySuite extends AnyFunSuite {
   }
 
   test("identity assignment stays in the DataFrame path (no RDD scan in any executed plan)") {
-    val dir = Files.createTempDirectory("graft-ident-plans").toString
+    val dir = TestSpark.tempDir("graft-ident-plans")
     // the old zipWithIndex path round-tripped through an RDD, so its
     // staged write scanned an ExistingRDD (codegen boundary + an extra
     // count job inside zipWithIndex). Capture every plan the identity
@@ -110,7 +108,7 @@ class DeltaIdentitySuite extends AnyFunSuite {
 
   test("MERGE INSERT assigns identity values and advances the high water mark") {
     import graft.sources.delta.{DeltaMerge, MergeClause}
-    val dir = Files.createTempDirectory("graft-ident-merge").toString
+    val dir = TestSpark.tempDir("graft-ident-merge")
     DeltaWriter.write(
       Seq(("a", 1.0), ("b", 2.0), ("c", 3.0)).toDF("name", "score"),
       dir, SaveMode.Append, Nil, identityColumns = Map("rid" -> (1L, 1L)))
@@ -137,7 +135,7 @@ class DeltaIdentitySuite extends AnyFunSuite {
 
   test("MERGE refuses explicit assignment to identity columns; update-only merges skip the hwm") {
     import graft.sources.delta.{DeltaMerge, MergeClause}
-    val dir = Files.createTempDirectory("graft-ident-merge2").toString
+    val dir = TestSpark.tempDir("graft-ident-merge2")
     DeltaWriter.write(Seq(("a", 1.0)).toDF("name", "score"),
       dir, SaveMode.Append, Nil, identityColumns = Map("rid" -> (1L, 1L)))
     val e1 = intercept[IllegalArgumentException] {
@@ -165,7 +163,7 @@ class DeltaIdentitySuite extends AnyFunSuite {
   }
 
   test("SQL MERGE INSERT * on an identity table omits the identity column and assigns it") {
-    val dir = Files.createTempDirectory("graft-ident-mergesql").toString
+    val dir = TestSpark.tempDir("graft-ident-mergesql")
     DeltaWriter.write(Seq(("a", 1.0)).toDF("name", "score"),
       dir, SaveMode.Append, Nil, identityColumns = Map("rid" -> (1L, 1L)))
     Seq(("a", 10.0), ("b", 2.0)).toDF("name", "score")
@@ -182,7 +180,7 @@ class DeltaIdentitySuite extends AnyFunSuite {
 
   test("UPDATE refuses SET on an identity column") {
     import graft.sources.delta.DeltaDml
-    val dir = Files.createTempDirectory("graft-ident-upd").toString
+    val dir = TestSpark.tempDir("graft-ident-upd")
     DeltaWriter.write(Seq(("a", 1.0)).toDF("name", "score"),
       dir, SaveMode.Append, Nil, identityColumns = Map("rid" -> (1L, 1L)))
     val e = intercept[IllegalArgumentException] {
@@ -193,7 +191,7 @@ class DeltaIdentitySuite extends AnyFunSuite {
 
   test("RESTORE preserves the identity high water mark (ids are never re-issued)") {
     import graft.sources.delta.DeltaMaintenance
-    val dir = Files.createTempDirectory("graft-ident-restore").toString
+    val dir = TestSpark.tempDir("graft-ident-restore")
     DeltaWriter.write(Seq(("a", 1.0), ("b", 2.0)).toDF("name", "score"),
       dir, SaveMode.Append, Nil, identityColumns = Map("rid" -> (1L, 1L)))   // v0: hwm 2
     DeltaWriter.write(Seq(("c", 3.0), ("d", 4.0)).toDF("name", "score"),
@@ -209,7 +207,7 @@ class DeltaIdentitySuite extends AnyFunSuite {
   }
 
   test("CHECK constraints see the assigned identity values") {
-    val dir = Files.createTempDirectory("graft-ident3").toString
+    val dir = TestSpark.tempDir("graft-ident3")
     DeltaWriter.write(Seq(("a", 1.0)).toDF("name", "score"),
       dir, SaveMode.Append, Nil, identityColumns = Map("rid" -> (1L, 1L)))
     spark.sql(s"ALTER TABLE delta.`$dir` ADD CONSTRAINT pos CHECK (rid > 0)")
@@ -219,7 +217,7 @@ class DeltaIdentitySuite extends AnyFunSuite {
 
   test("failed CHECK validation does not leak the pinned identity frame (write + merge)") {
     import graft.sources.delta.DeltaMerge
-    val dir = Files.createTempDirectory("graft-ident-leak").toString
+    val dir = TestSpark.tempDir("graft-ident-leak")
     DeltaWriter.write(Seq(("a", 1.0)).toDF("name", "score"),
       dir, SaveMode.Append, Nil, identityColumns = Map("rid" -> (1L, 1L)))
     spark.sql(s"ALTER TABLE delta.`$dir` ADD CONSTRAINT posscore CHECK (score > 0)")
@@ -241,7 +239,7 @@ class DeltaIdentitySuite extends AnyFunSuite {
   }
 
   test("SQL MERGE INSERT * errors when the SOURCE carries the identity column, either autoMerge setting") {
-    val dir = Files.createTempDirectory("graft-ident-srccarry").toString
+    val dir = TestSpark.tempDir("graft-ident-srccarry")
     DeltaWriter.write(Seq(("a", 1.0)).toDF("name", "score"),
       dir, SaveMode.Append, Nil, identityColumns = Map("rid" -> (1L, 1L)))
     Seq((99L, "b", 2.0)).toDF("rid", "name", "score")

@@ -15,7 +15,7 @@ class DeltaMaintenanceSuite extends AnyFunSuite {
   /** Fresh table: 4 small appends × 2 partitions = 8 small files. */
   private def freshTable(): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-opt").toString
+    val dir = TestSpark.tempDir("graft-opt")
     (0 until 4).foreach { i =>
       val df = Seq((i * 2, "a", s"row${i}a"), (i * 2 + 1, "b", s"row${i}b"))
         .toDF("id", "k", "payload")
@@ -105,7 +105,7 @@ class DeltaMaintenanceSuite extends AnyFunSuite {
 
   test("restore rolls back to an earlier version as a new commit, history preserved") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-restore").toString
+    val dir = TestSpark.tempDir("graft-restore")
     DeltaWriter.write(Seq((1L, "a"), (2L, "b")).toDF("id", "k"), dir, SaveMode.Append, Nil)  // v0
     DeltaWriter.write(Seq((3L, "c")).toDF("id", "k"), dir, SaveMode.Append, Nil)             // v1
     DeltaWriter.write(Seq((9L, "z")).toDF("id", "k"), dir, SaveMode.Overwrite, Nil)          // v2
@@ -217,7 +217,7 @@ class DeltaMaintenanceSuite extends AnyFunSuite {
 
   test("CONVERT TO DELTA rejects a stray file outside the declared partition layout") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-convert-stray").toString
+    val dir = TestSpark.tempDir("graft-convert-stray")
     (1 to 6).map(i => (i, s"k${i % 2}")).toDF("id", "k")
       .write.mode("overwrite").partitionBy("k").parquet(dir)
     // a root-level parquet outside the hive layout: converting it would
@@ -238,7 +238,7 @@ class DeltaMaintenanceSuite extends AnyFunSuite {
 
   test("CONVERT TO DELTA registers a hive-partitioned parquet dir in place") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-convert").toString
+    val dir = TestSpark.tempDir("graft-convert")
     val src = (1 to 20).map(i => (i, s"k${i % 3}", i * 1.5)).toDF("id", "k", "v")
     src.write.mode("overwrite").partitionBy("k").parquet(dir)
     val nFiles = {
@@ -274,7 +274,7 @@ class DeltaMaintenanceSuite extends AnyFunSuite {
 
   test("OPTIMIZE WHERE compacts only the matching partitions") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-opt-where").toString
+    val dir = TestSpark.tempDir("graft-opt-where")
     // two partitions, two small files each
     (1 to 2).foreach { _ =>
       DeltaWriter.write(
@@ -302,7 +302,7 @@ class DeltaMaintenanceSuite extends AnyFunSuite {
 
   test("OPTIMIZE WHERE ZORDER BY clusters only the scoped partition (SQL)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-zorder-where").toString
+    val dir = TestSpark.tempDir("graft-zorder-where")
     val rows = (1 to 400).map(i => (i % 20, (i * 7) % 20, if (i % 2 == 0) "a" else "b"))
     DeltaWriter.write(rows.toDF("x", "y", "k").repartition(4), dir, SaveMode.Append, Seq("k"))
     val before = DeltaLog.snapshot(spark, dir)
@@ -317,7 +317,7 @@ class DeltaMaintenanceSuite extends AnyFunSuite {
 
   test("VACUUM DRY RUN lists vacuumable files without deleting them") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-vacuum-dry").toString
+    val dir = TestSpark.tempDir("graft-vacuum-dry")
     DeltaWriter.write(Seq((1, "x")).toDF("id", "s").coalesce(1), dir, SaveMode.Append, Nil)
     // overwrite orphans the v0 file
     DeltaWriter.write(Seq((2, "y")).toDF("id", "s").coalesce(1), dir, SaveMode.Overwrite, Nil)
@@ -336,7 +336,7 @@ class DeltaMaintenanceSuite extends AnyFunSuite {
 
   test("DESCRIBE HISTORY surfaces per-operation metrics") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-opmetrics").toString
+    val dir = TestSpark.tempDir("graft-opmetrics")
     DeltaWriter.write(Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "k").coalesce(1),
       dir, SaveMode.Append, Nil)
     graft.sources.delta.DeltaDml.delete(spark, dir, "id = 2")
@@ -355,7 +355,7 @@ class DeltaMaintenanceSuite extends AnyFunSuite {
 
   test("dataSkippingNumIndexedCols bounds per-file stats to the first N columns") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-skipcols").toString
+    val dir = TestSpark.tempDir("graft-skipcols")
     DeltaWriter.write(Seq((1, "x", 2.0)).toDF("a", "b", "c").coalesce(1),
       dir, SaveMode.Append, Nil)
     spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES " +
@@ -380,7 +380,7 @@ class DeltaMaintenanceSuite extends AnyFunSuite {
 
   test("autoCompact bin-packs small-file creep after writes") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-autocompact").toString
+    val dir = TestSpark.tempDir("graft-autocompact")
     DeltaWriter.write(Seq((0, "x")).toDF("id", "s").coalesce(1), dir, SaveMode.Append, Nil)
     spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES " +
       "('delta.autoOptimize.autoCompact' = 'true')")
@@ -403,7 +403,7 @@ class DeltaMaintenanceSuite extends AnyFunSuite {
 
   test("expired-log cleanup retires pre-checkpoint metadata per retention") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-log-clean").toString
+    val dir = TestSpark.tempDir("graft-log-clean")
     DeltaWriter.write(Seq((0, "x")).toDF("id", "s").coalesce(1), dir, SaveMode.Append, Nil)
     spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES " +
       "('delta.logRetentionDuration' = 'interval 0 minutes')") // v1
@@ -427,7 +427,7 @@ class DeltaMaintenanceSuite extends AnyFunSuite {
     // time travel into the retired range fails loudly, not wrongly
     assert(scala.util.Try(DeltaTable.readVersion(spark, dir, 5L).count()).isFailure)
     // a default-retention table never loses young metadata
-    val dir2 = Files.createTempDirectory("graft-log-keep").toString
+    val dir2 = TestSpark.tempDir("graft-log-keep")
     (0 to 11).foreach { i =>
       DeltaWriter.write(Seq((i, "y")).toDF("id", "s").coalesce(1), dir2, SaveMode.Append, Nil)
     }
@@ -437,7 +437,7 @@ class DeltaMaintenanceSuite extends AnyFunSuite {
 
   test("SHOW PARTITIONS lists live partition tuples, metadata-only") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-show-parts").toString
+    val dir = TestSpark.tempDir("graft-show-parts")
     DeltaWriter.write(
       Seq((1, "a", 1), (2, "b", 1), (3, "b", 2)).toDF("id", "k", "n"),
       dir, SaveMode.Append, Seq("k", "n"))
@@ -448,7 +448,7 @@ class DeltaMaintenanceSuite extends AnyFunSuite {
     graft.sources.delta.DeltaDml.delete(spark, dir, "k = 'a'")
     assert(spark.sql(s"SHOW PARTITIONS delta.`$dir`")
       .collect().map(_.getString(0)).toSeq === Seq("k=b/n=1", "k=b/n=2"))
-    val unpart = Files.createTempDirectory("graft-show-unpart").toString
+    val unpart = TestSpark.tempDir("graft-show-unpart")
     DeltaWriter.write(Seq((1, "x")).toDF("id", "s"), unpart, SaveMode.Append, Nil)
     assert(scala.util.Try(
       spark.sql(s"SHOW PARTITIONS delta.`$unpart`").collect()).isFailure)
@@ -456,7 +456,7 @@ class DeltaMaintenanceSuite extends AnyFunSuite {
 
   test("FSCK repairs a table whose physical files were lost") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-fsck").toString
+    val dir = TestSpark.tempDir("graft-fsck")
     DeltaWriter.write(Seq((1, "x"), (2, "y")).toDF("id", "s").coalesce(1),
       dir, SaveMode.Append, Nil)
     DeltaWriter.write(Seq((3, "z")).toDF("id", "s").coalesce(1),
@@ -489,7 +489,7 @@ class DeltaMaintenanceSuite extends AnyFunSuite {
 
   test("CONVERT TO DELTA validates the declared partitioning; SQL surface works") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-convert-sql").toString
+    val dir = TestSpark.tempDir("graft-convert-sql")
     (1 to 6).map(i => (i, s"p${i % 2}")).toDF("id", "p")
       .write.mode("overwrite").partitionBy("p").parquet(dir)
     // declared columns must match the k=v directory layout

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,7 +15,7 @@ class DeltaMergeSuite extends AnyFunSuite {
   /** Target table: ids 1..4 in partition a/b (two files). */
   private def freshTable(): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-merge").toString
+    val dir = TestSpark.tempDir("graft-merge")
     DeltaWriter.write(
       Seq((1, "a", 100), (2, "a", 200), (3, "b", 300), (4, "b", 400))
         .toDF("id", "k", "v").coalesce(1),
@@ -126,7 +124,7 @@ class DeltaMergeSuite extends AnyFunSuite {
       StructField("v", IntegerType, nullable = true)))
     val rows = java.util.Arrays.asList(
       org.apache.spark.sql.Row(1, "a", Integer.valueOf(100)))
-    val dir = Files.createTempDirectory("graft-merge-null").toString
+    val dir = TestSpark.tempDir("graft-merge-null")
     DeltaWriter.write(spark.createDataFrame(rows, schema), dir, SaveMode.Append, Seq("k"))
     DeltaMerge.merge(
       spark, dir, Seq((8, "a")).toDF("id", "k"),
@@ -233,7 +231,7 @@ class DeltaMergeSuite extends AnyFunSuite {
 
   test("merge: CDF records per-clause change rows for a multi-clause merge") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-merge-cdf").toString
+    val dir = TestSpark.tempDir("graft-merge-cdf")
     DeltaWriter.write(
       Seq((1, 100), (2, 200), (3, 300)).toDF("id", "v").coalesce(1),
       dir, SaveMode.Append, Nil)
@@ -257,7 +255,7 @@ class DeltaMergeSuite extends AnyFunSuite {
 
   test("merge: appendOnly refuses BY SOURCE clauses, allows insert-only") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-merge-ao").toString
+    val dir = TestSpark.tempDir("graft-merge-ao")
     DeltaWriter.write(Seq((1, 100)).toDF("id", "v"), dir, SaveMode.Append, Nil)
     graft.sources.delta.DeltaSchema.setTblProperties(
       spark, dir, Map("delta.appendOnly" -> "true"))
@@ -306,7 +304,7 @@ class DeltaMergeSuite extends AnyFunSuite {
 
   test("merge: schema evolution on a CDF-enabled table carries the new column in change rows") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-merge-evo-cdf").toString
+    val dir = TestSpark.tempDir("graft-merge-evo-cdf")
     DeltaWriter.write(Seq((1, 100), (2, 200)).toDF("id", "v").coalesce(1),
       dir, SaveMode.Append, Nil)
     spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES ('delta.enableChangeDataFeed' = 'true')") // v1
@@ -391,7 +389,7 @@ class DeltaMergeSuite extends AnyFunSuite {
 
   test("merge: CDF insert change rows are exactly the unmatched source rows") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-merge-cdf-ins").toString
+    val dir = TestSpark.tempDir("graft-merge-cdf-ins")
     DeltaWriter.write(
       Seq((1, "a", 100), (2, "a", 200), (3, "b", 300)).toDF("id", "k", "v").coalesce(1),
       dir, SaveMode.Append, Seq("k"))

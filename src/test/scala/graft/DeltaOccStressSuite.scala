@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.ConcurrentModificationException
 
 import org.apache.spark.sql.SaveMode
@@ -120,7 +119,7 @@ class DeltaOccStressSuite extends AnyFunSuite {
       "serial reduction holds and every version's .crc validates") {
     var interleavings = 0
     (0 until Rounds).foreach { round =>
-      val dir = Files.createTempDirectory(s"graft-occ-$round").toString
+      val dir = TestSpark.tempDir(s"graft-occ-$round")
       DeltaWriter.write(Seq((0L, "seed")).toDF("id", "payload"),
         dir, SaveMode.Append, Nil)
       val writers = (0 until Threads).map(t =>

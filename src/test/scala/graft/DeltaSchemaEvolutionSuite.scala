@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,7 +17,7 @@ class DeltaSchemaEvolutionSuite extends AnyFunSuite {
   test("ALTER COLUMN TYPE widens metadata-only; narrow files upcast; wide appends land") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft-widen").toString
+    val dir = TestSpark.tempDir("graft-widen")
     Seq((1, 1.5f), (2, 2.5f)).toDF("id", "score")
       .write.format("delta").save(dir)
     val filesBefore = DeltaLog.snapshot(spark, dir).files.map(_.path).toSet
@@ -47,7 +45,7 @@ class DeltaSchemaEvolutionSuite extends AnyFunSuite {
   test("narrowing, cross-class changes and partition columns refuse") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft-widen-bad").toString
+    val dir = TestSpark.tempDir("graft-widen-bad")
     Seq((1L, "a", 2.5)).toDF("id", "k", "score")
       .write.format("delta").partitionBy("k").save(dir)
     intercept[IllegalArgumentException] {
@@ -63,7 +61,7 @@ class DeltaSchemaEvolutionSuite extends AnyFunSuite {
 
   test("mergeSchema append adds nullable columns; old rows read NULL") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-evolve").toString
+    val dir = TestSpark.tempDir("graft-evolve")
     Seq((1L, "a"), (2L, "b")).toDF("id", "k")
       .write.format("delta").partitionBy("k").save(dir)
 
@@ -96,7 +94,7 @@ class DeltaSchemaEvolutionSuite extends AnyFunSuite {
 
   test("dropping columns is rejected even with mergeSchema") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-evolve2").toString
+    val dir = TestSpark.tempDir("graft-evolve2")
     Seq((1L, "a", 0.1)).toDF("id", "k", "score")
       .write.format("delta").save(dir)
     val narrower = Seq((2L, "b")).toDF("id", "k")

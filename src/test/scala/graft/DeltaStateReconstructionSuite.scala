@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,7 +19,7 @@ class DeltaStateReconstructionSuite extends AnyFunSuite {
   import spark.implicits._
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft-recon-").toFile.getAbsolutePath
+    TestSpark.tempDir("graft-recon-")
 
   private def snapshotIn(plane: String, dir: String, versionAsOf: Option[Long] = None) =
     withPlane(plane)(DeltaLog.snapshot(spark, dir, versionAsOf = versionAsOf))

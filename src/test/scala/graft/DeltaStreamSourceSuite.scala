@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,13 +18,13 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
   import spark.implicits._
 
   test("readStream over a delta table delivers appended rows exactly once") {
-    val dir = Files.createTempDirectory("graft-stream-src").toString
+    val dir = TestSpark.tempDir("graft-stream-src")
     DeltaWriter.write(Seq((1, "a"), (2, "b")).toDF("id", "name"),
       dir, SaveMode.Append, Nil)
     val q = spark.readStream.format("delta").load(dir)
       .writeStream.format("memory").queryName("dss_plain")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-stream-ckpt").toString)
+        TestSpark.tempDir("graft-stream-ckpt"))
       .start()
     try {
       q.processAllAvailable()
@@ -39,7 +37,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
   }
 
   test("fresh stream on a history WITH deletes serves the current snapshot, not a broken replay") {
-    val dir = Files.createTempDirectory("graft-stream-del").toString
+    val dir = TestSpark.tempDir("graft-stream-del")
     DeltaWriter.write((1 to 6).map(i => (i, s"r$i")).toDF("id", "name").coalesce(1),
       dir, SaveMode.Append, Nil)                  // v0
     DeltaDml.delete(spark, dir, "id <= 2")        // v1: data-change remove
@@ -51,7 +49,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
     val q = spark.readStream.format("delta").load(dir)
       .writeStream.format("memory").queryName("dss_del")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-stream-del-ckpt").toString)
+        TestSpark.tempDir("graft-stream-del-ckpt"))
       .start()
     try {
       q.processAllAvailable()
@@ -64,7 +62,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
   }
 
   test("rate limits pace the initial snapshot into file-sized batches, then the version cursor takes over") {
-    val dir = Files.createTempDirectory("graft-stream-snaplimit").toString
+    val dir = TestSpark.tempDir("graft-stream-snaplimit")
     DeltaWriter.write((1 to 6).map(i => (i, s"r$i")).toDF("id", "name").coalesce(1),
       dir, SaveMode.Append, Nil)                    // v0
     DeltaDml.delete(spark, dir, "id <= 2")          // v1: history not replayable
@@ -76,7 +74,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
       .option("maxFilesPerTrigger", "1").load(dir)
       .writeStream.format("memory").queryName("dss_snaplimit")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-stream-snaplimit-ckpt").toString)
+        TestSpark.tempDir("graft-stream-snaplimit-ckpt"))
       .start()
     try {
       q.processAllAvailable()
@@ -97,7 +95,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
     import org.apache.spark.sql.execution.streaming.runtime.SerializedOffset
     import graft.sources.delta.{DeltaLog, DeltaStreamingSource}
-    val dir = Files.createTempDirectory("graft-stream-snapoff").toString
+    val dir = TestSpark.tempDir("graft-stream-snapoff")
     DeltaWriter.write((1 to 4).map(i => (i, s"r$i")).toDF("id", "name").coalesce(1),
       dir, SaveMode.Append, Nil)                    // v0
     DeltaDml.delete(spark, dir, "id = 1")           // v1: snapshot mode
@@ -131,7 +129,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.SerializedOffset
     import graft.sources.delta.{DeltaLog, DeltaStreamingSource, OrderedSnapshotIndex}
     import org.apache.spark.sql.graft.GraftStreamingBridge.asBatch
-    val dir = Files.createTempDirectory("graft-stream-defsnap").toString
+    val dir = TestSpark.tempDir("graft-stream-defsnap")
     DeltaWriter.write((1 to 6).map(i => (i, s"r$i")).toDF("id", "name").coalesce(1),
       dir, SaveMode.Append, Nil)                    // v0
     DeltaDml.delete(spark, dir, "id <= 2")          // v1: snapshot mode
@@ -174,7 +172,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
     import org.apache.spark.sql.execution.streaming.runtime.SerializedOffset
     import graft.sources.delta.{DeltaLog, DeltaStreamingSource, OrderedSnapshotIndex, SnapshotCache}
-    val dir = Files.createTempDirectory("graft-stream-evict").toString
+    val dir = TestSpark.tempDir("graft-stream-evict")
     DeltaWriter.write((1 to 6).map(i => (i, s"r$i")).toDF("id", "name").coalesce(1),
       dir, SaveMode.Append, Nil)                    // v0
     DeltaDml.delete(spark, dir, "id <= 2")          // v1: snapshot mode
@@ -213,7 +211,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
     // targetedJobs counter does. Bucket target shrunk to force a
     // multi-bucket layout over 6 files.
     import graft.sources.delta.{DeltaLog, OrderedSnapshotIndex, SnapshotCache}
-    val dir = Files.createTempDirectory("graft-stream-buckets").toString
+    val dir = TestSpark.tempDir("graft-stream-buckets")
     DeltaWriter.write((1 to 12).map(i => (i, s"r$i")).toDF("id", "name")
       .repartition(6), dir, SaveMode.Append, Nil) // 6 live files
     try withPlane("frame")(OrderedSnapshotIndex.withTargetRowsPerBucket(2L) { // 6 files -> 3 buckets
@@ -252,7 +250,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
     // vector: the paced slices must serve the file THROUGH the DV filter
     // on the deferred plane too (the slice relation's dv map comes from
     // the deferred snapshot's DV-adds-only `files`)
-    val dir = Files.createTempDirectory("graft-stream-dvsnap").toString
+    val dir = TestSpark.tempDir("graft-stream-dvsnap")
     DeltaWriter.write((1 to 8).map(i => (i, s"r$i")).toDF("id", "name").coalesce(1),
       dir, SaveMode.Append, Nil)                    // v0
     DeltaDml.deleteWithDv(spark, dir, "id <= 2")    // v1: DV, not rewrite
@@ -263,7 +261,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
         .option("maxFilesPerTrigger", "1").load(dir)
         .writeStream.format("memory").queryName("dss_dvsnap")
         .option("checkpointLocation",
-          Files.createTempDirectory("graft-stream-dvsnap-ckpt").toString)
+          TestSpark.tempDir("graft-stream-dvsnap-ckpt"))
         .start()
       try {
         q.processAllAvailable()
@@ -277,7 +275,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
     import org.apache.spark.sql.execution.streaming.runtime.SerializedOffset
     import graft.sources.delta.{DeltaLog, DeltaStreamingSource}
-    val dir = Files.createTempDirectory("graft-stream-bytepar").toString
+    val dir = TestSpark.tempDir("graft-stream-bytepar")
     DeltaWriter.write((1 to 6).map(i => (i, s"row$i")).toDF("id", "name").coalesce(1),
       dir, SaveMode.Append, Nil)                    // v0
     DeltaDml.delete(spark, dir, "id = 1")           // v1: snapshot mode
@@ -322,7 +320,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
     // must be taken unconditionally — and latestOffset/getBatch must
     // AGREE (a disagreement here is duplicated or dropped rows). Shrink
     // the cap (seam) instead of writing 65 commits.
-    val dir = Files.createTempDirectory("graft-stream-longhist").toString
+    val dir = TestSpark.tempDir("graft-stream-longhist")
     (0 until 6).foreach { i =>
       DeltaWriter.write(Seq((i, s"r$i")).toDF("id", "name").coalesce(1),
         dir, SaveMode.Append, Nil)                  // v0..v5, append-only
@@ -350,7 +348,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
         .option("maxFilesPerTrigger", "1").load(dir)
         .writeStream.format("memory").queryName("dss_longhist")
         .option("checkpointLocation",
-          Files.createTempDirectory("graft-stream-longhist-ckpt").toString)
+          TestSpark.tempDir("graft-stream-longhist-ckpt"))
         .start()
       try {
         q.processAllAvailable()
@@ -362,7 +360,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
 
   test("ordered-index admission matches the reference driver walk for every start and cap") {
     import graft.sources.delta.{DeltaAddFile, DeltaLog}
-    val dir = Files.createTempDirectory("graft-stream-admitpar").toString
+    val dir = TestSpark.tempDir("graft-stream-admitpar")
     // 10 single-file appends of varying row counts → varying file sizes
     (1 to 10).foreach { i =>
       DeltaWriter.write((1 to i * 7).map(j => (i * 100 + j, s"r$i-$j"))
@@ -409,7 +407,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
   }
 
   test("rate-limited CDF initial snapshot: paced synthetic inserts pinned to one version, then row-level changes") {
-    val dir = Files.createTempDirectory("graft-stream-cdflimit").toString
+    val dir = TestSpark.tempDir("graft-stream-cdflimit")
     DeltaWriter.write(Seq((1, "a"), (2, "b")).toDF("id", "name").coalesce(1),
       dir, SaveMode.Append, Nil)                                     // v0
     spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES " +
@@ -424,7 +422,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
       .option("maxFilesPerTrigger", "1").load(dir)
       .writeStream.format("memory").queryName("dss_cdflimit")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-stream-cdflimit-ckpt").toString)
+        TestSpark.tempDir("graft-stream-cdflimit-ckpt"))
       .start()
     try {
       q.processAllAvailable()
@@ -445,13 +443,13 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
   }
 
   test("readChangeFeed on a CDF-disabled table fails upfront, not on a later batch") {
-    val dir = Files.createTempDirectory("graft-stream-nocdf").toString
+    val dir = TestSpark.tempDir("graft-stream-nocdf")
     DeltaWriter.write(Seq((1, "a")).toDF("id", "name"), dir, SaveMode.Append, Nil)
     val q = spark.readStream.format("delta")
       .option("readChangeFeed", "true").load(dir)
       .writeStream.format("memory").queryName("dss_nocdf")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-stream-nocdf-ckpt").toString)
+        TestSpark.tempDir("graft-stream-nocdf-ckpt"))
       .start()
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q.processAllAvailable()
@@ -464,7 +462,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
   }
 
   test("an incremental range with retired commit JSONs fails loudly (no silent data loss)") {
-    val dir = Files.createTempDirectory("graft-stream-gap").toString
+    val dir = TestSpark.tempDir("graft-stream-gap")
     (1 to 4).foreach { i =>
       DeltaWriter.write(Seq((i, s"r$i")).toDF("id", "name"), dir, SaveMode.Append, Nil)
     }
@@ -480,7 +478,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
   }
 
   test("an EXPLICIT startingVersion 0 is a real replay, never conflated with the snapshot start") {
-    val dir = Files.createTempDirectory("graft-stream-sv0").toString
+    val dir = TestSpark.tempDir("graft-stream-sv0")
     DeltaWriter.write(Seq((1, "a")).toDF("id", "name"), dir, SaveMode.Append, Nil) // v0, CDF off
     spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES " +
       "('delta.enableChangeDataFeed' = 'true')")                                    // v1
@@ -491,7 +489,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
       .option("readChangeFeed", "true").option("startingVersion", "0").load(dir)
       .writeStream.format("memory").queryName("dss_sv0")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-stream-sv0-ckpt").toString)
+        TestSpark.tempDir("graft-stream-sv0-ckpt"))
       .start()
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q.processAllAvailable()
@@ -504,7 +502,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
   }
 
   test("startingVersion skips the table's earlier history") {
-    val dir = Files.createTempDirectory("graft-stream-sv").toString
+    val dir = TestSpark.tempDir("graft-stream-sv")
     DeltaWriter.write(Seq((1, "a")).toDF("id", "name"), dir, SaveMode.Append, Nil) // v0
     DeltaWriter.write(Seq((2, "b")).toDF("id", "name"), dir, SaveMode.Append, Nil) // v1
     DeltaWriter.write(Seq((3, "c")).toDF("id", "name"), dir, SaveMode.Append, Nil) // v2
@@ -512,7 +510,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
       .option("startingVersion", "2").load(dir)
       .writeStream.format("memory").queryName("dss_sv")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-stream-sv-ckpt").toString)
+        TestSpark.tempDir("graft-stream-sv-ckpt"))
       .start()
     try {
       q.processAllAvailable()
@@ -522,7 +520,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
   }
 
   test("startingTimestamp serves only commits at or after the timestamp") {
-    val dir = Files.createTempDirectory("graft-stream-st").toString
+    val dir = TestSpark.tempDir("graft-stream-st")
     DeltaWriter.write(Seq((1, "a")).toDF("id", "name"), dir, SaveMode.Append, Nil) // v0
     // a cutoff strictly between v0's and v1's commit mtimes (ms granularity)
     Thread.sleep(1200)
@@ -535,7 +533,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
       .option("startingTimestamp", cutoff).load(dir)
       .writeStream.format("memory").queryName("dss_st")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-stream-st-ckpt").toString)
+        TestSpark.tempDir("graft-stream-st-ckpt"))
       .start()
     try {
       q.processAllAvailable()
@@ -549,7 +547,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
       .option("startingVersion", "0").load(dir)
       .writeStream.format("memory").queryName("dss_st2")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-stream-st2-ckpt").toString)
+        TestSpark.tempDir("graft-stream-st2-ckpt"))
       .start()
     try {
       val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -562,7 +560,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
   }
 
   test("maxFilesPerTrigger paces a backlogged table into per-commit micro-batches") {
-    val dir = Files.createTempDirectory("graft-stream-rate").toString
+    val dir = TestSpark.tempDir("graft-stream-rate")
     // 4-commit backlog, one file each (single local partition per write)
     (0 until 4).foreach { i =>
       DeltaWriter.write(
@@ -574,7 +572,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
       .option("maxFilesPerTrigger", "1").load(dir)
       .writeStream
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-stream-rate-ckpt").toString)
+        TestSpark.tempDir("graft-stream-rate-ckpt"))
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         batches.synchronized {
           batches += ((id, df.select("id").collect().map(_.getInt(0)).sorted.toSeq))
@@ -593,7 +591,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
   }
 
   test("maxBytesPerTrigger admits whole versions, at least one per batch") {
-    val dir = Files.createTempDirectory("graft-stream-bytes").toString
+    val dir = TestSpark.tempDir("graft-stream-bytes")
     (0 until 3).foreach { i =>
       DeltaWriter.write(Seq((i, s"r$i")).toDF("id", "name").coalesce(1),
         dir, SaveMode.Append, Nil)
@@ -606,7 +604,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
       .option("maxBytesPerTrigger", "1").load(dir)
       .writeStream
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-stream-bytes-ckpt").toString)
+        TestSpark.tempDir("graft-stream-bytes-ckpt"))
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         synchronized { nBatches += 1; total += df.count() }
       }
@@ -619,7 +617,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
   }
 
   test("Trigger.AvailableNow drains the backlog in rate-limited batches, then stops") {
-    val dir = Files.createTempDirectory("graft-stream-avnow").toString
+    val dir = TestSpark.tempDir("graft-stream-avnow")
     (0 until 3).foreach { i =>
       DeltaWriter.write(Seq((i, s"r$i")).toDF("id", "name").coalesce(1),
         dir, SaveMode.Append, Nil)
@@ -630,7 +628,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
       .option("maxFilesPerTrigger", "1").load(dir)
       .writeStream
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-stream-avnow-ckpt").toString)
+        TestSpark.tempDir("graft-stream-avnow-ckpt"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         synchronized { nBatches += 1; total += df.count() }
@@ -645,8 +643,8 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
   }
 
   test("rate-limited stream restarts from its checkpoint without loss or duplication") {
-    val dir = Files.createTempDirectory("graft-stream-restart").toString
-    val ckpt = Files.createTempDirectory("graft-stream-restart-ckpt").toString
+    val dir = TestSpark.tempDir("graft-stream-restart")
+    val ckpt = TestSpark.tempDir("graft-stream-restart-ckpt")
     (0 until 3).foreach { i =>
       DeltaWriter.write(Seq((i, s"r$i")).toDF("id", "name").coalesce(1),
         dir, SaveMode.Append, Nil)
@@ -678,7 +676,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
   }
 
   test("readStream with readChangeFeed=true streams row-level change batches") {
-    val dir = Files.createTempDirectory("graft-stream-cdf").toString
+    val dir = TestSpark.tempDir("graft-stream-cdf")
     DeltaWriter.write((0 until 6).map(i => (i, i * 1.0)).toDF("id", "score"),
       dir, SaveMode.Append, Nil) // v0
     spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES ('delta.enableChangeDataFeed' = 'true')") // v1
@@ -686,7 +684,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
       .option("readChangeFeed", "true").load(dir)
       .writeStream.format("memory").queryName("dss_cdf")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-stream-cdf-ckpt").toString)
+        TestSpark.tempDir("graft-stream-cdf-ckpt"))
       .start()
     try {
       q.processAllAvailable()
@@ -716,7 +714,7 @@ class DeltaStreamSourceSuite extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.SerializedOffset
     import graft.sources.delta.{DeltaLog, DeltaStreamingSource}
     import org.apache.spark.sql.graft.GraftStreamingBridge.asBatch
-    val dir = Files.createTempDirectory("graft-stream-cdfmemo").toString
+    val dir = TestSpark.tempDir("graft-stream-cdfmemo")
     (1 to 3).foreach { i =>
       DeltaWriter.write(Seq((i, s"r$i")).toDF("id", "name").coalesce(1),
         dir, SaveMode.Append, Nil)

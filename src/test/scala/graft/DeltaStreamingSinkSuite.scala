@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
@@ -22,7 +20,7 @@ class DeltaStreamingSinkSuite extends AnyFunSuite {
   test("foreachBatch streams micro-batches into versioned Delta commits") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-stream-delta").toString
+    val dir = TestSpark.tempDir("graft-stream-delta")
     val in = MemoryStream[(Long, String)]
     val q = in.toDF().toDF("id", "k")
       .writeStream
@@ -53,8 +51,8 @@ class DeltaStreamingSinkSuite extends AnyFunSuite {
   test("writeStream.format(delta): native sink appends micro-batches with txn tags") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-sink-native").toString
-    val cp = Files.createTempDirectory("graft-sink-cp").toString
+    val dir = TestSpark.tempDir("graft-sink-native")
+    val cp = TestSpark.tempDir("graft-sink-cp")
     val in = MemoryStream[(Long, String)]
     val q = in.toDF().toDF("id", "k")
       .writeStream
@@ -80,7 +78,7 @@ class DeltaStreamingSinkSuite extends AnyFunSuite {
 
   test("txn tags make a redelivered batch a no-op (exactly-once across retries)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-sink-txn").toString
+    val dir = TestSpark.tempDir("graft-sink-txn")
     val batch = Seq((1L, "a"), (2L, "b")).toDF("id", "k")
     DeltaWriter.write(batch, dir, SaveMode.Append, Nil, txn = Some(("app-1", 0L)))
     // same appId, same batch version: dropped before staging
@@ -111,7 +109,7 @@ class DeltaStreamingSinkSuite extends AnyFunSuite {
 
   test("txn high-water marks survive checkpointing") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-sink-txn-cp").toString
+    val dir = TestSpark.tempDir("graft-sink-txn-cp")
     // app-early commits ONLY at v0 — after the v10 checkpoint its hwm
     // exists nowhere in the JSON tail, so replay must surface it from
     // CHECKPOINT state or redelivery double-applies
@@ -136,8 +134,8 @@ class DeltaStreamingSinkSuite extends AnyFunSuite {
   test("complete mode: each batch replaces the table (aggregate result sink)") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-sink-complete").toString
-    val cp = Files.createTempDirectory("graft-sink-complete-cp").toString
+    val dir = TestSpark.tempDir("graft-sink-complete")
+    val cp = TestSpark.tempDir("graft-sink-complete-cp")
     val in = MemoryStream[(Long, String)]
     val q = in.toDF().toDF("id", "k")
       .groupBy("k").count()
@@ -161,7 +159,7 @@ class DeltaStreamingSinkSuite extends AnyFunSuite {
   test("update output mode is refused loudly") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-sink-update").toString
+    val dir = TestSpark.tempDir("graft-sink-update")
     val in = MemoryStream[(Long, String)]
     val e = intercept[Exception] {
       in.toDF().toDF("id", "k")
@@ -170,7 +168,7 @@ class DeltaStreamingSinkSuite extends AnyFunSuite {
         .format("delta")
         .outputMode(OutputMode.Update)
         .option("checkpointLocation",
-          Files.createTempDirectory("graft-sink-update-cp").toString)
+          TestSpark.tempDir("graft-sink-update-cp"))
         .option("path", dir)
         .start()
     }

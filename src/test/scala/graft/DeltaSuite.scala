@@ -22,7 +22,7 @@ class DeltaSuite extends AnyFunSuite {
   private val fixture = ReferenceFixture.Path
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft-delta-").toFile.getAbsolutePath
+    TestSpark.tempDir("graft-delta-")
 
   test("TIMESTAMP_NTZ column: creation stamps the timestampNtz feature; values round-trip") {
     import spark.implicits._

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,7 +14,7 @@ class DeltaTableManagementSuite extends AnyFunSuite {
 
   private def freshTable(): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-mgmt").toString
+    val dir = TestSpark.tempDir("graft-mgmt")
     DeltaWriter.write(
       Seq((1, "a", 100), (2, "b", 200)).toDF("id", "k", "v").coalesce(1),
       dir, SaveMode.Append, Nil)
@@ -67,7 +65,7 @@ class DeltaTableManagementSuite extends AnyFunSuite {
 
   test("check constraint NULL semantics: NULL evaluation passes") {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft-mgmt-null").toString
+    val dir = TestSpark.tempDir("graft-mgmt-null")
     val schema = StructType(Seq(
       StructField("id", IntegerType, nullable = false),
       StructField("v", IntegerType, nullable = true)))
@@ -86,7 +84,7 @@ class DeltaTableManagementSuite extends AnyFunSuite {
 
   test("optimizeWrite: one file per hive partition per commit") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-mgmt-ow").toString
+    val dir = TestSpark.tempDir("graft-mgmt-ow")
     val df = (0 until 64).map(i => (i, s"p${i % 4}")).toDF("id", "k")
       .repartition(16) // deliberately fragmented input
     DeltaWriter.write(df, dir, SaveMode.Append, Seq("k"), optimizeWrite = true)
@@ -99,7 +97,7 @@ class DeltaTableManagementSuite extends AnyFunSuite {
 
   test("describe detail reports files, bytes, partitioning, properties") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-mgmt-detail").toString
+    val dir = TestSpark.tempDir("graft-mgmt-detail")
     DeltaWriter.write(
       (0 until 8).map(i => (i, s"p${i % 2}")).toDF("id", "k").coalesce(1),
       dir, SaveMode.Append, Seq("k"))
@@ -115,7 +113,7 @@ class DeltaTableManagementSuite extends AnyFunSuite {
 
   test("DML commits hit the checkpoint cadence") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-mgmt-ckpt").toString
+    val dir = TestSpark.tempDir("graft-mgmt-ckpt")
     // versions 0..8: appends (below the cadence of 10)
     (0 until 9).foreach { i =>
       DeltaWriter.write(Seq((i, i * 10)).toDF("id", "v").coalesce(1),

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,7 +19,7 @@ class DeltaVariantSuite extends AnyFunSuite {
   import spark.implicits._
 
   private def dir(tag: String): String =
-    Files.createTempDirectory(s"graft-variant-$tag").toString
+    TestSpark.tempDir(s"graft-variant-$tag")
 
   private def metaDf(n: Int) =
     (0 until n).map(i => (i, s"d$i")).toDF("id", "name")
@@ -68,7 +66,7 @@ class DeltaVariantSuite extends AnyFunSuite {
       .selectExpr("id", "variant_get(meta, '$.k', 'int') AS k")
       .writeStream.format("memory").queryName("variant_stream")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-variant-ckpt").toString)
+        TestSpark.tempDir("graft-variant-ckpt"))
       .start()
     try {
       q.processAllAvailable()

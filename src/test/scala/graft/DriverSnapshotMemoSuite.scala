@@ -33,7 +33,7 @@ class DriverSnapshotMemoSuite extends AnyFunSuite {
 
   test("extended replay equals from-scratch replay across a mixed lifecycle") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-snapmemo").toString
+    val dir = TestSpark.tempDir("graft-snapmemo")
     SnapshotCache.clear()
 
     // a lifecycle that crosses the checkpoint cadence and mixes action
@@ -76,8 +76,8 @@ class DriverSnapshotMemoSuite extends AnyFunSuite {
 
   test("per-table clear drops only that table's memo") {
     import spark.implicits._
-    val d1 = Files.createTempDirectory("graft-snapmemo-pt1").toString
-    val d2 = Files.createTempDirectory("graft-snapmemo-pt2").toString
+    val d1 = TestSpark.tempDir("graft-snapmemo-pt1")
+    val d2 = TestSpark.tempDir("graft-snapmemo-pt2")
     SnapshotCache.clear()
     Seq(d1, d2).foreach { d =>
       DeltaWriter.write(Seq((1, "a")).toDF("id", "s"), d, SaveMode.Append, Nil)
@@ -97,7 +97,7 @@ class DriverSnapshotMemoSuite extends AnyFunSuite {
 
   test("time travel below the memo rebuilds and never demotes it") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-snapmemo-tt").toString
+    val dir = TestSpark.tempDir("graft-snapmemo-tt")
     SnapshotCache.clear()
     (0 until 5).foreach { i =>
       DeltaWriter.write(Seq((i, s"v$i")).toDF("id", "s"), dir, SaveMode.Append, Nil)
@@ -121,7 +121,7 @@ class DriverSnapshotMemoSuite extends AnyFunSuite {
 
   test("a recreated table at the same path rebuilds (fingerprint mismatch)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-snapmemo-re").toString
+    val dir = TestSpark.tempDir("graft-snapmemo-re")
     SnapshotCache.clear()
     (0 until 3).foreach { i =>
       DeltaWriter.write(Seq((i, "old")).toDF("id", "s"), dir, SaveMode.Append, Nil)
@@ -153,7 +153,7 @@ class DriverSnapshotMemoSuite extends AnyFunSuite {
 
   test("a checkpoint appearing at the memo's version forces one rebuild through it") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-snapmemo-cp").toString
+    val dir = TestSpark.tempDir("graft-snapmemo-cp")
     SnapshotCache.clear()
     // stay below the 10-commit auto-cadence so the only checkpoint in
     // play is the one this test writes
@@ -188,7 +188,7 @@ class DriverSnapshotMemoSuite extends AnyFunSuite {
   private def tables(n: Int, prefix: String): Seq[String] = {
     import spark.implicits._
     (1 to n).map { i =>
-      val d = Files.createTempDirectory(s"graft-snapcache-$prefix$i").toString
+      val d = TestSpark.tempDir(s"graft-snapcache-$prefix$i")
       DeltaWriter.write(Seq((i, "a")).toDF("id", "s"), d, SaveMode.Append, Nil)
       d
     }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,7 +14,7 @@ class FileStreamSuite extends AnyFunSuite {
 
   test("parquet readStream aggregation matches the batch result") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream").toString
+    val dir = TestSpark.tempDir("graft-stream")
     // two "arriving" files
     Seq((1L, "a", 10.0), (2L, "b", 5.0)).toDF("id", "k", "v")
       .coalesce(1).write.mode("append").parquet(dir)

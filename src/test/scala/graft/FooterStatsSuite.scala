@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.LocalDateTime
 
@@ -27,7 +26,7 @@ class FooterStatsSuite extends AnyFunSuite {
     * order differences would fail too (the JSON is committed verbatim). */
   private def bothPaths(df: DataFrame, partitions: Int = 2)
       : (Map[String, String], Map[String, String], Long, Long) = {
-    val dir = Files.createTempDirectory("graft-footerstats").toString
+    val dir = TestSpark.tempDir("graft-footerstats")
     df.repartition(partitions).write.mode("overwrite").parquet(dir)
     val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
     val files = fs.listStatus(new Path(dir)).map(_.getPath)
@@ -140,7 +139,7 @@ class FooterStatsSuite extends AnyFunSuite {
   test("distributed footer mode (footerDriverMax=0) matches the driver pool") {
     import spark.implicits._
     val df = Seq((1L, "x", 2.5d), (2L, "y", -3.5d)).toDF("id", "s", "d")
-    val dir = Files.createTempDirectory("graft-footerstats-dist").toString
+    val dir = TestSpark.tempDir("graft-footerstats-dist")
     df.repartition(2).write.mode("overwrite").parquet(dir)
     val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
     val files = fs.listStatus(new Path(dir)).map(_.getPath)
@@ -157,7 +156,7 @@ class FooterStatsSuite extends AnyFunSuite {
   test("write path: DML over zero doubles never re-scans staged files") {
     import spark.implicits._
     import graft.sources.delta.{DeltaDml, DeltaLog, DeltaMerge}
-    val dir = Files.createTempDirectory("graft-footerstats-dml").toString
+    val dir = TestSpark.tempDir("graft-footerstats-dml")
     def rows(ids: Range) = ids.map { i =>
       (i.toLong, i % 3, if (i % 4 == 0) 0.0d else if (i % 4 == 1) -0.0d else i * 0.5d)
     }.toDF("id", "p", "d")

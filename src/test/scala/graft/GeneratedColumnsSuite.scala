@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,7 +18,7 @@ class GeneratedColumnsSuite extends AnyFunSuite {
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("generated date partition: computed on create and append, pruned on read") {
-    val dir = Files.createTempDirectory("graft-gen").toString
+    val dir = TestSpark.tempDir("graft-gen")
     val day1 = Seq((1L, ts("2024-01-01 10:00:00"), 5.0), (2L, ts("2024-01-01 11:00:00"), 7.0))
       .toDF("id", "ts", "v")
     // creating write declares the generated column; data does not carry it
@@ -43,7 +41,7 @@ class GeneratedColumnsSuite extends AnyFunSuite {
   }
 
   test("provided values for a generated column are validated") {
-    val dir = Files.createTempDirectory("graft-gen-val").toString
+    val dir = TestSpark.tempDir("graft-gen-val")
     DeltaWriter.write(
       Seq((1L, ts("2024-01-01 10:00:00"), 5.0)).toDF("id", "ts", "v"),
       dir, SaveMode.Append, Seq("d"),
@@ -65,7 +63,7 @@ class GeneratedColumnsSuite extends AnyFunSuite {
   }
 
   test("declaring mismatched expressions against an existing table fails") {
-    val dir = Files.createTempDirectory("graft-gen-mismatch").toString
+    val dir = TestSpark.tempDir("graft-gen-mismatch")
     DeltaWriter.write(
       Seq((1L, ts("2024-01-01 10:00:00"))).toDF("id", "ts"),
       dir, SaveMode.Append, Nil,
@@ -96,7 +94,7 @@ class GeneratedColumnsSuite extends AnyFunSuite {
     }.flatten.toSet
 
   test("filter on the SOURCE timestamp prunes generated date partitions") {
-    val dir = Files.createTempDirectory("graft-gen-prune").toString
+    val dir = TestSpark.tempDir("graft-gen-prune")
     val days = Seq(
       (1L, ts("2024-01-01 10:00:00")), (2L, ts("2024-01-02 11:00:00")),
       (3L, ts("2024-01-03 12:00:00")))
@@ -122,7 +120,7 @@ class GeneratedColumnsSuite extends AnyFunSuite {
   }
 
   test("non-monotonic MONTH generation derives equality but never ranges") {
-    val dir = Files.createTempDirectory("graft-gen-month").toString
+    val dir = TestSpark.tempDir("graft-gen-month")
     val rows = Seq(
       (1L, ts("2024-01-15 10:00:00")), (2L, ts("2024-02-15 10:00:00")),
       (3L, ts("2024-03-15 10:00:00")))

@@ -1,11 +1,13 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.delta.{DeltaLog, DeltaTable, DeltaWriter, GraftSqlCommands}
+import graft.sources.delta.{DeltaLog, DeltaTable, DeltaWriter}
 
 /** The SQL statement surface GraftSqlParser adds on top of Spark's grammar
   * — each maintenance/DML statement drives the same Delta layer the API
@@ -17,7 +19,7 @@ class GraftSqlSuite extends AnyFunSuite {
 
   private def freshTable(rows: Int = 8): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-sql").toString
+    val dir = TestSpark.tempDir("graft-sql")
     (0 until rows by 2).foreach { i =>
       DeltaWriter.write(
         Seq((i, s"p$i", i * 10.0), (i + 1, s"p${i + 1}", (i + 1) * 10.0))
@@ -85,7 +87,7 @@ class GraftSqlSuite extends AnyFunSuite {
 
   test("CREATE TABLE SHALLOW CLONE routes to the zero-copy fork") {
     val dir = freshTable()
-    val dst = Files.createTempDirectory("graft-sql-clone").toString + "/t"
+    val dst = TestSpark.tempDir("graft-sql-clone") + "/t"
     spark.sql(s"CREATE TABLE delta.`$dst` SHALLOW CLONE delta.`$dir`")
     assert(DeltaTable.read(spark, dst).count() === 8)
   }
@@ -173,12 +175,17 @@ class GraftSqlSuite extends AnyFunSuite {
   }
 
   test("SET assignment splitter respects parens, string literals, and escaped quotes") {
-    val m = GraftSqlCommands.splitAssignments(
-      "a = f(x, ',') , b = concat(c, d), e = 'x,y'")
-    assert(m === Map("a" -> "f(x, ',')", "b" -> "concat(c, d)", "e" -> "'x,y'"))
+    val dir = freshTable()
+    spark.sql(s"UPDATE delta.`$dir` SET name = concat(name, ',') , score = length(concat(name, 'x,y')) WHERE id = 0")
+    val r0 = DeltaTable.read(spark, dir).filter("id = 0").collect().head
+    assert((r0.getAs[String]("name"), r0.getAs[Double]("score")) === (("p0,", 5.0)))
     // backslash-escaped quote must not close the literal
-    val esc = GraftSqlCommands.splitAssignments("a = 'it\\'s, fine', b = 2")
-    assert(esc === Map("a" -> "'it\\'s, fine'", "b" -> "2"))
+    spark.sql(s"UPDATE delta.`$dir` SET name = 'it\\'s, fine', score = 2 WHERE id = 1")
+    val r1 = DeltaTable.read(spark, dir).filter("id = 1").collect().head
+    assert((r1.getAs[String]("name"), r1.getAs[Double]("score")) === (("it's, fine", 2.0)))
+    // and the commit's predicate is the statement's own text
+    val hist = spark.sql(s"DESCRIBE HISTORY delta.`$dir` LIMIT 1").collect().head
+    assert(hist.getAs[String]("operationParameters").contains("id = 1"))
   }
 
   test("MERGE with a CASE WHEN expression inside UPDATE SET parses (WHEN is not a clause split)") {
@@ -196,15 +203,7 @@ class GraftSqlSuite extends AnyFunSuite {
 
   test("identifiers with CASE/END prefixes (case_id, end_date) are not keywords to the WHEN splitter") {
     import spark.implicits._
-    // '_' is an identifier char: `case_id` must not open a CASE depth
-    // (which would swallow every later WHEN boundary) and `end_date` must
-    // not close one
-    val segs = GraftSqlCommands.splitOnWhen(
-      "t.case_id = s.case_id WHEN MATCHED THEN UPDATE SET end_date = s.end_date WHEN NOT MATCHED THEN INSERT *")
-    assert(segs.length === 3, segs.mkString(" || "))
-    assert(segs(1).trim.startsWith("MATCHED"), segs(1))
-
-    val dir = Files.createTempDirectory("graft-sql-underscore").toString
+    val dir = TestSpark.tempDir("graft-sql-underscore")
     DeltaWriter.write(Seq((1, "2024-01-01"), (2, "2024-02-02")).toDF("case_id", "end_date"),
       dir, SaveMode.Append, Nil)
     Seq((2, "2025-09-09"), (3, "2025-10-10")).toDF("case_id", "end_date")
@@ -220,21 +219,22 @@ class GraftSqlSuite extends AnyFunSuite {
 
   test("where_-prefixed identifiers are not WHERE to the UPDATE splitter; backticked keywords are opaque") {
     import spark.implicits._
-    // same identifier-boundary rule as the WHEN splitter: '_' is an
-    // identifier char, so `where_flag` must not bind as the WHERE keyword
-    assert(GraftSqlCommands.topLevelKeyword("where_flag = 2", "WHERE") === -1)
-    assert(GraftSqlCommands.topLevelKeyword("flag = 2 WHERE id = 1", "WHERE") === 9)
-    // backtick-quoted identifiers are opaque to every scanner: a column
-    // named `where`/`case`/`when` is data, not syntax
-    assert(GraftSqlCommands.topLevelKeyword("`where` = 2 WHERE id = 1", "WHERE") === 12)
-    val segs = GraftSqlCommands.splitOnWhen(
-      "t.id = s.id WHEN MATCHED THEN UPDATE SET `case` = s.`case` WHEN NOT MATCHED THEN INSERT *")
-    assert(segs.length === 3, segs.mkString(" || "))
-    assert(GraftSqlCommands.splitTop("`a,b` = 1, c = 2") ===
-      Seq("`a,b` = 1", " c = 2"))
+    // a backticked column named `case` or `where` is data, not syntax
+    val kw = TestSpark.tempDir("graft-sql-backtick")
+    DeltaWriter.write(Seq((1, "a", 0), (2, "b", 0)).toDF("id", "case", "where"),
+      kw, SaveMode.Append, Nil)
+    Seq((2, "B", 5), (3, "C", 6)).toDF("id", "case", "where")
+      .createOrReplaceTempView("merge_backtick_src")
+    spark.sql(
+      s"""MERGE INTO delta.`$kw` t USING merge_backtick_src s ON t.id = s.id
+         WHEN MATCHED THEN UPDATE SET `case` = s.`case` WHEN NOT MATCHED THEN INSERT *""")
+    spark.sql(s"UPDATE delta.`$kw` SET `where` = 2 WHERE id = 1")
+    assert(DeltaTable.read(spark, kw).orderBy("id").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getInt(2))).toSeq ===
+      Seq((1, "a", 2), (2, "B", 0), (3, "C", 6)))
 
     // end-to-end: UPDATE on a table whose column is where_-prefixed
-    val dir = Files.createTempDirectory("graft-sql-whereflag").toString
+    val dir = TestSpark.tempDir("graft-sql-whereflag")
     DeltaWriter.write(Seq((1, 0), (2, 0)).toDF("id", "where_flag"),
       dir, SaveMode.Append, Nil)
     spark.sql(s"UPDATE delta.`$dir` SET where_flag = 7 WHERE id = 2")
@@ -248,8 +248,9 @@ class GraftSqlSuite extends AnyFunSuite {
   }
 
   test("duplicate SET targets are rejected, not silently last-wins") {
+    val dir = freshTable()
     val e = intercept[IllegalArgumentException] {
-      GraftSqlCommands.splitAssignments("a = 1, a = 2")
+      spark.sql(s"UPDATE delta.`$dir` SET score = 1, score = 2")
     }
     assert(e.getMessage.contains("duplicate"), e.getMessage)
   }
@@ -330,5 +331,94 @@ class GraftSqlSuite extends AnyFunSuite {
     // and with no WHERE clause at all, every row updates
     spark.sql(s"UPDATE delta.`$dir` SET score = 0.0")
     assert(DeltaTable.read(spark, dir).filter("score <> 0.0").count() === 0)
+  }
+
+  test("plain delta.`path` reads bind in FROM, CTEs and IN subqueries") {
+    val dir = freshTable() // ids 0..7
+    assert(spark.sql(s"SELECT count(*) FROM delta.`$dir`").collect().head.getLong(0) === 8L)
+    val viaCte = spark.sql(
+      s"WITH hi AS (SELECT id FROM delta.`$dir` WHERE id >= 6) SELECT count(*) FROM hi")
+      .collect().head.getLong(0)
+    assert(viaCte === 2L)
+    val viaIn = spark.sql(
+      s"""SELECT count(*) FROM range(10) r
+          WHERE r.id IN (SELECT id FROM delta.`$dir` VERSION AS OF 0)""")
+      .collect().head.getLong(0)
+    assert(viaIn === 2L)
+  }
+
+  test("time travel and table_changes register no temp views") {
+    val dir = freshTable()
+    spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES ('delta.enableChangeDataFeed' = 'true')")
+    spark.sql(s"UPDATE delta.`$dir` SET score = 0 WHERE id = 1")
+    val before = spark.sessionState.catalog.listLocalTempViews("*").toSet
+    (0 to 3).foreach { v =>
+      spark.sql(s"SELECT count(*) FROM delta.`$dir` VERSION AS OF $v").collect()
+    }
+    spark.sql(s"SELECT count(*) FROM delta.`$dir` TIMESTAMP AS OF '2099-01-01 00:00:00'").collect()
+    val changes = spark.sql(s"SELECT _change_type FROM table_changes('$dir', 5)")
+      .collect().map(_.getString(0)).sorted.toSeq
+    assert(changes === Seq("update_postimage", "update_preimage"))
+    assert(spark.sessionState.catalog.listLocalTempViews("*").toSet === before)
+  }
+
+  test("MERGE takes any aliases and a subquery source: tgt/src gives its t/s twin's rows") {
+    import spark.implicits._
+    Seq((3, "three", -1.0), (4, "four", 5.0), (40, "forty", 4.0))
+      .toDF("id", "name", "score").createOrReplaceTempView("merge_alias_src")
+    def rows(dir: String) = DeltaTable.read(spark, dir).orderBy("id").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getDouble(2))).toSeq
+    val twin = freshTable()
+    spark.sql(
+      s"""MERGE INTO delta.`$twin` t USING merge_alias_src s ON t.id = s.id
+         WHEN MATCHED AND s.score > 0 THEN UPDATE SET name = upper(s.name), score = t.score + s.score
+         WHEN MATCHED THEN DELETE
+         WHEN NOT MATCHED THEN INSERT (id, name, score) VALUES (s.id, s.name, s.score)
+         WHEN NOT MATCHED BY SOURCE AND t.id > 6 THEN UPDATE SET score = -t.score""")
+    val aliased = freshTable()
+    spark.sql(
+      s"""MERGE INTO delta.`$aliased` AS tgt
+         USING (SELECT id, name, score FROM merge_alias_src WHERE id > 0) AS src ON tgt.id = src.id
+         WHEN MATCHED AND src.score > 0 THEN UPDATE SET name = upper(src.name), score = tgt.score + `src`.score
+         WHEN MATCHED THEN DELETE
+         WHEN NOT MATCHED THEN INSERT (id, name, score) VALUES (src.id, src.name, src.score)
+         WHEN NOT MATCHED BY SOURCE AND tgt.id > 6 THEN UPDATE SET score = -tgt.score""")
+    assert(rows(aliased) === rows(twin))
+    assert(rows(twin).map(_._1) === Seq(0, 1, 2, 4, 5, 6, 7, 40))
+    // a Delta path as the source
+    val src = freshTable(2) // ids 0, 1
+    spark.sql(s"UPDATE delta.`$src` SET name = 'from-delta'")
+    spark.sql(
+      s"""MERGE INTO delta.`$aliased` a USING delta.`$src` b ON a.id = b.id
+         WHEN MATCHED THEN UPDATE SET name = b.name""")
+    assert(rows(aliased).filter(_._1 <= 1).map(_._2) === Seq("from-delta", "from-delta"))
+  }
+
+  test("DML predicates reach the commit as the statement's own text") {
+    val dir = freshTable()
+    def params() = spark.sql(s"DESCRIBE HISTORY delta.`$dir` LIMIT 1")
+      .collect().head.getAs[String]("operationParameters")
+    // a predicate's parse origin starts at its keyword (IN, IS, BETWEEN):
+    // the text must still carry the left operand
+    spark.sql(s"DELETE FROM delta.`$dir` WHERE id IN (1, 2)")
+    assert(params() === """{"predicate":"id IN (1, 2)"}""")
+    spark.sql(s"UPDATE delta.`$dir` SET score = -score WHERE name IS NULL OR id BETWEEN 3 AND 4")
+    assert(params().contains(""""predicate":"name IS NULL OR id BETWEEN 3 AND 4""""), params())
+    assert(DeltaTable.read(spark, dir).filter("score < 0").count() === 2)
+  }
+
+  test("the parser rewrites Spark's tree: no temp views, no hand-written SQL lexers") {
+    // split literals: this file must not match its own patterns
+    val walk = Files.walk(Paths.get("src/main/scala/graft/sources/delta"))
+    val files: Seq[Path] =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val views = files.filter(p => Files.readString(p).contains("createOrReplace" + "TempView"))
+    assert(views.isEmpty, views.mkString("\n"))
+    val parser = Files.readString(
+      Paths.get("src/main/scala/graft/sources/delta/GraftSqlParser.scala"))
+    val lexers = Seq("inString" + "Literal", "splitOn" + "When", "topLevel" + "Keyword")
+      .filter(parser.contains)
+    assert(lexers.isEmpty, lexers.mkString(", "))
   }
 }

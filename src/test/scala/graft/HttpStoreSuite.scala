@@ -74,7 +74,7 @@ class HttpStoreSuite extends AnyFunSuite {
   test("parquet point read over http:// — footer seek + column chunks via range requests") {
     import spark.implicits._
     register()
-    val root = Files.createTempDirectory("graft-http").toFile
+    val root = new java.io.File(TestSpark.tempDir("graft-http"))
     spark.read.parquet("/root/testdata/sf0.001/supplier.parquet")
       .coalesce(1).write.parquet(s"$root/out")
     val part = root.listFiles().flatMap(_.listFiles())
@@ -100,7 +100,7 @@ class HttpStoreSuite extends AnyFunSuite {
 
   test("csv sequential read over http://, and HEAD-less servers fall back to ranged GET") {
     register()
-    val root = Files.createTempDirectory("graft-http-csv").toFile
+    val root = new java.io.File(TestSpark.tempDir("graft-http-csv"))
     Files.write(new File(root, "t.csv").toPath,
       "a,b\n1,x\n2,y\n3,z\n".getBytes("UTF-8"))
     Seq(true, false).foreach { headSupported =>
@@ -116,7 +116,7 @@ class HttpStoreSuite extends AnyFunSuite {
 
   test("transient 503s on range reads retry; contract errors (404) fail fast") {
     register()
-    val root = Files.createTempDirectory("graft-http-retry").toFile
+    val root = new java.io.File(TestSpark.tempDir("graft-http-retry"))
     val payload = (0 until 1000).map(i => (i % 251).toByte).toArray
     Files.write(new File(root, "blob.bin").toPath, payload)
     val faults = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
@@ -147,7 +147,7 @@ class HttpStoreSuite extends AnyFunSuite {
 
   test("seek/positioned-read semantics; writes and missing objects fail loudly") {
     register()
-    val root = Files.createTempDirectory("graft-http-sem").toFile
+    val root = new java.io.File(TestSpark.tempDir("graft-http-sem"))
     val payload = (0 until 1000).map(i => (i % 251).toByte).toArray
     Files.write(new File(root, "blob.bin").toPath, payload)
     withServer(root) { port =>

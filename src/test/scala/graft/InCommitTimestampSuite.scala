@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,7 +16,7 @@ class InCommitTimestampSuite extends AnyFunSuite {
   import spark.implicits._
 
   private def fresh(): String = {
-    val dir = Files.createTempDirectory("graft-ict").toString
+    val dir = TestSpark.tempDir("graft-ict")
     (0 until 20).map(i => (i, i * 1.0)).toDF("id", "v")
       .write.format("delta").save(dir) // v0
     spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES ('delta.enableInCommitTimestamps' = 'true')") // v1

@@ -1,7 +1,6 @@
 package graft
 
 import java.net.URI
-import java.nio.file.Files
 
 import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -49,7 +48,7 @@ class ObjectStoreSuite extends AnyFunSuite {
     import spark.implicits._
     spark.sparkContext.hadoopConfiguration
       .set("fs.graftfs.impl", classOf[FakeStoreFileSystem].getName)
-    val local = Files.createTempDirectory("graft-store").toString
+    val local = TestSpark.tempDir("graft-store")
     DeltaTable.write(Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "k"),
       local, SaveMode.Append, partitionBy = Seq("k"))
     // read back through the registered scheme: log listing, JSON replay,

@@ -18,7 +18,7 @@ class OrderedIndexContentSuite extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("orderedSlice serves exact path-rank content at 200k files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ord-debug").toString
+    val dir = TestSpark.tempDir("graft-ord-debug")
     val logDir = new java.io.File(s"$dir/_delta_log"); logDir.mkdirs()
     val w0 = new java.io.PrintWriter(s"$dir/_delta_log/00000000000000000000.json")
     w0.println("""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,7 +20,7 @@ class RestorePlaneSuite extends AnyFunSuite {
   /** v0 seed (2 files) → v1 copy-on-write DELETE → v2 DV delete: the
     * restore-to-v0 diff must undo a rewrite AND strip a DV. */
   private def history(): String = {
-    val dir = Files.createTempDirectory("graft-restplane").toString
+    val dir = TestSpark.tempDir("graft-restplane")
     DeltaWriter.write((1 to 30).map(i => (i.toLong, s"r$i")).toDF("id", "name")
       .coalesce(2), dir, SaveMode.Append, Nil)      // v0
     DeltaDml.delete(spark, dir, "id <= 4")          // v1

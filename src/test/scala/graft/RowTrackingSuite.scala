@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,7 +25,7 @@ class RowTrackingSuite extends AnyFunSuite {
   import spark.implicits._
 
   private def dir(tag: String): String =
-    Files.createTempDirectory(s"graft-rt-$tag").toString
+    TestSpark.tempDir(s"graft-rt-$tag")
 
   /** One deterministic single-file frame: k = physical position. */
   private def seeded(n: Int): DataFrame =

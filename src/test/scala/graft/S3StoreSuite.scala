@@ -331,7 +331,7 @@ class S3StoreSuite extends AnyFunSuite {
       DeltaTable.write(Seq((1L, "a"), (2L, "b")).toDF("id", "k"), table, SaveMode.Append)
       // stream checkpoint stays local (production object-store checkpoints
       // ride committer machinery out of scope here); the SOURCE is s3://
-      val cp = java.nio.file.Files.createTempDirectory("graft-s3-stream-cp").toString
+      val cp = TestSpark.tempDir("graft-s3-stream-cp")
       val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
       val q = spark.readStream.format("delta").load(table)
         .writeStream
@@ -392,7 +392,7 @@ class S3StoreSuite extends AnyFunSuite {
       Seq(r1, r2, r3, r4, r5)
     }
     withS3 { (_, table) =>
-      val local = java.nio.file.Files.createTempDirectory("graft-s3-parity").toString
+      val local = TestSpark.tempDir("graft-s3-parity")
       val onLocal = pipeline(local)
       val onS3 = pipeline(table)
       onLocal.zip(onS3).zipWithIndex.foreach { case ((l, s3r), i) =>

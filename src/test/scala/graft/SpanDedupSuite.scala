@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,7 +15,7 @@ class SpanDedupSuite extends AnyFunSuite {
     * driver fixture: doc_id, text, lang, source, n_chars). */
   private def docsDir(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-span").toString
+    val dir = TestSpark.tempDir("graft-span")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("src0"))

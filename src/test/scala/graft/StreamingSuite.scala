@@ -114,8 +114,8 @@ class StreamingSuite extends AnyFunSuite {
     // content hash, and land in a Delta table through the native sink —
     // restart-redelivery collapses via the sink's SetTransaction tags.
     implicit val ctx = spark.sqlContext
-    val table = java.nio.file.Files.createTempDirectory("graft-stream-cur").toString + "/tbl"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-stream-cur-ck").toString
+    val table = TestSpark.tempDir("graft-stream-cur") + "/tbl"
+    val ckpt = TestSpark.tempDir("graft-stream-cur-ck")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
       .as[(Long, String)].collect().toSeq

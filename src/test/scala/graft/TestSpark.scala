@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 
 import graft.sources.delta.DeltaLog
@@ -19,4 +23,15 @@ object TestSpark {
     * on `session`, then restore its previous setting. */
   def withPlane[T](plane: String, session: SparkSession = spark)(f: => T): T =
     GraftSession.withConf(session, DeltaLog.SnapshotPlaneKey, plane)(f)
+
+  private val tempDirs = new ConcurrentLinkedQueue[Path]
+  sys.addShutdownHook(tempDirs.forEach(d => FileUtils.deleteQuietly(d.toFile)))
+
+  /** A fresh directory under `java.io.tmpdir` whose name starts with
+    * `prefix`; it is deleted, with everything under it, when the JVM exits. */
+  def tempDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs.add(dir)
+    dir.toString
+  }
 }

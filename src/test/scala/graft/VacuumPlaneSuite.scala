@@ -25,7 +25,7 @@ class VacuumPlaneSuite extends AnyFunSuite {
   /** appends → copy-on-write DELETE (tombstones) → two DV deletes (one
     * live .bin, one superseded) → one orphan stray parquet. */
   private def richTable(): String = {
-    val dir = Files.createTempDirectory("graft-vacplane").toString
+    val dir = TestSpark.tempDir("graft-vacplane")
     DeltaWriter.write((1 to 40).map(i => (i.toLong, s"r$i")).toDF("id", "name")
       .coalesce(2), dir, SaveMode.Append, Nil)        // v0: 2 files
     DeltaDml.delete(spark, dir, "id <= 5")            // v1: rewrite + tombstone
@@ -99,7 +99,7 @@ class VacuumPlaneSuite extends AnyFunSuite {
     // regression pin: the winners frame's partitionValues is a MAP column,
     // and Spark rejects set operations on maps (SET_OPERATION_ON_MAP_TYPE)
     // — the deferred distinct-partitions path must group, never distinct()
-    val dir = Files.createTempDirectory("graft-vacplane-parts").toString
+    val dir = TestSpark.tempDir("graft-vacplane-parts")
     DeltaWriter.write((1 to 24).map(i => (i.toLong, s"r$i", i % 3))
       .toDF("id", "name", "p"), dir, SaveMode.Append, Seq("p"))
     (1 to 3).foreach { _ =>
@@ -168,7 +168,7 @@ class VacuumPlaneSuite extends AnyFunSuite {
     // proves the fallback fired.
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.rolist.impl", classOf[ListingDeniedFileSystem].getName)
-    val local = Files.createTempDirectory("graft-vac-rolist").toString
+    val local = TestSpark.tempDir("graft-vac-rolist")
     val dir = "rolist://" + local
     // PARTITIONED: root-level dirs force the distributed (executor-task)
     // listing branch, the one whose failure arrives wrapped

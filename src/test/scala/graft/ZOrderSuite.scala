@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,7 +17,7 @@ class ZOrderSuite extends AnyFunSuite {
     * each file's x and y ranges cover ~the whole domain. */
   private def gridTable(): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-zorder").toString
+    val dir = TestSpark.tempDir("graft-zorder")
     val grid = (for { x <- 0 until 32; y <- 0 until 32 } yield (x, y))
       .toDF("x", "y")
       .orderBy(hash(col("x"), col("y")))
@@ -71,7 +69,7 @@ class ZOrderSuite extends AnyFunSuite {
 
   test("zorder rejects partition columns, unsupported types, bad arity") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-zorder-bad").toString
+    val dir = TestSpark.tempDir("graft-zorder-bad")
     DeltaWriter.write(
       Seq((1, "a", 2.0, true)).toDF("x", "k", "y", "b").coalesce(1),
       dir, SaveMode.Append, Seq("k"))
@@ -98,7 +96,7 @@ class ZOrderSuite extends AnyFunSuite {
 
   test("zorder clusters string columns by order-preserving byte prefix") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-zorder-str").toString
+    val dir = TestSpark.tempDir("graft-zorder-str")
     // 16 distinct key prefixes x 16 numeric values, shuffled across files
     val df = (0 until 256).map { i =>
       (f"key${i % 16}%02d-${i}%03d", (i * 7) % 16, i)
@@ -129,7 +127,7 @@ class ZOrderSuite extends AnyFunSuite {
 
   test("zorder clusters temporal columns via their epoch representation") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-zorder-ts").toString
+    val dir = TestSpark.tempDir("graft-zorder-ts")
     val df = (0 until 256).map { i =>
       (java.sql.Timestamp.valueOf(f"2024-01-01 ${i % 8}%02d:${(i / 8) % 32}%02d:00"),
         i % 16, i)
