@@ -65,7 +65,7 @@ object ClusterCheck {
 
     // steps 2-5 write two local tables; they are deleted however the steps end
     val dirs = Seq("graft-cluster-dv", "graft-cluster-cm")
-      .map(p => java.nio.file.Files.createTempDirectory(p).toString)
+      .map(TempDirs.create)
     try tableSteps(spark, dirs(0), dirs(1))
     finally dirs.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
   }

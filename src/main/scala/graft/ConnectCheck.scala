@@ -72,7 +72,7 @@ object ConnectCheck {
     try {
       // ---- server-side state: a Delta table the remote client never
       // writes, only queries (the reference's local_read_client shape)
-      val path = java.nio.file.Files.createTempDirectory("graft-connect").toString + "/tbl"
+      val path = TempDirs.create("graft-connect") + "/tbl"
       val supplier = spark.read.parquet(s"$sfDir/supplier.parquet")
       graft.sources.delta.DeltaTable.write(
         supplier, path, org.apache.spark.sql.SaveMode.Append, Nil)

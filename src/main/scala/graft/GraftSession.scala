@@ -94,7 +94,7 @@ object LocalStandaloneExample {
     spark.sql("SELECT * FROM demo ORDER BY first_name").show()
 
     // the reference's negative path, positive here: append via a scratch copy
-    val dir = java.nio.file.Files.createTempDirectory("graft-example").toString
+    val dir = TempDirs.create("graft-example")
     spark.table("demo").write.format("delta").partitionBy("country").save(dir)
     import spark.implicits._
     val extra = Seq(("Grace", "Hopper", "NaN", "United States"))

@@ -286,7 +286,7 @@ object ScaleCheck {
     def clusteredOptimizeProbe(d: String): CloptProbe = {
       import graft.sources.delta.{Clustering, DeltaLog, DeltaMaintenance, DeltaWriter}
       import org.apache.spark.sql.SaveMode
-      val dir = java.nio.file.Files.createTempDirectory("graft-scale-clopt").toString
+      val dir = TempDirs.create("graft-scale-clopt")
       val li = spark.read.parquet(s"$d/lineitem.parquet")
         .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
       DeltaWriter.write(li, dir, SaveMode.Append, Nil)
@@ -814,7 +814,7 @@ object ScaleCheck {
   private[graft] def writeSyntheticLogWithTarget(
       nFiles: Int, targetIdx: Int, cdf: Boolean = false): (String, Option[String]) = {
     val perCommit = SyntheticPerCommit
-    val dir = java.nio.file.Files.createTempDirectory("graft-scale-replay").toString
+    val dir = TempDirs.create("graft-scale-replay")
     val logDir = new java.io.File(s"$dir/_delta_log"); logDir.mkdirs()
     val conf =
       if (cdf) """{"delta.enableChangeDataFeed":"true"}""" else "{}"
@@ -862,7 +862,7 @@ object ScaleCheck {
     val (dir, relOpt) = writeSyntheticLogWithTarget(nFiles, targetIdx)
     val rel = relOpt.getOrElse(sys.error(s"no add generated at index $targetIdx"))
     // materialize the one real data file the probe's DELETE touches
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dml-data").toString
+    val tmp = TempDirs.create("graft-dml-data")
     spark.range(targetIdx * 1000L, targetIdx * 1000L + 1000)
       .select(col("id"),
         (lit(0.5) + (col("id") % 100).cast("double")).as("v"))

@@ -84,7 +84,7 @@ object StandaloneClusterCheck {
   def main(args: Array[String]): Unit = {
     require(sys.env.contains("SPARK_HOME"),
       "StandaloneClusterCheck needs SPARK_HOME (e.g. /opt/spark) in the environment")
-    val scratch = java.nio.file.Files.createTempDirectory("graft-standalone").toFile
+    val scratch = new java.io.File(TempDirs.create("graft-standalone"))
     val masterPort = freePort()
     val masterUrl = s"spark://127.0.0.1:$masterPort"
 

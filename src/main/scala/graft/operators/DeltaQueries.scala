@@ -1,10 +1,9 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.TempDirs
 import graft.sources.delta.{DeltaTable, DeltaWriter}
 
 /** Delta-provider queries INSIDE the driver's correctness gate: each one
@@ -20,7 +19,7 @@ object DeltaQueries {
     s.read.parquet(s"$dir/$n.parquet")
 
   private def scratch(): String =
-    Files.createTempDirectory("graft-delta-q").toString
+    TempDirs.create("graft-delta-q")
 
   /** Write supplier partitioned by nation → read back via the provider →
     * aggregate. Exercises partition-value injection end to end. */
@@ -442,7 +441,7 @@ object DeltaQueries {
   private def dl19StreamingSink(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val path = scratch()
-    val cp = Files.createTempDirectory("graft-delta-q-cp").toString
+    val cp = TempDirs.create("graft-delta-q-cp")
     implicit val ctx = s.sqlContext
     // dim-scale fixture rows drive the MemoryStream (test-harness plane —
     // the sink's own write path stays fully distributed)

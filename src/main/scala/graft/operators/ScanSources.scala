@@ -1,10 +1,10 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.TempDirs
 
 /** CSV and NDJSON file-source scans (SURVEY.md §2.1).
   *
@@ -31,7 +31,7 @@ object ScanSources {
     s.read.parquet(s"$dir/$n.parquet")
 
   private def scratch(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    TempDirs.create(prefix)
 
   private val ordersSchema = StructType(Seq(
     StructField("o_orderkey", LongType),

@@ -136,7 +136,9 @@ private[graft] object DeltaCommit {
   /** Checkpoint on the cadence — every commit path goes through here, so
     * long maintenance chains bound replay cost the same way append chains
     * do. The cadence honors the table's `delta.checkpointInterval`
-    * (default [[DeltaWriter.CheckpointInterval]]). */
+    * (default [[DeltaWriter.CheckpointInterval]]). The driver state the
+    * checkpoint was written from seeds the snapshot cache, so the next
+    * snapshot extends it instead of reading the checkpoint back. */
   private def maybeCheckpoint(
       spark: SparkSession, tablePath: String, version: Long,
       configuration: Map[String, String]): Unit = {
@@ -144,7 +146,8 @@ private[graft] object DeltaCommit {
       .flatMap(v => scala.util.Try(v.trim.toInt).toOption).filter(_ > 0)
       .getOrElse(DeltaWriter.CheckpointInterval)
     if (version > 0 && version % interval == 0)
-      DeltaWriter.writeCheckpoint(spark, tablePath, version)
+      DeltaWriter.checkpoint(spark, tablePath, version)
+        .foreach(DeltaLog.seedCheckpointState(spark, tablePath, version, _))
   }
 
   // ---- encoders: one per action ----

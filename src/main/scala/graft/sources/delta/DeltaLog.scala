@@ -800,15 +800,20 @@ object DeltaLog extends Logging {
     }
 
   /** The frame plane's metadata: protocol, metaData, txn and domains
-    * replayed by a Spark job and gated, `files` empty. The reader gates
-    * run here, before any live-set job: an unreadable table (unknown reader
-    * feature) fails loudly first. */
+    * replayed by a Spark job — or [[SnapshotCache]]'s, beside the frame,
+    * while the replay inputs still fingerprint-match — and gated, `files`
+    * empty. The reader gates run here, before any live-set job: an
+    * unreadable table (unknown reader feature) fails loudly first. */
   private def metadataReplay(
       spark: SparkSession, tablePath: String, target: Long,
       cp: Option[(Long, Seq[FileStatus])],
       tailCommits: Seq[(Long, FileStatus)]): DeltaSnapshot = {
-    val (p, m, txns, doms) = DeltaStateReconstruction.replay(spark, tablePath, cp, tailCommits)
-    finishSnapshot(tablePath, target, p, m, Nil, txns, doms)
+    val m = SnapshotCache.metadata(tablePath, target,
+        SnapshotCache.fingerprint(cp, tailCommits)) {
+      val (p, md, txns, doms) = DeltaStateReconstruction.replay(spark, tablePath, cp, tailCommits)
+      MetadataState(p, md, txns, doms)
+    }
+    finishSnapshot(tablePath, target, m.protocol, m.metadata, Nil, m.txns, m.domains)
   }
 
   /** The frame plane's live set at `target`: [[SnapshotCache]]'s frame
@@ -1210,6 +1215,20 @@ object DeltaLog extends Logging {
       metadataReplay(spark, tablePath, target, cp, tailCommits)
     else driverReplay(spark, tablePath, target, cp, tailCommits)
   }
+
+  /** Cache the driver state a checkpoint at `version` was just written
+    * from, under the published parts' fingerprint: it is exactly what a
+    * replay of that checkpoint rebuilds, so the next snapshot extends it
+    * instead of reading the checkpoint back. `snap` is what
+    * [[DeltaWriter.checkpoint]] returned. */
+  private[delta] def seedCheckpointState(
+      spark: SparkSession, tablePath: String, version: Long, snap: DeltaSnapshot): Unit =
+    listLog(spark, tablePath)._2.find(_._1 == version).foreach { cp =>
+      if (snap.files.size <= fileCountThreshold(spark))
+        SnapshotCache.putDriver(tablePath, version, SnapshotCache.fingerprint(Some(cp), Nil),
+          DriverState(snap.files.toVector, snap.transactions, snap.domainMetadata.toVector,
+            Some(snap.protocol), Some(snap.metadata)))
+    }
 
   /** O(1) estimate of a checkpoint's add count, for the replay-path
     * decision: `_last_checkpoint`'s recorded row count when it describes

@@ -3,9 +3,9 @@ package graft.sources.delta
 import java.util.UUID
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Result of a MERGE run. */
 final case class MergeMetrics(
@@ -51,24 +51,34 @@ object MergeClause {
   *    from the assigned expression); rows the merge does not touch read
   *    the new columns as NULL — delta-spark's autoMerge contract.
   *
-  * Scale posture (100 TB): the target is never rewritten wholesale. The
-  * find phase joins the provider scan against the source to resolve the
-  * TOUCHED file set (partition pruning applies when the merge condition
-  * constrains partition columns); `WHEN NOT MATCHED BY SOURCE` widens it
-  * by the files holding unmatched rows that satisfy a by-source clause
-  * condition — an unconditional by-source clause touches every file, which
-  * is what its semantics demand. The not-matched inserts come from one
-  * anti join of the (typically small) source. With a `WHEN MATCHED`
-  * clause it runs against the persisted touched-file rows, not the table:
-  * the find phase inner-joined the FULL target under the same condition,
-  * so every target row that matches any source row lies in a touched file
-  * and the touched rows stand in exactly for the whole table (no touched
-  * file: every source row is unmatched). An insert-only merge has no find
-  * phase, so its anti join reads the full target. Touched-file rows are
-  * persisted with a synthetic row id so the cardinality check, the
-  * rewrite, the metrics and the insert anti join all read ONE
-  * materialization (re-planning a scan between jobs could renumber rows).
-  * Commit is the same validated remove+add loop as OPTIMIZE/DELETE.
+  * Scale posture (100 TB): the target is never rewritten wholesale, and a
+  * merge with a `WHEN MATCHED` clause runs as two Spark executions — the
+  * shape of delta-spark's `MergeIntoCommand` (find the touched files, then
+  * write all changes in one pass):
+  *
+  *  1. the find joins the pinned target against the source and returns,
+  *     per touched file, whether any target row (`_metadata.file_path`,
+  *     `_metadata.row_index`) matched more than one source row — the
+  *     cardinality error is raised there, before anything is staged.
+  *     Partition pruning applies when the merge condition constrains
+  *     partition columns. `WHEN NOT MATCHED BY SOURCE` widens the touched
+  *     set by the files holding unmatched rows that satisfy a by-source
+  *     clause condition — an unconditional by-source clause touches every
+  *     file, which is what its semantics demand;
+  *  2. the write is ONE staging write of the touched files' rows outer-
+  *     joined with the source: every target row that matches any source
+  *     row lies in a touched file, so the touched rows stand in exactly for
+  *     the table, and a full outer join also yields the unmatched source
+  *     rows to insert. The updated/deleted/inserted counts are observed on
+  *     that write, upstream of the delete filter. Only a CDF-on merge
+  *     persists the tagged rows, so its data and change rows come from one
+  *     evaluation.
+  *
+  * A merge without a matched clause has no match find: an insert-only
+  * merge anti-joins the whole pinned target, and a by-source-only merge
+  * flags its touched rows with a semi/anti join pair (a multi-matched row
+  * stays one row). Commit is the same validated remove+add loop as
+  * OPTIMIZE/DELETE.
   */
 object DeltaMerge {
 
@@ -250,45 +260,44 @@ object DeltaMerge {
         s"INSERT leaves non-nullable column(s) ${broken.mkString(",")} unassigned")
     }
 
-    // action ids: matched clause i -> i, by-source clause j -> 1000 + j
-    val matchedIds = matched.indices
-    val bySourceIds = bySource.indices.map(_ + 1000)
-    val updateActs: Seq[(Int, Map[String, String])] =
-      matchedIds.zip(matched).collect { case (id, Matched(Some(u), _)) => id -> u } ++
-        bySourceIds.zip(bySource).collect { case (id, NotMatchedBySource(Some(u), _)) => id -> u }
-    val deleteActs: Seq[Int] =
-      matchedIds.zip(matched).collect { case (id, Matched(None, _)) => id } ++
-        bySourceIds.zip(bySource).collect { case (id, NotMatchedBySource(None, _)) => id }
-
-    // ---- 1. find touched files. The source is tagged with a constant
-    // marker column: "did this left join find a source row" via any data
+    // ---- 1. find the touched files. The source is tagged with a constant
+    // marker column: "did this outer join find a source row" via any data
     // column's null-ness would break on sources that genuinely contain
-    // NULLs. Every phase reads the table PINNED to the transaction's
-    // snapshot version — an unpinned read resolves a fresh snapshot at
-    // load() time, so a commit racing the merge could make the find see a
-    // file the `touched` set (built from `snap`) then silently drops: a
-    // matched row neither updated nor inserted, under no serial order.
+    // NULLs. Every read is PINNED to the transaction's snapshot version —
+    // an unpinned read resolves a fresh snapshot at load() time, so a
+    // commit racing the merge could make the find see a file the `touched`
+    // set (built from `snap`) then silently drops: a matched row neither
+    // updated nor inserted, under no serial order.
     val src = source.withColumn("_smark", lit(1)).alias("s")
-    val matchedTouch: Set[String] =
-      if (matched.isEmpty) Set.empty
-      else DeltaTable.readVersion(spark, tablePath, snap.version)
-        .withColumn("_gf", input_file_name()).alias("t")
-        .join(src, expr(condition), "inner")
-        .select(col("_gf")).distinct()
-        .collect().map(r => normalize(r.getString(0))).toSet
-    val bySourceTouch: Set[String] =
-      if (bySource.isEmpty) Set.empty
-      else {
-        val anyCond = bySource.map(_.condition.map(expr).getOrElse(lit(true)))
-          .reduce(_ || _)
-        DeltaTable.readVersion(spark, tablePath, snap.version)
-          .withColumn("_gf", input_file_name()).alias("t")
-          .join(src, expr(condition), "left_anti")
-          .filter(anyCond)
+    def pinnedTarget = DeltaTable.readVersion(spark, tablePath, snap.version)
+      .select(col("*"), col("_metadata.file_path").as("_gf"),
+        col("_metadata.row_index").as("_gi")).alias("t")
+    val touchedPaths: Set[String] = withPhase(spark, "MERGE find") {
+      // per file: matched pairs vs DISTINCT matched target rows — more pairs
+      // than rows means a target row matched several source rows, the
+      // cardinality violation, raised before anything is re-read or staged
+      val matchedTouch: Set[String] =
+        if (matched.isEmpty) Set.empty
+        else {
+          val perFile = pinnedTarget.join(src, expr(condition), "inner")
+            .groupBy(col("_gf"))
+            .agg(count(lit(1)), countDistinct(col("_gi")))
+            .collect()
+          if (perFile.exists(r => r.getLong(1) > r.getLong(2)))
+            throw new UnsupportedOperationException(
+              "MERGE cardinality violation: a target row matched more than one " +
+                "source row; the result would be nondeterministic (production " +
+                "Delta raises the same error)")
+          perFile.map(r => normalize(r.getString(0))).toSet
+        }
+      val bySourceTouch: Set[String] =
+        if (bySource.isEmpty) Set.empty
+        else pinnedTarget.join(src, expr(condition), "left_anti")
+          .filter(bySource.map(b => cond(b.condition)).reduce(_ || _))
           .select(col("_gf")).distinct()
           .collect().map(r => normalize(r.getString(0))).toSet
-      }
-    val touchedPaths = matchedTouch ++ bySourceTouch
+      matchedTouch ++ bySourceTouch
+    }
     val touched = DeltaDml.touchedAdds(tablePath, snap, deferred, touchedPaths)
     // every found path must resolve to a snapshot file — a silent drop
     // here would commit a merge that never rewrote a matched row
@@ -297,241 +306,182 @@ object DeltaMerge {
       s"internal: ${touchedPaths.size - touched.size} matched file(s) not found " +
         s"in snapshot v${snap.version} (e.g. ${touchedPaths.take(3).mkString(",")})")
 
-    // ---- 2. rewrite touched files (first-match-wins clause application)
+    // ---- 2. the write: every output row of the merge tagged with the
+    // clause it took, first-match-wins per clause list — matched clause i
+    // -> i, by-source clause j -> 1000 + j, insert clause k -> 2000 + k; a
+    // target row no clause takes is carried (-1), a source row no insert
+    // clause takes is dropped (-2)
+    val updateActs: Seq[(Int, Map[String, String])] =
+      matched.zipWithIndex.collect { case (Matched(Some(u), _), i) => i -> u } ++
+        bySource.zipWithIndex.collect {
+          case (NotMatchedBySource(Some(u), _), j) => (1000 + j) -> u
+        }
+    val deleteActs: Seq[Int] =
+      matched.zipWithIndex.collect { case (Matched(None, _), i) => i } ++
+        bySource.zipWithIndex.collect { case (NotMatchedBySource(None, _), j) => 1000 + j }
+    val insertActs: Seq[(Int, Map[String, String])] =
+      notMatched.zipWithIndex.map { case (nm, k) => (2000 + k) -> nm.insert }
+    val act = col("_act")
+    val inserting = act >= 2000
+    val tHere = col("_tmark").isNotNull
+    val sHere = col("_smark").isNotNull
+    val matchedCases = matched.zipWithIndex.map { case (m, i) =>
+      (tHere && sHere && cond(m.condition), i)
+    }
+    val bySourceCases = bySource.zipWithIndex.map { case (b, j) =>
+      (tHere && !sHere && cond(b.condition), 1000 + j)
+    }
+    val insertCases = notMatched.zipWithIndex.map { case (nm, k) =>
+      (!tHere && cond(nm.condition), 2000 + k)
+    }
+
     val cdfOn = DeltaCdf.enabled(snap.metadata)
-    var rowsUpdated = 0L
-    var rowsDeleted = 0L
-    // provider-scan read ([[DeltaMaintenance.partitionInjected]]):
-    // partition injection, column mapping AND deletion-vector filtering
-    // — a raw parquet read would resurrect DV'd rows into the rewrite
-    // row tracking: materialized id/version columns ride along — carried
-    // and updated rows preserve their id; updated rows null the version
-    // (the new add's defaultRowCommitVersion dates them); deleted rows
-    // drop out; inserted rows (separate staging below) carry no
-    // materialization and get fresh ids from their add's baseRowId.
-    // One materialization: the cardinality check, the metrics and the
-    // rewrite must all see the same row ids, and the insert anti-join
-    // (step 3) reads the same rows — it stays persisted until then.
     val rtCols = DeltaMaintenance.rewriteCarryCols(snap)
-    val ttOpt: Option[DataFrame] =
+    // One branch's rows projected to the output: outCols (the applied
+    // clause's assignment, else the target's value — NULL for an inserted
+    // row and for a column schema evolution adds), the row-tracking pair,
+    // `_act`, and with CDF on the pre-images (`_pre_<c>`). `acts` are the
+    // assignments the frame can resolve; `withTarget` = it carries the `t`
+    // side. Row tracking: carried and updated rows keep their id, updated
+    // rows null the version (the new add's defaultRowCommitVersion dates
+    // them); inserted rows null both and so take fresh ids from their add's
+    // baseRowId.
+    def project(frame: DataFrame, cases: Seq[(Column, Int)], otherwise: Column,
+        acts: Seq[(Int, Map[String, String])], withTarget: Boolean): DataFrame = {
+      def carry(c: String): Column =
+        if (withTarget && have.contains(c)) col(s"t.$c") else lit(null).cast(colType(c))
+      def value(c: String): Column =
+        caseOf(acts.flatMap { case (id, set) =>
+          set.get(c).map(e => (act === id, expr(e).cast(colType(c))))
+        }, carry(c))
+      val rtKeep: Seq[Column] = rtCols match {
+        case Seq(matId, matVer) =>
+          def carried(m: String) =
+            if (withTarget) col(s"t.`$m`") else lit(null).cast(LongType)
+          Seq(carried(matId).as(matId),
+            when(act.isInCollection(updateActs.map(_._1)), lit(null).cast(LongType))
+              .otherwise(carried(matVer)).as(matVer))
+        case _ => Nil
+      }
+      val pre = if (cdfOn) outCols.map(c => carry(c).as(s"_pre_$c")) else Nil
+      frame.withColumn("_act", caseOf(cases.map { case (c, id) => (c, lit(id)) }, otherwise))
+        .select(outCols.map(c => value(c).as(c)) ++ rtKeep ++ pre :+ act: _*)
+    }
+    val touchedRows: Option[DataFrame] =
       if (touched.isEmpty) None
       else Some(DeltaMaintenance.partitionInjected(spark, tablePath, snap, touched,
           withRowIds = true)
-        .reduce(_ unionByName _)
-        .withColumn("_tid", monotonically_increasing_id())
-        .persist())
-    var identityNewHwm: Map[String, Long] = Map.empty
-    val (rewrittenOpt, insertedOpt) = try {
-      val rewrittenOpt: Option[((Seq[Add], Long), Seq[(String, Long)])] =
-        ttOpt.map { tt =>
-          val joined = tt.alias("t").join(src, expr(condition), "left")
-          // rewrite frame: exactly ONE row per target row.
-          //  - with matched clauses: the cardinality gate below guarantees it
-          //    on the left join itself (and >1 source match is an error);
-          //  - by-source-only merges tolerate multi-match rows (they are all
-          //    carried), so the flag is aggregated per row id instead — the
-          //    left join would duplicate carried rows.
-          val rw: DataFrame =
-            if (matched.nonEmpty) {
-              // cardinality gate rides the metrics aggregation below (one
-              // action instead of two, and one fewer execution of the join
-              // subplan — r22, guide §1.2): see gateAndCounts
-              joined
-            } else {
-              val flags = joined.groupBy(col("_tid"))
-                .agg(max(col("_smark")).as("_smark"))
-              tt.alias("t").join(flags, Seq("_tid"))
-            }
-          // first-match-wins action resolution: -1 = carry
-          val actChain = {
-            val cases: Seq[(Column, Int)] =
-              matchedIds.zip(matched).map { case (id, m) =>
-                (srcMatched && m.condition.map(expr).getOrElse(lit(true)), id)
-              } ++ bySourceIds.zip(bySource).map { case (id, b) =>
-                (!srcMatched && b.condition.map(expr).getOrElse(lit(true)), id)
-              }
-            cases.tail.foldLeft(when(cases.head._1, cases.head._2)) {
-              case (acc, (c, id)) => acc.when(c, id)
-            }.otherwise(lit(-1))
-          }
-          val withAct = rw.withColumn("_act", actChain)
+        .reduce(_ unionByName _).withColumn("_tmark", lit(1)))
+    def sourceOnly(from: DataFrame) =
+      project(from.withColumn("_tmark", lit(null).cast(IntegerType)), insertCases, lit(-2),
+        insertActs, withTarget = false)
+    val branches: Seq[DataFrame] =
+      if (matched.nonEmpty) touchedRows match {
+        // every target row matching any source row lies in a touched file
+        // (the find inner-joined the whole pinned target), so the touched
+        // rows stand in exactly for the table: one outer join yields the
+        // rewrite and, full, the unmatched source rows to insert
+        case Some(tt) =>
+          Seq(project(tt.alias("t").join(src, expr(condition),
+              if (notMatched.nonEmpty) "full" else "left"),
+            matchedCases ++ bySourceCases ++ insertCases,
+            when(tHere, -1).otherwise(-2), updateActs ++ insertActs, withTarget = true))
+        case None => if (notMatched.isEmpty) Nil else Seq(sourceOnly(src))
+      } else {
+        // no find over matches: the touched files come from the by-source
+        // find only, so the rewrite flags each touched row matched or not
+        // (semi/anti — a multi-matched row is still ONE row) and inserts
+        // anti-join the whole pinned target
+        touchedRows.toSeq.map { tt =>
+          val t = tt.alias("t")
+          val flagged = t.join(src, expr(condition), "left_semi").withColumn("_smark", lit(1))
+            .unionByName(t.join(src, expr(condition), "left_anti")
+              .withColumn("_smark", lit(null).cast(IntegerType)))
+          project(flagged.alias("t"), bySourceCases, lit(-1), updateActs, withTarget = true)
+        } ++ (if (notMatched.isEmpty) Nil
+              else Seq(sourceOnly(src.join(pinnedTarget, expr(condition), "left_anti"))))
+      }
 
-          // ONE pass for the cardinality gate AND the per-action metrics
-          // (r22; the old shape ran gate-count and metrics-count as two
-          // actions, each re-executing the tt-join subplan). Two-level
-          // aggregation: per target row id, the source-match count and the
-          // resolved action; then rows per action with the max match count
-          // riding along. When no row multi-matches, every _tid contributes
-          // exactly one joined row, so per-_tid counts ARE per-act row
-          // counts; when one does, the gate throws and the metrics are
-          // never read. By-source-only merges keep their flags path (rw is
-          // already one row per target row there; no gate by semantics).
-          val actCounts: Map[Int, Long] =
-            if (matched.nonEmpty) {
-              val summary = withAct.groupBy(col("_tid"))
-                .agg(count(when(srcMatched, 1)).as("_m"),
-                  max(col("_act")).as("_a"),
-                  count(lit(1)).as("_rows"))
-                .groupBy(col("_a"))
-                .agg(sum(col("_rows")).as("_n"), max(col("_m")).as("_mm"))
-                .collect()
-              if (summary.exists(_.getLong(2) > 1))
-                throw new UnsupportedOperationException(
-                  "MERGE cardinality violation: a target row matched more than one " +
-                    "source row; the result would be nondeterministic (production " +
-                    "Delta raises the same error)")
-              summary.map(r => r.getInt(0) -> r.getLong(1)).toMap
-            } else withAct.groupBy(col("_act"))
-              .agg(count(lit(1)).as("_n")).collect()
-              .map(r => r.getInt(0) -> r.getLong(1)).toMap
-          val updIdSet = updateActs.map(_._1).toSet
-          rowsUpdated = actCounts.collect { case (id, n) if updIdSet.contains(id) => n }.sum
-          rowsDeleted = actCounts.collect { case (id, n) if deleteActs.contains(id) => n }.sum
-
-          def carry(c: String): Column =
-            if (have.contains(c)) col(s"t.$c") else lit(null).cast(colType(c))
-          // resolved value of column c: the applied clause's SET expression
-          // (clauses that do not assign c carry it), else the target value
-          def resolved(c: String): Column = {
-            val cases = updateActs.flatMap { case (id, set) =>
-              set.get(c).map(e => (id, expr(e).cast(colType(c))))
-            }
-            if (cases.isEmpty) carry(c)
-            else cases.foldLeft(null: Column) { case (acc, (id, v)) =>
-              val cond = col("_act") === id
-              if (acc == null) when(cond, v) else acc.when(cond, v)
-            }.otherwise(carry(c))
-          }
-          val rtKeep: Seq[Column] = rtCols match {
-            case Seq(matId, matVer) =>
-              val updIds = updateActs.map(_._1)
-              val verCol =
-                if (updIds.isEmpty) col(s"t.`$matVer`").as(matVer)
-                else when(col("_act").isInCollection(updIds),
-                  lit(null).cast(org.apache.spark.sql.types.LongType))
-                  .otherwise(col(s"t.`$matVer`")).as(matVer)
-              Seq(col(s"t.`$matId`").as(matId), verCol)
-            case _ => Nil
-          }
-          val result0 = withAct
-            .filter(if (deleteActs.isEmpty) lit(true)
-                    else !col("_act").isInCollection(deleteActs))
-            .select(outCols.map(c => resolved(c).as(c)) ++ rtKeep: _*)
-          // updated rows must satisfy the table's CHECK constraints AND the
-          // NOT NULL invariants (a SET expression evaluating NULL into a
-          // non-nullable column would read back as 0 through the schema)
-          DeltaConstraints.validate(result0, snap, "MERGE")
-          val result = DeltaConstraints.notNullGuarded(result0, snap.schema, "MERGE")
-          // change data feed: per-action rows, computed from the same
-          // persisted materialization as the rewrite
-          val cdcMatched: Seq[(String, Long)] =
-            if (!cdfOn) Nil
+    // stage the tagged rows: the data files, then with CDF on the change
+    // files; returns them with the updated/deleted/inserted counts
+    def writeAll(rows: DataFrame): (Seq[Add], Seq[(String, Long)], Long, Long, Long) = {
+      def written(df: DataFrame): DataFrame =
+        df.filter(!act.isInCollection(deleteActs :+ -2))
+          .select(outCols.map(col) ++ rtCols.map(c => col(s"`$c`")): _*)
+      // updated and inserted rows must satisfy the table's CHECK constraints
+      // AND the NOT NULL invariants (an expression evaluating NULL into a
+      // non-nullable column would read back as 0 through the schema)
+      DeltaConstraints.validate(written(rows), snap, "MERGE")
+      // the per-clause counts ride the write itself, observed upstream of
+      // the delete filter
+      val counts = Observation()
+      val observed = rows.observe(counts,
+        count(when(act.isInCollection(updateActs.map(_._1)), 1)).as("updated"),
+        count(when(act.isInCollection(deleteActs), 1)).as("deleted"),
+        count(when(inserting, 1)).as("inserted"))
+      val adds = stageAndReturn(spark, tablePath, snap,
+        DeltaConstraints.notNullGuarded(written(observed), snap.schema, "MERGE"), outSchema)
+      // no metrics = the optimizer dropped an empty plan, nothing written
+      val observedCounts = counts.get
+      require(observedCounts.nonEmpty || adds.isEmpty, "internal: MERGE write ran unobserved")
+      def n(k: String): Long = observedCounts.get(k).fold(0L)(_.asInstanceOf[Long])
+      // change data feed: per-clause rows of the same evaluation. A commit
+      // with ANY cdc action is read from cdc only, so the inserts ride along
+      val cdc =
+        if (!cdfOn || (touched.isEmpty && n("inserted") == 0)) Nil
+        else {
+          def image(df: DataFrame, pre: Boolean, kind: String) =
+            df.select(outCols.map(c => col(if (pre) s"_pre_$c" else c).as(c)) :+
+              lit(kind).as(DeltaCdf.TypeCol): _*)
+          val updated = rows.filter(act.isInCollection(updateActs.map(_._1)))
+          DeltaCdf.stageChanges(spark, tablePath, snap, Seq(
+            image(rows.filter(act.isInCollection(deleteActs)), pre = true, "delete"),
+            image(updated, pre = true, "update_preimage"),
+            image(updated, pre = false, "update_postimage"),
+            image(rows.filter(inserting), pre = false, "insert")).reduce(_ unionByName _))
+        }
+      (adds, cdc, n("updated"), n("deleted"), n("inserted"))
+    }
+    val (adds, cdcFiles, rowsUpdated, rowsDeleted, rowsInserted, identityNewHwm) =
+      branches.reduceOption(_ unionByName _) match {
+        case None => (Nil, Nil, 0L, 0L, 0L, Map.empty[String, Long])
+        case Some(tagged) => withPhase(spark, "MERGE write") {
+          // GENERATED ALWAYS AS IDENTITY: inserted rows omit the column
+          // (enforced above) and take values continuing from the table's
+          // high water mark — the SAME range-allocation machinery as the
+          // append path. checkTableState in the commit loop covers the
+          // concurrency story: a concurrent identity advance re-emits
+          // metaData, which aborts this merge before it could hand out
+          // duplicate ids.
+          val (withIds, newHwm, idPinned) =
+            if (identityFields.isEmpty || notMatched.isEmpty)
+              (tagged, Map.empty[String, Long], None)
             else {
-              val preCols = outCols.map(c => carry(c).as(c))
-              val deletes =
-                if (deleteActs.isEmpty) None
-                else Some(withAct.filter(col("_act").isInCollection(deleteActs))
-                  .select(preCols :+ lit("delete").as(DeltaCdf.TypeCol): _*))
-              val updates =
-                if (updateActs.isEmpty) None
-                else {
-                  val touchedUpd = withAct
-                    .filter(col("_act").isInCollection(updateActs.map(_._1)))
-                  val pre = touchedUpd
-                    .select(preCols :+ lit("update_preimage").as(DeltaCdf.TypeCol): _*)
-                  val post = touchedUpd.select(outCols.map(c => resolved(c).as(c)) :+
-                    lit("update_postimage").as(DeltaCdf.TypeCol): _*)
-                  Some(pre.unionByName(post))
-                }
-              (deletes.toSeq ++ updates.toSeq).reduceOption(_ unionByName _)
-                .map(DeltaCdf.stageChanges(spark, tablePath, snap, _))
-                .getOrElse(Nil)
+              val (ins, hwm, nAssigned, pinned) = DeltaWriter.assignIdentityValues(
+                tagged.filter(inserting).drop(identityNames.toSeq: _*), identityFields,
+                identityFields.map(f => f.name -> DeltaWriter.identityHwm(f)).toMap)
+              (tagged.filter(!inserting).unionByName(ins),
+                if (nAssigned > 0) hwm else Map.empty[String, Long], pinned)
             }
-          // stage NOW (inside persist scope): the write is the terminal action
-          (stageAndReturn(spark, tablePath, snap, result, outSchema), cdcMatched)
-      }
-
-      // ---- 3. inserts: source rows matching NO target row, routed through
-      // the first insert clause whose condition they satisfy (rows
-      // satisfying none are dropped — production semantics). With a MATCHED
-      // clause the touched rows stand in exactly for the full target (see
-      // the object doc); insert-only merges anti-join the full target.
-      val insertedOpt: Option[((Seq[Add], Long), Seq[(String, Long)])] =
-        if (notMatched.isEmpty) None else Some {
-        val matchable: Option[DataFrame] =
-          if (matched.isEmpty) Some(DeltaTable.readVersion(spark, tablePath, snap.version))
-          else ttOpt
-        val anti = matchable.fold(src)(t => src.join(t.alias("t"), expr(condition), "left_anti"))
-        val iactChain = {
-          val cases = notMatched.zipWithIndex.map { case (nm, j) =>
-            (nm.condition.map(expr).getOrElse(lit(true)), j)
-          }
-          cases.tail.foldLeft(when(cases.head._1, cases.head._2)) {
-            case (acc, (c, j)) => acc.when(c, j)
-          }.otherwise(lit(-1))
-        }
-        val withIact = anti.withColumn("_iact", iactChain).filter(col("_iact") >= 0)
-        def inserted(c: String): Column = {
-          val cases = notMatched.zipWithIndex.flatMap { case (nm, j) =>
-            nm.insert.get(c).map(e => (j, expr(e).cast(colType(c))))
-          }
-          if (cases.isEmpty) lit(null).cast(colType(c))
-          else cases.foldLeft(null: Column) { case (acc, (j, v)) =>
-            val cond = col("_iact") === j
-            if (acc == null) when(cond, v) else acc.when(cond, v)
-          }.otherwise(lit(null).cast(colType(c)))
-        }
-        // identity columns are omitted from the clause frame (enforced
-        // above) and assigned here, continuing from the table's high water
-        // mark — the SAME range-allocation machinery as the append path.
-        // checkTableState in the commit loop covers the concurrency story:
-        // a concurrent identity advance re-emits metaData, which aborts
-        // this merge before it could hand out duplicate ids.
-        val nonIdCols = outCols.filterNot(identityNames.contains)
-        val insertRows0 = withIact.select(nonIdCols.map(c => inserted(c).as(c)): _*)
-        val fromHwm = identityFields.map(f => f.name -> DeltaWriter.identityHwm(f)).toMap
-        val (withIds, newHwm, nAssigned, idPinned) =
-          DeltaWriter.assignIdentityValues(insertRows0, identityFields, fromHwm)
-        if (nAssigned > 0) identityNewHwm = newHwm
-        // the identity-pinned frame must not outlive a validation failure
-        // (CHECK/NOT NULL throwing below is a routine path) — outer finally
-        try {
-          // NOT NULL holds structurally for UNASSIGNED columns (checked at
-          // clause validation) and via the inline guard for assigned
-          // expressions that evaluate NULL at runtime; CHECK constraints see
-          // the assigned identity values (they may reference them)
-          val insertRows = DeltaConstraints.notNullGuarded(
-            withIds.select(outCols.map(col): _*), snap.schema, "MERGE INSERT")
-          DeltaConstraints.validate(insertRows, snap, "MERGE INSERT")
-          // persisted: the table write and the cdc 'insert' rows must come
-          // from ONE evaluation of the anti-join (re-planning could diverge
-          // on nondeterministic sources, and re-runs the scan regardless)
-          val pinned = insertRows.persist()
+          // CDF on: the data and change rows must come from ONE evaluation
+          // (re-planning could diverge on nondeterministic sources)
+          val rows = if (cdfOn) withIds.persist() else withIds
           try {
-            val addsAndRows = stageAndReturn(spark, tablePath, snap, pinned, outSchema)
-            // a commit with ANY cdc action is read from cdc only — the inserts
-            // must ride along when the matched clause produced change rows
-            val cdcIns: Seq[(String, Long)] =
-              if (!cdfOn || addsAndRows._2 == 0) Nil
-              else DeltaCdf.stageChanges(spark, tablePath, snap,
-                pinned.withColumn(DeltaCdf.TypeCol, lit("insert")))
-            (addsAndRows, cdcIns)
-          } finally pinned.unpersist()
-        } finally idPinned.foreach(_.unpersist())
+            val (adds, cdc, upd, del, ins) = writeAll(rows)
+            (adds, cdc, upd, del, ins, newHwm)
+          } finally {
+            if (cdfOn) rows.unpersist()
+            idPinned.foreach(_.unpersist())
+          }
+        }
       }
-      (rewrittenOpt, insertedOpt)
-    } finally ttOpt.foreach(_.unpersist())
-
-    val rowsInserted = insertedOpt.map(_._1._2).getOrElse(0L)
-    val adds = rewrittenOpt.map(_._1._1).getOrElse(Nil) ++ insertedOpt.map(_._1._1).getOrElse(Nil)
-    val cdcFiles = rewrittenOpt.map(_._2).getOrElse(Nil) ++ insertedOpt.map(_._2).getOrElse(Nil)
 
     // an idempotence-keyed merge must still commit its SetTransaction
     // watermark even when it changed nothing, or a retry would re-run it
     if (touched.isEmpty && rowsInserted == 0 && evolved.isEmpty && txn.isEmpty)
       return MergeMetrics(0, 0, 0, 0, snap.version)
 
-    // ---- 4. validated commit loop (same contract as DELETE/OPTIMIZE)
+    // ---- 3. validated commit loop (same contract as DELETE/OPTIMIZE)
     beforeCommit()
     val fs = new Path(tablePath).getFileSystem(spark.sessionState.newHadoopConf())
     val onAbort = () => {
@@ -540,7 +490,8 @@ object DeltaMerge {
       }
       DeltaCdf.cleanup(spark, tablePath, cdcFiles)
     }
-    val committedVersion = DeltaCommit.run(spark, tablePath, "MERGE", onAbort) {
+    val committedVersion = withPhase(spark, "MERGE commit")(
+        DeltaCommit.run(spark, tablePath, "MERGE", onAbort) {
       // deferred plane: metadata-only re-read (txn watermarks included) +
       // incremental conflict rule — no O(files) materialization per retry
       val latest =
@@ -595,22 +546,39 @@ object DeltaMerge {
               DeltaCdf.cdcLine(rel, size, snap.partitionColumns.map(snap.metadata.physicalOf))
             }))
       }
-    } match {
+    }) match {
       case Left(v) => return MergeMetrics(0, 0, 0, 0, v)
       case Right(v) => v
     }
     MergeMetrics(rowsUpdated, rowsDeleted, rowsInserted, touched.size, committedVersion)
   }
 
-  /** "this left-joined target row found a source row" — probes the
-    * constant marker the source was tagged with (never a data column,
-    * which could be legitimately NULL). */
-  private val srcMatched = col("_smark").isNotNull
+  /** A clause's condition; an absent one always holds. */
+  private def cond(c: Option[String]): Column = c.map(expr).getOrElse(lit(true))
+
+  /** `CASE WHEN c1 THEN v1 … ELSE otherwise END`, `otherwise` alone when
+    * there are no cases. */
+  private def caseOf(cases: Seq[(Column, Column)], otherwise: Column): Column =
+    if (cases.isEmpty) otherwise
+    else cases.tail.foldLeft(when(cases.head._1, cases.head._2)) {
+      case (acc, (c, v)) => acc.when(c, v)
+    }.otherwise(otherwise)
+
+  /** Run `f` with its Spark jobs described as `name` (the UI's and the
+    * listeners' job description), restoring the caller's own description
+    * after. */
+  private def withPhase[T](spark: SparkSession, name: String)(f: => T): T = {
+    val sc = spark.sparkContext
+    val key = "spark.job.description"
+    val previous = sc.getLocalProperty(key)
+    sc.setJobDescription(name)
+    try f finally sc.setLocalProperty(key, previous)
+  }
 
   private type Add = DeltaCommit.Staged
 
   /** Write `df` into a staging dir, publish the files into the table dir,
-    * and return the pending add actions + the row count written.
+    * and return the pending add actions.
     * `outSchema` is the LOGICAL table schema of `df` (the snapshot's, or
     * the evolved one under schema evolution) — stats are collected against
     * its physical data projection. */
@@ -619,7 +587,7 @@ object DeltaMerge {
       tablePath: String,
       snap: DeltaSnapshot,
       df: DataFrame,
-      outSchema: StructType): (Seq[Add], Long) = {
+      outSchema: StructType): Seq[Add] = {
     val stagingDir = new Path(tablePath, s"_staging-${UUID.randomUUID()}")
     val fs = stagingDir.getFileSystem(spark.sessionState.newHadoopConf())
     // column-mapped tables stage under physical names; `df` is logical
@@ -631,38 +599,37 @@ object DeltaMerge {
     val staged = if (physPartCols.nonEmpty)
       staged0.repartition(physPartCols.map(org.apache.spark.sql.functions.col): _*)
     else staged0
-    val writer = staged.write.mode(SaveMode.Overwrite)
-      .options(DeltaWriter.StagingWriteOptions)
-    (if (physPartCols.nonEmpty) writer.partitionBy(physPartCols: _*)
-     else writer).parquet(stagingDir.toString)
-    val stagedFiles = DeltaWriter.listParquetFilesRecursively(fs, stagingDir)
-    val physDataSchema = StructType(outSchema.fields
-      .filterNot(f => snap.partitionColumns.contains(f.name))
-      .map(f => f.copy(name = snap.metadata.physicalOf(f.name))))
-    val stats = DeltaWriter.collectFileStats(spark, stagedFiles.map(_.toString),
-      physDataSchema, snap.metadata.configuration)
-    // a zero-row staged file (Spark writes one schema-only part file even
-    // for an EMPTY frame — e.g. an insert clause no source row satisfied)
-    // is dropped, never published: publishing would orphan it on the
-    // no-op early return and accumulate empty adds on real commits
-    val liveStaged = stagedFiles.filterNot { f =>
-      stats.get(f.toString).exists(n => n.get("numRecords").asLong() == 0L)
-    }
-    var rows = 0L
-    val adds: Seq[Add] = liveStaged.map { staged =>
-      val rel = DeltaWriter.relativize(stagingDir, staged)
-      val target = new Path(tablePath, rel)
-      fs.mkdirs(target.getParent)
-      if (!fs.rename(staged, target))
-        throw new java.io.IOException(s"failed to publish $staged -> $target")
-      val st = fs.getFileStatus(target)
-      val stat = stats.get(staged.toString)
-      rows += stat.flatMap(n => Option(n.get("numRecords")).map(_.asLong())).getOrElse(0L)
-      (rel, DeltaWriter.partitionValuesOf(rel, physPartCols), st.getLen,
-        st.getModificationTime, stat)
-    }
-    fs.delete(stagingDir, true)
-    (adds, rows)
+    // the staging dir goes however the write ends: a NOT NULL guard firing
+    // mid-write is a routine MERGE failure
+    try {
+      val writer = staged.write.mode(SaveMode.Overwrite)
+        .options(DeltaWriter.StagingWriteOptions)
+      (if (physPartCols.nonEmpty) writer.partitionBy(physPartCols: _*)
+       else writer).parquet(stagingDir.toString)
+      val stagedFiles = DeltaWriter.listParquetFilesRecursively(fs, stagingDir)
+      val physDataSchema = StructType(outSchema.fields
+        .filterNot(f => snap.partitionColumns.contains(f.name))
+        .map(f => f.copy(name = snap.metadata.physicalOf(f.name))))
+      val stats = DeltaWriter.collectFileStats(spark, stagedFiles.map(_.toString),
+        physDataSchema, snap.metadata.configuration)
+      // a zero-row staged file (Spark writes one schema-only part file even
+      // for an EMPTY frame — e.g. an insert clause no source row satisfied)
+      // is dropped, never published: publishing would orphan it on the
+      // no-op early return and accumulate empty adds on real commits
+      val liveStaged = stagedFiles.filterNot { f =>
+        stats.get(f.toString).exists(n => n.get("numRecords").asLong() == 0L)
+      }
+      liveStaged.map { staged =>
+        val rel = DeltaWriter.relativize(stagingDir, staged)
+        val target = new Path(tablePath, rel)
+        fs.mkdirs(target.getParent)
+        if (!fs.rename(staged, target))
+          throw new java.io.IOException(s"failed to publish $staged -> $target")
+        val st = fs.getFileStatus(target)
+        (rel, DeltaWriter.partitionValuesOf(rel, physPartCols), st.getLen,
+          st.getModificationTime, stats.get(staged.toString))
+      }
+    } finally fs.delete(stagingDir, true)
   }
 
   /** Shared URI spelling normalization — one definition ([[DeltaDml]]'s),

@@ -855,7 +855,15 @@ object DeltaWriter {
     * property `delta.checkpointPolicy=v2`, the v2 form
     * (`<v>.checkpoint.<uuid>.parquet` with a `checkpointMetadata`
     * self-description action) — both replayed by [[DeltaLog.snapshot]]. */
-  def writeCheckpoint(spark: SparkSession, tablePath: String, version: Long): Unit = {
+  def writeCheckpoint(spark: SparkSession, tablePath: String, version: Long): Unit =
+    checkpoint(spark, tablePath, version)
+
+  /** [[writeCheckpoint]], returning the driver-plane snapshot the
+    * checkpoint's rows were written from when a replay of the checkpoint
+    * reads back exactly that state: None on the frame plane, and when the
+    * stats went out typed-only (they read back re-serialized). */
+  private[delta] def checkpoint(
+      spark: SparkSession, tablePath: String, version: Long): Option[DeltaSnapshot] = {
     // scanSnapshot: on job-plane tables the ADD plane of the checkpoint is
     // written DISTRIBUTED from the winners frame — the eager snapshot here
     // made every checkpoint-interval-th deferred-plane commit collect the
@@ -1097,6 +1105,7 @@ object DeltaWriter {
     if (!snap.metadata.configuration.get("delta.enableExpiredLogCleanup")
         .exists(_.trim.equalsIgnoreCase("false")))
       DeltaMaintenance.cleanupMetadata(spark, tablePath, snap.metadata.configuration)
+    if (deferred.isEmpty && statsAsJson) Some(snap) else None
   }
 
   private implicit class SeqAsJava[T](s: Seq[T]) {

@@ -21,10 +21,22 @@ private[delta] final case class DriverState(
   }.sum + 4096L
 }
 
+/** Frame-plane metadata replay at one version: protocol, metaData, txns
+  * and domains. Kept apart from [[DriverState]], whose empty `adds` would
+  * read as an empty table. */
+private[delta] final case class MetadataState(
+    protocol: Option[DeltaProtocol],
+    metadata: Option[DeltaMetadata],
+    txns: Map[String, Long],
+    domains: Map[String, String]) {
+  val bytes: Long = 2L * (metadata.fold(0)(_.schemaString.length) +
+    domains.iterator.map(d => d._1.length + d._2.length).sum) + 64L * txns.size + 4096L
+}
+
 /** The Delta layer's one cache of replayed state, keyed by (table path,
   * version). An entry holds whatever was built at that version: the
   * driver-plane [[DriverState]], the persisted [[DeferredDeltaFiles]]
-  * frame, or both.
+  * frame with its [[MetadataState]], or both.
   *
   *  - Fingerprint: `(path, len, mtime)` of every replay input (checkpoint
   *    parts and tail commit JSONs). A table deleted and recreated at the
@@ -59,9 +71,10 @@ private[graft] object SnapshotCache {
 
   private final case class Key(table: String, version: Long)
   private final case class Entry(
-      fp: Fingerprint, driver: Option[DriverState], frame: Option[DeferredDeltaFiles]) {
+      fp: Fingerprint, driver: Option[DriverState], frame: Option[DeferredDeltaFiles],
+      meta: Option[MetadataState]) {
     // a frame weighs nothing here: it is persisted DISK_ONLY on executors
-    val bytes: Long = driver.fold(0L)(_.bytes)
+    val bytes: Long = driver.fold(0L)(_.bytes) + meta.fold(0L)(_.bytes)
   }
 
   private val entries = new java.util.LinkedHashMap[Key, Entry](16, 0.75f, /*accessOrder=*/ true)
@@ -75,7 +88,7 @@ private[graft] object SnapshotCache {
   def driverAtOrBelow(table: String, version: Long): Option[(Long, Fingerprint, DriverState)] =
     synchronized {
       val best = entries.asScala.toSeq.collect {
-        case (k, Entry(fp, Some(d), _)) if k.table == table && k.version <= version =>
+        case (k, Entry(fp, Some(d), _, _)) if k.table == table && k.version <= version =>
           (k.version, fp, d)
       }.maxByOption(_._1)
       best.foreach(b => entries.get(Key(table, b._1))) // touch: access order
@@ -84,6 +97,18 @@ private[graft] object SnapshotCache {
 
   def putDriver(table: String, version: Long, fp: Fingerprint, state: DriverState): Unit =
     insert(Key(table, version), fp)(_.copy(driver = Some(state)))
+
+  /** The metadata replay cached at exactly (table, version) under `fp`,
+    * else `build`'s, cached. `build` runs outside the lock (Spark jobs). */
+  def metadata(table: String, version: Long, fp: Fingerprint)(
+      build: => MetadataState): MetadataState = {
+    val key = Key(table, version)
+    synchronized(Option(entries.get(key)).filter(_.fp == fp).flatMap(_.meta)).getOrElse {
+      val built = build
+      insert(key, fp)(_.copy(meta = Some(built)))
+      built
+    }
+  }
 
   /** The frame cached at exactly (table, version) under `fp`, planned by
     * this same session (a frame of a stopped or replaced session is never
@@ -117,7 +142,7 @@ private[graft] object SnapshotCache {
 
   private def insert(key: Key, fp: Fingerprint)(fill: Entry => Entry): Unit = synchronized {
     val old = Option(entries.remove(key))
-    val entry = fill(old.filter(_.fp == fp).getOrElse(Entry(fp, None, None)))
+    val entry = fill(old.filter(_.fp == fp).getOrElse(Entry(fp, None, None, None)))
     old.foreach { o =>
       totalBytes -= o.bytes
       o.frame.filterNot(f => entry.frame.exists(_ eq f)).foreach(_.unpersist())

@@ -412,4 +412,132 @@ class DeltaMergeSuite extends AnyFunSuite {
       (2, 200, "update_preimage"), (2, 222, "update_postimage"),
       (5, 500, "insert"), (6, 600, "insert")))
   }
+
+  // ---- the two-execution shape: one find, one staging write ----
+
+  /** Upsert `source` (id, k, v) into a [[freshTable]] by id. */
+  private def upsert(dir: String, source: org.apache.spark.sql.DataFrame) =
+    DeltaMerge.merge(spark, dir, source, condition = "t.id = s.id",
+      matchedUpdate = Some(Map("v" -> "s.v")),
+      notMatchedInsert = Some(Map("id" -> "s.id", "k" -> "s.k", "v" -> "s.v")))
+
+  test("merge: a matched update plus inserts runs two executions, its jobs labeled by phase") {
+    import spark.implicits._
+    val dir = freshTable()
+    val source = Seq((2, "a", 999), (5, "b", 500)).toDF("id", "k", "v")
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      var descs = Seq.empty[String]
+      val execs = TestSpark.executionsDuring {
+        descs = TestSpark.jobsDuring(upsert(dir, source))
+      }
+      // the find's collect and the staging write; nothing re-reads the
+      // touched rows for a gate, a metrics pass or a second insert write
+      assert(execs.size === 2, execs.mkString(","))
+      assert(descs.toSet === Set("MERGE find", "MERGE write"), descs.mkString(","))
+      assert(sc.getLocalProperty("spark.job.description") === "caller",
+        "the caller's job description must be restored")
+    } finally sc.setLocalProperty("spark.job.description", null)
+    assert(DeltaTable.read(spark, dir).orderBy("id").collect()
+      .map(r => (r.getAs[Int]("id"), r.getAs[Int]("v"))).toSeq ===
+      Seq((1, 100), (2, 999), (3, 300), (4, 400), (5, 500)))
+  }
+
+  test("merge: an empty source commits nothing") {
+    import spark.implicits._
+    val dir = freshTable()
+    val m = upsert(dir, Seq.empty[(Int, String, Int)].toDF("id", "k", "v"))
+    assert(m === graft.sources.delta.MergeMetrics(0, 0, 0, 0, 0))
+    assert(DeltaLog.snapshot(spark, dir).version === 0)
+  }
+
+  test("merge: updated rows and inserted rows land in the same new files") {
+    import spark.implicits._
+    val dir = freshTable()
+    val before = DeltaLog.snapshot(spark, dir).files.map(_.path).toSet
+    // partition a: id 2 updated, id 6 inserted; partition b: id 7 inserted
+    // (partition b has no matched row, so its file is not rewritten)
+    val m = upsert(dir, Seq((2, "a", 999), (6, "a", 600), (7, "b", 700)).toDF("id", "k", "v"))
+    assert((m.rowsUpdated, m.rowsInserted, m.filesRewritten) === ((1L, 2L, 1L)))
+    val added = DeltaLog.snapshot(spark, dir).files.filterNot(f => before.contains(f.path))
+    // one file per partition the write touched: a (rewrite + insert), b
+    assert(added.map(_.partitionValues("k")).sorted === Seq("a", "b"))
+  }
+
+  test("merge: a cardinality violation stages nothing") {
+    import spark.implicits._
+    val dir = freshTable()
+    def listing(): Set[String] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try scala.jdk.CollectionConverters.IteratorHasAsScala(walk.iterator()).asScala
+        .map(_.toString).filterNot(_.contains("_delta_log")).toSet
+      finally walk.close()
+    }
+    val before = listing()
+    intercept[UnsupportedOperationException] {
+      upsert(dir, Seq((2, "a", 1), (2, "a", 2), (9, "b", 9)).toDF("id", "k", "v"))
+    }
+    val after = listing()
+    assert(after === before, s"new paths: ${(after -- before).mkString(", ")}")
+    assert(!after.exists(_.contains("_staging-")))
+  }
+
+  test("merge: on a row-tracked table rewritten rows keep their ids, inserts take fresh ones") {
+    import spark.implicits._
+    import graft.sources.delta.RowTracking
+    val dir = TestSpark.tempDir("graft-merge-rt")
+    DeltaWriter.write((0 until 10).map(i => (i, s"n$i")).toDF("id", "name").coalesce(1),
+      dir, SaveMode.Append, Nil)                                       // v0
+    RowTracking.enable(spark, dir)                                     // v1
+    def ids(): Map[Int, (Long, Long, String)] = RowTracking.readWithRowIds(spark, dir)
+      .select(col("id"), col(RowTracking.RowIdCol), col(RowTracking.RowVersionCol),
+        input_file_name())
+      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
+    val before = ids()
+    val hwm = before.values.map(_._1).max
+    DeltaMerge.merge(spark, dir, (5 until 15).map(i => (i, s"s$i")).toDF("id", "name"),
+      condition = "t.id = s.id",
+      matchedUpdate = Some(Map("name" -> "s.name")),
+      notMatchedInsert = Some(Map("id" -> "s.id", "name" -> "s.name")))   // v2
+    val after = ids()
+    (0 until 10).foreach(i => assert(after(i)._1 === before(i)._1, s"id $i keeps its row id"))
+    (5 until 15).foreach(i => assert(after(i)._2 === 2L, s"id $i dated by the merge"))
+    (0 until 5).foreach(i => assert(after(i)._2 === before(i)._2, s"id $i carried"))
+    val fresh = (10 until 15).map(i => after(i)._1)
+    assert(fresh.forall(_ > hwm) && fresh.distinct.size === 5, fresh.mkString(","))
+    // the inserts share the rewrite's file: their ids come from THAT
+    // file's baseRowId, past every id the rewrite preserves
+    val insertFiles = (10 until 15).map(i => after(i)._3).toSet
+    assert(insertFiles.subsetOf((0 until 10).map(i => after(i)._3).toSet))
+    assert(after.values.map(_._1).toSeq.distinct.size === 15)
+  }
+
+  test("merge: identity inserts beside a matched update on a CDF table") {
+    import spark.implicits._
+    val dir = TestSpark.tempDir("graft-merge-ident")
+    DeltaWriter.write(Seq(("a", "x", 1.0), ("b", "x", 2.0), ("c", "y", 3.0))
+      .toDF("name", "grp", "score"), dir, SaveMode.Append, Seq("grp"),
+      identityColumns = Map("rid" -> (1L, 1L)))                        // v0
+    spark.sql(s"ALTER TABLE delta.`$dir` SET TBLPROPERTIES " +
+      "('delta.enableChangeDataFeed' = 'true')")                        // v1
+    val rid = DeltaTable.read(spark, dir).collect()
+      .map(r => r.getAs[String]("name") -> r.getAs[Long]("rid")).toMap
+    val m = DeltaMerge.merge(spark, dir,
+      Seq(("b", "x", 20.0), ("d", "x", 4.0), ("e", "y", 5.0)).toDF("name", "grp", "score"),
+      "t.name = s.name",
+      matchedUpdate = Some(Map("score" -> "s.score")),
+      notMatchedInsert = Some(Map("name" -> "s.name", "grp" -> "s.grp", "score" -> "s.score")))
+    assert((m.rowsUpdated, m.rowsInserted) === ((1L, 2L)))
+    val rows = DeltaTable.read(spark, dir).collect()
+      .map(r => r.getAs[String]("name") -> ((r.getAs[Long]("rid"), r.getAs[Double]("score"))))
+      .toMap
+    assert(rows("b") === ((rid("b"), 20.0)), "the updated row keeps its identity value")
+    assert(Set(rows("d")._1, rows("e")._1) === Set(4L, 5L), "inserts continue the hwm")
+    val changes = graft.sources.delta.DeltaCdf.read(spark, dir, 1, 2)
+      .select("name", "rid", "_change_type").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
+    assert(changes === Set(("b", rid("b"), "update_preimage"), ("b", rid("b"), "update_postimage"),
+      ("d", rows("d")._1, "insert"), ("e", rows("e")._1, "insert")))
+  }
 }

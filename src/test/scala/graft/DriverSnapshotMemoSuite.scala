@@ -182,6 +182,57 @@ class DriverSnapshotMemoSuite extends AnyFunSuite {
       "post-checkpoint extension must read only the new commit JSON")
   }
 
+  test("the cadence checkpoint seeds the memo: the next snapshot extends it, no job") {
+    import spark.implicits._
+    import graft.sources.delta.RowTracking
+    val dir = TestSpark.tempDir("graft-snapmemo-seed")
+    SnapshotCache.clear()
+    // txns and a domain (row tracking's hwm) ride the checkpoint too
+    DeltaWriter.write(Seq((0, "a")).toDF("id", "s"), dir, SaveMode.Append, Nil)  // v0
+    RowTracking.enable(spark, dir)                                               // v1
+    DeltaWriter.write(Seq((1, "t")).toDF("id", "s"), dir, SaveMode.Append, Nil,
+      txn = Some(("seed-app", 3L)))                                              // v2
+    DeltaDml.delete(spark, dir, "id = 0")                                        // v3
+    (4 to 10).foreach { i =>                                       // v10 checkpoints
+      DeltaWriter.write(Seq((i, "x")).toDF("id", "s"), dir, SaveMode.Append, Nil)
+    }
+    assert(new java.io.File(dir, "_delta_log/00000000000000000010.checkpoint.parquet").exists)
+
+    val extends0 = DeltaLog.driverSnapExtends.get()
+    val builds0 = DeltaLog.driverSnapBuilds.get()
+    var seeded = ""
+    val jobs = TestSpark.jobsDuring { seeded = snapshotFingerprint(dir) }
+    assert(DeltaLog.driverSnapExtends.get() === extends0 + 1)
+    assert(DeltaLog.driverSnapBuilds.get() === builds0,
+      "the writer's own checkpoint must not be read back")
+    assert(jobs.isEmpty, s"jobs: ${jobs.mkString(",")}")
+
+    SnapshotCache.clear()
+    assert(snapshotFingerprint(dir) === seeded, "cold rebuild through the checkpoint")
+  }
+
+  test("a frame-plane snapshot at an unchanged version replays nothing again") {
+    import spark.implicits._
+    val dir = TestSpark.tempDir("graft-snapmemo-framemeta")
+    SnapshotCache.clear()
+    DeltaWriter.write(Seq((1, "a")).toDF("id", "s"), dir, SaveMode.Append, Nil)
+    DeltaWriter.write(Seq((2, "b")).toDF("id", "s"), dir, SaveMode.Append, Nil,
+      txn = Some(("frame-app", 1L)))
+    withPlane("frame") {
+      def state(s: graft.sources.delta.DeltaSnapshot) =
+        (s.version, s.protocol, s.metadata, s.transactions, s.domainMetadata)
+      val first = state(DeltaLog.scanSnapshot(spark, dir)._1)
+      var again = Seq.empty[Any]
+      val jobs = TestSpark.jobsDuring {
+        again = Seq(state(DeltaLog.scanSnapshot(spark, dir)._1),
+          state(DeltaLog.metadataSnapshot(spark, dir)))
+      }
+      assert(jobs.isEmpty, s"jobs: ${jobs.mkString(",")}")
+      assert(again === Seq(first, first))
+      assert(first._4 === Map("frame-app" -> 1L))
+    }
+  }
+
   // ---- the one snapshot cache's budget: 8 (table, version) entries for
   // driver states and deferred frames together, one clear per table ----
 

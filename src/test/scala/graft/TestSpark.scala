@@ -1,10 +1,13 @@
 package graft
 
-import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.commons.io.FileUtils
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.sources.delta.DeltaLog
 
@@ -24,14 +27,44 @@ object TestSpark {
   def withPlane[T](plane: String, session: SparkSession = spark)(f: => T): T =
     GraftSession.withConf(session, DeltaLog.SnapshotPlaneKey, plane)(f)
 
-  private val tempDirs = new ConcurrentLinkedQueue[Path]
-  sys.addShutdownHook(tempDirs.forEach(d => FileUtils.deleteQuietly(d.toFile)))
-
   /** A fresh directory under `java.io.tmpdir` whose name starts with
-    * `prefix`; it is deleted, with everything under it, when the JVM exits. */
-  def tempDir(prefix: String): String = {
-    val dir = Files.createTempDirectory(prefix)
-    tempDirs.add(dir)
-    dir.toString
+    * `prefix`; it is deleted, with everything under it, when the JVM exits
+    * ([[TempDirs]]). */
+  def tempDir(prefix: String): String = TempDirs.create(prefix)
+
+  /** Run `f` and return the description (empty when unset) of every Spark
+    * job it started, in start order. */
+  def jobsDuring(f: => Unit): Seq[String] = {
+    val seen = new ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(ev: SparkListenerJobStart): Unit =
+        seen.add(Option(ev.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { f; settled(seen) } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** Run `f` and return the action name of every SQL execution it ran to
+    * completion (failed ones as `failed:<name>`). */
+  def executionsDuring(f: => Unit): Seq[String] = {
+    val seen = new ConcurrentLinkedQueue[String]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, d: Long): Unit =
+        seen.add(funcName)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(s"failed:$funcName")
+    }
+    spark.listenerManager.register(l)
+    try { f; settled(seen) } finally spark.listenerManager.unregister(l)
+  }
+
+  /** Listener events arrive asynchronously: the queue once it has stopped
+    * growing. */
+  private def settled(q: ConcurrentLinkedQueue[String]): Seq[String] = {
+    var last = -1
+    var spins = 0
+    while (q.size != last && spins < 20) { last = q.size; Thread.sleep(250); spins += 1 }
+    q.asScala.toSeq
   }
 }
