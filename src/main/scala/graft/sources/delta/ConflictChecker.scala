@@ -106,6 +106,26 @@ private[delta] object ConflictChecker {
     }
   }
 
+  /** The touched-file rule of a rewrite's commit attempt, picked by the
+    * plane its base snapshot came from: [[checkRewriteIncremental]] when
+    * `incremental` (deferred plane — `latest` carries no live set), else
+    * [[checkRewrite]]. Returns the attempt's shared range
+    * ([[DeltaLog.sharedConflictRange]]) for the caller's
+    * [[checkReadSet]], so both rules parse it at most once. */
+  def checkRewriteOn(
+      op: String,
+      spark: org.apache.spark.sql.SparkSession,
+      base: DeltaSnapshot,
+      latest: DeltaSnapshot,
+      touched: Seq[DeltaAddFile],
+      onAbort: () => Unit,
+      incremental: Boolean): () => DeltaLog.ConflictRange = {
+    val range = DeltaLog.sharedConflictRange(spark, base.tablePath, base.version, latest.version)
+    if (incremental) checkRewriteIncremental(op, spark, base, latest, touched, onAbort, range)
+    else checkRewrite(op, base, latest, touched, onAbort)
+    range
+  }
+
   /** Read-set rule: abort when a concurrent NON-blind-append commit added
     * dataChange files that may overlap what this transaction READ —
     * `readPredicate` (the DML WHERE; None = the whole table, MERGE's

@@ -1,10 +1,8 @@
 package graft.sources.delta
 
-import java.util.UUID
-
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -14,8 +12,9 @@ import org.apache.spark.sql.types.StructType
   * `update_preimage` / `update_postimage` — instead of the append-level
   * file view [[DeltaTable.readChanges]] serves.
   *
-  * Write side: DML/MERGE commits stage their change rows as parquet under
-  * `_change_data/` and reference them with `cdc` actions
+  * Write side: DML/MERGE/replaceWhere commits publish their change rows
+  * as parquet under `_change_data/` ([[publish]], the same staging write
+  * as data files) and reference them with `cdc` actions
   * (`dataChange=false` — change files are NOT table data). Plain
   * appends/overwrites write no cdc files: per the published protocol,
   * commits WITHOUT cdc actions derive changes from their file actions
@@ -50,67 +49,37 @@ object DeltaCdf {
   def enabled(meta: DeltaMetadata): Boolean =
     meta.configuration.get(EnableKey).exists(_.trim.equalsIgnoreCase("true"))
 
-  /** Stage change rows (full LOGICAL table columns + [[TypeCol]]) as
-    * parquet under `_change_data/`; returns (relative path, size) per
-    * published file. Physical column names on mapped tables, like every
-    * other on-disk artifact. On a partitioned table the change files are
-    * hive-partitioned by the table's partition columns — the same layout
-    * production Delta writes, so foreign readers that source partition
-    * columns from the cdc action's `partitionValues` (not the file) read
-    * them correctly. */
-  private[delta] def stageChanges(
+  /** Publish change rows (full LOGICAL table columns + [[TypeCol]])
+    * under `_change_data/` through the one staging write
+    * ([[DeltaWriter.stage]]): physical column names on mapped tables, like
+    * every other on-disk artifact, and on a partitioned table hive dirs by
+    * the table's partition columns — the layout production Delta writes,
+    * so foreign readers that source partition columns from the cdc
+    * action's `partitionValues` (not the file) read them correctly. A
+    * change file records its row count only (an empty stats schema), so
+    * zero-row change files are dropped like zero-row data files. */
+  private[delta] def publish(
       spark: SparkSession, tablePath: String, snap: DeltaSnapshot,
-      changes: DataFrame): Seq[(String, Long)] = {
-    val phys = changes.toDF(changes.columns.map(c =>
-      if (c == TypeCol) c else snap.metadata.physicalOf(c)).toIndexedSeq: _*)
-    val physPartCols = snap.partitionColumns.map(snap.metadata.physicalOf)
-    val staging = new Path(tablePath, s"_staging-cdc-${UUID.randomUUID()}")
-    val fs = staging.getFileSystem(spark.sessionState.newHadoopConf())
-    val writer = phys.write.mode(SaveMode.Overwrite)
-      .options(DeltaWriter.StagingWriteOptions)
-    (if (physPartCols.nonEmpty) writer.partitionBy(physPartCols: _*) else writer)
-      .parquet(staging.toString)
-    val staged = DeltaWriter.listParquetFilesRecursively(fs, staging)
-    val out = staged.map { p =>
-      // keep the hive partition directories in the published path — the
-      // cdc action's partitionValues are derived from them
-      val dirPart = DeltaWriter.relativize(staging, p.getParent)
-      val name = s"cdc-${UUID.randomUUID()}.parquet"
-      val rel =
-        if (dirPart.isEmpty) s"$ChangeDataDir/$name"
-        else s"$ChangeDataDir/$dirPart/$name"
-      val target = new Path(tablePath, rel)
-      fs.mkdirs(target.getParent)
-      if (!fs.rename(p, target))
-        throw new java.io.IOException(s"failed to publish $p -> $target")
-      rel -> fs.getFileStatus(target).getLen
-    }
-    fs.delete(staging, true)
-    out
-  }
+      changes: DataFrame): DeltaWriter.Published =
+    DeltaWriter.stage(spark, tablePath, DeltaWriter.physicalized(changes, snap.metadata),
+      snap.partitionColumns.map(snap.metadata.physicalOf), new StructType(),
+      snap.metadata.configuration, ChangeDataDir)
 
-  /** `cdc` action JSON line for a staged change file. partitionValues are
-    * derived from the path's hive directories (physical names), matching
-    * the on-disk layout [[stageChanges]] produces — the reference format
-    * for partitioned tables. */
-  private[delta] def cdcLine(rel: String, size: Long, physPartCols: Seq[String]): String = {
+  /** `cdc` action JSON line for a published change file; its
+    * partitionValues come from the path's hive directories (physical
+    * names), the reference format for partitioned tables. */
+  private[delta] def cdcLine(file: DeltaCommit.Staged): String = {
+    val (rel, pv, size, _, _) = file
     val node = mapper.createObjectNode()
     val c = node.putObject("cdc")
     c.put("path", DeltaWriter.encodePath(rel))
     val pvNode = c.putObject("partitionValues")
-    DeltaWriter.partitionValuesOf(rel, physPartCols).foreach { case (k, v) =>
+    pv.foreach { case (k, v) =>
       if (v == null) pvNode.putNull(k) else pvNode.put(k, v)
     }
     c.put("size", size)
     c.put("dataChange", false)
     mapper.writeValueAsString(node)
-  }
-
-  /** Delete staged-and-published cdc files (concurrent-commit abort path). */
-  private[delta] def cleanup(
-      spark: SparkSession, tablePath: String, files: Seq[(String, Long)]): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sessionState.newHadoopConf())
-    files.foreach { case (rel, _) => fs.delete(new Path(tablePath, rel), false) }
   }
 
   /** Change rows of versions `(fromExclusive, toInclusive]`: the table's

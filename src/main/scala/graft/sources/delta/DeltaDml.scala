@@ -4,7 +4,7 @@ import java.util.UUID
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Result of a DELETE / UPDATE run. */
@@ -162,17 +162,8 @@ object DeltaDml {
         withRowIds = true)
       .reduce(_ unionByName _)
     val injected = if (cdfOn) injected0.persist() else injected0
-    // staging/publish rollback state, hoisted above the try: a NOT NULL
-    // guard raise_error firing mid staging write (a routine UPDATE path),
-    // a failed stats pass, or a rename error partway through publishing
-    // must not leak the _staging-<uuid> dir, already-published part files,
-    // or staged cdc files until a retention-delayed VACUUM — the same
-    // rollback DeltaWriter and DeltaMaintenance.stagePublish carry
-    val stagingDir = new Path(tablePath, s"_staging-${UUID.randomUUID()}")
-    val fs = stagingDir.getFileSystem(spark.sessionState.newHadoopConf())
     val physPartCols = snap.partitionColumns.map(snap.metadata.physicalOf)
-    val publishedTargets = Seq.newBuilder[Path]
-    val (adds, cdcFiles) = try {
+    val (data, cdc) = try {
       val rewritten0 =
         // keep side of DELETE under SQL three-valued logic: only
         // predicate-TRUE rows are deleted, so NULL-predicate rows are
@@ -209,50 +200,25 @@ object DeltaDml {
           DeltaConstraints.notNullGuarded(rewritten1, snap.schema, op)
         } else rewritten1
 
-      // ---- 3. stage + publish like DeltaWriter/OPTIMIZE (physical names on
-      // column-mapped tables — the rewrite frame above is logical)
+      // ---- 3. stage + publish (physical names on column-mapped tables —
+      // the rewrite frame above is logical). optimizeWrite for rewrites,
+      // same as appends: one shuffle by the partition columns so each hive
+      // partition is written by ~one task — without it every upstream
+      // shuffle partition fans a tiny file into every output partition
+      // (DML creating the small-files churn OPTIMIZE exists to cure). A
+      // partition whose every row was deleted stages no published file.
       val staged0 = DeltaWriter.physicalized(rewritten, snap.metadata)
-      // optimizeWrite for rewrites, same as appends: one shuffle by the
-      // partition columns so each hive partition is written by ~one task —
-      // without it every upstream shuffle partition fans a tiny file into
-      // every output partition (DML creating the small-files churn OPTIMIZE
-      // exists to cure)
       val staged = if (physPartCols.nonEmpty) staged0.repartition(physPartCols.map(col): _*)
                    else staged0
-      val writer = staged.write.mode(SaveMode.Overwrite)
-        .options(DeltaWriter.StagingWriteOptions)
-      (if (physPartCols.nonEmpty) writer.partitionBy(physPartCols: _*)
-       else writer).parquet(stagingDir.toString)
-
-      val stagedFiles = DeltaWriter.listParquetFilesRecursively(fs, stagingDir)
-      val stats = DeltaWriter.collectFileStats(spark, stagedFiles.map(_.toString),
+      val data = DeltaWriter.stage(spark, tablePath, staged, physPartCols,
         snap.physicalDataSchema, snap.metadata.configuration)
-      // a staged file holding ZERO rows (a partition whose every row was
-      // deleted, or Spark's empty part-file) is dropped, not published —
-      // committing it would accumulate empty adds every DML
-      val (emptyStaged, liveStaged) = stagedFiles.partition { f =>
-        stats.get(f.toString).exists(n => n.get("numRecords").asLong() == 0L)
-      }
-      emptyStaged.foreach(f => fs.delete(f, false))
-      val adds = liveStaged.map { staged =>
-        val rel = DeltaWriter.relativize(stagingDir, staged)
-        val target = new Path(tablePath, rel)
-        fs.mkdirs(target.getParent)
-        if (!fs.rename(staged, target))
-          throw new java.io.IOException(s"failed to publish $staged -> $target")
-        publishedTargets += target
-        val st = fs.getFileStatus(target)
-        (rel, DeltaWriter.partitionValuesOf(rel, physPartCols), st.getLen,
-          st.getModificationTime, stats.get(staged.toString))
-      }
-      fs.delete(stagingDir, true)
 
       // ---- 3b. change data feed: the exact changed rows as cdc files
       // (delete → the matched rows; update → pre+post images, both computed
       // from the PRE-update state like the rewrite itself — same persisted
-      // materialization)
-      val cdcFiles: Seq[(String, Long)] =
-        if (!cdfOn) Nil
+      // materialization). A failure here discards the data files too.
+      val cdc = data.guarding {
+        if (!cdfOn) None
         else {
           val matched = injected.filter(expr(condition))
           val changes =
@@ -269,29 +235,19 @@ object DeltaDml {
               } :+ lit("update_postimage").as(DeltaCdf.TypeCol): _*)
               pre.unionByName(post)
             }
-          DeltaCdf.stageChanges(spark, tablePath, snap, changes)
+          Some(DeltaCdf.publish(spark, tablePath, snap, changes))
         }
-      (adds, cdcFiles)
-    } catch { case e: Throwable =>
-      // best-effort rollback, then rethrow the original failure
-      try fs.delete(stagingDir, true) catch { case _: Exception => () }
-      publishedTargets.result().foreach { p =>
-        try fs.delete(p, false) catch { case _: Exception => () }
       }
-      throw e
+      (data, cdc)
     } finally if (cdfOn) injected.unpersist()
+    val adds = data.files
 
     // ---- 4. validated commit loop: on a lost commit race, the
     // ConflictChecker decides — disjoint concurrent commits (appends,
     // other partitions' rewrites) proceed; a changed touched file or a
     // concurrent metadata/protocol change aborts
     beforeCommit()
-    val onAbort = () => {
-      adds.foreach { case (rel, _, _, _, _) =>
-        fs.delete(new Path(tablePath, rel), false)
-      }
-      DeltaCdf.cleanup(spark, tablePath, cdcFiles)
-    }
+    val onAbort = () => { data.discard(); cdc.foreach(_.discard()) }
     val committedVersion = DeltaCommit.run(spark, tablePath, op, onAbort) {
       // deferred plane: metadata-only re-read + the INCREMENTAL conflict
       // rule (intervening commits vs touched paths) — a retry never pays
@@ -299,13 +255,8 @@ object DeltaDml {
       val latest =
         if (deferred.isDefined) DeltaLog.metadataSnapshot(spark, tablePath)
         else DeltaLog.snapshot(spark, tablePath)
-      // ONE shared range parse per attempt, both rules (see ConflictChecker)
-      val range = DeltaLog.sharedConflictRange(
-        spark, tablePath, snap.version, latest.version)
-      if (deferred.isDefined)
-        ConflictChecker.checkRewriteIncremental(op, spark, snap, latest, touched,
-          onAbort, range)
-      else ConflictChecker.checkRewrite(op, snap, latest, touched, onAbort)
+      val range = ConflictChecker.checkRewriteOn(op, spark, snap, latest, touched,
+        onAbort, incremental = deferred.isDefined)
       // the find READ the predicate's scope beyond the touched files: a
       // concurrent non-blind-append add in that scope invalidates it
       ConflictChecker.checkReadSet(op, spark, snap, latest, Some(condition),
@@ -322,7 +273,7 @@ object DeltaDml {
           "numAddedFiles" -> adds.size.toLong),
         actions = touched.map(f => DeltaCommit.removeLine(f.path)) ++
           DeltaCommit.stagedAddLines(Some(latest), adds, latest.version + 1) ++
-          cdcFiles.map { case (rel, size) => DeltaCdf.cdcLine(rel, size, physPartCols) }))
+          cdc.toSeq.flatMap(_.files).map(DeltaCdf.cdcLine)))
     }.merge
     DmlMetrics(touched.size, adds.size, rowsAffected, committedVersion)
   }
@@ -501,38 +452,34 @@ object DeltaDml {
     // the PINNED snapshot's touched files (not the latest table state):
     // a concurrent append between snapshot and staging must not leak its
     // still-live rows into our change feed.
-    val cdcFiles: Seq[(String, Long)] =
-      if (!DeltaCdf.enabled(snap.metadata)) Nil
-      else {
+    val dropDvs = () => {
+      val fs = new Path(tablePath).getFileSystem(conf)
+      dvFilePaths.foreach(p => try fs.delete(p, false) catch { case _: Exception => () })
+    }
+    val cdc =
+      if (!DeltaCdf.enabled(snap.metadata)) None
+      else try {
         val cols = snap.schema.fieldNames.toIndexedSeq
         val deleted = DeltaMaintenance.partitionInjected(spark, tablePath, snap, touched)
           .reduce(_ unionByName _)
           .filter(expr(condition))
           .select(cols.map(col) :+
             org.apache.spark.sql.functions.lit("delete").as(DeltaCdf.TypeCol): _*)
-        DeltaCdf.stageChanges(spark, tablePath, snap, deleted)
-      }
+        Some(DeltaCdf.publish(spark, tablePath, snap, deleted))
+      } catch { case e: Throwable => dropDvs(); throw e }
 
     // ---- 4. validated commit loop: touched add entries must be
     // byte-identical to the find snapshot's (path AND current DV) —
     // disjoint concurrent commits proceed (ConflictChecker)
     beforeCommit()
-    val onAbort = () => {
-      val fs = new Path(tablePath).getFileSystem(conf)
-      dvFilePaths.foreach(p => fs.delete(p, false))
-      DeltaCdf.cleanup(spark, tablePath, cdcFiles)
-    }
+    val onAbort = () => { dropDvs(); cdc.foreach(_.discard()) }
     val op = "DELETE (merge-on-read)"
     val committedVersion = DeltaCommit.run(spark, tablePath, op, onAbort) {
       val latest =
         if (deferred.isDefined) DeltaLog.metadataSnapshot(spark, tablePath)
         else DeltaLog.snapshot(spark, tablePath)
-      val range = DeltaLog.sharedConflictRange(
-        spark, tablePath, snap.version, latest.version)
-      if (deferred.isDefined)
-        ConflictChecker.checkRewriteIncremental(op, spark, snap, latest, touched,
-          onAbort, range)
-      else ConflictChecker.checkRewrite(op, snap, latest, touched, onAbort)
+      val range = ConflictChecker.checkRewriteOn(op, spark, snap, latest, touched,
+        onAbort, incremental = deferred.isDefined)
       ConflictChecker.checkReadSet(op, spark, snap, latest, Some(condition),
         onAbort, range)
       // first DV on the table upgrades the protocol to table features,
@@ -560,9 +507,7 @@ object DeltaDml {
         // baseRowId keeps every surviving id stable
         actions = (emptied ++ kept).map(f => DeltaCommit.removeLine(f.path)) ++
           kept.map(f => DeltaCommit.addLine(f.copy(deletionVector = Some(descOf(f))))) ++
-          cdcFiles.map { case (rel, size) =>
-            DeltaCdf.cdcLine(rel, size, snap.partitionColumns.map(snap.metadata.physicalOf))
-          }))
+          cdc.toSeq.flatMap(_.files).map(DeltaCdf.cdcLine)))
     }.merge
     DmlMetrics(touched.size, 0, rowsAffected, committedVersion)
   }

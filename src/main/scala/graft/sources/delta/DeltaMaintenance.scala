@@ -309,17 +309,20 @@ object DeltaMaintenance extends Logging {
       // bound output file count: ~one file per target size per partition
       .select(keepCols: _*)
 
-    // stage + publish + commit through the shared rewrite helpers
-    val (adds, fs) = stagePublish(spark, tablePath, snap, compacted.coalesce(
-      math.max(1, (groups.values.flatten.map(_.size).sum / math.max(1L, targetFileBytes)).toInt + groups.size)))
+    // the one staging write, then the shared validated commit loop
+    val adds = DeltaWriter.stage(spark, tablePath,
+      DeltaWriter.physicalized(compacted, snap.metadata).coalesce(math.max(1,
+        (groups.values.flatten.map(_.size).sum / math.max(1L, targetFileBytes)).toInt + groups.size)),
+      snap.partitionColumns.map(snap.metadata.physicalOf), snap.physicalDataSchema,
+      snap.metadata.configuration)
     val removed = groups.values.flatten.toSeq
     beforeCommit()
-    val committedVersion = commitReplace(spark, tablePath, snap, fs, removed, adds,
+    val committedVersion = commitReplace(spark, tablePath, snap, removed, adds,
       dataChange = false, op = "OPTIMIZE",
       params = Map("targetFileBytes" -> targetFileBytes.toString) ++
         predicate.map("predicate" -> _),
       abortOp = "OPTIMIZE", deferredBase = deferred.isDefined)
-    OptimizeMetrics(removed.size, adds.size, removed.map(_.size).sum, committedVersion)
+    OptimizeMetrics(removed.size, adds.files.size, removed.map(_.size).sum, committedVersion)
   }
 
   /** `OPTIMIZE … ZORDER BY (cols)`: rewrite the table (per partition)
@@ -496,10 +499,13 @@ object DeltaMaintenance extends Logging {
       .select((snap.schema.fieldNames.toSeq ++ rewriteCarryCols(snap))
         .map(c => col(s"`$c`")): _*)
 
-    val (adds, fs) = stagePublish(spark, tablePath, snap, rewritten)
+    val adds = DeltaWriter.stage(spark, tablePath,
+      DeltaWriter.physicalized(rewritten, snap.metadata),
+      snap.partitionColumns.map(snap.metadata.physicalOf), snap.physicalDataSchema,
+      snap.metadata.configuration)
     val removed = candidates
     beforeCommit()
-    val committed = commitReplace(spark, tablePath, snap, fs, removed, adds,
+    val committed = commitReplace(spark, tablePath, snap, removed, adds,
       dataChange = false, op = "OPTIMIZE",
       params = Map("zOrderBy" -> zorderBy.mkString(","),
         "targetFileBytes" -> targetFileBytes.toString) ++ predicate.map("predicate" -> _),
@@ -510,52 +516,7 @@ object DeltaMaintenance extends Logging {
       addTags = Map(
         Clustering.TagZcubeId -> UUID.randomUUID().toString,
         Clustering.TagZorderBy -> zorderBy.map(snap.metadata.physicalOf).mkString(",")))
-    OptimizeMetrics(removed.size, adds.size, removed.map(_.size).sum, committed)
-  }
-
-  /** Stage `df` under the table dir, publish the parquet files into place,
-    * and return the pending add tuples (rel path, partition values, size,
-    * mtime, stats) + the filesystem handle. */
-  private def stagePublish(
-      spark: SparkSession,
-      tablePath: String,
-      snap: DeltaSnapshot,
-      df: DataFrame): (Seq[(String, Map[String, String], Long, Long,
-        Option[com.fasterxml.jackson.databind.node.ObjectNode])],
-        org.apache.hadoop.fs.FileSystem) = {
-    val stagingDir = new Path(tablePath, s"_staging-${UUID.randomUUID()}")
-    val fs = stagingDir.getFileSystem(spark.sessionState.newHadoopConf())
-    // column-mapped tables stage under physical names (columns, hive dirs,
-    // stats keys) — the incoming frame is logical
-    val physPartCols = snap.partitionColumns.map(snap.metadata.physicalOf)
-    val writer = DeltaWriter.physicalized(df, snap.metadata).write.mode(SaveMode.Overwrite)
-      .options(DeltaWriter.StagingWriteOptions)
-    (if (physPartCols.nonEmpty) writer.partitionBy(physPartCols: _*)
-     else writer).parquet(stagingDir.toString)
-    val stagedFiles = DeltaWriter.listParquetFilesRecursively(fs, stagingDir)
-    val stats = DeltaWriter.collectFileStats(spark, stagedFiles.map(_.toString),
-      snap.physicalDataSchema, snap.metadata.configuration)
-    // a mid-list publish failure must roll back the files already renamed
-    // into the table dir — they are referenced by nothing and would orphan
-    val published = scala.collection.mutable.ArrayBuffer.empty[Path]
-    val adds = try stagedFiles.map { staged =>
-      val rel = DeltaWriter.relativize(stagingDir, staged)
-      val target = new Path(tablePath, rel)
-      fs.mkdirs(target.getParent)
-      if (!fs.rename(staged, target))
-        throw new java.io.IOException(s"failed to publish $staged -> $target")
-      published += target
-      val st = fs.getFileStatus(target)
-      (rel, DeltaWriter.partitionValuesOf(rel, physPartCols), st.getLen,
-        st.getModificationTime, stats.get(staged.toString))
-    } catch {
-      case e: Throwable =>
-        published.foreach(p => try fs.delete(p, false) catch { case _: Exception => () })
-        try fs.delete(stagingDir, true) catch { case _: Exception => () }
-        throw e
-    }
-    fs.delete(stagingDir, true)
-    (adds, fs)
+    OptimizeMetrics(removed.size, adds.files.size, removed.map(_.size).sum, committed)
   }
 
   /** Validated remove+add commit loop shared by the rewrite operations:
@@ -567,34 +528,25 @@ object DeltaMaintenance extends Logging {
       spark: SparkSession,
       tablePath: String,
       base: DeltaSnapshot,
-      fs: org.apache.hadoop.fs.FileSystem,
       removed: Seq[DeltaAddFile],
-      adds: Seq[DeltaCommit.Staged],
+      adds: DeltaWriter.Published,
       dataChange: Boolean,
       op: String,
       params: Map[String, String],
       abortOp: String,
-      cdcFiles: Seq[(String, Long)] = Nil,
+      cdc: Option[DeltaWriter.Published] = None,
       addTags: Map[String, String] = Map.empty,
       /** true = `base` came from the deferred plane (its `.files` is not
         * the live set): re-read metadata-only and run the INCREMENTAL
         * conflict rule — no O(files) materialization per retry. */
       deferredBase: Boolean = false): Long = {
-    val onAbort = () => {
-      adds.foreach { case (rel, _, _, _, _) =>
-        fs.delete(new Path(tablePath, rel), false)
-      }
-      DeltaCdf.cleanup(spark, tablePath, cdcFiles)
-    }
+    val onAbort = () => { adds.discard(); cdc.foreach(_.discard()) }
     DeltaCommit.run(spark, tablePath, abortOp, onAbort) {
       val latest =
         if (deferredBase) DeltaLog.metadataSnapshot(spark, tablePath)
         else DeltaLog.snapshot(spark, tablePath)
-      if (deferredBase)
-        ConflictChecker.checkRewriteIncremental(abortOp, spark, base, latest,
-          removed, onAbort,
-          DeltaLog.sharedConflictRange(spark, tablePath, base.version, latest.version))
-      else ConflictChecker.checkRewrite(abortOp, base, latest, removed, onAbort)
+      ConflictChecker.checkRewriteOn(abortOp, spark, base, latest, removed, onAbort,
+        incremental = deferredBase)
       // row tracking: every add on a row-tracked table carries a fresh
       // baseRowId range (re-based on THIS attempt's hwm — a lost race
       // re-allocates against the winner); the PRESERVED ids of rewritten
@@ -602,14 +554,12 @@ object DeltaMaintenance extends Logging {
       Right(DeltaCommit.Txn(Some(latest), op, params.toSeq,
         metrics = Map(
           "numRemovedFiles" -> removed.size.toLong,
-          "numAddedFiles" -> adds.size.toLong,
+          "numAddedFiles" -> adds.files.size.toLong,
           "numRemovedBytes" -> removed.map(_.size).sum),
         actions = removed.map(f => DeltaCommit.removeLine(f.path, dataChange)) ++
-          DeltaCommit.stagedAddLines(Some(latest), adds, latest.version + 1,
+          DeltaCommit.stagedAddLines(Some(latest), adds.files, latest.version + 1,
             dataChange, addTags) ++
-          cdcFiles.map { case (rel, size) =>
-            DeltaCdf.cdcLine(rel, size, base.partitionColumns.map(base.metadata.physicalOf))
-          }))
+          cdc.toSeq.flatMap(_.files).map(DeltaCdf.cdcLine)))
     }.merge
   }
 
@@ -1364,15 +1314,19 @@ object DeltaMaintenance extends Logging {
     val newData = data.select(outCols.map(col) ++ rtCols.map(c =>
       lit(null).cast(org.apache.spark.sql.types.LongType).as(c)): _*)
     val out = (survivors :+ newData).reduce(_ unionByName _)
-    val (adds, fs) = stagePublish(spark, tablePath, snap, out)
+    val adds = DeltaWriter.stage(spark, tablePath,
+      DeltaWriter.physicalized(out, snap.metadata),
+      snap.partitionColumns.map(snap.metadata.physicalOf), snap.physicalDataSchema,
+      snap.metadata.configuration)
     // CDF: the EXACT changes — predicate-matching rows of touched files
     // out ('delete'), the incoming frame in ('insert'). Without cdc the
     // reader's derived whole-file path would fabricate delete+insert churn
     // for every SURVIVING row of the touched files (they were rewritten,
     // not changed) — a downstream CDC consumer double-processing unchanged
-    // rows. Production Delta writes cdc for replaceWhere when CDF is on.
-    val cdcFiles: Seq[(String, Long)] =
-      if (!DeltaCdf.enabled(snap.metadata)) Nil
+    // rows. Production Delta writes cdc for replaceWhere when CDF is on. A
+    // failure here discards the data files too.
+    val cdc = adds.guarding {
+      if (!DeltaCdf.enabled(snap.metadata)) None
       else {
         val deleted = partitionInjected(spark, tablePath, snap, touched)
           .reduceOption(_ unionByName _)
@@ -1381,11 +1335,12 @@ object DeltaMaintenance extends Logging {
         val inserted = data
           .select(outCols.map(col) :+ lit("insert").as(DeltaCdf.TypeCol): _*)
         val changes = (deleted.toSeq :+ inserted).reduce(_ unionByName _)
-        DeltaCdf.stageChanges(spark, tablePath, snap, changes)
+        Some(DeltaCdf.publish(spark, tablePath, snap, changes))
       }
-    commitReplace(spark, tablePath, snap, fs, touched, adds, dataChange = true,
+    }
+    commitReplace(spark, tablePath, snap, touched, adds, dataChange = true,
       op = "REPLACE WHERE", params = Map("condition" -> condition),
-      abortOp = "REPLACE WHERE", cdcFiles = cdcFiles,
+      abortOp = "REPLACE WHERE", cdc = cdc,
       deferredBase = deferred.isDefined)
   }
 

@@ -1,9 +1,6 @@
 package graft.sources.delta
 
-import java.util.UUID
-
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
@@ -63,8 +60,9 @@ object MergeClause {
   *     Partition pruning applies when the merge condition constrains
   *     partition columns. `WHEN NOT MATCHED BY SOURCE` widens the touched
   *     set by the files holding unmatched rows that satisfy a by-source
-  *     clause condition — an unconditional by-source clause touches every
-  *     file, which is what its semantics demand;
+  *     clause condition, found by the same join made a left outer one —
+  *     an unconditional by-source clause touches every file, which is
+  *     what its semantics demand;
   *  2. the write is ONE staging write of the touched files' rows outer-
   *     joined with the source: every target row that matches any source
   *     row lies in a touched file, so the touched rows stand in exactly for
@@ -272,32 +270,35 @@ object DeltaMerge {
     def pinnedTarget = DeltaTable.readVersion(spark, tablePath, snap.version)
       .select(col("*"), col("_metadata.file_path").as("_gf"),
         col("_metadata.row_index").as("_gi")).alias("t")
-    val touchedPaths: Set[String] = withPhase(spark, "MERGE find") {
-      // per file: matched pairs vs DISTINCT matched target rows — more pairs
-      // than rows means a target row matched several source rows, the
-      // cardinality violation, raised before anything is re-read or staged
-      val matchedTouch: Set[String] =
-        if (matched.isEmpty) Set.empty
-        else {
-          val perFile = pinnedTarget.join(src, expr(condition), "inner")
-            .groupBy(col("_gf"))
-            .agg(count(lit(1)), countDistinct(col("_gi")))
-            .collect()
-          if (perFile.exists(r => r.getLong(1) > r.getLong(2)))
-            throw new UnsupportedOperationException(
-              "MERGE cardinality violation: a target row matched more than one " +
-                "source row; the result would be nondeterministic (production " +
-                "Delta raises the same error)")
-          perFile.map(r => normalize(r.getString(0))).toSet
-        }
-      val bySourceTouch: Set[String] =
-        if (bySource.isEmpty) Set.empty
-        else pinnedTarget.join(src, expr(condition), "left_anti")
-          .filter(bySource.map(b => cond(b.condition)).reduce(_ || _))
-          .select(col("_gf")).distinct()
-          .collect().map(r => normalize(r.getString(0))).toSet
-      matchedTouch ++ bySourceTouch
-    }
+    // One join grouped per file (`left` when by-source clauses exist, so
+    // unmatched target rows survive it): matched pairs vs DISTINCT matched
+    // target rows — more pairs than rows means a target row matched
+    // several source rows, the cardinality violation, raised before
+    // anything is re-read or staged — and whether any unmatched row meets
+    // a by-source condition. Only touched files reach the driver.
+    val touchedPaths: Set[String] =
+      if (matched.isEmpty && bySource.isEmpty) Set.empty
+      else withPhase(spark, "MERGE find") {
+        val sHere = col("_smark").isNotNull
+        val bySourceHit =
+          if (bySource.isEmpty) lit(false)
+          else max(!sHere && bySource.map(b => cond(b.condition)).reduce(_ || _))
+        val (pairs, rows) =
+          if (matched.isEmpty) (lit(0L), lit(0L))
+          else (count(col("_smark")), countDistinct(when(sHere, col("_gi"))))
+        val perFile = pinnedTarget
+          .join(src, expr(condition), if (bySource.nonEmpty) "left" else "inner")
+          .groupBy(col("_gf"))
+          .agg(pairs.as("pairs"), rows.as("rows"), bySourceHit.as("bySource"))
+          .filter(col("pairs") > 0 || col("bySource"))
+          .collect()
+        if (perFile.exists(r => r.getLong(1) > r.getLong(2)))
+          throw new UnsupportedOperationException(
+            "MERGE cardinality violation: a target row matched more than one " +
+              "source row; the result would be nondeterministic (production " +
+              "Delta raises the same error)")
+        perFile.map(r => normalize(r.getString(0))).toSet
+      }
     val touched = DeltaDml.touchedAdds(tablePath, snap, deferred, touchedPaths)
     // every found path must resolve to a snapshot file — a silent drop
     // here would commit a merge that never rewrote a matched row
@@ -404,7 +405,9 @@ object DeltaMerge {
 
     // stage the tagged rows: the data files, then with CDF on the change
     // files; returns them with the updated/deleted/inserted counts
-    def writeAll(rows: DataFrame): (Seq[Add], Seq[(String, Long)], Long, Long, Long) = {
+    val physPartCols = snap.partitionColumns.map(snap.metadata.physicalOf)
+    def writeAll(rows: DataFrame)
+        : (DeltaWriter.Published, Option[DeltaWriter.Published], Long, Long, Long) = {
       def written(df: DataFrame): DataFrame =
         df.filter(!act.isInCollection(deleteActs :+ -2))
           .select(outCols.map(col) ++ rtCols.map(c => col(s"`$c`")): _*)
@@ -419,32 +422,45 @@ object DeltaMerge {
         count(when(act.isInCollection(updateActs.map(_._1)), 1)).as("updated"),
         count(when(act.isInCollection(deleteActs), 1)).as("deleted"),
         count(when(inserting, 1)).as("inserted"))
-      val adds = stageAndReturn(spark, tablePath, snap,
-        DeltaConstraints.notNullGuarded(written(observed), snap.schema, "MERGE"), outSchema)
-      // no metrics = the optimizer dropped an empty plan, nothing written
-      val observedCounts = counts.get
-      require(observedCounts.nonEmpty || adds.isEmpty, "internal: MERGE write ran unobserved")
-      def n(k: String): Long = observedCounts.get(k).fold(0L)(_.asInstanceOf[Long])
-      // change data feed: per-clause rows of the same evaluation. A commit
-      // with ANY cdc action is read from cdc only, so the inserts ride along
-      val cdc =
-        if (!cdfOn || (touched.isEmpty && n("inserted") == 0)) Nil
-        else {
-          def image(df: DataFrame, pre: Boolean, kind: String) =
-            df.select(outCols.map(c => col(if (pre) s"_pre_$c" else c).as(c)) :+
-              lit(kind).as(DeltaCdf.TypeCol): _*)
-          val updated = rows.filter(act.isInCollection(updateActs.map(_._1)))
-          DeltaCdf.stageChanges(spark, tablePath, snap, Seq(
-            image(rows.filter(act.isInCollection(deleteActs)), pre = true, "delete"),
-            image(updated, pre = true, "update_preimage"),
-            image(updated, pre = false, "update_postimage"),
-            image(rows.filter(inserting), pre = false, "insert")).reduce(_ unionByName _))
-        }
-      (adds, cdc, n("updated"), n("deleted"), n("inserted"))
+      // column-mapped tables stage under physical names; optimizeWrite for
+      // the merge rewrite (same as appends/DML): one shuffle by partition
+      // columns → ~one file per hive partition per commit. Stats are
+      // collected against the (possibly evolved) output schema
+      val physical = DeltaWriter.physicalized(
+        DeltaConstraints.notNullGuarded(written(observed), snap.schema, "MERGE"), snap.metadata)
+      val data = DeltaWriter.stage(spark, tablePath,
+        if (physPartCols.isEmpty) physical else physical.repartition(physPartCols.map(col): _*),
+        physPartCols, DeltaWriter.physicalSchema(
+          StructType(outSchema.filterNot(f => snap.partitionColumns.contains(f.name))),
+          snap.metadata),
+        snap.metadata.configuration)
+      data.guarding {
+        // no metrics = the optimizer dropped an empty plan, nothing written
+        val observedCounts = counts.get
+        require(observedCounts.nonEmpty || data.files.isEmpty,
+          "internal: MERGE write ran unobserved")
+        def n(k: String): Long = observedCounts.get(k).fold(0L)(_.asInstanceOf[Long])
+        // change data feed: per-clause rows of the same evaluation. A commit
+        // with ANY cdc action is read from cdc only, so the inserts ride along
+        val cdc =
+          if (!cdfOn || (touched.isEmpty && n("inserted") == 0)) None
+          else {
+            def image(df: DataFrame, pre: Boolean, kind: String) =
+              df.select(outCols.map(c => col(if (pre) s"_pre_$c" else c).as(c)) :+
+                lit(kind).as(DeltaCdf.TypeCol): _*)
+            val updated = rows.filter(act.isInCollection(updateActs.map(_._1)))
+            Some(DeltaCdf.publish(spark, tablePath, snap, Seq(
+              image(rows.filter(act.isInCollection(deleteActs)), pre = true, "delete"),
+              image(updated, pre = true, "update_preimage"),
+              image(updated, pre = false, "update_postimage"),
+              image(rows.filter(inserting), pre = false, "insert")).reduce(_ unionByName _)))
+          }
+        (data, cdc, n("updated"), n("deleted"), n("inserted"))
+      }
     }
-    val (adds, cdcFiles, rowsUpdated, rowsDeleted, rowsInserted, identityNewHwm) =
+    val (data, cdc, rowsUpdated, rowsDeleted, rowsInserted, identityNewHwm) =
       branches.reduceOption(_ unionByName _) match {
-        case None => (Nil, Nil, 0L, 0L, 0L, Map.empty[String, Long])
+        case None => (None, None, 0L, 0L, 0L, Map.empty[String, Long])
         case Some(tagged) => withPhase(spark, "MERGE write") {
           // GENERATED ALWAYS AS IDENTITY: inserted rows omit the column
           // (enforced above) and take values continuing from the table's
@@ -467,8 +483,8 @@ object DeltaMerge {
           // (re-planning could diverge on nondeterministic sources)
           val rows = if (cdfOn) withIds.persist() else withIds
           try {
-            val (adds, cdc, upd, del, ins) = writeAll(rows)
-            (adds, cdc, upd, del, ins, newHwm)
+            val (data, cdc, upd, del, ins) = writeAll(rows)
+            (Some(data), cdc, upd, del, ins, newHwm)
           } finally {
             if (cdfOn) rows.unpersist()
             idPinned.foreach(_.unpersist())
@@ -483,13 +499,8 @@ object DeltaMerge {
 
     // ---- 3. validated commit loop (same contract as DELETE/OPTIMIZE)
     beforeCommit()
-    val fs = new Path(tablePath).getFileSystem(spark.sessionState.newHadoopConf())
-    val onAbort = () => {
-      adds.foreach { case (rel, _, _, _, _) =>
-        fs.delete(new Path(tablePath, rel), false)
-      }
-      DeltaCdf.cleanup(spark, tablePath, cdcFiles)
-    }
+    val adds = data.toSeq.flatMap(_.files)
+    val onAbort = () => { data.foreach(_.discard()); cdc.foreach(_.discard()) }
     val committedVersion = withPhase(spark, "MERGE commit")(
         DeltaCommit.run(spark, tablePath, "MERGE", onAbort) {
       // deferred plane: metadata-only re-read (txn watermarks included) +
@@ -505,13 +516,8 @@ object DeltaMerge {
         onAbort()
         Left(latest.version)
       } else {
-        // ONE shared range parse per attempt, both rules (see ConflictChecker)
-        val range = DeltaLog.sharedConflictRange(
-          spark, tablePath, snap.version, latest.version)
-        if (deferred.isDefined)
-          ConflictChecker.checkRewriteIncremental("MERGE", spark, snap, latest,
-            touched, onAbort, range)
-        else ConflictChecker.checkRewrite("MERGE", snap, latest, touched, onAbort)
+        val range = ConflictChecker.checkRewriteOn("MERGE", spark, snap, latest,
+          touched, onAbort, incremental = deferred.isDefined)
         // the merge's decisions READ the whole target (matched-find inner
         // join, insert anti-join): any concurrent non-blind-append data add
         // invalidates them — two concurrent upserts of the same absent key
@@ -542,9 +548,7 @@ object DeltaMerge {
           metadata = metadata,
           actions = touched.map(f => DeltaCommit.removeLine(f.path)) ++
             DeltaCommit.stagedAddLines(Some(latest), adds, latest.version + 1) ++
-            cdcFiles.map { case (rel, size) =>
-              DeltaCdf.cdcLine(rel, size, snap.partitionColumns.map(snap.metadata.physicalOf))
-            }))
+            cdc.toSeq.flatMap(_.files).map(DeltaCdf.cdcLine)))
       }
     }) match {
       case Left(v) => return MergeMetrics(0, 0, 0, 0, v)
@@ -573,63 +577,6 @@ object DeltaMerge {
     val previous = sc.getLocalProperty(key)
     sc.setJobDescription(name)
     try f finally sc.setLocalProperty(key, previous)
-  }
-
-  private type Add = DeltaCommit.Staged
-
-  /** Write `df` into a staging dir, publish the files into the table dir,
-    * and return the pending add actions.
-    * `outSchema` is the LOGICAL table schema of `df` (the snapshot's, or
-    * the evolved one under schema evolution) — stats are collected against
-    * its physical data projection. */
-  private def stageAndReturn(
-      spark: SparkSession,
-      tablePath: String,
-      snap: DeltaSnapshot,
-      df: DataFrame,
-      outSchema: StructType): Seq[Add] = {
-    val stagingDir = new Path(tablePath, s"_staging-${UUID.randomUUID()}")
-    val fs = stagingDir.getFileSystem(spark.sessionState.newHadoopConf())
-    // column-mapped tables stage under physical names; `df` is logical
-    val physPartCols = snap.partitionColumns.map(snap.metadata.physicalOf)
-    val staged0 = DeltaWriter.physicalized(df, snap.metadata)
-    // optimizeWrite for the merge rewrite (same as appends/DML): one
-    // shuffle by partition columns → ~one file per hive partition per
-    // commit instead of per-upstream-partition fan-out
-    val staged = if (physPartCols.nonEmpty)
-      staged0.repartition(physPartCols.map(org.apache.spark.sql.functions.col): _*)
-    else staged0
-    // the staging dir goes however the write ends: a NOT NULL guard firing
-    // mid-write is a routine MERGE failure
-    try {
-      val writer = staged.write.mode(SaveMode.Overwrite)
-        .options(DeltaWriter.StagingWriteOptions)
-      (if (physPartCols.nonEmpty) writer.partitionBy(physPartCols: _*)
-       else writer).parquet(stagingDir.toString)
-      val stagedFiles = DeltaWriter.listParquetFilesRecursively(fs, stagingDir)
-      val physDataSchema = StructType(outSchema.fields
-        .filterNot(f => snap.partitionColumns.contains(f.name))
-        .map(f => f.copy(name = snap.metadata.physicalOf(f.name))))
-      val stats = DeltaWriter.collectFileStats(spark, stagedFiles.map(_.toString),
-        physDataSchema, snap.metadata.configuration)
-      // a zero-row staged file (Spark writes one schema-only part file even
-      // for an EMPTY frame — e.g. an insert clause no source row satisfied)
-      // is dropped, never published: publishing would orphan it on the
-      // no-op early return and accumulate empty adds on real commits
-      val liveStaged = stagedFiles.filterNot { f =>
-        stats.get(f.toString).exists(n => n.get("numRecords").asLong() == 0L)
-      }
-      liveStaged.map { staged =>
-        val rel = DeltaWriter.relativize(stagingDir, staged)
-        val target = new Path(tablePath, rel)
-        fs.mkdirs(target.getParent)
-        if (!fs.rename(staged, target))
-          throw new java.io.IOException(s"failed to publish $staged -> $target")
-        val st = fs.getFileStatus(target)
-        (rel, DeltaWriter.partitionValuesOf(rel, physPartCols), st.getLen,
-          st.getModificationTime, stats.get(staged.toString))
-      }
-    } finally fs.delete(stagingDir, true)
   }
 
   /** Shared URI spelling normalization — one definition ([[DeltaDml]]'s),

@@ -21,9 +21,10 @@ import org.apache.spark.sql.types._
   * delta-rs over Ballista does not exist here.
   *
   * Scale posture: the data files are written by Spark's distributed parquet
-  * writer (one task per partition); per-file stats are collected in ONE
-  * extra distributed pass grouped by `input_file_name()` (not per-file
-  * driver loops); only the O(#files) commit-JSON assembly is driver-side,
+  * writer (one task per partition) through the one staging write
+  * ([[stage]]); per-file stats come from the parquet footers, with one
+  * distributed pass grouped by `input_file_name()` only for files footers
+  * cannot serve; only the O(#files) commit-JSON assembly is driver-side,
   * same as any Delta writer.
   */
 object DeltaWriter {
@@ -198,21 +199,6 @@ object DeltaWriter {
     *        (column → (start, step)); GENERATED ALWAYS — later writes must
     *        OMIT the column and get values assigned (existing tables
     *        declare via their schema metadata, not this parameter) */
-  /** Hadoop-committer options for every STAGING parquet write (guide §6):
-    * a staging dir is private to one statement — its files are published
-    * by OUR rename loop and the whole dir is deleted on failure — so the
-    * default v1 committer's two-phase rename (task → `_temporary/<job>`,
-    * then a SEQUENTIAL driver-side rename pass at job commit) buys no
-    * atomicity here and costs an extra O(files) driver rename pass per
-    * commit: at production file counts that pass, not the data, bounds
-    * commit latency (and on object stores each rename is a copy).
-    * Algorithm v2 renames straight to the staging dir at task commit; the
-    * `_SUCCESS` marker is skipped because the only consumer is our own
-    * recursive `.parquet` lister. */
-  private[delta] val StagingWriteOptions: Map[String, String] = Map(
-    "mapreduce.fileoutputcommitter.algorithm.version" -> "2",
-    "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
-
   def write(
       data: DataFrame,
       tablePath: String,
@@ -393,9 +379,9 @@ object DeltaWriter {
       case e: Throwable => identityPinned.foreach(_.unpersist()); throw e
     }
 
-    // ---- 1. write data files to a staging dir (distributed parquet write).
-    // optimizeWrite: one shuffle by the partition columns so each hive
-    // partition is written by one task -> ~one file per partition per
+    // ---- 1. stage + publish the data files (one distributed parquet
+    // write). optimizeWrite: one shuffle by the partition columns so each
+    // hive partition is written by one task -> ~one file per partition per
     // commit (prevents the small-files problem OPTIMIZE exists to cure).
     // Column-mapped tables stage under PHYSICAL names (parquet columns,
     // hive dirs, stats keys); everything above this point stays logical.
@@ -407,47 +393,15 @@ object DeltaWriter {
       if (optimizeWrite && physPartitionCols.nonEmpty)
         data2.repartition(physPartitionCols.map(col): _*)
       else data2
-    val stagingDir = new Path(tablePath, s"_staging-${UUID.randomUUID()}")
-    val fs = stagingDir.getFileSystem(spark.sessionState.newHadoopConf())
-    // failure DURING staging/stats/publish (a raise-on-null invariant
-    // guard firing mid-write is now a routine path, not just I/O errors)
-    // must not leak the _staging dir or the pinned identity frame
-    val adds = try {
-      val writer = toWrite.write.mode(SaveMode.Overwrite).options(StagingWriteOptions)
-      (if (physPartitionCols.nonEmpty) writer.partitionBy(physPartitionCols: _*) else writer)
-        .parquet(stagingDir.toString)
+    val published =
+      try stage(spark, tablePath, toWrite, physPartitionCols,
+        StructType(data2.schema.filterNot(f => physPartitionCols.contains(f.name))),
+        meta.map(_.configuration).getOrElse(Map.empty))
+      finally identityPinned.foreach(_.unpersist())
+    val adds = published.files
+    val dropStaged = () => published.discard()
 
-      val stagedFiles = listParquetFilesRecursively(fs, stagingDir)
-      val dataSchema = StructType(data2.schema.filterNot(f => physPartitionCols.contains(f.name)))
-
-      // ---- 2. one distributed pass for per-file stats
-      val statsByStagedPath: Map[String, ObjectNode] =
-        if (stagedFiles.isEmpty) Map.empty
-        else collectFileStats(spark, stagedFiles.map(_.toString), dataSchema,
-          existing.map(_.metadata.configuration).getOrElse(Map.empty))
-
-      // ---- 3. move staged files into the table dir (keeping hive dirs)
-      stagedFiles.map { staged =>
-        val rel = relativize(stagingDir, staged)
-        val target = new Path(tablePath, rel)
-        fs.mkdirs(target.getParent)
-        if (!fs.rename(staged, target))
-          throw new java.io.IOException(s"failed to publish $staged -> $target")
-        val st = fs.getFileStatus(target)
-        val stats = statsByStagedPath.get(staged.toString)
-        (rel, partitionValuesOf(rel, physPartitionCols), st.getLen, st.getModificationTime, stats)
-      }
-    } finally {
-      try fs.delete(stagingDir, true) catch { case _: Exception => () }
-      identityPinned.foreach(_.unpersist())
-    }
-    val statsByStagedPath: Map[String, ObjectNode] =
-      adds.flatMap { case (rel, _, _, _, st) => st.map(rel -> _) }.toMap
-
-    // ---- 4. commit (retry on concurrent-writer version conflict)
-    val dropStaged = () => adds.foreach { case (rel, _, _, _, _) =>
-      fs.delete(new Path(tablePath, rel), false)
-    }
+    // ---- 2. commit (retry on concurrent-writer version conflict)
     // the last table config this loop replayed — reused by the
     // auto-compact flag check so a disabled flag costs no extra replay
     var lastKnownConfig: Option[Map[String, String]] = None
@@ -541,7 +495,7 @@ object DeltaWriter {
               partitionCols.foldLeft(mapper.createArrayNode())((a, c) => a.add(c)))),
           metrics = Map(
             "numFiles" -> adds.size.toLong,
-            "numOutputRows" -> statsByStagedPath.values
+            "numOutputRows" -> adds.flatMap(_._5)
               .flatMap(n => Option(n.get("numRecords")).map(_.asLong())).sum),
           // production Delta's read-set exemption signal: an append reads
           // nothing, so concurrent readers need not conflict with it
@@ -600,6 +554,86 @@ object DeltaWriter {
       catch { case _: java.util.ConcurrentModificationException => () }
   }
 
+  /** Hadoop-committer options for every staging parquet write ([[stage]]
+    * and the checkpoint's part files): a staging dir is private to one
+    * statement — its files are published by our own rename loop and the
+    * whole dir is deleted however the write ends — so the default v1
+    * committer's two-phase rename (task → `_temporary/<job>`, then a
+    * SEQUENTIAL driver-side rename pass at job commit) buys no atomicity
+    * here and costs an extra O(files) driver rename pass per commit: at
+    * production file counts that pass, not the data, bounds commit latency
+    * (and on object stores each rename is a copy). Algorithm v2 renames
+    * straight to the staging dir at task commit; the `_SUCCESS` marker is
+    * skipped because the only consumer is our own recursive `.parquet`
+    * lister. */
+  private[delta] val StagingWriteOptions: Map[String, String] = Map(
+    "mapreduce.fileoutputcommitter.algorithm.version" -> "2",
+    "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
+
+  /** The files one [[stage]] call published into the table dir. */
+  private[delta] final class Published(
+      val files: Seq[DeltaCommit.Staged], fs: org.apache.hadoop.fs.FileSystem, tablePath: String) {
+    /** Delete every published file: the abort path of a commit, or a later
+      * step of the same statement that failed. Best effort per file. */
+    def discard(): Unit = files.foreach { case (rel, _, _, _, _) =>
+      try fs.delete(new Path(tablePath, rel), false) catch { case _: Exception => () }
+    }
+    /** Run `next` (a later step of the same statement, e.g. staging its
+      * change files); if it throws, these files are discarded first. */
+    def guarding[T](next: => T): T =
+      try next catch { case e: Throwable => discard(); throw e }
+  }
+
+  /** The one way a data or change file enters a table. `physical` is
+    * already physical (column-mapped names) and already shaped by the
+    * caller (repartition, coalesce, guards); it is written ONCE under a
+    * private staging dir in the table root, hive-partitioned by
+    * `partitionCols`. Per-file stats are collected against `statsSchema`,
+    * the physical data schema (an empty one records the row count only —
+    * change files).
+    * Zero-row files (Spark writes one schema-only part for an empty frame;
+    * a partition a rewrite emptied) are dropped; the rest are renamed to
+    * `<tablePath>/<under>/<relative staged path>`, hive dirs and Spark's
+    * part names kept. However the write ends, the staging dir goes; on
+    * any failure every file already renamed goes too, before the error
+    * propagates — nothing this call wrote outlives a failed call. */
+  private[delta] def stage(
+      spark: SparkSession,
+      tablePath: String,
+      physical: DataFrame,
+      partitionCols: Seq[String],
+      statsSchema: StructType,
+      configuration: Map[String, String],
+      under: String = ""): Published = {
+    val stagingDir = new Path(tablePath, s"_staging-${UUID.randomUUID()}")
+    val fs = stagingDir.getFileSystem(spark.sessionState.newHadoopConf())
+    val published = Seq.newBuilder[DeltaCommit.Staged]
+    try {
+      val writer = physical.write.mode(SaveMode.Overwrite).options(StagingWriteOptions)
+      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
+        .parquet(stagingDir.toString)
+      val stagedFiles = listParquetFilesRecursively(fs, stagingDir)
+      val stats = collectFileStats(spark, stagedFiles.map(_.toString), statsSchema, configuration)
+      stagedFiles.foreach { staged =>
+        val st = stats.get(staged.toString)
+        if (!st.exists(_.get("numRecords").asLong() == 0L)) {
+          val rel = (if (under.isEmpty) "" else s"$under/") + relativize(stagingDir, staged)
+          val target = new Path(tablePath, rel)
+          fs.mkdirs(target.getParent)
+          if (!fs.rename(staged, target))
+            throw new java.io.IOException(s"failed to publish $staged -> $target")
+          val status = fs.getFileStatus(target)
+          published += ((rel, partitionValuesOf(rel, partitionCols), status.getLen,
+            status.getModificationTime, st))
+        }
+      }
+      new Published(published.result(), fs, tablePath)
+    } catch { case e: Throwable =>
+      new Published(published.result(), fs, tablePath).discard()
+      throw e
+    } finally try fs.delete(stagingDir, true) catch { case _: Exception => () }
+  }
+
   private[delta] def listParquetFilesRecursively(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[Path] = {
     // PLAIN statuses, never fs.listFiles: located statuses eagerly load
     // block locations + permissions, and on RawLocalFileSystem the
@@ -653,26 +687,40 @@ object DeltaWriter {
     partitionCols.map(c => c -> fromPath.getOrElse(c, null)).toMap
   }
 
-  /** One distributed scan over the just-written files: per file (group key =
-    * input_file_name) count + min/max/nullCount per supported column. */
   /** Test seams: files whose add-action stats came from parquet footers
     * vs the fallback distributed scan (FooterStatsSuite pins the split). */
   private[graft] val footerStatsServed = new java.util.concurrent.atomic.AtomicLong
   private[graft] val scanStatsServed = new java.util.concurrent.atomic.AtomicLong
 
+  /** Up to this many files, footers are read by a driver thread pool;
+    * beyond it by one executor job. */
+  private val FooterDriverMax = 1024
+
+  /** The columns add-action stats cover: the first
+    * `delta.dataSkippingNumIndexedCols` (default 32, production parity; -1
+    * = all) of `dataSchema` — at 100s of columns, min/max on every one
+    * bloats each add action and the stats pass itself — that have a
+    * stats-capable type. */
+  private[graft] def statsColumns(
+      dataSchema: StructType, configuration: Map[String, String]): Array[StructField] = {
+    val limit = configuration.get("delta.dataSkippingNumIndexedCols")
+      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(32)
+    val indexed = if (limit < 0) dataSchema.fields else dataSchema.fields.take(limit)
+    indexed.filter(f => isStatsType(f.dataType))
+  }
+
+  /** Per-file add-action stats (numRecords, min/max/nullCount per
+    * [[statsColumns]] column) of just-written files.
+    *
+    * @param driverMax footer reads beyond this many files run as one
+    *        executor job (a test reaches that path with 0) */
   private[graft] def collectFileStats(
       spark: SparkSession,
       files: Seq[String],
       dataSchema: StructType,
-      configuration: Map[String, String] = Map.empty): Map[String, ObjectNode] = {
-    // delta.dataSkippingNumIndexedCols (default 32, production parity): at
-    // 100s of columns, collecting min/max on every one bloats each add
-    // action and the stats pass itself — index the first N schema columns
-    // only (-1 = all), like production Delta
-    val limit = configuration.get("delta.dataSkippingNumIndexedCols")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(32)
-    val indexed = if (limit < 0) dataSchema.fields else dataSchema.fields.take(limit)
-    val statable = indexed.filter(f => isStatsType(f.dataType))
+      configuration: Map[String, String] = Map.empty,
+      driverMax: Int = FooterDriverMax): Map[String, ObjectNode] = {
+    val statable = statsColumns(dataSchema, configuration)
 
     // ---- primary path: aggregate the stats the parquet writer already
     // recorded per row group (FooterStats scaladoc: exactness contract,
@@ -680,16 +728,12 @@ object DeltaWriter {
     // just-written byte — now runs only for files the footers cannot
     // serve bit-exactly (guide §1.2: don't recompute what you have).
     // Footer reads are O(files) metadata I/O, the same class as the
-    // publish loop's per-file renames directly above this call on the
-    // write path; beyond `footerDriverMax` they run as one executor job
+    // publish loop's per-file renames directly after this call on the
+    // write path; beyond `driverMax` they run as one executor job
     // (no exchange) instead of the driver pool.
-    val footersOn =
-      spark.conf.getOption("spark.graft.stats.footers").forall(_ != "off")
-    val driverMax = spark.conf.getOption("spark.graft.stats.footerDriverMax")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(1024)
     val statableSeq: Seq[StructField] = statable.toSeq
     val footerOf: Map[String, FooterStats.FileStats] =
-      if (!footersOn || files.isEmpty) Map.empty
+      if (files.isEmpty) Map.empty
       else if (files.size <= driverMax) {
         val hconf = spark.sessionState.newHadoopConf()
         val pool = java.util.concurrent.Executors.newFixedThreadPool(

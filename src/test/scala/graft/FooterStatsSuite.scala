@@ -37,13 +37,15 @@ class FooterStatsSuite extends AnyFunSuite {
     val viaFooter = DeltaWriter.collectFileStats(spark, files, df.schema)
     val fServed = DeltaWriter.footerStatsServed.get() - f0
     val sServed = DeltaWriter.scanStatsServed.get() - s0
-    spark.conf.set("spark.graft.stats.footers", "off")
-    val viaScan =
-      try DeltaWriter.collectFileStats(spark, files, df.schema)
-      finally spark.conf.unset("spark.graft.stats.footers")
+    val viaScan = scanOnly(files, df)
     (viaFooter.map { case (k, v) => k -> v.toString },
       viaScan.map { case (k, v) => k -> v.toString }, fServed, sServed)
   }
+
+  /** The distributed-scan stats of `files`, the path footers fall back to. */
+  private def scanOnly(files: Seq[String], df: DataFrame) =
+    DeltaWriter.scanFileStats(spark, files, df.schema,
+      DeltaWriter.statsColumns(df.schema, Map.empty))
 
   test("numeric/string/bool/date columns with nulls: footer-served, byte-identical") {
     import spark.implicits._
@@ -127,10 +129,7 @@ class FooterStatsSuite extends AnyFunSuite {
       val df = spark.read.parquet(s"$dir/$t.parquet")
       val files = Seq(s"$dir/$t.parquet")
       val viaFooter = DeltaWriter.collectFileStats(spark, files, df.schema)
-      spark.conf.set("spark.graft.stats.footers", "off")
-      val viaScan =
-        try DeltaWriter.collectFileStats(spark, files, df.schema)
-        finally spark.conf.unset("spark.graft.stats.footers")
+      val viaScan = scanOnly(files, df)
       assert(viaFooter.map { case (k, v) => k -> v.toString }
         === viaScan.map { case (k, v) => k -> v.toString }, s"fixture $t diverged")
     }
@@ -145,10 +144,7 @@ class FooterStatsSuite extends AnyFunSuite {
     val files = fs.listStatus(new Path(dir)).map(_.getPath)
       .filter(_.getName.endsWith(".parquet")).map(_.toString).toSeq.sorted
     val viaDriver = DeltaWriter.collectFileStats(spark, files, df.schema)
-    spark.conf.set("spark.graft.stats.footerDriverMax", "0")
-    val viaJob =
-      try DeltaWriter.collectFileStats(spark, files, df.schema)
-      finally spark.conf.unset("spark.graft.stats.footerDriverMax")
+    val viaJob = DeltaWriter.collectFileStats(spark, files, df.schema, driverMax = 0)
     assert(viaDriver.map { case (k, v) => k -> v.toString }
       === viaJob.map { case (k, v) => k -> v.toString })
   }
