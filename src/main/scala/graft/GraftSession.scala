@@ -19,8 +19,45 @@ import org.apache.spark.sql.SparkSession
   * The reference's `information_schema` toggle (`src/lib.rs:19`) maps to
   * Spark's always-on catalog surface (SHOW TABLES / DESCRIBE /
   * spark.catalog — see CatalogSuite).
+  *
+  * Three JVM-wide (static) settings keep a long-lived session's fixed
+  * per-operation cost and heap flat (measured on perfbench `curation_batch`,
+  * 4 cores, 12 s loops; see CodegenCacheSuite):
+  *  - `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]]. One
+  *    pass of the five curation operators compiles 183 generated
+  *    classes; Spark's default LRU of 100 evicted each before its next
+  *    use, so every pass recompiled them. The cache is 4 Guava LRU
+  *    segments, so 256 gives 64 a segment against a ~46 average, and a
+  *    repeated pass compiles 0–9 classes (all in tx09). Spark sizes the
+  *    cache once per JVM, from the conf in scope at the first compile:
+  *    every harness compiles first inside a query of this session.
+  *  - the status store caps: 20 jobs, 20 stages and 10 SQL executions,
+  *    about two curation operations' worth (Spark keeps 1000 of each).
+  *    Nothing in the program reads the store and the UI is off in every
+  *    harness. At the defaults the driver heap grew ~0.45 MB an operation;
+  *    at 100 / 100 / 50 it still grew until ~20 operations in.
+  *  - the AQE exchange thread pools' core size ([[ExchangeThreads]]
+  *    each; Spark's defaults are 128, 1024 and 1024). A pool starts a new
+  *    thread on every submission until it reaches its core size, and each
+  *    thread pins Jackson thread-local buffers: over a 25 s loop the
+  *    broadcast pool grew to 128 threads. At most 6 broadcast, 4 shuffle
+  *    and 4 result-stage threads were busy at once over all 161 queries,
+  *    the DML/MERGE suites and the 4-writer OCC stress suite.
+  * They are plain defaults: `conf` overrides any of them.
   */
 object GraftSession {
+
+  /** Generated-class cache entries: a whole curation pass's classes. */
+  val CodegenCacheEntries = 256
+  /** Core threads of each AQE exchange pool: broadcast, shuffle and
+    * result stage. */
+  val ExchangeThreads = 16
+
+  /** The exchange pools' thread-name prefixes and cap keys. */
+  val ExchangePools: Seq[(String, String)] = Seq(
+    "broadcast-exchange" -> "spark.sql.broadcastExchange.maxThreadThreshold",
+    "shuffle-exchange" -> "spark.sql.shuffleExchange.maxThreadThreshold",
+    "ResultQueryStageExecution" -> "spark.sql.resultQueryStage.maxThreadThreshold")
 
   /** Build (or reuse) a configured session. `conf` carries what really
     * differs by caller (the Connect plugin and port, a cluster's executor
@@ -38,6 +75,11 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", parts.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", classOf[graft.functions.GraftSparkExtensions].getName)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.ui.retainedJobs", "20")
+      .config("spark.ui.retainedStages", "20")
+      .config("spark.sql.ui.retainedExecutions", "10")
+      .config(ExchangePools.map { case (_, key) => key -> ExchangeThreads.toString }.toMap)
       // HTTP(S) object store (reference object_store.rs:36-41 parity):
       // point reads of single objects over plain HTTP
       .config("spark.hadoop.fs.http.impl", classOf[graft.sources.HttpFileSystem].getName)

@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
@@ -19,10 +20,12 @@ import org.apache.spark.sql.execution.FormattedMode
   * Usage: `sbt 'runMain graft.Profile <mode> <sfDir> …'`
   *  - `summary <sfDir> [namePrefix,...] [reps]` — the cost decomposition
   *    the bench's single wall number can't provide, one line per query:
-  *    wall (min over reps), then jobs, stages, task/GC/fetch seconds and
-  *    shuffle read/write MB of the LAST rep (job/stage counts are plan
-  *    properties). At sf0.1 most queries are fixed-overhead dominated, so
-  *    the job/stage count is the optimization target this ranks.
+  *    wall (min over reps), then jobs, stages, task/GC/fetch seconds,
+  *    shuffle read/write MB and generated-class compiles of the LAST rep
+  *    (job/stage counts are plan properties). At sf0.1 most queries are
+  *    fixed-overhead dominated, so the job/stage count is the optimization
+  *    target this ranks; a query whose last rep still compiles (`cmpl` > 0
+  *    after the warm rep) evicts or re-creates its classes every run.
   *  - `jobs <sfDir> <queryName>` — names the jobs `summary` counts: one
   *    line per job of a steady-state rep (stages | description, ms), for
   *    lifecycle queries whose wall is mostly tiny-job scheduling.
@@ -102,15 +105,18 @@ object Profile {
       queries: Seq[(String, Query)], reps: Int): Unit = {
     val counter = new Counter
     spark.sparkContext.addSparkListener(counter)
-    println(f"${"query"}%-28s ${"sec"}%7s ${"jobs"}%5s ${"stg"}%5s ${"taskS"}%7s ${"gcS"}%6s ${"fetchS"}%7s ${"shRdMB"}%7s ${"shWrMB"}%7s")
+    println(f"${"query"}%-28s ${"sec"}%7s ${"jobs"}%5s ${"stg"}%5s ${"taskS"}%7s ${"gcS"}%6s ${"fetchS"}%7s ${"shRdMB"}%7s ${"shWrMB"}%7s ${"cmpl"}%5s")
     queries.foreach { case (name, fn) =>
       try {
         runOnce(spark, sfDir, fn)
+        var compiles = 0L
         val best = (0 until reps).map { _ =>
           System.gc()
           counter.reset()
           counter.active = true
+          val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
           val t = runOnce(spark, sfDir, fn)
+          compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
           // let async listener events land before reading the counters
           Thread.sleep(200)
           counter.active = false
@@ -118,7 +124,7 @@ object Profile {
         }.min
         println(f"$name%-28s $best%7.2f ${counter.jobs.get}%5d ${counter.stages.get}%5d " +
           f"${counter.taskMs.get / 1e3}%7.2f ${counter.gcMs.get / 1e3}%6.2f ${counter.fetchMs.get / 1e3}%7.2f " +
-          f"${counter.shufReadB.get / 1048576.0}%7.1f ${counter.shufWriteB.get / 1048576.0}%7.1f")
+          f"${counter.shufReadB.get / 1048576.0}%7.1f ${counter.shufWriteB.get / 1048576.0}%7.1f $compiles%5d")
       } catch { case e: Throwable =>
         counter.active = false
         println(s"$name ERROR: ${e.getMessage}")

@@ -31,7 +31,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * Determinism: for groups ≤ cap nothing is ever dropped, so the sorted
   * output is independent of encounter order; for groups > cap the output
   * is NULL regardless of which cap + 1 ids happened to be retained.
-  * NULL inputs are skipped (collect_list semantics). Runs under
+  * NULL inputs are skipped (collect_list semantics) and do not count
+  * toward the cap: with cap 2 the group {1, 2, NULL, NULL, NULL} yields
+  * [1, 2], not NULL. Runs under
   * ObjectHashAggregateExec exactly like collect_list. */
 case class CollectCapped(
     child: Expression,

@@ -72,4 +72,12 @@ class CollectCappedSuite extends AnyFunSuite {
     assert(got("a") === Seq(1L, 3L))
     assert(got("b") === Seq.empty)
   }
+
+  test("NULL inputs do not count toward the cap") {
+    import spark.implicits._
+    val df = Seq(Some(1L), Some(2L), None, None, None).toDF("doc_id").repartition(3)
+    val got = df.agg(expr("collect_capped(doc_id, 2)").as("ids")).head()
+    assert(!got.isNullAt(0), "three NULLs pushed a group of two ids over cap 2")
+    assert(got.getSeq[Long](0) === Seq(1L, 2L))
+  }
 }

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -19,6 +20,10 @@ object TestSpark {
     val s = GraftSession.getOrCreate(
       master = "local[4]", shufflePartitions = Some(4), appName = "graft-test")
     s.sparkContext.setLogLevel("WARN")
+    // Spark sizes the generated-class cache once per JVM, from the conf in
+    // scope at its first use: use it here, under this session, so the
+    // suite JVM's cache has GraftSession's size whichever suite runs first
+    CodeGenerator.getClass
     s
   }
 
