@@ -13,8 +13,11 @@ import org.apache.spark.sql.SparkSession
   * [[graft.functions.GraftSparkExtensions]] injects graft's SQL functions,
   * Delta SQL parser and optimizer rule into every session of the context
   * (`newSession()` included), timezone is pinned to UTC, the `fs.http`/
-  * `fs.s3` stores are registered, and shuffle parallelism defaults to the
-  * machine instead of 200.
+  * `fs.s3` stores are registered, `file://` is
+  * [[graft.sources.GraftLocalFileSystem]] (Hadoop's local file system
+  * without a `chmod` process per created file or directory where native
+  * Hadoop is absent), and shuffle parallelism defaults to the machine
+  * instead of 200.
   *
   * The reference's `information_schema` toggle (`src/lib.rs:19`) maps to
   * Spark's always-on catalog surface (SHOW TABLES / DESCRIBE /
@@ -80,6 +83,8 @@ object GraftSession {
       .config("spark.ui.retainedStages", "20")
       .config("spark.sql.ui.retainedExecutions", "10")
       .config(ExchangePools.map { case (_, key) => key -> ExchangeThreads.toString }.toMap)
+      // local files: permissions set in process, not by a chmod fork
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.GraftLocalFileSystem].getName)
       // HTTP(S) object store (reference object_store.rs:36-41 parity):
       // point reads of single objects over plain HTTP
       .config("spark.hadoop.fs.http.impl", classOf[graft.sources.HttpFileSystem].getName)

@@ -31,14 +31,11 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-
   /** Word 3-gram shingle sets (deduplicated per doc) via the native
     * word_ngrams_arr expression — one Scala pass per document instead of
     * interpreted per-element lambda dispatch. */
   private def shingled(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.read(s, dir, "documents")
       .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
       .select(col("doc_id"), expr("word_ngrams_arr(toks, 3)").as("shingles"))
   }
@@ -55,7 +52,7 @@ object Dedup {
   /** Exact dedup: hash-groupBy summary (keeper = min id per group is the
     * removal policy; here we report the group stats). */
   private def dd01Exact(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
+    Tables.read(s, dir, "documents")
       .groupBy(md5(col("text")).as("h"))
       .agg(count(lit(1)).as("c"))
       .agg(
@@ -89,7 +86,7 @@ object Dedup {
     * (ReuseExchange: identical subplan). Capped lists are exactly the old
     * anti-join survivors: df > 20 ⇔ collect_capped = NULL. */
   private def cappedPostings(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.read(s, dir, "documents")
       .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
       .select(col("doc_id"), expr("word_ngrams(toks, 3)").as("g"))
       .groupBy(col("g"))
@@ -317,7 +314,7 @@ object Dedup {
     * hamming ≤ 3 pairs (candidates are exhaustive by pigeonhole). */
   private def dd04Simhash(s: SparkSession, dir: String): DataFrame = {
     // persisted (registered): reused by the sig-level join and both doc expansions
-    val sigs = QueryCaches.persist(docs(s, dir)
+    val sigs = QueryCaches.persist(Tables.read(s, dir, "documents")
       .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
       .filter(size(col("toks")) > 0)
       // native codegen'd simhash16 over the token hashes — same ±1 vote
@@ -364,7 +361,7 @@ object Dedup {
   /** Embedding-cosine near-dup within label blocks (exact left-fold dot
     * product — bit-identical across engines; floor-scaled output). */
   private def dd05EmbedDup(s: SparkSession, dir: String): DataFrame = {
-    val v = s.read.parquet(s"$dir/embeddings.parquet")
+    val v = Tables.read(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding").as("e"))
     v.as("a")
       .join(v.as("b"),
@@ -392,8 +389,7 @@ object Dedup {
     * is persisted: the interpreted 8×64 projection fold must not re-run on
     * both sides of the self-join (repo HOF-reuse rule). */
   private def dd07EmbedLshDup(s: SparkSession, dir: String): DataFrame = {
-    val v = QueryCaches.persist(s.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").as("e"))
+    val v = QueryCaches.persist(Similarity.vecs(s, dir)
       .withColumn("bucket", Similarity.bucketCol))
     v.as("a")
       .join(v.as("b"),
@@ -477,7 +473,7 @@ object Dedup {
     // aggregates (keeper-per-h, per-doc totals); the rows are compact
     // scalars, unlike dd02's wider-than-input shingle stream whose
     // recompute measured cheaper than its cache
-    val segs = QueryCaches.persist(docs(s, dir)
+    val segs = QueryCaches.persist(Tables.read(s, dir, "documents")
       .withColumn("words", expr("filter(split(text, ' '), x -> x != '')"))
       .filter(size(col("words")) > 0)
       .withColumn("chunk",
@@ -543,8 +539,7 @@ object Dedup {
     * self-join is an equi-join on cid, the blocked-join shape every
     * near-dup operator in this module uses. */
   private def dd10Semdedup(s: SparkSession, dir: String): DataFrame = {
-    val v = s.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").as("e"))
+    val v = Similarity.vecs(s, dir)
     val assigned = QueryCaches.persist(dd10Assignments(v))
     val dropped = assigned.as("a")
       .join(assigned.as("b"),
@@ -678,7 +673,7 @@ object Dedup {
     * all-pairs, nothing driver-side. */
   private def dd11SubstringDedup(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sh = QueryCaches.persist(docs(s, dir)
+    val sh = QueryCaches.persist(Tables.read(s, dir, "documents")
       .withColumn("words", expr("filter(split(text, ' '), x -> x != '')"))
       .filter(size(col("words")) >= 4)
       .select(

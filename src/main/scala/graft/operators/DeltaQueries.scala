@@ -15,9 +15,6 @@ import graft.sources.delta.{DeltaTable, DeltaWriter}
   * DeltaSuite; these add driver-checked value parity at fixture scale). */
 object DeltaQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    s.read.parquet(s"$dir/$n.parquet")
-
   private def scratch(): String =
     TempDirs.create("graft-delta-q")
 
@@ -25,7 +22,7 @@ object DeltaQueries {
     * aggregate. Exercises partition-value injection end to end. */
   private def dl01Roundtrip(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    t(s, dir, "supplier")
+    Tables.read(s, dir, "supplier")
       .write.format("delta").partitionBy("s_nationkey").save(path)
     DeltaTable.read(s, path)
       .groupBy(col("s_nationkey").cast("int").as("s_nationkey"))
@@ -39,7 +36,7 @@ object DeltaQueries {
     * see only the first commit. */
   private def dl02TimeTravel(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    val supplier = t(s, dir, "supplier")
+    val supplier = Tables.read(s, dir, "supplier")
     DeltaWriter.write(supplier.filter(col("s_suppkey") % 2 === 0), path, SaveMode.Append, Nil)
     DeltaWriter.write(supplier.filter(col("s_suppkey") % 2 === 1), path, SaveMode.Append, Nil)
     DeltaTable.readVersion(s, path, 0L)
@@ -53,7 +50,7 @@ object DeltaQueries {
     * plan-checked in DeltaSuite; this pins the values). */
   private def dl03PrunedRead(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    t(s, dir, "supplier")
+    Tables.read(s, dir, "supplier")
       .write.format("delta").partitionBy("s_nationkey").save(path)
     DeltaTable.read(s, path)
       .filter(col("s_nationkey") === 3)
@@ -72,7 +69,7 @@ object DeltaQueries {
     // table name unique per invocation: bench/verify may run this repeatedly
     val tbl = "graft_dl04_" + java.lang.Long.toHexString(
       java.util.UUID.randomUUID().getMostSignificantBits & Long.MaxValue)
-    t(s, dir, "nation").filter(col("n_nationkey") < 10)
+    Tables.read(s, dir, "nation").filter(col("n_nationkey") < 10)
       .write.format("delta").save(path)
     s.sql(s"CREATE TABLE $tbl USING delta LOCATION '$path'")
     s.sql(s"INSERT INTO $tbl SELECT * FROM parquet.`$dir/nation.parquet` WHERE n_nationkey >= 10")
@@ -92,7 +89,7 @@ object DeltaQueries {
     * rows or loses pre-restore ones hash-mismatches. */
   private def dl05Restore(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    val supplier = t(s, dir, "supplier")
+    val supplier = Tables.read(s, dir, "supplier")
     DeltaWriter.write(supplier.filter(col("s_suppkey") % 2 === 0), path, SaveMode.Append, Nil)
     DeltaWriter.write(supplier.filter(col("s_suppkey") % 2 === 1), path, SaveMode.Overwrite, Nil)
     graft.sources.delta.DeltaMaintenance.restore(s, path, 0L)
@@ -110,7 +107,7 @@ object DeltaQueries {
     * The oracle aggregates the raw fixture under NOT(predicate). */
   private def dl06Delete(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    t(s, dir, "supplier")
+    Tables.read(s, dir, "supplier")
       .write.format("delta").partitionBy("s_nationkey").save(path)
     graft.sources.delta.DeltaDml.delete(
       s, path, "s_nationkey = 3 OR s_acctbal < 0")
@@ -128,7 +125,7 @@ object DeltaQueries {
     * the raw fixture. */
   private def dl07Update(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    t(s, dir, "supplier").write.format("delta").save(path)
+    Tables.read(s, dir, "supplier").write.format("delta").save(path)
     graft.sources.delta.DeltaDml.update(
       s, path, "s_suppkey % 10 = 0",
       Map("s_acctbal" -> "s_acctbal + 100.0", "s_name" -> "upper(s_name)"))
@@ -147,7 +144,7 @@ object DeltaQueries {
     * raw fixture: evens get the CASE-WHEN update, odds union in. */
   private def dl08Merge(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    val supplier = t(s, dir, "supplier")
+    val supplier = Tables.read(s, dir, "supplier")
     supplier.filter(col("s_suppkey") % 2 === 0)
       .write.format("delta").save(path)
     val source = supplier.filter(col("s_suppkey") % 4 === 0 || col("s_suppkey") % 2 === 1)
@@ -176,7 +173,7 @@ object DeltaQueries {
     * partitions, drops survivors, or double-writes shows as a mismatch. */
   private def dl09ReplaceWhere(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    val supplier = t(s, dir, "supplier")
+    val supplier = Tables.read(s, dir, "supplier")
     supplier.write.format("delta").partitionBy("s_nationkey").save(path)
     supplier.filter(col("s_nationkey") === 3)
       .withColumn("s_acctbal", col("s_acctbal") * 2)
@@ -198,7 +195,7 @@ object DeltaQueries {
     * to the raw fixture; a resurrected or doubly-hidden row mismatches. */
   private def dl10DvDelete(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    t(s, dir, "supplier").write.format("delta").save(path)
+    Tables.read(s, dir, "supplier").write.format("delta").save(path)
     graft.sources.delta.DeltaDml.deleteWithDv(
       s, path, "s_acctbal < 0 OR s_suppkey % 7 = 0")
     graft.sources.delta.DeltaDml.deleteWithDv(s, path, "s_suppkey % 11 = 0")
@@ -220,7 +217,7 @@ object DeltaQueries {
     * misfilters and hash-mismatches. */
   private def dl11ColumnMapping(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    val supplier = t(s, dir, "supplier")
+    val supplier = Tables.read(s, dir, "supplier")
     DeltaWriter.write(supplier.filter(col("s_suppkey") % 2 === 0), path, SaveMode.Append, Nil)
     graft.sources.delta.DeltaSchema.renameColumn(s, path, "s_acctbal", "account_balance")
     DeltaWriter.write(
@@ -245,7 +242,7 @@ object DeltaQueries {
     * a hash mismatch. */
   private def dl12SqlTimeTravel(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    val supplier = t(s, dir, "supplier")
+    val supplier = Tables.read(s, dir, "supplier")
     DeltaWriter.write(supplier.filter(col("s_suppkey") % 2 === 0), path, SaveMode.Append, Nil)
     DeltaWriter.write(supplier.filter(col("s_suppkey") % 2 === 1), path, SaveMode.Append, Nil)
     s.sql(
@@ -268,7 +265,7 @@ object DeltaQueries {
     * mismatches. */
   private def dl13DropColumn(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    t(s, dir, "supplier").write.format("delta").save(path)
+    Tables.read(s, dir, "supplier").write.format("delta").save(path)
     graft.sources.delta.DeltaSchema.dropColumn(s, path, "s_name")
     s.sql(s"ALTER TABLE delta.`$path` ADD COLUMNS (s_name STRING)")
     DeltaTable.read(s, path)
@@ -286,7 +283,7 @@ object DeltaQueries {
     * range shows up as a mismatch. */
   private def dl14Cdf(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    t(s, dir, "supplier").write.format("delta").save(path) // v0
+    Tables.read(s, dir, "supplier").write.format("delta").save(path) // v0
     s.sql(s"ALTER TABLE delta.`$path` SET TBLPROPERTIES ('delta.enableChangeDataFeed' = 'true')") // v1
     graft.sources.delta.DeltaDml.update(
       s, path, "s_suppkey % 10 = 0", Map("s_acctbal" -> "s_acctbal + 100.0")) // v2
@@ -310,7 +307,7 @@ object DeltaQueries {
     * mismatches. */
   private def dl15TypeWidening(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    t(s, dir, "supplier")
+    Tables.read(s, dir, "supplier")
       .select(
         col("s_suppkey").cast("int").as("s_suppkey"),
         col("s_nationkey").cast("int").as("s_nationkey"),
@@ -336,7 +333,7 @@ object DeltaQueries {
     * ids across commits mismatches. */
   private def dl16IdentityColumns(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    val supplier = t(s, dir, "supplier")
+    val supplier = Tables.read(s, dir, "supplier")
     DeltaWriter.write(supplier.filter(col("s_suppkey") % 2 === 0), path,
       SaveMode.Append, Nil, identityColumns = Map("rid" -> (1000L, 10L)))
     DeltaWriter.write(supplier.filter(col("s_suppkey") % 2 === 1), path,
@@ -360,7 +357,7 @@ object DeltaQueries {
   private def dl17IdModeMapping(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     val path = scratch()
-    val supplier = t(s, dir, "supplier")
+    val supplier = Tables.read(s, dir, "supplier")
     def fid(id: Long) = new MetadataBuilder().putLong("parquet.field.id", id).build()
     // v0 data file: "foreign" column names, field ids 1/2 in the footer
     supplier.filter(col("s_suppkey") % 2 === 0)
@@ -411,7 +408,7 @@ object DeltaQueries {
     * anywhere shifts them and hash-mismatches. */
   private def dl18TimestampNtz(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    val supplier = t(s, dir, "supplier")
+    val supplier = Tables.read(s, dir, "supplier")
     val df = supplier.select(
       col("s_suppkey"),
       expr("timestampadd(MINUTE, CAST(s_suppkey % 720 AS INT), " +
@@ -445,7 +442,7 @@ object DeltaQueries {
     implicit val ctx = s.sqlContext
     // dim-scale fixture rows drive the MemoryStream (test-harness plane —
     // the sink's own write path stays fully distributed)
-    val rows = t(s, dir, "supplier")
+    val rows = Tables.read(s, dir, "supplier")
       .select(col("s_suppkey"), col("s_nationkey").cast("long"), col("s_acctbal"))
       .as[(Long, Long, Double)].collect()
     val (even, odd) = rows.partition(_._1 % 2 == 0)
@@ -485,7 +482,7 @@ object DeltaQueries {
     * breaks the table for subsequent commits diverges from the oracle. */
   private def dl20ConvertToDelta(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    val supplier = t(s, dir, "supplier")
+    val supplier = Tables.read(s, dir, "supplier")
     supplier.write.mode("overwrite").partitionBy("s_nationkey").parquet(path)
     graft.sources.delta.DeltaMaintenance.convertToDelta(s, path, Seq("s_nationkey"))
     DeltaWriter.write(
@@ -509,7 +506,7 @@ object DeltaQueries {
     * suppliers, source = keys divisible by 3, so matched = keys % 6 == 0. */
   private def dl21MergeClauses(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    val supplier = t(s, dir, "supplier")
+    val supplier = Tables.read(s, dir, "supplier")
     supplier.filter(col("s_suppkey") % 2 === 0).write.format("delta").save(path)
     val source = supplier.filter(col("s_suppkey") % 3 === 0)
     import graft.sources.delta.MergeClause._
@@ -569,7 +566,7 @@ object DeltaQueries {
     * replays all three populations over the raw fixture. */
   private def dl23ColumnDefaults(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    val supplier = t(s, dir, "supplier")
+    val supplier = Tables.read(s, dir, "supplier")
     supplier.filter(col("s_suppkey") % 2 === 0).write.format("delta").save(path)
     s.sql(s"ALTER TABLE delta.`$path` ADD COLUMN tier STRING DEFAULT 'std'")
     DeltaWriter.write(
@@ -597,7 +594,7 @@ object DeltaQueries {
   private def dl24IdempotentWrite(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.delta.{DeltaMerge, MergeClause}
     val path = scratch()
-    val supplier = t(s, dir, "supplier")
+    val supplier = Tables.read(s, dir, "supplier")
     val evens = supplier.filter(col("s_suppkey") % 2 === 0)
     def deliverBatch(): Unit = evens.write.format("delta")
       .mode(SaveMode.Append)
@@ -639,7 +636,7 @@ object DeltaQueries {
     * spec-verified only. */
   private def dl25CheckpointReplay(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    val nation = t(s, dir, "nation")
+    val nation = Tables.read(s, dir, "nation")
     (0 until 12).foreach { i =>
       DeltaWriter.write(nation.filter(col("n_nationkey") % 12 === i),
         path, SaveMode.Append, Nil)
@@ -677,7 +674,7 @@ object DeltaQueries {
     * re-issues ids, breaks the hash. */
   private def dl26IdentityMergeRestore(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    val supplier = t(s, dir, "supplier")
+    val supplier = Tables.read(s, dir, "supplier")
     DeltaWriter.write(supplier.filter(col("s_suppkey") % 3 === 0), path,
       SaveMode.Append, Nil, identityColumns = Map("rid" -> (1L, 1L)))
     graft.sources.delta.DeltaMerge.merge(
@@ -721,7 +718,7 @@ object DeltaQueries {
   private def dl27RowTracking(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
     DeltaWriter.write(
-      t(s, dir, "nation").repartition(1).sortWithinPartitions("n_nationkey"),
+      Tables.read(s, dir, "nation").repartition(1).sortWithinPartitions("n_nationkey"),
       path, SaveMode.Append, Nil)                                       // v0
     graft.sources.delta.RowTracking.enable(s, path)                     // v1
     graft.sources.delta.DeltaDml.update(
@@ -757,7 +754,7 @@ object DeltaQueries {
   private def dl28ClusteredTable(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.delta.{Clustering, DeltaLog, DeltaMaintenance}
     val path = scratch()
-    val supplier = t(s, dir, "supplier")
+    val supplier = Tables.read(s, dir, "supplier")
     (0 until 4).foreach { i =>
       DeltaWriter.write(supplier.filter(col("s_suppkey") % 8 === i * 2),
         path, SaveMode.Append, Nil)
@@ -825,7 +822,7 @@ object DeltaQueries {
   private def dl30Clustered2d(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.delta.{Clustering, DeltaLog, DeltaMaintenance}
     val path = scratch()
-    val grid = t(s, dir, "supplier")
+    val grid = Tables.read(s, dir, "supplier")
       .withColumn("x", (col("s_suppkey") % 16).cast("int"))
       .withColumn("y", ((col("s_suppkey") / 16).cast("long") % 16).cast("int"))
       .select("s_suppkey", "x", "y", "s_acctbal")
@@ -880,7 +877,7 @@ object DeltaQueries {
     * drift. */
   private def dl29Variant(s: SparkSession, dir: String): DataFrame = {
     val path = scratch()
-    val supplier = t(s, dir, "supplier")
+    val supplier = Tables.read(s, dir, "supplier")
     DeltaWriter.write(supplier.filter(col("s_suppkey") % 2 === 0),
       path, SaveMode.Append, Nil)
     val withV = supplier.filter(col("s_suppkey") % 2 === 1)

@@ -25,19 +25,13 @@ import org.apache.spark.sql.functions._
   */
 object Functions {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    s.read.parquet(s"$dir/$n.parquet")
-
-  private def views(s: SparkSession, dir: String, names: String*): Unit =
-    names.foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-
   // -------------------------------------------------------------------------
   // Scalar families
   // -------------------------------------------------------------------------
 
   /** String surface: length/case/substr/pad/translate/levenshtein/etc. */
   private def fn01String(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables.read(s, dir, "part")
       .filter(col("p_partkey") <= 150)
       .select(
         col("p_partkey"),
@@ -55,7 +49,7 @@ object Functions {
 
   /** Regex surface: extract / count / replace / match-test. */
   private def fn02Regex(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables.read(s, dir, "part")
       .filter(col("p_partkey") <= 150)
       .select(
         col("p_partkey"),
@@ -68,7 +62,7 @@ object Functions {
 
   /** Datetime surface: trunc/extract/add/diff/format/last_day. */
   private def fn03Datetime(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .filter(col("o_orderkey") <= 200)
       .select(col("o_orderkey"), to_date(col("o_orderdate")).as("d"))
       .select(
@@ -88,7 +82,7 @@ object Functions {
 
   /** Conditional / null surface: CASE, coalesce, nullif, greatest/least. */
   private def fn04Conditional(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
+    Tables.read(s, dir, "customer")
       .filter(col("c_custkey") <= 300)
       .select(
         col("c_custkey"),
@@ -103,7 +97,7 @@ object Functions {
 
   /** Hash/encoding surface: md5, sha2-256, hex, base64. */
   private def fn05Hash(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "supplier")
+    Tables.read(s, dir, "supplier")
       .filter(col("s_suppkey") <= 200)
       .select(
         col("s_suppkey"),
@@ -116,7 +110,7 @@ object Functions {
   /** Array surface: sequence/transform/filter/aggregate/slice/sort/union.
     * Seeded fold parity: aggregate(arr, 0, +) == list_reduce(list_prepend(0,…)). */
   private def fn06Array(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables.read(s, dir, "part")
       .filter(col("p_partkey") <= 150)
       .withColumn("arr", sequence(lit(1), pmod(col("p_size"), lit(5)) + lit(2)))
       .select(
@@ -134,7 +128,7 @@ object Functions {
   /** Map + struct surface: construct, element_at/get_field, keys/values,
     * cardinality. */
   private def fn07Map(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables.read(s, dir, "part")
       .filter(col("p_partkey") <= 150)
       .withColumn("m", map_from_arrays(
         array(lit("brand"), lit("typ")),
@@ -179,7 +173,7 @@ object Functions {
     * by cold whole-stage-codegen of the 49-buffer-field moments aggregate
     * (~2s fixed, data-independent); the warm data path is ~1.3s + 0.6s. */
   private def fn08StatsAgg(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables.read(s, dir, "lineitem")
 
     val counts = li.groupBy(col("l_returnflag")).agg(count(lit(1)).as("n"))
     val w = Window.partitionBy(col("l_returnflag")).orderBy(col("l_extendedprice"))
@@ -219,7 +213,7 @@ object Functions {
 
   /** Order-sensitive collection aggregates: collect_list/set, string_agg. */
   private def fn09Collect(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir, "nation")
+    Tables.views(s, dir, "nation")
     s.sql("""
       SELECT n_regionkey,
              array_join(array_sort(collect_list(n_name)), ',') AS names,
@@ -234,7 +228,7 @@ object Functions {
 
   /** Bitwise / boolean aggregates. */
   private def fn10BitBool(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.read(s, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
         expr("bit_and(l_linenumber)").cast("long").as("ba"),
@@ -266,7 +260,7 @@ object Functions {
     // mixing countDistinct with object-buffer aggregates in one Aggregate
     // triggers the distinct-rewrite EXPAND (rows × 2) under
     // ObjectHashAggregate — measured ~4× slower than two joined aggs
-    val li = t(s, dir, "lineitem")
+    val li = Tables.read(s, dir, "lineitem")
     val sketches = li.groupBy(col("l_returnflag"))
       .agg(
         approx_count_distinct(col("l_partkey")).as("ap"),
@@ -306,11 +300,11 @@ object Functions {
     * of exact, and the gate checks the VALUE, not a tolerance. */
   private def fn27KmvSketch(s: SparkSession, dir: String): DataFrame = {
     val k = 64
-    val hashes = t(s, dir, "lineitem")
+    val hashes = Tables.read(s, dir, "lineitem")
       .select(col("l_partkey")).distinct()
       .select(expr("CAST(conv(substr(md5(CAST(l_partkey AS STRING)), 1, 8), 16, 10) AS BIGINT)").as("h"))
       .orderBy(col("h")).limit(k)
-    val exact = t(s, dir, "lineitem")
+    val exact = Tables.read(s, dir, "lineitem")
       .agg(countDistinct(col("l_partkey")).as("exact_parts"))
     hashes
       .agg(count(lit(1)).cast("long").as("k_used"), max(col("h")).as("hk"))
@@ -344,7 +338,7 @@ object Functions {
     * NB DuckDB: `ln` is natural log (Spark `log`), DuckDB `log` is log10. */
   private def fn13Math(s: SparkSession, dir: String): DataFrame = {
     def fs6(c: Column): Column = floor(c * lit(1000000.0)) / lit(1000000.0)
-    t(s, dir, "lineitem")
+    Tables.read(s, dir, "lineitem")
       .filter(col("l_orderkey") <= 200)
       .select(
         col("l_orderkey"), col("l_linenumber"),
@@ -369,7 +363,7 @@ object Functions {
   /** String surface #2: chr/ascii, repeat, trim, octet length, position in
     * a set, starts/ends/contains. */
   private def fn14String2(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables.read(s, dir, "part")
       .filter(col("p_partkey") <= 150)
       .select(
         col("p_partkey"),
@@ -388,7 +382,7 @@ object Functions {
   /** Datetime surface #2: unix epoch round-trips, add_months (with
     * month-end clamping), next_day, quarter/week. */
   private def fn15Datetime2(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .filter(col("o_orderkey") <= 200)
       .select(col("o_orderkey"), to_date(col("o_orderdate")).as("d"), col("o_orderdate"))
       .select(
@@ -404,7 +398,7 @@ object Functions {
   /** Array surface #2: position/remove/overlap/repeat/except, zip_with,
     * exists/forall, stepped sequence. */
   private def fn16Array2(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables.read(s, dir, "part")
       .filter(col("p_partkey") <= 150)
       .withColumn("arr", sequence(lit(1), pmod(col("p_size"), lit(5)) + lit(2)))
       .select(
@@ -424,7 +418,7 @@ object Functions {
     * flag via [[graft.functions.WeightedMeanAgg]] — DECIMAL-exact partial
     * aggregation (order-independent merges), floor-scaled finish. */
   private def fn17UdafWeightedMean(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem")
+    Tables.read(s, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
         expr("weighted_mean(l_quantity, l_extendedprice)").as("wmean_price"),
@@ -437,7 +431,7 @@ object Functions {
     * default) would raise. DuckDB mirrors with TRY_CAST, NULL-on-/0
     * division, NULL out-of-bounds list index, and try_strptime. */
   private def fn18TryAnsi(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables.read(s, dir, "part")
       .filter(col("p_partkey") <= 150)
       .select(
         col("p_partkey"),
@@ -453,7 +447,7 @@ object Functions {
     * differ (`<<`, `>>`, `xor(a,b)`, `(x >> n) & 1`); Spark's bit_count
     * and bit_get return INT/TINYINT → cast to BIGINT/INT on both sides. */
   private def fn19Bitwise(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.read(s, dir, "lineitem")
       .filter(col("l_orderkey") <= 300)
       .select(
         col("l_orderkey"), col("l_linenumber"),
@@ -471,7 +465,7 @@ object Functions {
     * left/right, hex, 1-based substring position. (initcap exists in Spark
     * but not this DuckDB build — left un-gated rather than weakly gated.) */
   private def fn20String3(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables.read(s, dir, "part")
       .filter(col("p_partkey") <= 150)
       .select(
         col("p_partkey"),
@@ -492,7 +486,7 @@ object Functions {
     * at this magnitude). Inputs derive from small exact ints. */
   private def fn21Trig(s: SparkSession, dir: String): DataFrame = {
     def fs6(c: Column): Column = floor(c * lit(1000000.0)) / lit(1000000.0)
-    t(s, dir, "lineitem")
+    Tables.read(s, dir, "lineitem")
       .filter(col("l_orderkey") <= 200)
       .select(
         col("l_orderkey"), col("l_linenumber"),
@@ -520,7 +514,7 @@ object Functions {
     * exact ints and the bucket width is a power of two, so the division
     * is float-exact on both engines). */
   private def fn22Math2(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "part")
+    Tables.read(s, dir, "part")
       .filter(col("p_partkey") <= 150)
       .withColumn("x",
         when(col("p_partkey") % 7 === 0, lit(Double.NaN))
@@ -542,7 +536,7 @@ object Functions {
     * composes them from substr/string_split/list_position/list indexing
     * (original derivations, same pattern as the GROUPS-frame oracle). */
   private def fn23String4(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables.read(s, dir, "part")
       .filter(col("p_partkey") <= 150)
       .select(
         col("p_partkey"),
@@ -564,7 +558,7 @@ object Functions {
     * group extraction, backreference-style replacement ($1 vs \1, 'g'
     * flag for DuckDB's default-first-only replace). */
   private def fn24Regex2(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables.read(s, dir, "part")
       .filter(col("p_partkey") <= 150)
       .select(
         col("p_partkey"),
@@ -581,7 +575,7 @@ object Functions {
     * last_day, datediff (DuckDB spells it date_diff('day', a, b)),
     * dayofweek (Spark is 1=Sunday, DuckDB 0=Sunday → +1), dayofyear. */
   private def fn25Datetime3(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .filter(col("o_orderkey") <= 200)
       .select(col("o_orderkey"), to_date(col("o_orderdate")).as("d"))
       .select(
@@ -602,7 +596,7 @@ object Functions {
     * small integers-as-doubles: their sum is exact in any order, so no
     * rounding parity is needed). */
   private def fn26Agg2(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.read(s, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
         expr("max_by(l_partkey, l_orderkey * 8 + l_linenumber)").as("mxb"),
@@ -619,7 +613,7 @@ object Functions {
 
   /** explode == UnnestExec: token frequency over part names. */
   private def un01Explode(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables.read(s, dir, "part")
       .select(explode(split(col("p_name"), " ")).as("tok"))
       .filter(col("tok") =!= "")
       .groupBy(col("tok"))
@@ -629,7 +623,7 @@ object Functions {
 
   /** posexplode: position-aware unnest (DuckDB zips parallel unnests). */
   private def un02Posexplode(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables.read(s, dir, "documents")
       .filter(col("doc_id") < 5)
       .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
       .filter(col("pos") < 8)
@@ -639,7 +633,7 @@ object Functions {
   /** sequence() as a table generator: month calendar LEFT JOIN monthly order
     * counts (generate_series parity). */
   private def un03SequenceJoin(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir, "orders")
+    Tables.views(s, dir, "orders")
     s.sql("""
       SELECT mon, coalesce(n, 0L) AS n_orders
       FROM (SELECT explode(sequence(DATE'1996-01-01', DATE'1996-12-01', INTERVAL 1 MONTH)) AS mon)

@@ -35,12 +35,9 @@ case class MediaFeatures(
   */
 object Multimodal {
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-
   /** documents → media table: binary payload + deterministic metadata. */
   def media(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).select(
+    Tables.read(s, dir, "documents").select(
       col("doc_id"),
       element_at(
         array(lit("image"), lit("audio"), lit("video")),
@@ -96,8 +93,8 @@ object Multimodal {
     * of a multimodal curation query (filter text quality per vector
     * cluster). */
   private def mm03CrossmodalJoin(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
-      .join(s.read.parquet(s"$dir/embeddings.parquet"),
+    Tables.read(s, dir, "documents")
+      .join(Tables.read(s, dir, "embeddings"),
         col("doc_id") === col("vec_id"))
       .groupBy(col("label").cast("int").as("label"))
       .agg(

@@ -27,7 +27,7 @@ object Pipeline {
       .join(labels, quality("doc_id") === labels("doc"), "left")
       .filter(col("doc").isNull || col("lab") === col("doc_id")) // keepers only
     curated
-      .join(s.read.parquet(s"$dir/embeddings.parquet"),
+      .join(Tables.read(s, dir, "embeddings"),
         col("doc_id") === col("vec_id"))
       .groupBy(col("lang"))
       .agg(
@@ -85,7 +85,7 @@ object Pipeline {
     * Portable hash per the repo parity rule:
     * Spark `conv(substr(md5(x),1,8),16,10)` == DuckDB `('0x'||…)::BIGINT`. */
   private def pp02HashSplit(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Tables.read(s, dir, "documents")
       .withColumn("bucket",
         expr("CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 100"))
       .withColumn("split",
@@ -106,7 +106,7 @@ object Pipeline {
     * equi-join; contaminated ids then anti-join the corpus. Linear in
     * corpus shingles, no all-pairs anything. */
   private def pp03Decontam(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.read(s, dir, "documents")
     def shingles(df: DataFrame): DataFrame = df
       .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
       .select(col("doc_id"), expr("word_ngrams(toks, 5)").as("g"))
@@ -132,7 +132,7 @@ object Pipeline {
     * against the broadcast (eval-sized) shingle set; only eval-sized
     * frames are ever broadcast, never corpus-sized. */
   private def pp08ContamReport(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.read(s, dir, "documents")
     def shingles(df: DataFrame): DataFrame = df
       .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
       .select(col("doc_id"), expr("word_ngrams(toks, 5)").as("g"))
@@ -187,7 +187,7 @@ object Pipeline {
     * rather than exact. Regex is a plain char class — identical semantics
     * in Java regex and DuckDB's RE2 (no lookaround, which RE2 lacks). */
   private def pp05PiiRedact(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/customer.parquet")
+    Tables.read(s, dir, "customer")
       .select(
         col("c_custkey"),
         expr("substr(md5(c_name), 1, 16)").as("pseudonym"),
@@ -206,7 +206,7 @@ object Pipeline {
     * because the salts differ). The rates table is a tiny literal map —
     * broadcast-free per-row math at 100 TB. */
   private def pp06MixtureSample(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Tables.read(s, dir, "documents")
       .withColumn("bucket",
         expr("CAST(conv(substr(md5(concat('mix_', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 100"))
       .withColumn("rate",
@@ -230,7 +230,7 @@ object Pipeline {
     * (filter-before-sample ordering, hash-bit independence), not just the
     * parts. */
   private def pp07CorpusBuild(s: SparkSession, dir: String): DataFrame = {
-    val toks = s.read.parquet(s"$dir/documents.parquet")
+    val toks = Tables.read(s, dir, "documents")
       .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
       .withColumn("n_tok", size(col("toks")).cast("long"))
       .filter(col("n_tok") >= 3)
@@ -245,7 +245,7 @@ object Pipeline {
       .filter(!(col("top_frac") >= 0.2 || col("dup3_frac") >= 0.05))
     // tx06 rarity: drop rare-heavy docs (rare_ratio over the FULL corpus
     // frequency table — computed before any filtering, like a real model)
-    val tokRows = s.read.parquet(s"$dir/documents.parquet")
+    val tokRows = Tables.read(s, dir, "documents")
       .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
       .select(col("doc_id"), explode(col("toks")).as("tok"))
     val freq = tokRows.groupBy(col("tok")).agg(count(lit(1)).as("freq"))
@@ -291,7 +291,7 @@ object Pipeline {
     * replays a plain global cumsum) is boundary-identical for EVERY
     * bucket size (PackingSuite pins this). */
   private def pp09SequencePacking(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.read(s, dir, "documents")
       .select(col("doc_id"),
         expr("size(filter(split(text, ' '), x -> x != ''))").cast("long").as("toks"))
     // one column-pruned pre-pass for the id range (cheap next to the
@@ -349,7 +349,7 @@ object Pipeline {
     * is salted independently of pp02's split bits so epoch mixing never
     * correlates with train/validation membership. */
   private def pp10EpochMix(s: SparkSession, dir: String): DataFrame = {
-    val base = s.read.parquet(s"$dir/documents.parquet")
+    val base = Tables.read(s, dir, "documents")
       .withColumn("ep_base",
         when(col("source") === "src0", 3L).when(col("source") === "src1", 2L)
           .when(col("source") === "src2", 0L).otherwise(1L))
@@ -397,7 +397,7 @@ object Pipeline {
   private def pp11ShardShuffle(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("shard_id")).orderBy(col("h"), col("doc_id"))
-    s.read.parquet(s"$dir/documents.parquet")
+    Tables.read(s, dir, "documents")
       .withColumn("h", md5(concat(lit("sh_"), col("doc_id").cast("string"))))
       .withColumn("shard_id",
         expr("CAST(conv(substr(h, 1, 8), 16, 10) AS BIGINT) % 8"))
@@ -424,7 +424,7 @@ object Pipeline {
     * summary joins are trivially broadcast. */
   private def pp12DatasetCard(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val d = s.read.parquet(s"$dir/documents.parquet")
+    val d = Tables.read(s, dir, "documents")
       .withColumn("l", expr("filter(split(text, ' '), x -> x != '')"))
     val base = d
       .withColumn("score", expr(

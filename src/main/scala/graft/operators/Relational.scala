@@ -21,21 +21,13 @@ import org.apache.spark.sql.expressions.Window
   */
 object Relational {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    s.read.parquet(s"$dir/$n.parquet")
-
-  /** Register temp views for SQL-surface queries (grouping sets, subqueries,
-    * CTEs) — cheap: schema-only reads until an action runs. */
-  private def views(s: SparkSession, dir: String, names: String*): Unit =
-    names.foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-
   // ---------------------------------------------------------------------------
   // Aggregation / scan family
   // ---------------------------------------------------------------------------
 
   /** TPC-H Q1 pricing summary: partial+final hash agg, filter pushed to scan. */
   private def q01Agg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.read(s, dir, "lineitem")
       .filter(col("l_shipdate") <= to_timestamp(lit("1998-09-02")))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
@@ -51,7 +43,7 @@ object Relational {
 
   /** Projection + filter: both must reach the parquet scan (PushedFilters). */
   private def q02FilterProject(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables.read(s, dir, "part")
       .filter(col("p_size").between(10, 20) && col("p_retailprice") > 500.0)
       .select(
         col("p_partkey"),
@@ -66,11 +58,11 @@ object Relational {
 
   /** TPC-H Q5-ish star join: broadcast the dim chain, shuffle the facts. */
   private def q03JoinMulti(s: SparkSession, dir: String): DataFrame = {
-    val region = t(s, dir, "region")
-    val nation = t(s, dir, "nation")
-    val customer = t(s, dir, "customer")
-    val orders = t(s, dir, "orders")
-    val lineitem = t(s, dir, "lineitem")
+    val region = Tables.read(s, dir, "region")
+    val nation = Tables.read(s, dir, "nation")
+    val customer = Tables.read(s, dir, "customer")
+    val orders = Tables.read(s, dir, "orders")
+    val lineitem = Tables.read(s, dir, "lineitem")
     lineitem
       .join(orders, col("l_orderkey") === col("o_orderkey"))
       .join(customer, col("o_custkey") === col("c_custkey"))
@@ -85,8 +77,8 @@ object Relational {
 
   /** TPC-H Q13-ish: LEFT OUTER join keeps customers with zero orders. */
   private def q04JoinLeft(s: SparkSession, dir: String): DataFrame = {
-    val customer = t(s, dir, "customer")
-    val orders = t(s, dir, "orders")
+    val customer = Tables.read(s, dir, "customer")
+    val orders = Tables.read(s, dir, "orders")
     customer
       .join(orders, col("c_custkey") === col("o_custkey"), "left")
       .groupBy(col("c_custkey"))
@@ -98,8 +90,8 @@ object Relational {
 
   /** RIGHT OUTER: every order row survives even without a matching hot part. */
   private def q05JoinRight(s: SparkSession, dir: String): DataFrame = {
-    val part = t(s, dir, "part").filter(col("p_size") > 40)
-    val lineitem = t(s, dir, "lineitem")
+    val part = Tables.read(s, dir, "part").filter(col("p_size") > 40)
+    val lineitem = Tables.read(s, dir, "lineitem")
     part
       .join(lineitem, col("p_partkey") === col("l_partkey"), "right")
       .groupBy(col("l_returnflag"))
@@ -111,10 +103,10 @@ object Relational {
 
   /** FULL OUTER join of two daily aggregates, coalescing both sides. */
   private def q06JoinFull(s: SparkSession, dir: String): DataFrame = {
-    val od = t(s, dir, "orders")
+    val od = Tables.read(s, dir, "orders")
       .groupBy(to_date(col("o_orderdate")).as("d"))
       .agg(count(lit(1)).as("n_orders"))
-    val ld = t(s, dir, "lineitem")
+    val ld = Tables.read(s, dir, "lineitem")
       .groupBy(to_date(col("l_shipdate")).as("d"))
       .agg(count(lit(1)).as("n_ships"))
     od.join(ld, Seq("d"), "full")
@@ -128,8 +120,8 @@ object Relational {
 
   /** LEFT SEMI = EXISTS: customers having at least one open order. */
   private def q07SemiJoin(s: SparkSession, dir: String): DataFrame = {
-    val customer = t(s, dir, "customer")
-    val open = t(s, dir, "orders").filter(col("o_orderstatus") === "O")
+    val customer = Tables.read(s, dir, "customer")
+    val open = Tables.read(s, dir, "orders").filter(col("o_orderstatus") === "O")
     customer
       .join(open, col("c_custkey") === col("o_custkey"), "left_semi")
       .groupBy(col("c_mktsegment"))
@@ -139,8 +131,8 @@ object Relational {
 
   /** LEFT ANTI = NOT EXISTS: customers who never placed a big-ticket order. */
   private def q08AntiJoin(s: SparkSession, dir: String): DataFrame = {
-    val customer = t(s, dir, "customer")
-    val big = t(s, dir, "orders").filter(col("o_totalprice") > 300000)
+    val customer = Tables.read(s, dir, "customer")
+    val big = Tables.read(s, dir, "orders").filter(col("o_totalprice") > 300000)
     customer
       .join(big, col("c_custkey") === col("o_custkey"), "left_anti")
       .groupBy(col("c_mktsegment"))
@@ -150,8 +142,8 @@ object Relational {
 
   /** Cross join of two tiny dims — BroadcastNestedLoop, bounded output. */
   private def q09CrossJoin(s: SparkSession, dir: String): DataFrame = {
-    val region = t(s, dir, "region").select(col("r_name"))
-    val status = t(s, dir, "orders").select(col("o_orderstatus")).distinct()
+    val region = Tables.read(s, dir, "region").select(col("r_name"))
+    val status = Tables.read(s, dir, "orders").select(col("o_orderstatus")).distinct()
     region.crossJoin(status)
       .select(col("r_name"), col("o_orderstatus"))
       .orderBy(col("r_name"), col("o_orderstatus"))
@@ -167,7 +159,7 @@ object Relational {
       ("T2", 50000.0, 150000.0),
       ("T3", 150000.0, 300000.0),
       ("T4", 300000.0, 1e12)).toDF("tier", "lo", "hi")
-    val orders = t(s, dir, "orders")
+    val orders = Tables.read(s, dir, "orders")
     orders
       .join(broadcast(tiers), col("o_totalprice") >= col("lo") && col("o_totalprice") < col("hi"))
       .groupBy(col("tier"))
@@ -180,8 +172,8 @@ object Relational {
   // ---------------------------------------------------------------------------
 
   private def q11Distinct(s: SparkSession, dir: String): DataFrame = {
-    val customer = t(s, dir, "customer")
-    val orders = t(s, dir, "orders")
+    val customer = Tables.read(s, dir, "customer")
+    val orders = Tables.read(s, dir, "orders")
     customer
       .join(orders, col("c_custkey") === col("o_custkey"))
       .select(col("c_mktsegment"), col("o_orderpriority"))
@@ -194,7 +186,7 @@ object Relational {
     * oracle mirrors that explicitly with a FILTER clause (DuckDB's
     * count(DISTINCT (a,b)) would otherwise count a struct with NULL fields). */
   private def q12CountDistinct(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.read(s, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
         countDistinct(col("l_suppkey")).as("n_supp"),
@@ -206,9 +198,9 @@ object Relational {
   /** ROLLUP with grouping() indicator; names coalesced so NULL grouping rows
     * sort identically in both engines. */
   private def q13Rollup(s: SparkSession, dir: String): DataFrame = {
-    val nation = t(s, dir, "nation")
-    val region = t(s, dir, "region")
-    val customer = t(s, dir, "customer")
+    val nation = Tables.read(s, dir, "nation")
+    val region = Tables.read(s, dir, "region")
+    val customer = Tables.read(s, dir, "customer")
     customer
       .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
       .join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
@@ -229,7 +221,7 @@ object Relational {
     * q13) so a genuine data NULL can never collide with the subtotal
     * sentinel, and the ORDER BY (which includes them) is total. */
   private def q14Cube(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .cube(col("o_orderstatus"), col("o_orderpriority"))
       .agg(
         count(lit(1)).as("n"),
@@ -245,7 +237,7 @@ object Relational {
   /** Explicit GROUPING SETS via SQL (DataFrame API has no direct form).
     * grouping() flags distinguish data-NULLs from subtotal rows. */
   private def q15GroupingSets(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir, "orders")
+    Tables.views(s, dir, "orders")
     s.sql("""
       SELECT coalesce(o_orderstatus, '(all)') AS o_orderstatus,
              coalesce(o_orderpriority, '(all)') AS o_orderpriority,
@@ -267,7 +259,7 @@ object Relational {
   private def q16WindowRank(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("c_mktsegment"))
       .orderBy(col("c_acctbal").desc, col("c_custkey"))
-    t(s, dir, "customer")
+    Tables.read(s, dir, "customer")
       .select(
         col("c_mktsegment"), col("c_custkey"),
         round(col("c_acctbal"), 2).as("bal"),
@@ -288,7 +280,7 @@ object Relational {
     val running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val sliding = w.rowsBetween(-2, Window.currentRow)
     val whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    t(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .filter(col("o_custkey") < 50)
       .select(
         col("o_custkey"), col("o_orderkey"),
@@ -307,14 +299,14 @@ object Relational {
 
   /** Top-K: Catalyst plans TakeOrderedAndProject — no full sort at scale. */
   private def q18TopK(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .select(col("o_orderkey"), round(col("o_totalprice"), 2).as("price"))
       .orderBy(col("price").desc, col("o_orderkey"))
       .limit(10)
 
   /** LIMIT + OFFSET pagination on a total order. */
   private def q19Offset(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
+    Tables.read(s, dir, "customer")
       .select(col("c_custkey"), col("c_name"))
       .orderBy(col("c_custkey"))
       .offset(20)
@@ -322,7 +314,7 @@ object Relational {
 
   /** UNION / INTERSECT / EXCEPT in one tagged result. */
   private def q20SetOps(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
+    val orders = Tables.read(s, dir, "orders")
     val a = orders.filter(col("o_orderstatus") === "F").select(col("o_custkey"))
     val b = orders.filter(col("o_totalprice") > 200000).select(col("o_custkey"))
     val u = a.union(b).distinct().withColumn("op", lit("union"))
@@ -339,7 +331,7 @@ object Relational {
     * (op, key, multiplicity) so the compare is order-insensitive within
     * the pinned ORDER BY. */
   private def q31SetOpsAll(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
+    val orders = Tables.read(s, dir, "orders")
     val a = orders.filter(col("o_orderstatus") === "F").select(col("o_custkey"))
     val b = orders.filter(col("o_totalprice") > 150000).select(col("o_custkey"))
     val u = a.unionAll(b).withColumn("op", lit("union_all"))
@@ -360,7 +352,7 @@ object Relational {
     * within float epsilon of the boundary (summation order differs between
     * Spark shuffles and DuckDB) can't flip membership. */
   private def q21SubqueryScalar(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir, "customer")
+    Tables.views(s, dir, "customer")
     s.sql("""
       SELECT c_custkey, round(c_acctbal, 2) AS bal
       FROM customer c
@@ -373,7 +365,7 @@ object Relational {
 
   /** IN-subquery (rewritten to semi join). */
   private def q22SubqueryIn(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir, "orders", "customer")
+    Tables.views(s, dir, "orders", "customer")
     s.sql("""
       SELECT o_orderstatus, count(*) AS n
       FROM orders
@@ -389,7 +381,7 @@ object Relational {
     * engines regardless of shuffle/summation order; only the final display
     * value is cast back to DOUBLE. */
   private def q23Cte(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir, "lineitem", "supplier")
+    Tables.views(s, dir, "lineitem", "supplier")
     s.sql("""
       WITH revenue AS (
         SELECT l_suppkey AS supplier_no,
@@ -415,7 +407,7 @@ object Relational {
     val wRows = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_orderdate"), col("o_orderkey"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    t(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .filter(col("o_custkey") < 100)
       .select(
         col("o_custkey"), col("o_orderkey"),
@@ -437,7 +429,7 @@ object Relational {
     * broadcast-join the per-group result back to the base rows. Scales:
     * the window runs over the collapsed group-level table, not the fact. */
   private def q30GroupsFrame(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "orders")
+    val base = Tables.read(s, dir, "orders")
       .filter(col("o_custkey") < 100)
       .withColumn("m", date_trunc("month", col("o_orderdate")).cast("date"))
     val grp = base.groupBy(col("o_custkey"), col("m"))
@@ -469,7 +461,7 @@ object Relational {
     * conditional aggregation, which is also what Catalyst plans (one pass,
     * no shuffle beyond the group-by). */
   private def q32Pivot(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.read(s, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .pivot("l_linestatus", Seq("F", "O"))
       .agg(round(sum(col("l_quantity").cast("decimal(18,6)")), 2).cast("double"))
@@ -481,7 +473,7 @@ object Relational {
     * (measure, value) rows via Dataset.unpivot (Spark 3.4+ native; plans
     * as Expand, no shuffle). Values decimal-rounded on both sides. */
   private def q33Unpivot(s: SparkSession, dir: String): DataFrame = {
-    val wide = t(s, dir, "lineitem")
+    val wide = Tables.read(s, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
         round(sum(col("l_quantity").cast("decimal(18,6)")), 2).cast("double").as("qty"),
@@ -502,14 +494,14 @@ object Relational {
     * independent): a double sum can differ in last ulps between the two
     * evaluations and drop the top row nondeterministically. */
   private def q34TopSupplier(s: SparkSession, dir: String): DataFrame = {
-    val revenue = t(s, dir, "lineitem")
+    val revenue = Tables.read(s, dir, "lineitem")
       .filter(col("l_shipdate") >= to_timestamp(lit("1996-01-01")) &&
         col("l_shipdate") < to_timestamp(lit("1996-04-01")))
       .groupBy(col("l_suppkey"))
       .agg(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
         .cast("decimal(18,6)")).as("total_revenue"))
     val maxRev = revenue.agg(max(col("total_revenue")).as("mr"))
-    t(s, dir, "supplier")
+    Tables.read(s, dir, "supplier")
       .join(revenue, col("s_suppkey") === col("l_suppkey"))
       .join(broadcast(maxRev), col("total_revenue") === col("mr"))
       .select(col("s_suppkey"), col("s_name"),
@@ -524,7 +516,7 @@ object Relational {
     * global_sum` — because scaling by an integer is exact while
     * multiplying by a double fraction is not. */
   private def q35RevenueShare(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables.read(s, dir, "lineitem")
     val perPart = li.groupBy(col("l_partkey"))
       .agg(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
         .cast("decimal(18,6)")).as("value"))
@@ -553,7 +545,7 @@ object Relational {
     * the whole chain into semi joins + one keyed aggregate — no per-row
     * re-scan (plan-pinned in spirit by q36's EXISTS pin). */
   private def q37ExcessStock(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir, "supplier", "lineitem", "nation", "part")
+    Tables.views(s, dir, "supplier", "lineitem", "nation", "part")
     s.sql("""
       WITH partsupp AS (
         SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
@@ -574,7 +566,7 @@ object Relational {
   }
 
   private def q36BlameSupplier(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir, "supplier", "lineitem", "orders")
+    Tables.views(s, dir, "supplier", "lineitem", "orders")
     s.sql("""
       SELECT s_name, count(*) AS numwait
       FROM supplier, lineitem l1, orders
@@ -603,7 +595,7 @@ object Relational {
     * a row attribute (deterministic for the gate); production salting uses
     * a random or hash salt — same plan shape. */
   private def q29SaltedAgg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.read(s, dir, "lineitem")
       .withColumn("salt", pmod(col("l_orderkey"), lit(16)))
       .groupBy(col("l_returnflag"), col("salt"))
       .agg(
@@ -622,12 +614,13 @@ object Relational {
   /** TPC-H Q7 flavor: shipping volume between customer/supplier nation
     * pairs — two independent broadcast dim chains off the same fact join. */
   private def q24VolumePairs(s: SparkSession, dir: String): DataFrame = {
-    val nation = t(s, dir, "nation")
-    val lineitem = t(s, dir, "lineitem").filter(col("l_shipdate") >= to_timestamp(lit("1996-01-01")))
+    val nation = Tables.read(s, dir, "nation")
+    val lineitem = Tables.read(s, dir, "lineitem")
+      .filter(col("l_shipdate") >= to_timestamp(lit("1996-01-01")))
     lineitem
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
+      .join(Tables.read(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(Tables.read(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      .join(Tables.read(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(nation.select(col("n_nationkey").as("cnk"), col("n_name").as("cust_nation"))),
         col("c_nationkey") === col("cnk"))
       .join(broadcast(nation.select(col("n_nationkey").as("snk"), col("n_name").as("supp_nation"))),
@@ -647,8 +640,8 @@ object Relational {
     * the join — Catalyst splits the common `p_partkey = l_partkey` out and
     * pushes the residual OR; exercises complex predicate pushdown. */
   private def q25Disjunctive(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .join(t(s, dir, "part"), col("p_partkey") === col("l_partkey"))
+    Tables.read(s, dir, "lineitem")
+      .join(Tables.read(s, dir, "part"), col("p_partkey") === col("l_partkey"))
       .filter(
         (col("p_brand") === "Brand#1" && col("p_size").between(1, 15) && col("l_quantity").between(1, 15)) ||
         (col("p_brand") === "Brand#2" && col("p_size").between(10, 25) && col("l_quantity").between(10, 25)) ||
@@ -661,7 +654,7 @@ object Relational {
   /** TPC-H Q22 flavor: customers above the global positive-balance average
     * with no big-ticket orders — uncorrelated scalar subquery + anti join. */
   private def q26GlobalAvgAnti(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir, "customer", "orders")
+    Tables.views(s, dir, "customer", "orders")
     s.sql("""
       SELECT substring(c_name, 1, 9) AS cntrycode,
              count(*) AS numcust,
@@ -676,7 +669,7 @@ object Relational {
   /** TPC-H Q17 flavor: small-quantity orders vs 20% of the per-part
     * average — correlated aggregate subquery, decorrelated to a join. */
   private def q27AvgQtyCorrelated(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir, "lineitem", "part")
+    Tables.views(s, dir, "lineitem", "part")
     s.sql("""
       SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) / 7.0 AS DOUBLE), 2) AS avg_yearly
       FROM lineitem JOIN part ON p_partkey = l_partkey

@@ -27,12 +27,6 @@ import graft.TempDirs
   */
 object ScanSources {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    s.read.parquet(s"$dir/$n.parquet")
-
-  private def scratch(prefix: String): String =
-    TempDirs.create(prefix)
-
   private val ordersSchema = StructType(Seq(
     StructField("o_orderkey", LongType),
     StructField("o_custkey", LongType),
@@ -52,8 +46,8 @@ object ScanSources {
     * Doubles survive the text round-trip bit-exactly (Spark writes the
     * shortest repr and parses it back to the same IEEE bits). */
   private def cn01CsvScan(s: SparkSession, dir: String): DataFrame = {
-    val path = scratch("graft-csv-q")
-    t(s, dir, "orders").write.mode("overwrite")
+    val path = TempDirs.create("graft-csv-q")
+    Tables.read(s, dir, "orders").write.mode("overwrite")
       .option("header", "true").csv(path)
     s.read.schema(ordersSchema).option("header", "true").csv(path)
       .groupBy(col("o_orderstatus"))
@@ -71,8 +65,8 @@ object ScanSources {
     * schema → aggregate. fn12 covers JSON *functions*; this covers the JSON
     * *file source*. */
   private def js01NdjsonScan(s: SparkSession, dir: String): DataFrame = {
-    val path = scratch("graft-json-q")
-    t(s, dir, "customer").write.mode("overwrite").json(path)
+    val path = TempDirs.create("graft-json-q")
+    Tables.read(s, dir, "customer").write.mode("overwrite").json(path)
     s.read.schema(customerSchema).json(path)
       .groupBy(col("c_mktsegment"))
       .agg(

@@ -23,10 +23,9 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  private def vecs(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").as("e"))
-  }
+  /** `embeddings` as `(vec_id, e)`. */
+  private[operators] def vecs(s: SparkSession, dir: String): DataFrame =
+    Tables.read(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("e"))
 
   /** Brute-force cosine top-3 per query vector (vec_id < 5), self excluded.
     * The scoring uses the native codegen'd [[graft.functions.CosineSimilarity]]

@@ -1,41 +1,86 @@
 package graft.operators
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
-/** Shared fixture-table readers. */
+import graft.sources.delta.SnapshotCache
+
+/** The operator modules' one table binding. Spark infers a parquet
+  * schema with a Spark job (and a fresh footer-reading thread pool) even
+  * for one file; the reference resolves a table's schema once, when it is
+  * registered (`src/lib.rs:30-42`). [[read]] memoizes the inferred
+  * `StructType` and hands it to `read.schema(...)`, which skips inference.
+  *  - Key: the path and the session's [[InferenceConfs]] values. The entry
+  *    holds the `(path, len, mtime)` of every file under the path
+  *    ([[SnapshotCache]]'s fingerprint), checked on every read: a
+  *    rewritten file infers again and replaces its entry.
+  *  - Bound: one entry per path and conf setting in use.
+  *  - Never cached: data, relations or results; every read lists and
+  *    scans the files as they are now.
+  */
 object Tables {
 
-  /** `events.parquet` `ts` layout has varied across driver fixture
-    * generations: TIMESTAMP(NANOS) (which Spark's parquet reader rejects
-    * outright, PARQUET_TYPE_ILLEGAL — read nanos as LONG via the legacy
-    * conf and floor-divide to micros), plain TIMESTAMP(MICROS) without
-    * timezone (read as TIMESTAMP_NTZ), or session-tz TIMESTAMP. Normalize
-    * all three to session-tz TimestampType so downstream event queries and
-    * the DuckDB oracle (naive micros, session UTC) agree exactly.
-    *
-    * Both the NTZ cast and the nanos floor-divide are exact only under a
-    * UTC session timezone (the oracle's frame of reference), so that conf
-    * is pinned here alongside nanosAsLong rather than assumed from the
-    * session factory. */
-  /** Dirs whose int64 `ts` magnitude has been verified as nanoseconds —
-    * the check is one tiny Spark job, so pay it once per dir, not once per
-    * query (the bench runs 10 event queries × N reps over one dir). */
-  private val nanosVerified =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** Session confs that change parquet schema inference. */
+  val InferenceConfs: Seq[String] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
 
+  private val schemas =
+    new ConcurrentHashMap[(String, Seq[String]), (SnapshotCache.Fingerprint, StructType)]()
+
+  /** Fixture table `name` of `dir` (`<dir>/<name>.parquet`). */
+  def read(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key = (path, InferenceConfs.map(k => s.conf.getOption(k).getOrElse("")))
+    val fp = fingerprint(s, path)
+    val schema = Option(schemas.get(key)).collect { case (`fp`, st) => st }.getOrElse {
+      val st = s.read.parquet(path).schema
+      schemas.put(key, (fp, st))
+      st
+    }
+    s.read.schema(schema).parquet(path)
+  }
+
+  /** Each fixture table of `names` as a temp view of its own name, for the
+    * SQL-surface queries. */
+  def views(s: SparkSession, dir: String, names: String*): Unit =
+    names.foreach(n => read(s, dir, n).createOrReplaceTempView(n))
+
+  private def fingerprint(s: SparkSession, path: String): SnapshotCache.Fingerprint = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+    // plain statuses: located ones load permissions, a shell fork per file
+    // on a local file system without native Hadoop
+    def files(st: FileStatus): Iterator[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).iterator.flatMap(files) else Iterator(st)
+    files(fs.getFileStatus(p)).map(SnapshotCache.input).toSet
+  }
+
+  /** Dirs whose int64 `ts` was checked to be nanoseconds: one tiny job
+    * per dir, not per query. */
+  private val nanosVerified = ConcurrentHashMap.newKeySet[String]()
+
+  /** `events`, its `ts` as session-tz TimestampType whichever layout the
+    * fixture generation wrote: TIMESTAMP(NANOS) (which Spark rejects,
+    * PARQUET_TYPE_ILLEGAL: read as LONG under nanosAsLong and floor-divided
+    * to micros), TIMESTAMP(MICROS) without timezone (TIMESTAMP_NTZ, cast)
+    * or session-tz TIMESTAMP; event queries and the DuckDB oracle (naive
+    * micros, UTC) then agree exactly. Both conversions are exact only in
+    * UTC, so the session zone is pinned here beside nanosAsLong. */
   def events(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     s.conf.set("spark.sql.session.timeZone", "UTC")
-    val raw = s.read.parquet(s"$dir/events.parquet")
+    val raw = read(s, dir, "events")
     raw.schema("ts").dataType match {
       case LongType =>
-        // nanos-as-long fixture generation. Guard the unit assumption: an
-        // int64 ts column that is NOT nanoseconds (e.g. a future fixture
-        // writing plain micros/millis as int64) must fail loudly here, not
-        // be silently divided by 1000. Nanos since epoch for the fixture's
-        // 2024-era data ≈ 1.7e18; micros ≈ 1.7e15, millis ≈ 1.7e12.
+        // an int64 ts that is not nanoseconds must fail here, not be
+        // divided by 1000: 2024-era nanos ≈ 1.7e18, micros ≈ 1.7e15
         if (!nanosVerified.contains(dir)) {
           raw.select(col("ts")).filter(col("ts").isNotNull).head(1).foreach { r =>
             val v = math.abs(r.getLong(0))

@@ -21,14 +21,11 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-
   private val tokenize = "filter(split(text, ' '), x -> x != '')"
 
   /** Token counting: counts, distinct counts, mean token length, TTR. */
   private def tx01Tokens(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
+    Tables.read(s, dir, "documents")
       .withColumn("toks", expr(tokenize))
       .select(
         col("doc_id"),
@@ -46,7 +43,7 @@ object TextAnalysis {
   /** Shared quality-scoring frame (doc_id, lang, n_chars, n_tok, sr, pr,
     * score, grade) — tx02's body, reused by the curation pipeline. */
   private[operators] def qualityScored(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
+    Tables.read(s, dir, "documents")
       .withColumn("toks", expr(tokenize))
       .withColumn("n_tok", size(col("toks")).cast("double"))
       .withColumn("sr",
@@ -83,7 +80,7 @@ object TextAnalysis {
   /** Language ID: per-language stopword hit counts → argmax with a fixed
     * tie-break order; output is the (label, prediction) confusion matrix. */
   private def tx03Langid(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
+    Tables.read(s, dir, "documents")
       .withColumn("toks", expr(tokenize))
       .withColumn("s_en", expr("size(filter(toks, x -> array_contains(array('the','a','of','and','is'), x)))"))
       .withColumn("s_de", expr("size(filter(toks, x -> array_contains(array('der','die','das','und','ist'), x)))"))
@@ -101,7 +98,7 @@ object TextAnalysis {
   /** Document fingerprinting: 48-bit md5 prefix + a 31-ary rolling hash of
     * the first 80 chars (both exact-integer, engine-portable). */
   private def tx04Fingerprint(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
+    Tables.read(s, dir, "documents")
       .select(
         col("doc_id"),
         expr("CAST(conv(substr(md5(text), 1, 12), 16, 10) AS BIGINT)").as("fp_md5"),
@@ -125,7 +122,7 @@ object TextAnalysis {
     // per (distinct, element) pair — measured 2.2s → 1.1s warm at sf0.1), and
     // word_ngrams_arr yields the DISTINCT n-grams in one Scala pass; the
     // n-gram TOTAL is n_tok - (k-1) by construction, no second array.
-    docs(s, dir)
+    Tables.read(s, dir, "documents")
       .withColumn("toks", expr(tokenize))
       .withColumn("n_tok", size(col("toks")).cast("long"))
       .filter(col("n_tok") >= 3)
@@ -157,7 +154,7 @@ object TextAnalysis {
     * ratios of exact integers (no log/perplexity — libm differs across
     * engines, integer counts cannot). */
   private def tx06Rarity(s: SparkSession, dir: String): DataFrame = {
-    val toks = docs(s, dir)
+    val toks = Tables.read(s, dir, "documents")
       .select(col("doc_id"), explode(expr(tokenize)).as("tok"))
     val freq = toks.groupBy(col("tok")).agg(count(lit(1)).as("freq"))
     toks.join(freq, "tok")
@@ -187,7 +184,8 @@ object TextAnalysis {
     * Zipf-unbounded — no forced broadcast, same rule as tx06), and two
     * 1-row/O(sources) broadcasts for the totals. */
   private def tx07Drift(s: SparkSession, dir: String): DataFrame = {
-    val toks = docs(s, dir).select(col("source"), explode(expr(tokenize)).as("tok"))
+    val toks = Tables.read(s, dir, "documents")
+      .select(col("source"), explode(expr(tokenize)).as("tok"))
     val corpus = toks.groupBy(col("tok")).agg(count(lit(1)).as("c"))
     val bySrc = toks.groupBy(col("source"), col("tok")).agg(count(lit(1)).as("cs"))
     val totals = toks.groupBy(col("source")).agg(count(lit(1)).as("ns"))
@@ -226,7 +224,7 @@ object TextAnalysis {
     * trained weights is a broadcast lookup join or a literal map, same
     * plan. */
   private def tx08ClassifierScore(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
+    Tables.read(s, dir, "documents")
       .withColumn("toks", expr(tokenize))
       .withColumn("score", expr(
         "aggregate(transform(toks, t -> (CAST(conv(substr(md5(concat('w_', t)), 1, 8), 16, 10) AS BIGINT) % 17) - 8), 0L, (a, x) -> a + x)"))
@@ -262,7 +260,7 @@ object TextAnalysis {
     * hash aggregate on doc_id. Nothing driver-side — the "model" stays
     * distributed, exactly how a corpus-scale n-gram LM is trained. */
   private def tx09BigramLm(s: SparkSession, dir: String): DataFrame = {
-    val big = graft.operators.QueryCaches.persist(docs(s, dir)
+    val big = graft.operators.QueryCaches.persist(Tables.read(s, dir, "documents")
       .withColumn("l", expr(tokenize))
       .filter(size(col("l")) >= 2)
       .select(col("doc_id"), explode(expr(
@@ -294,7 +292,7 @@ object TextAnalysis {
     * the real tokenizer runs. Per-row regex + K-source aggregate; ratios
     * are floor-scaled sums-of-integers (engine-exact). */
   private def tx10BpeTokens(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
+    Tables.read(s, dir, "documents")
       .withColumn("ws", size(expr(tokenize)).cast("long"))
       .withColumn("bpe", size(expr(
         "regexp_extract_all(text, ' ?[a-z]+| ?[0-9]+| ?[^a-z0-9 ]+', 0)")).cast("long"))
