@@ -9,7 +9,8 @@ package graft.sources.delta
   * The decision an in-flight REWRITE transaction (DML / MERGE / OPTIMIZE /
   * DV delete / replaceWhere) must make when it loses the commit race: can
   * it commit on top of the new snapshot, or would that corrupt state? The
-  * rules, checked against the re-read snapshot each attempt:
+  * rules, checked each attempt against the re-read metadata snapshot and
+  * the intervening commits:
   *
   *  - **Disjoint commits proceed.** Concurrent appends, and concurrent
   *    removes/rewrites of files OUTSIDE our touched set, do not conflict —
@@ -17,12 +18,13 @@ package graft.sources.delta
   *    ∥ append partition B ∥ compaction of partition C) commits them all;
   *    aborting here is the difference between "retries" and "fails" at
   *    fleet scale.
-  *  - **A touched file whose add entry CHANGED aborts.** Not just
-  *    removed-vs-live: a concurrent commit that re-added the same path
-  *    with different state (a DV attach, refreshed stats after a foreign
-  *    rewrite) invalidates our staged rewrite — committing a rewrite
-  *    computed from the pre-DV state would RESURRECT the rows that DV
-  *    deleted. Byte-identical add entry = untouched file.
+  *  - **A touched file that a concurrent commit removed or re-added
+  *    aborts** ([[checkRewrite]], one rule on both snapshot planes). Not
+  *    just removed-vs-live: a concurrent commit that re-added the same
+  *    path with different state (a DV attach, refreshed stats after a
+  *    foreign rewrite) invalidates our staged rewrite — committing a
+  *    rewrite computed from the pre-DV state would RESURRECT the rows that
+  *    DV deleted.
   *  - **A concurrent metaData change aborts** (ConcurrentMetadataUpdate).
   *    Schema, partitioning, constraints, CDF enablement, column mapping —
   *    every staged file and validation in this transaction assumed the old
@@ -51,49 +53,26 @@ package graft.sources.delta
   */
 private[delta] object ConflictChecker {
 
-  /** Validate that a rewrite staged against `base` may commit on top of
-    * `latest`. Runs `onAbort` (staged-file cleanup) before throwing. */
-  def checkRewrite(
-      op: String,
-      base: DeltaSnapshot,
-      latest: DeltaSnapshot,
-      touched: Seq[DeltaAddFile],
-      onAbort: () => Unit): Unit = {
-    if (latest.version == base.version) return // no intervening commit
-    checkTableState(op, base, latest, onAbort)
-    val liveByPath = latest.files.iterator.map(f => f.path -> f).toMap
-    val changed = touched.filterNot(f => liveByPath.get(f.path).contains(f))
-    if (changed.nonEmpty)
-      abort(op, base, onAbort,
-        s"${changed.size} of ${touched.size} source file(s) were removed or " +
-          s"rewritten by a concurrent commit (e.g. ${changed.head.path})")
-  }
-
-  /** Incremental form of [[checkRewrite]] for the deferred (job-plane)
-    * commit loops, where `latest` carries metadata planes but NO live set
-    * ([[DeltaLog.metadataSnapshot]]): scans ONLY the intervening commit
-    * JSONs — O(concurrent commits) driver work, never O(files) — and
-    * aborts when any of them removed OR (re-)added a file this transaction
-    * touched. Strictly conservative relative to the eager rule: a
-    * byte-identical re-add of a touched path passes the eager comparison
-    * but aborts here — a spurious retry, never a corruption; every abort
-    * the eager rule would raise, this raises too (a changed/removed
-    * touched entry implies an action on its path in the range). A range
-    * with missing commit JSONs aborts (unvalidatable). An attempt that
-    * also runs [[checkReadSet]] shares ONE parse of the (immutable) range
-    * with it STRUCTURALLY: both rules read the attempt's
-    * [[DeltaLog.sharedConflictRange]] memo, so any range is parsed once
-    * per attempt (the r18-documented residual was a parse per rule) and
+  /** The touched-file rule of a rewrite's commit attempt, on both
+    * snapshot planes: aborts when any intervening commit in
+    * (base, latest] removed OR (re-)added a file this transaction
+    * touched. It reads only those commit JSONs — O(concurrent commits)
+    * driver work, never O(files) — so `latest` needs no live set
+    * ([[DeltaLog.metadataSnapshot]]). A byte-identical re-add of a touched
+    * path aborts too: a spurious retry, never a corruption. A range with
+    * missing commit JSONs aborts (unvalidatable). Returns the attempt's
+    * shared range ([[DeltaLog.sharedConflictRange]]) for the caller's
+    * [[checkReadSet]], so both rules parse it at most once per attempt and
     * nothing is kept across attempts. */
-  def checkRewriteIncremental(
+  def checkRewrite(
       op: String,
       spark: org.apache.spark.sql.SparkSession,
       base: DeltaSnapshot,
       latest: DeltaSnapshot,
       touched: Seq[DeltaAddFile],
-      onAbort: () => Unit,
-      range: () => DeltaLog.ConflictRange): Unit = {
-    if (latest.version == base.version) return
+      onAbort: () => Unit): () => DeltaLog.ConflictRange = {
+    val range = DeltaLog.sharedConflictRange(spark, base.tablePath, base.version, latest.version)
+    if (latest.version == base.version) return range // no intervening commit
     checkTableState(op, base, latest, onAbort)
     val touchedPaths = touched.map(_.path).toSet
     val hit =
@@ -104,25 +83,6 @@ private[delta] object ConflictChecker {
         s"source file $p was removed or rewritten by a concurrent commit " +
           s"(v${base.version} -> v${latest.version})")
     }
-  }
-
-  /** The touched-file rule of a rewrite's commit attempt, picked by the
-    * plane its base snapshot came from: [[checkRewriteIncremental]] when
-    * `incremental` (deferred plane — `latest` carries no live set), else
-    * [[checkRewrite]]. Returns the attempt's shared range
-    * ([[DeltaLog.sharedConflictRange]]) for the caller's
-    * [[checkReadSet]], so both rules parse it at most once. */
-  def checkRewriteOn(
-      op: String,
-      spark: org.apache.spark.sql.SparkSession,
-      base: DeltaSnapshot,
-      latest: DeltaSnapshot,
-      touched: Seq[DeltaAddFile],
-      onAbort: () => Unit,
-      incremental: Boolean): () => DeltaLog.ConflictRange = {
-    val range = DeltaLog.sharedConflictRange(spark, base.tablePath, base.version, latest.version)
-    if (incremental) checkRewriteIncremental(op, spark, base, latest, touched, onAbort, range)
-    else checkRewrite(op, base, latest, touched, onAbort)
     range
   }
 
@@ -130,9 +90,10 @@ private[delta] object ConflictChecker {
     * dataChange files that may overlap what this transaction READ —
     * `readPredicate` (the DML WHERE; None = the whole table, MERGE's
     * anti-join scope) prunes the overlap test by its partition-column
-    * conjuncts. Call AFTER [[checkRewrite]] in the same attempt (the
-    * touched-file rule covers concurrent removes/rewrites of files we
-    * touch; this covers adds we never touched but did read). */
+    * conjuncts. Call AFTER [[checkRewrite]] in the same attempt, with the
+    * range it returned (the touched-file rule covers concurrent
+    * removes/rewrites of files we touch; this covers adds we never
+    * touched but did read). */
   def checkReadSet(
       op: String,
       spark: org.apache.spark.sql.SparkSession,

@@ -107,8 +107,7 @@ object DeltaCdf {
     val physDataSchema = endSnap.physicalDataSchema
     val partSchema = endSnap.partitionSchema
 
-    val (commits, _) = DeltaLog.listLog(spark, tablePath)
-    val fs = DeltaLog.logDir(tablePath).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = DeltaLog.logFs(spark, tablePath)
     val tableRoot = new Path(tablePath)
 
     /** Read `files` (table-data or cdc, physical names) surfacing logical
@@ -138,16 +137,16 @@ object DeltaCdf {
     def abs(rel: String): String =
       DeltaFileIndex.absoluteDataPath(tableRoot, rel).toString
 
-    val inRange = commits.filter { case (v, _) => v > fromExclusive && v <= toInclusive }
+    val (inRange, missing) = DeltaLog.commitRange(spark, tablePath, fromExclusive, toInclusive)
     // every version in (from, to] must still have its commit JSON: log
     // cleanup (checkpoint + metadata retention) retires old commits, and
     // silently skipping one would return an INCOMPLETE change feed —
     // production Delta errors here too
-    val missing = ((fromExclusive + 1) to toInclusive).toSet -- inRange.map(_._1).toSet
     require(missing.isEmpty,
-      s"$tablePath: change data for version(s) ${missing.toSeq.sorted.mkString(",")} " +
+      s"$tablePath: change data for version(s) ${missing.mkString(",")} " +
         "is no longer available (commit JSONs retired by log cleanup); " +
         "narrow the range to versions still present in _delta_log")
+    val commitTime = DeltaLog.commitTimeOf(spark, tablePath, inRange)
 
     // per-VERSION enablement: checking only the end snapshot would let a
     // range crossing the enablement boundary serve DERIVED whole-file
@@ -163,51 +162,39 @@ object DeltaCdf {
         Some(fromExclusive)).metadata)
     val frames: Seq[DataFrame] = inRange
       .flatMap { case (v, status) =>
-        val in = fs.open(status.getPath)
-        val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        var commitTs: Long = status.getModificationTime
         val cdcFiles = Seq.newBuilder[(String, Map[String, String])] // (path, pv)
         val addFiles = Seq.newBuilder[(String, Map[String, String], Boolean)] // (path, pv, hasDv)
         val removeFiles = Seq.newBuilder[(String, Map[String, String])]
-        content.linesIterator.filter(_.trim.nonEmpty).foreach { line =>
-          val node = mapper.readTree(line)
+        DeltaLog.readCommit(fs, status)(_.foreach { node =>
           if (node.has("metaData")) {
             val md = node.get("metaData")
             if (md.has("configuration"))
               cdfOnNow = Option(md.get("configuration").get(EnableKey))
                 .exists(_.asText().trim.equalsIgnoreCase("true"))
           }
-          if (node.has("commitInfo")) {
-            val ciNode = node.get("commitInfo")
-            // in-commit timestamp wins when present (mtime-independent)
-            if (ciNode.has("inCommitTimestamp"))
-              commitTs = ciNode.get("inCommitTimestamp").asLong()
-            else if (ciNode.has("timestamp"))
-              commitTs = ciNode.get("timestamp").asLong()
-          }
           if (node.has("cdc")) {
             val c = node.get("cdc")
-            cdcFiles += ((c.get("path").asText(), jsonStringMap(c.get("partitionValues"))))
+            cdcFiles += ((c.get("path").asText(), DeltaLog.jsonStringMap(c.get("partitionValues"))))
           }
           if (node.has("add")) {
             val a = node.get("add")
-            if (!a.has("dataChange") || a.get("dataChange").asBoolean(true))
+            if (DeltaLog.dataChange(a))
               addFiles += ((a.get("path").asText(),
-                jsonStringMap(a.get("partitionValues")),
+                DeltaLog.jsonStringMap(a.get("partitionValues")),
                 a.has("deletionVector") && !a.get("deletionVector").isNull))
           }
           if (node.has("remove")) {
             val r = node.get("remove")
-            if (!r.has("dataChange") || r.get("dataChange").asBoolean(true)) {
+            if (DeltaLog.dataChange(r)) {
               val rel = r.get("path").asText()
               val pv =
-                if (r.has("partitionValues")) jsonStringMap(r.get("partitionValues"))
+                if (r.has("partitionValues")) DeltaLog.jsonStringMap(r.get("partitionValues"))
                 else DeltaWriter.partitionValuesOf(
                   DeltaMaintenance.decodeRel(rel), physPartCols)
               removeFiles += ((rel, pv))
             }
           }
-        }
+        })
         val cdc = cdcFiles.result()
         val addsAll = addFiles.result()
         val removesAll = removeFiles.result()
@@ -298,7 +285,7 @@ object DeltaCdf {
           }
         perCommit.map(_
           .withColumn(VersionCol, lit(v))
-          .withColumn(TimestampCol, lit(new java.sql.Timestamp(commitTs))))
+          .withColumn(TimestampCol, lit(new java.sql.Timestamp(commitTime(status)))))
       }
 
     val outSchema = StructType(logicalAll.fields).add(TypeCol, "string")
@@ -309,13 +296,4 @@ object DeltaCdf {
       .getOrElse(spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), outSchema))
   }
-
-  private def jsonStringMap(node: com.fasterxml.jackson.databind.JsonNode): Map[String, String] =
-    if (node == null || node.isNull) Map.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      node.properties().asScala.map { e =>
-        e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())
-      }.toMap
-    }
 }

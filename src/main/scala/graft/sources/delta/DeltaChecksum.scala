@@ -22,8 +22,7 @@ import org.apache.spark.sql.SparkSession
   * version — at local scale a cheap second read of the log the writer
   * just walked for conflict detection; a long-lived production writer
   * would thread its incrementally-maintained post-commit snapshot here
-  * instead (same artifact, no re-read). Disable with
-  * `spark.graft.delta.writeChecksums=false`. */
+  * instead (same artifact, no re-read). */
 object DeltaChecksum {
 
   final case class Crc(tableSizeBytes: Long, numFiles: Long)
@@ -40,26 +39,24 @@ object DeltaChecksum {
     * next reader of the just-committed version reuses it for free. */
   def write(spark: SparkSession, tablePath: String, version: Long): Unit =
     try {
-      if (spark.conf.get("spark.graft.delta.writeChecksums", "true").toBoolean) {
-        val (snap, deferred) =
-          DeltaLog.scanSnapshot(spark, tablePath, versionAsOf = Some(version),
-            withDvAdds = false) // totals only — never open data files
-        val (bytes, count) = deferred match {
-          case Some(d) => (d.totalBytes, d.fileCount)
-          case None => (snap.files.map(_.size).sum, snap.files.size.toLong)
-        }
-        val mapper = new ObjectMapper()
-        val node = mapper.createObjectNode()
-        node.put("tableSizeBytes", bytes)
-        node.put("numFiles", count)
-        node.put("numMetadata", 1L)
-        node.put("numProtocol", 1L)
-        val p = crcPath(tablePath, version)
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        val out = fs.create(p, true) // checksums are idempotent per version
-        try out.write(mapper.writeValueAsString(node).getBytes("UTF-8"))
-        finally out.close()
+      val (snap, deferred) =
+        DeltaLog.scanSnapshot(spark, tablePath, versionAsOf = Some(version),
+          withDvAdds = false) // totals only — never open data files
+      val (bytes, count) = deferred match {
+        case Some(d) => (d.totalBytes, d.fileCount)
+        case None => (snap.files.map(_.size).sum, snap.files.size.toLong)
       }
+      val mapper = new ObjectMapper()
+      val node = mapper.createObjectNode()
+      node.put("tableSizeBytes", bytes)
+      node.put("numFiles", count)
+      node.put("numMetadata", 1L)
+      node.put("numProtocol", 1L)
+      val p = crcPath(tablePath, version)
+      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+      val out = fs.create(p, true) // checksums are idempotent per version
+      try out.write(mapper.writeValueAsString(node).getBytes("UTF-8"))
+      finally out.close()
     } catch { case scala.util.control.NonFatal(_) => () }
 
   /** The recorded checksum for `version`, when one was published.
@@ -70,22 +67,17 @@ object DeltaChecksum {
   def read(spark: SparkSession, tablePath: String, version: Long): Option[Crc] = {
     val p = crcPath(tablePath, version)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val content =
+    val opened = try Some(fs.open(p)) catch { case _: java.io.FileNotFoundException => None }
+    opened.map { in =>
       try {
-        val in = fs.open(p)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-        finally in.close()
-      } catch { case _: java.io.FileNotFoundException => None }
-    content.map { c =>
-      try {
-        val node = new ObjectMapper().readTree(c)
+        val node = new ObjectMapper().readTree(in)
         Crc(node.get("tableSizeBytes").asLong(), node.get("numFiles").asLong())
       } catch {
         case scala.util.control.NonFatal(e) =>
           throw new java.io.IOException(
             s"corrupt checksum artifact $p (unparseable content is log damage, " +
               s"not a missing checksum): ${e.getMessage}", e)
-      }
+      } finally in.close()
     }
   }
 

@@ -39,8 +39,8 @@ private[delta] final case class DvBuild(
   * DEFERRED file plane ([[DeltaLog.scanSnapshot]]): the touched-file
   * lookup is a pruned distributed collect (O(touched) driver heap — a
   * selective DELETE over a 10M-file table never materializes the live
-  * set), and the commit loop re-reads METADATA-ONLY snapshots validated
-  * by [[ConflictChecker.checkRewriteIncremental]] (intervening commit
+  * set). On both planes the commit loop re-reads METADATA-ONLY snapshots
+  * validated by [[ConflictChecker.checkRewrite]] (intervening commit
   * JSONs vs touched paths — O(concurrent commits) per retry). Only
   * touched files are rewritten; untouched files (the overwhelming
   * majority under a selective predicate) are carried over by the log
@@ -49,9 +49,10 @@ private[delta] final case class DvBuild(
   * `dataChange=false`).
   *
   * Concurrency: same validated commit loop as OPTIMIZE — on version
-  * conflict re-read the snapshot and ABORT if any file we are about to
-  * remove is no longer live (a concurrent Overwrite/OPTIMIZE/DML rewrote
-  * it; blindly committing would resurrect or double rows). Concurrent
+  * conflict re-read the metadata and ABORT if a concurrent commit removed
+  * or re-added any file we are about to remove (a concurrent
+  * Overwrite/OPTIMIZE/DML rewrote it; blindly committing would resurrect
+  * or double rows). Concurrent
   * blind APPENDS are allowed to interleave — that is Delta's default
   * WriteSerializable isolation: appended rows that would have matched the
   * predicate survive, exactly as in production Delta.
@@ -249,14 +250,10 @@ object DeltaDml {
     beforeCommit()
     val onAbort = () => { data.discard(); cdc.foreach(_.discard()) }
     val committedVersion = DeltaCommit.run(spark, tablePath, op, onAbort) {
-      // deferred plane: metadata-only re-read + the INCREMENTAL conflict
-      // rule (intervening commits vs touched paths) — a retry never pays
-      // the O(files) live-set materialization the eager re-read did
-      val latest =
-        if (deferred.isDefined) DeltaLog.metadataSnapshot(spark, tablePath)
-        else DeltaLog.snapshot(spark, tablePath)
-      val range = ConflictChecker.checkRewriteOn(op, spark, snap, latest, touched,
-        onAbort, incremental = deferred.isDefined)
+      // metadata-only re-read + the touched-file rule over the
+      // intervening commits: a retry never materializes the live set
+      val latest = DeltaLog.metadataSnapshot(spark, tablePath)
+      val range = ConflictChecker.checkRewrite(op, spark, snap, latest, touched, onAbort)
       // the find READ the predicate's scope beyond the touched files: a
       // concurrent non-blind-append add in that scope invalidates it
       ConflictChecker.checkReadSet(op, spark, snap, latest, Some(condition),
@@ -475,11 +472,8 @@ object DeltaDml {
     val onAbort = () => { dropDvs(); cdc.foreach(_.discard()) }
     val op = "DELETE (merge-on-read)"
     val committedVersion = DeltaCommit.run(spark, tablePath, op, onAbort) {
-      val latest =
-        if (deferred.isDefined) DeltaLog.metadataSnapshot(spark, tablePath)
-        else DeltaLog.snapshot(spark, tablePath)
-      val range = ConflictChecker.checkRewriteOn(op, spark, snap, latest, touched,
-        onAbort, incremental = deferred.isDefined)
+      val latest = DeltaLog.metadataSnapshot(spark, tablePath)
+      val range = ConflictChecker.checkRewrite(op, spark, snap, latest, touched, onAbort)
       ConflictChecker.checkReadSet(op, spark, snap, latest, Some(condition),
         onAbort, range)
       // first DV on the table upgrades the protocol to table features,

@@ -1,10 +1,12 @@
 package graft.sources.delta
 
+import java.nio.charset.StandardCharsets
+
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -627,6 +629,39 @@ object DeltaLog extends Logging {
 
   def logDir(tablePath: String): Path = new Path(tablePath, LogDirName)
 
+  /** The one driver-side reader of a commit JSON: streams `status` line
+    * by line, one `readTree` per non-blank line, and closes the file when
+    * `f` returns. No caller holds a whole commit as one String, and a
+    * caller that stops early (the first commitInfo) reads O(line). */
+  private[delta] def readCommit[T](fs: FileSystem, status: FileStatus)(
+      f: Iterator[JsonNode] => T): T = {
+    val reader = new java.io.BufferedReader(
+      new java.io.InputStreamReader(fs.open(status.getPath), StandardCharsets.UTF_8))
+    try f(Iterator.continually(reader.readLine()).takeWhile(_ != null)
+      .filterNot(_.isBlank).map(line => mapper.readTree(line)))
+    finally reader.close()
+  }
+
+  /** The commits of versions (fromExclusive, toInclusive] from one log
+    * listing, and the versions of that range whose JSON is gone (retired
+    * by log cleanup) — each caller decides how a gap fails. */
+  private[delta] def commitRange(
+      spark: SparkSession, tablePath: String, fromExclusive: Long, toInclusive: Long)
+      : (Seq[(Long, FileStatus)], Seq[Long]) = {
+    val inRange = listLog(spark, tablePath)._1
+      .filter { case (v, _) => v > fromExclusive && v <= toInclusive }
+    val present = inRange.map(_._1).toSet
+    (inRange, ((fromExclusive + 1) to toInclusive).filterNot(present))
+  }
+
+  /** An add/remove action's `dataChange` flag; the spec's default when
+    * absent is true. */
+  private[delta] def dataChange(action: JsonNode): Boolean =
+    !action.has("dataChange") || action.get("dataChange").asBoolean(true)
+
+  private[delta] def logFs(spark: SparkSession, tablePath: String): FileSystem =
+    logDir(tablePath).getFileSystem(spark.sessionState.newHadoopConf())
+
   def isDeltaTable(spark: SparkSession, tablePath: String): Boolean = {
     val dir = logDir(tablePath)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
@@ -735,7 +770,7 @@ object DeltaLog extends Logging {
           // checkpoint-only / partially-cleaned logs: the checkpoint file's
           // own mtime stands in for the retired commits' timestamps, so a
           // cutoff after the cleanup boundary still resolves
-          val eligible = commits.filter { case (v, st) => commitTime(v, st) <= cutoff }.map(_._1) ++
+          val eligible = commits.filter { case (_, st) => commitTime(st) <= cutoff }.map(_._1) ++
             checkpoints.filter(_._2.exists(_.getModificationTime <= cutoff)).map(_._1)
           if (eligible.isEmpty) throw new IllegalArgumentException(
             s"timestampAsOf $ts precedes the earliest commit of $tablePath")
@@ -893,7 +928,7 @@ object DeltaLog extends Logging {
         tailCommits
     }
     if (toApply.nonEmpty) {
-      val fs = logDir(tablePath).getFileSystem(spark.sessionState.newHadoopConf())
+      val fs = logFs(spark, tablePath)
       toApply.foreach { case (_, status) => applyCommit(fs, status, acc) }
     }
     val threshold = fileCountThreshold(spark)
@@ -1015,64 +1050,56 @@ object DeltaLog extends Logging {
   }
 
   /** Parse one commit JSON and fold its actions into `acc`. */
-  private def applyCommit(
-      fs: org.apache.hadoop.fs.FileSystem,
-      status: FileStatus,
-      acc: ReplayAcc): Unit = {
+  private def applyCommit(fs: FileSystem, status: FileStatus, acc: ReplayAcc): Unit = {
     import acc._
-    {
-      replayReads.incrementAndGet()
-      val in = fs.open(status.getPath)
-      val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      // Within one commit, removes apply before adds (a remove+add of the
-      // same path in a single commit nets to add).
-      val commitAdds = mutable.ArrayBuffer.empty[DeltaAddFile]
-      val commitRemoves = mutable.ArrayBuffer.empty[String]
-      content.linesIterator.filter(_.trim.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        if (node.has("protocol")) {
-          val p = node.get("protocol")
-          def featureSet(field: String): Set[String] =
-            if (p.has(field) && !p.get(field).isNull)
-              p.get(field).elements().asScala.map(_.asText()).toSet
-            else Set.empty
-          protocol = Some(DeltaProtocol(
-            p.get("minReaderVersion").asInt(), p.get("minWriterVersion").asInt(),
-            featureSet("readerFeatures"), featureSet("writerFeatures")))
-        }
-        if (node.has("metaData")) {
-          val m = node.get("metaData")
-          metadata = Some(DeltaMetadata(
-            if (m.has("id")) m.get("id").asText() else "",
-            m.get("schemaString").asText(),
-            if (m.has("partitionColumns"))
-              m.get("partitionColumns").elements().asScala.map(_.asText()).toSeq
-            else Nil,
-            if (m.has("configuration"))
-              m.get("configuration").properties().asScala
-                .map(e => e.getKey -> e.getValue.asText()).toMap
-            else Map.empty))
-        }
-        if (node.has("add")) commitAdds += parseJsonAdd(node.get("add"))
-        if (node.has("remove")) {
-          commitRemoves += node.get("remove").get("path").asText()
-        }
-        if (node.has("txn")) {
-          val t = node.get("txn")
-          txns(t.get("appId").asText()) = t.get("version").asLong()
-        }
-        if (node.has("domainMetadata")) {
-          val d = node.get("domainMetadata")
-          val domain = d.get("domain").asText()
-          if (d.has("removed") && d.get("removed").asBoolean(false)) domains.remove(domain)
-          else domains(domain) =
-            if (d.has("configuration") && !d.get("configuration").isNull)
-              d.get("configuration").asText() else ""
-        }
+    replayReads.incrementAndGet()
+    // Within one commit, removes apply before adds (a remove+add of the
+    // same path in a single commit nets to add).
+    val commitAdds = mutable.ArrayBuffer.empty[DeltaAddFile]
+    val commitRemoves = mutable.ArrayBuffer.empty[String]
+    readCommit(fs, status)(_.foreach { node =>
+      if (node.has("protocol")) {
+        val p = node.get("protocol")
+        def featureSet(field: String): Set[String] =
+          if (p.has(field) && !p.get(field).isNull)
+            p.get(field).elements().asScala.map(_.asText()).toSet
+          else Set.empty
+        protocol = Some(DeltaProtocol(
+          p.get("minReaderVersion").asInt(), p.get("minWriterVersion").asInt(),
+          featureSet("readerFeatures"), featureSet("writerFeatures")))
       }
-      commitRemoves.foreach(live.remove)
-      commitAdds.foreach(a => live(a.path) = a)
-    }
+      if (node.has("metaData")) {
+        val m = node.get("metaData")
+        metadata = Some(DeltaMetadata(
+          if (m.has("id")) m.get("id").asText() else "",
+          m.get("schemaString").asText(),
+          if (m.has("partitionColumns"))
+            m.get("partitionColumns").elements().asScala.map(_.asText()).toSeq
+          else Nil,
+          if (m.has("configuration"))
+            m.get("configuration").properties().asScala
+              .map(e => e.getKey -> e.getValue.asText()).toMap
+          else Map.empty))
+      }
+      if (node.has("add")) commitAdds += parseJsonAdd(node.get("add"))
+      if (node.has("remove")) {
+        commitRemoves += node.get("remove").get("path").asText()
+      }
+      if (node.has("txn")) {
+        val t = node.get("txn")
+        txns(t.get("appId").asText()) = t.get("version").asLong()
+      }
+      if (node.has("domainMetadata")) {
+        val d = node.get("domainMetadata")
+        val domain = d.get("domain").asText()
+        if (d.has("removed") && d.get("removed").asBoolean(false)) domains.remove(domain)
+        else domains(domain) =
+          if (d.has("configuration") && !d.get("configuration").isNull)
+            d.get("configuration").asText() else ""
+      }
+    })
+    commitRemoves.foreach(live.remove)
+    commitAdds.foreach(a => live(a.path) = a)
   }
 
   /** Shared snapshot finalization for the driver and frame planes:
@@ -1199,12 +1226,12 @@ object DeltaLog extends Logging {
 
   /** Metadata planes (protocol / metaData / txn / domainMetadata) of the
     * LATEST version with NO live-set materialization on the frame plane —
-    * what a deferred-plane DML/OPTIMIZE commit loop re-reads per attempt:
-    * the [[ConflictChecker]] incremental rules need only the intervening
-    * commits and these planes, never the full live set (r17 verdict #2 —
-    * the eager re-read made every retry pay O(files) driver heap). Small
-    * tables keep the driver replay (files populated, harmless);
-    * frame-plane callers MUST NOT consult `.files` (empty there). */
+    * what every rewrite's commit loop re-reads per attempt: the
+    * [[ConflictChecker]] rules need only the intervening commits and
+    * these planes, never the full live set (a re-read live set would make
+    * every retry pay O(files) driver heap). Small tables keep the driver
+    * replay (files populated, harmless); callers MUST NOT consult
+    * `.files` (empty on the frame plane). */
   private[graft] def metadataSnapshot(
       spark: SparkSession, tablePath: String,
       versionAsOf: Option[Long] = None,
@@ -1238,16 +1265,14 @@ object DeltaLog extends Logging {
   private def estimatedCheckpointAdds(
       spark: SparkSession, tablePath: String,
       cpVersion: Long, parts: Seq[FileStatus]): Long = {
-    val fs = logDir(tablePath).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = logFs(spark, tablePath)
     val lastPath = new Path(logDir(tablePath), "_last_checkpoint")
     val fromLast: Option[Long] =
       try {
         if (!fs.exists(lastPath)) None
         else {
           val in = fs.open(lastPath)
-          val content =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-          val node = mapper.readTree(content)
+          val node = try mapper.readTree(in) finally in.close()
           if (node.has("version") && node.get("version").asLong() == cpVersion &&
             node.has("size")) Some(node.get("size").asLong())
           else None
@@ -1256,36 +1281,39 @@ object DeltaLog extends Logging {
     fromLast.getOrElse(parts.map(_.getLen).sum / 256)
   }
 
-  /** Commit time of each listed commit, for timestamp resolution. With
-    * in-commit timestamps — detected from the newest commit, since the
-    * feature stamps EVERY post-enablement commit — versions resolve
-    * against the in-commit values: file mtimes lie after storage
-    * migrations/copies. Pre-enablement commits have no ict and keep the
-    * mtime fallback; non-ict tables skip the probes entirely (one JSON
-    * read decides). */
-  private def commitTimeOf(
+  /** The one commit-time rule, for time travel,
+    * [[earliestVersionAtOrAfter]], DESCRIBE HISTORY and batch and
+    * streaming CDF: a commit's in-commit timestamp when it carries one,
+    * else its file's mtime (the Delta spec's rule). `commitInfo.timestamp`
+    * is not used: it is stamped before the file is written, so it can
+    * precede the mtime, and a travel to it would miss its own version.
+    * Returns the rule as a function of a commit file's status, for the
+    * table `commits` lists. The feature stamps every post-enablement
+    * commit, so a table whose newest commit carries no ICT reads no other
+    * commit file. */
+  private[delta] def commitTimeOf(
       spark: SparkSession, tablePath: String,
-      commits: Seq[(Long, FileStatus)]): (Long, FileStatus) => Long = {
-    val ictTable = commits.lastOption.exists { case (v, _) =>
-      InCommitTimestamps.readIct(spark, tablePath, v).isDefined
+      commits: Seq[(Long, FileStatus)]): FileStatus => Long = {
+    val fs = logFs(spark, tablePath)
+    val ictTable = commits.lastOption.exists { case (_, st) =>
+      InCommitTimestamps.readIct(fs, st).isDefined
     }
-    (v, st) =>
+    st =>
       if (!ictTable) st.getModificationTime
-      else InCommitTimestamps.readIct(spark, tablePath, v).getOrElse(st.getModificationTime)
+      else InCommitTimestamps.readIct(fs, st).getOrElse(st.getModificationTime)
   }
 
   /** Earliest version whose commit time is at or after `ts` — the
     * streaming source's `startingTimestamp` resolution (spec: "all table
     * changes committed at or after the timestamp will be read"). A
     * timestamp past the newest commit yields latest+1: the stream serves
-    * only future commits. In-commit timestamps win over file mtimes on
-    * ict tables, same as time travel. */
+    * only future commits. */
   def earliestVersionAtOrAfter(spark: SparkSession, tablePath: String, ts: String): Long = {
     val (commits, _) = listLog(spark, tablePath)
     require(commits.nonEmpty, s"$tablePath: empty _delta_log")
     val cutoff = parseTimestampMillis(ts)
     val commitTime = commitTimeOf(spark, tablePath, commits)
-    commits.collectFirst { case (v, st) if commitTime(v, st) >= cutoff => v }
+    commits.collectFirst { case (v, st) if commitTime(st) >= cutoff => v }
       .getOrElse(commits.map(_._1).max + 1)
   }
 
@@ -1308,67 +1336,58 @@ object DeltaLog extends Logging {
       fromExclusive: Long,
       toInclusive: Long,
       ignoreDataChangeRemoves: Boolean = false): Seq[(Long, Seq[DeltaAddFile])] = {
-    val (commits, _) = listLog(spark, tablePath)
-    val fs = logDir(tablePath).getFileSystem(spark.sessionState.newHadoopConf())
-    val inRange = commits.filter { case (v, _) => v > fromExclusive && v <= toInclusive }
+    val (inRange, missing) = commitRange(spark, tablePath, fromExclusive, toInclusive)
     // COMPLETENESS gate: log cleanup retires old commit JSONs; a range
     // whose versions are partially gone must FAIL, not silently drop
     // those commits' rows from the feed — a streaming consumer resuming
     // from a stale checkpoint would otherwise lose every commit behind
     // the retention boundary with no error (production fails the stream
     // on data loss; DeltaCdf.read enforces the same rule)
-    val missing = ((fromExclusive + 1) to toInclusive).toSet -- inRange.map(_._1).toSet
     if (missing.nonEmpty) throw new java.io.IOException(
       s"$tablePath: incremental changes for version(s) " +
-        s"${missing.toSeq.sorted.take(5).mkString(",")}" +
+        s"${missing.take(5).mkString(",")}" +
         s"${if (missing.size > 5) s" (+${missing.size - 5} more)" else ""} " +
         "are no longer available (commit JSONs retired by log cleanup). " +
         "The consumer's offset predates the retained history — restart it " +
         "from a fresh snapshot instead of silently losing those commits")
-    inRange
-      .map { case (v, status) =>
-        val in = fs.open(status.getPath)
-        val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        val adds = Seq.newBuilder[DeltaAddFile]
-        content.linesIterator.filter(_.trim.nonEmpty).foreach { line =>
-          val node = mapper.readTree(line)
-          if (node.has("add")) {
-            val a = node.get("add")
-            val dataChange = !a.has("dataChange") || a.get("dataChange").asBoolean(true)
-            if (dataChange) adds += parseJsonAdd(a)
-          } else if (node.has("remove") && !ignoreDataChangeRemoves) {
-            val r = node.get("remove")
-            val dataChange = !r.has("dataChange") || r.get("dataChange").asBoolean(true)
-            if (dataChange) throw new UnsupportedOperationException(
-              s"$tablePath version $v removes data (${r.get("path").asText()}): " +
-                "incremental add-consumption would double-count rewritten rows. " +
-                "Re-read the full snapshot, or pass ignoreDataChangeRemoves=true " +
-                "to consume the adds anyway (possibly-reprocessed rows).")
-          }
+    val fs = logFs(spark, tablePath)
+    inRange.map { case (v, status) =>
+      val adds = Seq.newBuilder[DeltaAddFile]
+      readCommit(fs, status)(_.foreach { node =>
+        if (node.has("add")) {
+          val a = node.get("add")
+          if (dataChange(a)) adds += parseJsonAdd(a)
+        } else if (node.has("remove") && !ignoreDataChangeRemoves) {
+          val r = node.get("remove")
+          if (dataChange(r)) throw new UnsupportedOperationException(
+            s"$tablePath version $v removes data (${r.get("path").asText()}): " +
+              "incremental add-consumption would double-count rewritten rows. " +
+              "Re-read the full snapshot, or pass ignoreDataChangeRemoves=true " +
+              "to consume the adds anyway (possibly-reprocessed rows).")
         }
-        v -> adds.result()
-      }
+      })
+      v -> adds.result()
+    }
   }
 
-  /** Both incremental conflict surfaces of one intervening commit range,
-    * from ONE pass over its (immutable) commit JSONs:
+  /** Both conflict surfaces of one intervening commit range, from ONE
+    * pass over its (immutable) commit JSONs:
     *  - `pathActions`: every add/remove path — what
-    *    [[ConflictChecker.checkRewriteIncremental]] intersects with a
-    *    transaction's touched set;
+    *    [[ConflictChecker.checkRewrite]] intersects with a transaction's
+    *    touched set;
     *  - `nonBlindAdds`: dataChange adds from NON-blind-append commits —
     *    [[ConflictChecker.checkReadSet]]'s overlap surface.
-    * A commit attempt runs BOTH rules, so parsing per-rule paid the range
-    * twice (the r17-documented residual); the attempt shares one parse
-    * instead ([[sharedConflictRange]]). */
+    * A commit attempt runs BOTH rules and shares one parse
+    * ([[sharedConflictRange]]). */
   private[graft] final case class ConflictRange(
       pathActions: Seq[String], nonBlindAdds: Seq[DeltaAddFile])
 
   /** One commit ATTEMPT's shared handle on its intervening range: both
-    * incremental rules read through the same lazy parse, so an attempt
-    * costs exactly ONE parse. Nothing is kept across attempts: a retry's
-    * range (base, latest] moves forward every attempt, and the memo lives
-    * only as long as the attempt's stack frame, so no range — however big
-    * — is pinned past the commit. */
+    * rules read through the same lazy parse, so an attempt costs at most
+    * ONE parse. Nothing is kept across attempts: a retry's range
+    * (base, latest] moves forward every attempt, and the memo lives only
+    * as long as the attempt's stack frame, so no range — however big — is
+    * pinned past the commit. */
   private[delta] def sharedConflictRange(
       spark: SparkSession,
       tablePath: String,
@@ -1393,33 +1412,27 @@ object DeltaLog extends Logging {
       fromExclusive: Long,
       toInclusive: Long,
       purpose: String): ConflictRange = {
-    val (commits, _) = listLog(spark, tablePath)
-    val inRange = commits.filter { case (v, _) => v > fromExclusive && v <= toInclusive }
-    val expected = (fromExclusive + 1) to toInclusive
-    if (inRange.map(_._1) != expected)
+    val (inRange, missing) = commitRange(spark, tablePath, fromExclusive, toInclusive)
+    if (missing.nonEmpty)
       throw new java.io.IOException(
         s"cannot validate $purpose on $tablePath: commit JSONs for versions " +
-          s"${expected.mkString(",")} are not all present (log cleaned up mid-transaction?)")
+          s"${((fromExclusive + 1) to toInclusive).mkString(",")} are not all present " +
+          "(log cleaned up mid-transaction?)")
     conflictRangeParses.incrementAndGet()
-    val fs = logDir(tablePath).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = logFs(spark, tablePath)
     val paths = Seq.newBuilder[String]
     val nonBlind = Seq.newBuilder[DeltaAddFile]
     inRange.foreach { case (_, status) =>
-      val in = fs.open(status.getPath)
-      val content =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
       val adds = Seq.newBuilder[DeltaAddFile]
       var hasRemove = false
       var blindFlag: Option[Boolean] = None
       var operation: String = null
       var writeMode: String = null
-      content.linesIterator.filter(_.trim.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
+      readCommit(fs, status)(_.foreach { node =>
         if (node.has("add")) {
           val a = node.get("add")
           paths += a.get("path").asText()
-          if (!a.has("dataChange") || a.get("dataChange").asBoolean(true))
-            adds += parseJsonAdd(a)
+          if (dataChange(a)) adds += parseJsonAdd(a)
         } else if (node.has("remove")) {
           hasRemove = true
           paths += node.get("remove").get("path").asText()
@@ -1430,7 +1443,7 @@ object DeltaLog extends Logging {
           if (ci.has("operationParameters") && ci.get("operationParameters").has("mode"))
             writeMode = ci.get("operationParameters").get("mode").asText()
         }
-      }
+      })
       // blind = the commit READ nothing. Keyed on the writer's explicit
       // commitInfo.isBlindAppend (production's signal — our own appends
       // stamp it), with an Append-mode WRITE fallback for older logs; a
@@ -1463,13 +1476,6 @@ object DeltaLog extends Logging {
       toInclusive: Long): Seq[DeltaAddFile] =
     conflictRange(spark, tablePath, fromExclusive, toInclusive, "read set").nonBlindAdds
 
-  /** Can versions `(fromExclusive, toInclusive]` be replayed as a pure
-    * add-feed? True iff every commit JSON is still present AND none
-    * removes data (`remove` with dataChange) — the probe a fresh
-    * streaming query uses to choose between a paced per-version replay
-    * (append-only history: identical rows, rate limits honored) and the
-    * initial-snapshot jump (histories with overwrites/deletes, where a
-    * replay would fail or serve rows deleted before the stream began). */
   /** Replayability-probe cap: deciding "pure add-feed?" is an O(history)
     * driver-side parse, paid BEFORE a fresh stream's first batch. Past
     * this many commits the probe answers false unconditionally and the
@@ -1481,26 +1487,23 @@ object DeltaLog extends Logging {
     * both probe) cannot disagree (var: test seam only). */
   private[graft] var RangeReplayableMaxCommits = 64
 
+  /** Can versions `(fromExclusive, toInclusive]` be replayed as a pure
+    * add-feed? True iff every commit JSON is still present AND none
+    * removes data (`remove` with dataChange) — the probe a fresh
+    * streaming query uses to choose between a paced per-version replay
+    * (append-only history: identical rows, rate limits honored) and the
+    * initial-snapshot jump (histories with overwrites/deletes, where a
+    * replay would fail or serve rows deleted before the stream began). */
   private[graft] def rangeReplayable(
       spark: SparkSession,
       tablePath: String,
       fromExclusive: Long,
       toInclusive: Long): Boolean = {
-    val (commits, _) = listLog(spark, tablePath)
-    val inRange = commits.filter { case (v, _) => v > fromExclusive && v <= toInclusive }
-    if (inRange.size > RangeReplayableMaxCommits) return false
-    if (inRange.map(_._1) != ((fromExclusive + 1) to toInclusive)) return false
-    val fs = logDir(tablePath).getFileSystem(spark.sessionState.newHadoopConf())
-    !inRange.exists { case (_, status) =>
-      val in = fs.open(status.getPath)
-      val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      content.linesIterator.filter(_.trim.nonEmpty).exists { line =>
-        val node = mapper.readTree(line)
-        node.has("remove") && {
-          val r = node.get("remove")
-          !r.has("dataChange") || r.get("dataChange").asBoolean(true)
-        }
-      }
+    if (toInclusive - fromExclusive > RangeReplayableMaxCommits) return false
+    val (inRange, missing) = commitRange(spark, tablePath, fromExclusive, toInclusive)
+    val fs = logFs(spark, tablePath)
+    missing.isEmpty && !inRange.exists { case (_, status) =>
+      readCommit(fs, status)(_.exists(node => node.has("remove") && dataChange(node.get("remove"))))
     }
   }
 
@@ -1664,7 +1667,7 @@ object DeltaLog extends Logging {
         d.get("cardinality").asLong()))
     }
 
-  private def jsonStringMap(node: JsonNode): Map[String, String] =
+  private[delta] def jsonStringMap(node: JsonNode): Map[String, String] =
     if (node == null || node.isNull) Map.empty
     else node.properties().asScala.map { e =>
       e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())

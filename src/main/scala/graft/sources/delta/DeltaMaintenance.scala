@@ -3,7 +3,7 @@ package graft.sources.delta
 import java.net.URI
 import java.util.UUID
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.internal.Logging
@@ -34,6 +34,10 @@ final case class OptimizeMetrics(
 object DeltaMaintenance extends Logging {
 
   private val mapper = new ObjectMapper()
+
+  /** Concurrent key-range shards of a [[graft.sources.ShardedListStore]]
+    * listing: the store's LIST concurrency for one table prefix. */
+  private val S3ListShards = 16
 
   private[delta] def decodeRel(p: String): String =
     try {
@@ -279,8 +283,7 @@ object DeltaMaintenance extends Logging {
       if (cands.isEmpty) return OptimizeMetrics(0, 0, 0, snap.version)
       return zorderImpl(spark, tablePath, clusterCols, targetFileBytes,
         outputFiles = None, predicate = predicate,
-        candidatesOverride = Some((snap, cands)), beforeCommit = beforeCommit,
-        deferredBase = deferred.isDefined)
+        candidatesOverride = Some((snap, cands)), beforeCommit = beforeCommit)
     }
     val compactable = deferred match {
       // compaction candidates are the BELOW-TARGET files only — shipped as
@@ -321,7 +324,7 @@ object DeltaMaintenance extends Logging {
       dataChange = false, op = "OPTIMIZE",
       params = Map("targetFileBytes" -> targetFileBytes.toString) ++
         predicate.map("predicate" -> _),
-      abortOp = "OPTIMIZE", deferredBase = deferred.isDefined)
+      abortOp = "OPTIMIZE")
     OptimizeMetrics(removed.size, adds.files.size, removed.map(_.size).sum, committedVersion)
   }
 
@@ -365,9 +368,7 @@ object DeltaMaintenance extends Logging {
       outputFiles: Option[Int] = None,
       predicate: Option[String] = None): OptimizeMetrics = {
     // an explicit ZORDER rewrites its whole scope, so the deferred plane
-    // buys no candidate pruning — but the commit loop still gets the
-    // metadata-only re-read + incremental conflict rule (no O(files)
-    // materialization per retry on job-plane tables)
+    // buys no candidate pruning
     val (snap, deferred) = DeltaLog.scanSnapshot(spark, tablePath)
     snap.assertWritable("OPTIMIZE ZORDER")
     // validate BEFORE the candidate collection: on a job-plane table the
@@ -379,8 +380,7 @@ object DeltaMaintenance extends Logging {
       case None => filterByPartitionPredicate(spark, snap, snap.files, predicate)
     }
     zorderImpl(spark, tablePath, zorderBy, targetFileBytes, outputFiles,
-      predicate, candidatesOverride = Some((snap, candidates)),
-      deferredBase = deferred.isDefined)
+      predicate, candidatesOverride = Some((snap, candidates)))
   }
 
   /** The ZORDER BY column contract, shared by [[zorder]] (which must
@@ -418,11 +418,7 @@ object DeltaMaintenance extends Logging {
       outputFiles: Option[Int],
       predicate: Option[String],
       candidatesOverride: Option[(DeltaSnapshot, Seq[DeltaAddFile])],
-      beforeCommit: () => Unit = () => (),
-      /** true = the base snapshot came from the deferred plane (its
-        * `.files` is NOT the live set) — the commit loop must use the
-        * incremental conflict rule. */
-      deferredBase: Boolean = false): OptimizeMetrics = {
+      beforeCommit: () => Unit = () => ()): OptimizeMetrics = {
     val snap = candidatesOverride.map(_._1)
       .getOrElse(DeltaLog.snapshot(spark, tablePath))
     snap.assertWritable("OPTIMIZE ZORDER")
@@ -509,7 +505,7 @@ object DeltaMaintenance extends Logging {
       dataChange = false, op = "OPTIMIZE",
       params = Map("zOrderBy" -> zorderBy.mkString(","),
         "targetFileBytes" -> targetFileBytes.toString) ++ predicate.map("predicate" -> _),
-      abortOp = "ZORDER", deferredBase = deferredBase,
+      abortOp = "ZORDER",
       // ZCube provenance: one cube id per rewrite run, keyed (in the tag
       // value) by the PHYSICAL clustering columns so a rename never
       // invalidates the provenance and a re-declaration always does
@@ -520,10 +516,10 @@ object DeltaMaintenance extends Logging {
   }
 
   /** Validated remove+add commit loop shared by the rewrite operations:
-    * re-reads the snapshot each attempt and defers to the
-    * [[ConflictChecker]] — disjoint concurrent commits proceed; a changed
-    * `removed` entry or concurrent metadata/protocol change aborts
-    * (cleaning up the staged adds). */
+    * re-reads the metadata snapshot each attempt and defers to the
+    * [[ConflictChecker]] — disjoint concurrent commits proceed; a
+    * concurrent remove/re-add of a `removed` entry or a concurrent
+    * metadata/protocol change aborts (cleaning up the staged adds). */
   private def commitReplace(
       spark: SparkSession,
       tablePath: String,
@@ -535,18 +531,11 @@ object DeltaMaintenance extends Logging {
       params: Map[String, String],
       abortOp: String,
       cdc: Option[DeltaWriter.Published] = None,
-      addTags: Map[String, String] = Map.empty,
-      /** true = `base` came from the deferred plane (its `.files` is not
-        * the live set): re-read metadata-only and run the INCREMENTAL
-        * conflict rule — no O(files) materialization per retry. */
-      deferredBase: Boolean = false): Long = {
+      addTags: Map[String, String] = Map.empty): Long = {
     val onAbort = () => { adds.discard(); cdc.foreach(_.discard()) }
     DeltaCommit.run(spark, tablePath, abortOp, onAbort) {
-      val latest =
-        if (deferredBase) DeltaLog.metadataSnapshot(spark, tablePath)
-        else DeltaLog.snapshot(spark, tablePath)
-      ConflictChecker.checkRewriteOn(abortOp, spark, base, latest, removed, onAbort,
-        incremental = deferredBase)
+      val latest = DeltaLog.metadataSnapshot(spark, tablePath)
+      ConflictChecker.checkRewrite(abortOp, spark, base, latest, removed, onAbort)
       // row tracking: every add on a row-tracked table carries a fresh
       // baseRowId range (re-based on THIS attempt's hwm — a lost race
       // re-allocates against the winner); the PRESERVED ids of rewritten
@@ -600,13 +589,10 @@ object DeltaMaintenance extends Logging {
 
   private def tombstoneTimes(spark: SparkSession, tablePath: String): Map[String, Long] = {
     val (commits, _) = DeltaLog.listLog(spark, tablePath)
-    val fs = DeltaLog.logDir(tablePath).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = DeltaLog.logFs(spark, tablePath)
     val out = scala.collection.mutable.HashMap.empty[String, Long]
     commits.foreach { case (_, status) =>
-      val in = fs.open(status.getPath)
-      val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      content.linesIterator.filter(_.trim.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
+      DeltaLog.readCommit(fs, status)(_.foreach { node =>
         if (node.has("remove")) {
           val r = node.get("remove")
           val abs = new Path(tablePath, decodeRel(r.get("path").asText())).toUri.getPath
@@ -616,7 +602,7 @@ object DeltaMaintenance extends Logging {
             case None => Some(ts)
           }
         }
-      }
+      })
     }
     out.toMap
   }
@@ -833,9 +819,7 @@ object DeltaMaintenance extends Logging {
           // r18 vanished-dir hazard was a walker artifact). Heap stays
           // O(batch): rows stream through a bounded queue into the same
           // 100k-row staged flushes.
-          val shards = spark.sessionState.conf.getConfString(
-            "spark.graft.s3.list.shards", "16").toInt
-          sharded.listFlatShardedForeach(fs.makeQualified(root), shards) { st =>
+          sharded.listFlatShardedForeach(fs.makeQualified(root), S3ListShards) { st =>
             val p = st.getPath
             if (outsideLog(p) && keep(p)) {
               batch += ((p.toUri.getPath, p.toString, st.getModificationTime))
@@ -1340,8 +1324,7 @@ object DeltaMaintenance extends Logging {
     }
     commitReplace(spark, tablePath, snap, touched, adds, dataChange = true,
       op = "REPLACE WHERE", params = Map("condition" -> condition),
-      abortOp = "REPLACE WHERE", cdc = cdc,
-      deferredBase = deferred.isDefined)
+      abortOp = "REPLACE WHERE", cdc = cdc)
   }
 
   /** `CREATE TABLE … SHALLOW CLONE src`: a zero-copy metadata-only fork.
@@ -1835,26 +1818,25 @@ object DeltaMaintenance extends Logging {
     missing
   }
 
-  /** Commit history (newest first): version, timestamp, operation, engine. */
+  /** Commit history (newest first): version, timestamp, operation,
+    * engine. The timestamp is [[DeltaLog.commitTimeOf]]'s, the one time
+    * travel resolves against. */
   def history(spark: SparkSession, tablePath: String): DataFrame = {
     val (commits, _) = DeltaLog.listLog(spark, tablePath)
-    val fs = DeltaLog.logDir(tablePath).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = DeltaLog.logFs(spark, tablePath)
+    val commitTime = DeltaLog.commitTimeOf(spark, tablePath, commits)
     val rows = commits.map { case (version, status) =>
-      val in = fs.open(status.getPath)
-      val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val ci = content.linesIterator
-        .map(mapper.readTree)
-        .collectFirst { case n if n.has("commitInfo") => n.get("commitInfo") }
+      val ci = DeltaLog.readCommit(fs, status)(
+        _.collectFirst { case n if n.has("commitInfo") => n.get("commitInfo") })
+      def field(k: String)(f: JsonNode => String): String =
+        ci.flatMap(c => Option(c.get(k))).map(f).getOrElse("")
       Row(
         version,
-        // in-commit timestamp wins when present (survives mtime rewrites)
-        ci.flatMap(c => Option(c.get("inCommitTimestamp")).map(_.asLong()))
-          .orElse(ci.flatMap(c => Option(c.get("timestamp")).map(_.asLong())))
-          .getOrElse(0L),
-        ci.flatMap(c => Option(c.get("operation")).map(_.asText())).getOrElse(""),
-        ci.flatMap(c => Option(c.get("engineInfo")).map(_.asText())).getOrElse(""),
-        ci.flatMap(c => Option(c.get("operationParameters")).map(_.toString)).getOrElse(""),
-        ci.flatMap(c => Option(c.get("operationMetrics")).map(_.toString)).getOrElse(""))
+        commitTime(status),
+        field("operation")(_.asText()),
+        field("engineInfo")(_.asText()),
+        field("operationParameters")(_.toString),
+        field("operationMetrics")(_.toString))
     }.sortBy(-_.getLong(0))
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), historySchema)
   }

@@ -503,11 +503,9 @@ object DeltaMerge {
     val onAbort = () => { data.foreach(_.discard()); cdc.foreach(_.discard()) }
     val committedVersion = withPhase(spark, "MERGE commit")(
         DeltaCommit.run(spark, tablePath, "MERGE", onAbort) {
-      // deferred plane: metadata-only re-read (txn watermarks included) +
-      // incremental conflict rule — no O(files) materialization per retry
-      val latest =
-        if (deferred.isDefined) DeltaLog.metadataSnapshot(spark, tablePath)
-        else DeltaLog.snapshot(spark, tablePath)
+      // metadata-only re-read (txn watermarks included) + the touched-file
+      // rule over the intervening commits — no live set per retry
+      val latest = DeltaLog.metadataSnapshot(spark, tablePath)
       // concurrent same-app redelivery: another writer committed this
       // (appId, version) between our snapshot and this attempt — drop the
       // staged files, succeed as a no-op (same contract as DeltaWriter)
@@ -516,8 +514,7 @@ object DeltaMerge {
         onAbort()
         Left(latest.version)
       } else {
-        val range = ConflictChecker.checkRewriteOn("MERGE", spark, snap, latest,
-          touched, onAbort, incremental = deferred.isDefined)
+        val range = ConflictChecker.checkRewrite("MERGE", spark, snap, latest, touched, onAbort)
         // the merge's decisions READ the whole target (matched-find inner
         // join, insert anti-join): any concurrent non-blind-append data add
         // invalidates them — two concurrent upserts of the same absent key

@@ -316,21 +316,20 @@ class DeltaStreamingSource(
   override def getOffset: Option[Offset] =
     Some(LongOffset(DeltaLog.latestVersion(spark, path)))
 
-  /** Commit timestamp of `to` for synthetic initial-snapshot CDF rows:
-    * ICT when enabled, else the commit file's mtime. Memoized per
-    * version (one entry suffices — every slice of a paced drain shares
-    * the pinned snapshot version): the fallback lists the log, and a
-    * 10k-batch drain re-listing a 10k-commit log per batch is a
-    * quadratic getBatch plane. */
+  /** Commit timestamp of `to` for synthetic initial-snapshot CDF rows —
+    * [[DeltaLog.commitTimeOf]]'s, like every other commit time. Memoized
+    * per version (one entry suffices — every slice of a paced drain shares
+    * the pinned snapshot version): it lists the log, and a 10k-batch
+    * drain re-listing a 10k-commit log per batch is a quadratic getBatch
+    * plane. */
   @volatile private var commitTsMemo: Option[(Long, java.sql.Timestamp)] = None
   private def commitTs(to: Long): java.sql.Timestamp = commitTsMemo match {
     case Some((v, ts)) if v == to => ts
     case _ =>
-      val ts = InCommitTimestamps.readIct(spark, path, to).getOrElse {
-        DeltaLog.listLog(spark, path)._1
-          .collectFirst { case (v, st) if v == to => st.getModificationTime }
-          .getOrElse(System.currentTimeMillis())
-      }
+      val commits = DeltaLog.listLog(spark, path)._1
+      val commitTime = DeltaLog.commitTimeOf(spark, path, commits)
+      val ts = commits.collectFirst { case (v, st) if v == to => commitTime(st) }
+        .getOrElse(System.currentTimeMillis())
       val stamped = new java.sql.Timestamp(ts)
       commitTsMemo = Some((to, stamped))
       stamped

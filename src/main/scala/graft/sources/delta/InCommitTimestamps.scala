@@ -1,7 +1,7 @@
 package graft.sources.delta
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** In-commit timestamps (the Delta `inCommitTimestamp` writer feature,
@@ -27,43 +27,26 @@ object InCommitTimestamps {
   val EnablementTimestampKey = "delta.inCommitTimestampEnablementTimestamp"
   val Feature = "inCommitTimestamp"
 
-  private val mapper = new ObjectMapper()
-
   def enabled(configuration: Map[String, String]): Boolean =
     configuration.get(EnableKey).exists(_.trim.equalsIgnoreCase("true"))
 
-  /** The ict recorded in `version`'s commitInfo, if any. Streams the
-    * commit LINE BY LINE and stops at the first commitInfo — slurping the
-    * whole file would allocate a bulk-load commit's hundreds of MB on the
-    * driver per probe (and probes run once per commit attempt and per
-    * timestamp-resolution candidate), violating the O(1) metadata-plane
-    * claim above; commitInfo is the first line of every commit this
-    * writer produces. */
+  /** The ict recorded in `version`'s commitInfo, if any. */
   def readIct(spark: SparkSession, tablePath: String, version: Long): Option[Long] = {
-    val dir = DeltaLog.logDir(tablePath)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val p = new org.apache.hadoop.fs.Path(dir, f"$version%020d.json")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val reader = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
-        var line = reader.readLine()
-        while (line != null) {
-          if (line.trim.nonEmpty) {
-            val n = mapper.readTree(line)
-            if (n.has("commitInfo")) {
-              val ci = n.get("commitInfo")
-              return if (ci.has("inCommitTimestamp")) Some(ci.get("inCommitTimestamp").asLong())
-                     else None
-            }
-          }
-          line = reader.readLine()
-        }
-        None
-      } finally in.close()
-    }
+    val fs = DeltaLog.logFs(spark, tablePath)
+    val p = new Path(DeltaLog.logDir(tablePath), f"$version%020d.json")
+    try readIct(fs, fs.getFileStatus(p))
+    catch { case _: java.io.FileNotFoundException => None }
   }
+
+  /** The ict in `status`'s commitInfo, read through
+    * [[DeltaLog.readCommit]] up to the first commitInfo only (the first
+    * line of every commit this writer produces): probes run once per
+    * commit attempt and per timestamp-resolution candidate, so a bulk
+    * load's hundreds of MB must never be read for one. */
+  def readIct(fs: FileSystem, status: FileStatus): Option[Long] =
+    DeltaLog.readCommit(fs, status)(
+      _.collectFirst { case n if n.has("commitInfo") => n.get("commitInfo") })
+      .flatMap(ci => Option(ci.get("inCommitTimestamp")).map(_.asLong()))
 
   // Timestamp-resolution note (why the recorded EnablementVersion/
   // Timestamp keys are written but not consulted when resolving): the

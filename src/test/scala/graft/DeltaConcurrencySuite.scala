@@ -291,7 +291,7 @@ class DeltaConcurrencySuite extends AnyFunSuite {
   }
 
   test("a deferred commit attempt's two incremental rules share ONE range parse") {
-    // checkRewriteIncremental and checkReadSet both read the intervening
+    // checkRewrite and checkReadSet both read the intervening
     // commit JSONs; the r17-documented residual was parsing that
     // (immutable) range twice per attempt — they must now share one
     // memoized parse (DeltaLog.conflictRange). Result equality cannot see
@@ -307,6 +307,26 @@ class DeltaConcurrencySuite extends AnyFunSuite {
       val parses = DeltaLog.conflictRangeParses.get() - before
       assert(parses === 1L,
         s"rewrite + read-set rules over one intervening range must cost ONE parse, got $parses")
+    }
+    // the driver plane runs the same touched-file rule: an OPTIMIZE
+    // attempt reads the intervening commits too, instead of comparing
+    // against a re-read live set
+    val opt = TestSpark.tempDir("graft-conflict-driver")
+    (1 to 3).foreach { i =>
+      DeltaWriter.write(Seq((i.toLong, s"r$i", 1), (i + 10L, s"s$i", 2))
+        .toDF("id", "payload", "p"), opt, SaveMode.Append, Seq("p"))
+    }
+    withPlane("driver") {
+      val before = DeltaLog.conflictRangeParses.get()
+      val m = DeltaMaintenance.optimize(spark, opt, 128L << 20, Some("p = 1"), () => {
+        DeltaWriter.write(Seq((99L, "late", 2)).toDF("id", "payload", "p"),
+          opt, SaveMode.Append, Nil)
+      })
+      assert(m.filesRemoved === 3 && m.committedVersion === 4L,
+        "disjoint concurrent append: OPTIMIZE commits")
+      val parses = DeltaLog.conflictRangeParses.get() - before
+      assert(parses === 1L,
+        s"the touched-file rule must parse the intervening range once, got $parses")
     }
   }
 }
